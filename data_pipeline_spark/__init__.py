@@ -7,9 +7,10 @@ tools).  This package re-expresses that surface Spark-first:
 
 - ``session``      — tuned SparkSession factory (AQE, Arrow, UTC).
 - ``io``           — parquet table loaders for the test corpus.
-- ``envelope``     — the versioned wire envelope as a StructType + a pure-
-                     Python Avro binary codec (the spark-avro connector jar is
-                     not available in this environment).
+- ``envelope``     — the versioned wire envelope as a StructType, packed and
+                     unpacked by Arrow-batched pandas UDFs over a pure-
+                     Python Avro binary codec (``avro_codec``, with the
+                     vectorized ``wire_np`` kernels on the common path).
 - ``registry``     — the Schematizer analogue: namespaces/sources/topics/
                      schemas as small catalog tables + an in-engine API.
 - ``sources``      — file-backed topic transport (Kafka drop-in layout:

@@ -1,10 +1,10 @@
 """Pure-Python Avro binary codec + Avro<->Spark schema mapping.
 
-The spark-avro connector jar is not present in this environment, so the wire
-format is implemented from the public Avro 1.x specification (binary
-encoding: zigzag varints, length-prefixed bytes/strings, block-encoded
-arrays/maps, union-index prefix).  It runs only at the wire boundary inside
-Arrow-batched pandas UDFs — the engine's hot path stays columnar/JVM.
+The wire format is implemented from the public Avro 1.x specification
+(binary encoding: zigzag varints, length-prefixed bytes/strings,
+block-encoded arrays/maps, union-index prefix).  It runs only at the wire
+boundary inside the Arrow-batched pandas UDFs of ``envelope`` — the
+engine's hot path stays columnar/JVM.
 
 Reference parity: the envelope/payload encode-decode semantics mirror
 data_pipeline/envelope.py:73-121 and data_pipeline/_avro_payload.py:86-167

@@ -5,7 +5,7 @@ Re-expresses data_pipeline/consumer.py + base_consumer.py: tail topics from
 committed/explicit offsets, decode with registry schemas (optional reader-
 schema override), commit max(offset)+1 per partition.
 
-Schema-id dispatch (SURVEY §4 custom-work item 1): `from_avro`-style decode
+Schema-id dispatch (SURVEY §4 custom-work item 1): a column-level Avro decode
 needs one static schema, but a topic's messages may span schema versions.
 Strategy (a) from the survey: decode every message with the topic's LATEST
 schema as the reader, relying on Avro resolution rules that the registry's
@@ -14,8 +14,6 @@ message is looked up from the broadcast registry map inside the batch UDF.
 """
 
 from __future__ import annotations
-
-import json
 
 import pandas as pd
 
@@ -56,9 +54,7 @@ class Consumer:
         if from_committed and self.ledger is not None and starting_offsets is None:
             starting_offsets = self.ledger.committed(self.group, topic)
         wire = self.store.read(topic, starting_offsets=starting_offsets)
-        return wire.withColumn(
-            "envelope", env.unpack(F.col("value"), spark=self.store.spark)
-        )
+        return wire.withColumn("envelope", env.unpack(F.col("value")))
 
     # -- decoded tail -------------------------------------------------------
 
@@ -81,7 +77,7 @@ class Consumer:
         needed step).  An encrypted message whose key_id is not provided
         raises at execution.
         """
-        if crypto_keys is None and env.wire_codec_backend(self.store.spark) == "python":
+        if crypto_keys is None:
             if from_committed and self.ledger is not None and starting_offsets is None:
                 starting_offsets = self.ledger.committed(self.group, topic)
             wire = self.store.read(topic, starting_offsets=starting_offsets)
@@ -102,11 +98,9 @@ class Consumer:
         test_streaming.py).  Commit/seek is the stream's checkpoint, not
         the offset ledger."""
         stream = self.store.read_stream(topic)
-        if crypto_keys is None and env.wire_codec_backend(self.store.spark) == "python":
+        if crypto_keys is None:
             return self._decode_fused(stream, topic, reader_schema_id)
-        raw = stream.withColumn(
-            "envelope", env.unpack(F.col("value"), spark=self.store.spark)
-        )
+        raw = stream.withColumn("envelope", env.unpack(F.col("value")))
         return self._decode_enveloped(raw, topic, reader_schema_id, crypto_keys)
 
     def _reader_json(self, topic: str, reader_schema_id: int | None) -> str:
@@ -129,7 +123,7 @@ class Consumer:
     def _decode_fused(
         self, wire: DataFrame, topic: str, reader_schema_id: int | None
     ) -> DataFrame:
-        """Unencrypted python-backend fast path: unpack + decode in ONE
+        """Unencrypted fast path: unpack + decode in ONE
         pandas UDF (envelope.unpack_decode_udf) — half the Arrow crossings
         of the layered envelope-then-payload shape, same columns out."""
         fused, payload_names = env.unpack_decode_udf(
@@ -170,21 +164,12 @@ class Consumer:
         @pandas_udf(spark_type)
         def dispatch_decode(schema_id: pd.Series, payload: pd.Series) -> pd.DataFrame:
             # compiled (writer -> latest-reader) decoders, one per schema_id
-            # seen on the topic — the memoized reader store pattern
-            # (yelp_avro_store.py:26-84)
-            decoders = {
-                sid: avro_codec.compile_decoder(wjson, reader_parsed)
-                for sid, wjson in writers.items()
-            }
+            # seen on the topic, memoized per worker — the reader store
+            # pattern (yelp_avro_store.py:26-84)
+            decoders = env.payload_decoders(writers, reader)
             out = []
             for sid, blob in zip(schema_id, payload):
-                dec = decoders.get(int(sid))
-                if dec is None:
-                    raise KeyError(
-                        f"message carries schema_id {int(sid)} but topic "
-                        f"{topic!r} has only {sorted(decoders)} registered — "
-                        "registry out of sync with the stream"
-                    )
+                dec = env.payload_decoder_for(decoders, sid, topic)
                 out.append(dec(memoryview(bytes(blob)), 0)[0])
             return pd.DataFrame(out, columns=reader_names)
 

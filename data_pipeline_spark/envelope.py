@@ -7,22 +7,30 @@ previous_payload union, meta union, encryption_type union, timestamp int},
 prefixed with magic byte b'\\x00' (or 'a' + urlsafe-base64 for ASCII
 transports, envelope.py:53,98-99,117-119).
 
-Pack/unpack run as Arrow-batched pandas UDFs over the pure-Python codec
+The wire runs as Arrow-batched pandas UDFs over the pure-Python codec
 (avro_codec) — the only Python in the engine's row path, and only at the
-wire boundary.  Everything before pack / after unpack is columnar.
+wire boundary.  Two paths per direction, chosen by the input:
+
+- fused (the common case): ``encode_pack_udf`` / ``unpack_decode_udf``
+  do payload codec + envelope codec in one Arrow crossing, with the
+  vectorized ``wire_np`` kernels inside and the compiled per-row codec as
+  their reference and fallback;
+- layered: ``encode_payload_udf`` + ``pack`` / ``unpack`` + a payload
+  decode, needed only when encryption or meta attributes sit between the
+  payload and the envelope (the AES step runs in the JVM).
+
+Everything before pack / after unpack is columnar.
 """
 
 from __future__ import annotations
 
 import base64
 import functools
-import json
-import uuid as uuidlib
 from typing import Any
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -110,27 +118,19 @@ ENVELOPE_STRUCT = T.StructType(
 
 # compiled envelope codecs, built lazily once per Python worker (the
 # reference memoizes Avro writers the same way, yelp_avro_store.py:26-84)
-_ENV_ENCODER = None
-_ENV_DECODER = None
-
-
+@functools.cache
 def _env_encoder():
-    global _ENV_ENCODER
-    if _ENV_ENCODER is None:
-        _ENV_ENCODER = avro_codec.compile_encoder(ENVELOPE_SCHEMA)
-    return _ENV_ENCODER
+    return avro_codec.compile_encoder(ENVELOPE_SCHEMA)
 
 
+@functools.cache
 def _env_decoder():
-    global _ENV_DECODER
-    if _ENV_DECODER is None:
-        _ENV_DECODER = avro_codec.compile_decoder(ENVELOPE_SCHEMA)
-    return _ENV_DECODER
+    return avro_codec.compile_decoder(ENVELOPE_SCHEMA)
 
 
-# payload codecs for the FUSED wire UDFs, memoized per Python worker and
-# keyed by schema JSON (r8: the fused UDFs recompiled them on every pandas
-# batch — repeated compile cost on the exact hot path fusion exists for)
+# payload codecs for every wire UDF, memoized per Python worker and keyed
+# by schema JSON (compiling them per Arrow batch was repeated cost on the
+# hot path)
 @functools.lru_cache(maxsize=256)
 def _payload_encoder(schema_json: str):
     return avro_codec.compile_encoder(avro_codec.parse_schema(schema_json))
@@ -142,39 +142,6 @@ def _payload_decoder(writer_json: str, reader_json: str):
         avro_codec.parse_schema(writer_json),
         avro_codec.parse_schema(reader_json),
     )
-
-
-def _pack_one(row: dict[str, Any], ascii_mode: bool = False) -> bytes:
-    """Single-message pack (tests / driver-side use)."""
-    out = bytearray()
-    _env_encoder()(
-        out,
-        (
-            row["uuid"],
-            row["message_type"],
-            row["schema_id"],
-            row["payload"],
-            row.get("previous_payload"),
-            row.get("meta"),
-            row.get("encryption_type"),
-            row["timestamp"],
-        ),
-    )
-    body = bytes(out)
-    if ascii_mode:
-        return MAGIC_ASCII + base64.urlsafe_b64encode(body)
-    return MAGIC_BINARY + body
-
-
-def _unpack_one(blob: bytes) -> dict[str, Any]:
-    magic, body = blob[:1], blob[1:]
-    if magic == MAGIC_ASCII:
-        body = base64.urlsafe_b64decode(body)
-    elif magic != MAGIC_BINARY:
-        raise ValueError(f"unknown envelope magic byte {magic!r}")
-    values, _ = _env_decoder()(memoryview(body), 0)
-    names = [f["name"] for f in ENVELOPE_SCHEMA["fields"]]
-    return dict(zip(names, values))
 
 
 def _meta_to_tuples(meta) -> list | None:
@@ -192,7 +159,8 @@ def _meta_to_tuples(meta) -> list | None:
 
 
 @pandas_udf(T.BinaryType())
-def _pack_udf(env: pd.DataFrame) -> pd.Series:
+def pack(env: pd.DataFrame) -> pd.Series:
+    """Envelope struct column -> wire bytes (magic byte + Avro binary)."""
     enc = _env_encoder()
     out = []
     # meta is optional in caller-built structs (pre-r5 producers omit it)
@@ -229,37 +197,6 @@ def _pack_udf(env: pd.DataFrame) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
-@pandas_udf(ENVELOPE_STRUCT)
-def _unpack_udf(blob: pd.Series) -> pd.DataFrame:
-    dec = _env_decoder()
-    rows = []
-    for b in blob:
-        mv = memoryview(bytes(b))
-        magic = bytes(mv[:1])
-        body = mv[1:]
-        if magic == MAGIC_ASCII:
-            body = memoryview(base64.urlsafe_b64decode(bytes(body)))
-        elif magic != MAGIC_BINARY:
-            raise ValueError(f"unknown envelope magic byte {magic!r}")
-        (uuid_v, mtype, sid, payload, prev, meta, enc_type, ts), _ = dec(body, 0)
-        rows.append(
-            (uuid_v, mtype, sid, payload, prev, _meta_to_dicts(meta), enc_type, ts)
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "uuid",
-            "message_type",
-            "schema_id",
-            "payload",
-            "previous_payload",
-            "meta",
-            "encryption_type",
-            "timestamp",
-        ],
-    )
-
-
 def _meta_to_dicts(meta) -> list | None:
     """Decoded positional MetaAttribute tuples -> dicts for Arrow's
     struct conversion on the pandas-UDF return path."""
@@ -268,129 +205,77 @@ def _meta_to_dicts(meta) -> list | None:
     return [{"schema_id": m[0], "payload": m[1]} for m in meta]
 
 
-@pandas_udf(ENVELOPE_STRUCT)
-def _unpack_permissive_udf(blob: pd.Series) -> pd.DataFrame:
-    """PERMISSIVE mode: corrupt wire bytes become an all-null envelope row
-    instead of failing the task (`from_avro` mode=PERMISSIVE semantics;
-    callers filter `schema_id IS NULL` to quarantine corrupt records)."""
-    dec = _env_decoder()
-    null_row = (None,) * 8
-    rows = []
-    for b in blob:
-        try:
-            mv = memoryview(bytes(b))
-            magic = bytes(mv[:1])
-            body = mv[1:]
-            if magic == MAGIC_ASCII:
-                body = memoryview(base64.urlsafe_b64decode(bytes(body)))
-            elif magic != MAGIC_BINARY:
-                raise ValueError("bad magic")
-            (u, mt, sid, pl, prev, m, et, ts), _ = dec(body, 0)
-            rows.append((u, mt, sid, pl, prev, _meta_to_dicts(m), et, ts))
-        except Exception:
-            rows.append(null_row)
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "uuid",
-            "message_type",
-            "schema_id",
-            "payload",
-            "previous_payload",
-            "meta",
-            "encryption_type",
-            "timestamp",
-        ],
-    )
+def _envelope_body(blob) -> memoryview:
+    """Wire bytes -> Avro envelope body: strips the magic byte and
+    base64-decodes ASCII-transport messages."""
+    mv = memoryview(bytes(blob))
+    magic = bytes(mv[:1])
+    if magic == MAGIC_BINARY:
+        return mv[1:]
+    if magic == MAGIC_ASCII:
+        return memoryview(base64.urlsafe_b64decode(bytes(mv[1:])))
+    raise ValueError(f"unknown envelope magic byte {magic!r}")
 
 
-# ---------------------------------------------------------------------------
-# Wire-codec backend dispatch: spark-avro's JVM from_avro/to_avro when the
-# module is on the classpath (cluster deployments: --packages
-# org.apache.spark:spark-avro), else the Arrow-batched pandas codec (this
-# sandbox has no spark-avro jar).  Both speak the SAME wire format — the
-# envelope schema's fixed/enum/union encodings are what spark-avro's
-# serializer produces for binary/string columns under a user-provided
-# jsonFormatSchema — so mixed fleets interoperate.
-# ---------------------------------------------------------------------------
+def _unpack_udf(mode: str):
+    """Wire bytes -> envelope struct UDF.  FAILFAST raises on corrupt
+    bytes; PERMISSIVE turns them into an all-null envelope row instead
+    (callers filter `schema_id IS NULL` to quarantine corrupt records)."""
+    permissive = mode == "PERMISSIVE"
+    names = ENVELOPE_STRUCT.fieldNames()
 
-_WIRE_BACKEND: str | None = None
-_SUBSTR_MAX = 2_147_483_647
+    @pandas_udf(ENVELOPE_STRUCT)
+    def unpack_rows(blob: pd.Series) -> pd.DataFrame:
+        dec = _env_decoder()
+        rows = []
+        for b in blob:
+            try:
+                (u, mt, sid, pl, prev, m, et, ts), _ = dec(_envelope_body(b), 0)
+                rows.append((u, mt, sid, pl, prev, _meta_to_dicts(m), et, ts))
+            except Exception:
+                if not permissive:
+                    raise
+                rows.append((None,) * len(names))
+        return pd.DataFrame(rows, columns=names)
 
-
-def _jvm_wire_available(spark) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.spark.sql.avro.AvroDataToCatalyst"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def wire_codec_backend(spark) -> str:
-    """'jvm' when spark-avro is loadable in this session's JVM, else
-    'python'.  Probed once per process (the decision cannot change within
-    a JVM's lifetime)."""
-    global _WIRE_BACKEND
-    if _WIRE_BACKEND is None:
-        _WIRE_BACKEND = "jvm" if _jvm_wire_available(spark) else "python"
-    return _WIRE_BACKEND
+    return unpack_rows
 
 
-def _jvm_pack(envelope_struct: Column) -> Column:
-    from pyspark.sql.avro.functions import to_avro
-
-    return F.concat(
-        F.lit(MAGIC_BINARY), to_avro(envelope_struct, json.dumps(ENVELOPE_SCHEMA))
-    )
-
-
-def _jvm_unpack(wire: Column, mode: str) -> Column:
-    from pyspark.sql.avro.functions import from_avro
-
-    magic = F.substring(wire, 1, 1)
-    rest = F.substring(wire, 2, _SUBSTR_MAX)
-    body = F.when(
-        magic == F.lit(MAGIC_ASCII),
-        # urlsafe-base64 -> standard alphabet for the builtin unbase64
-        F.unbase64(F.translate(rest.cast("string"), "-_", "+/")),
-    ).otherwise(rest)
-    return from_avro(body, json.dumps(ENVELOPE_SCHEMA), {"mode": mode})
-
-
-def pack(envelope_struct: Column, spark=None) -> Column:
-    """Envelope struct column -> wire bytes (magic byte + Avro binary).
-
-    Pass the session to enable the JVM fast path where spark-avro is
-    present; without it (or without the jar) the pandas codec runs."""
-    if spark is not None and wire_codec_backend(spark) == "jvm":
-        return _jvm_pack(envelope_struct)
-    return _pack_udf(envelope_struct)
-
-
-def unpack(wire: Column, mode: str = "FAILFAST", spark=None) -> Column:
+def unpack(wire: Column, mode: str = "FAILFAST") -> Column:
     """Wire bytes -> envelope struct column.  mode='PERMISSIVE' turns
-    corrupt records into all-null rows instead of failing the task.
-    Pass the session to enable the JVM fast path (see ``pack``)."""
-    if spark is not None and wire_codec_backend(spark) == "jvm":
-        return _jvm_unpack(wire, mode)
-    if mode == "PERMISSIVE":
-        return _unpack_permissive_udf(wire)
-    return _unpack_udf(wire)
+    corrupt records into all-null rows instead of failing the task."""
+    return _unpack_udf(mode)(wire)
+
+
+def payload_decoders(writers: dict[int, str], reader_json: str) -> dict:
+    """schema_id -> compiled (writer -> reader) payload decoder, taken from
+    the worker-memoized cache."""
+    return {sid: _payload_decoder(w, reader_json) for sid, w in writers.items()}
+
+
+def payload_decoder_for(decoders: dict, schema_id: int, topic: str):
+    """The compiled payload decoder for a message's schema_id; an id the
+    topic never registered means the registry and stream are out of sync."""
+    dec = decoders.get(int(schema_id))
+    if dec is None:
+        raise KeyError(
+            f"message carries schema_id {int(schema_id)} but topic "
+            f"{topic!r} has only {sorted(decoders)} registered — "
+            "registry out of sync with the stream"
+        )
+    return dec
 
 
 # ---------------------------------------------------------------------------
-# Fused wire paths (python backend): encode+pack / unpack+decode in ONE
-# pandas UDF each.  The layered shape (payload codec UDF, then envelope
-# codec UDF) crosses the Arrow boundary twice per direction — the payload
-# bytes ship JVM->Python->JVM for the payload codec and again inside the
-# envelope struct for the envelope codec.  Fusing halves the crossings on
-# the hot path.  Scope: the COMMON case only (no encryption, no meta
-# attributes, no reader override) — encryption sits between encode and pack
-# as a JVM aes_encrypt, so those topics keep the layered path; clusters
-# with spark-avro keep the JVM envelope codec.  Wire bytes are identical
-# (same compiled codecs), asserted by parity tests.
+# Fused wire paths: encode+pack / unpack+decode in ONE pandas UDF each.  The
+# layered shape (payload codec UDF, then envelope codec UDF) crosses the
+# Arrow boundary twice per direction — the payload bytes ship
+# JVM->Python->JVM for the payload codec and again inside the envelope
+# struct for the envelope codec.  Fusing halves the crossings on the hot
+# path.  Scope: the COMMON case only (no encryption, no meta attributes) —
+# encryption sits between encode and pack as a JVM aes_encrypt, so those
+# topics keep the layered path.  Wire bytes are identical (same compiled
+# codecs), asserted by parity tests.
 # ---------------------------------------------------------------------------
 
 
@@ -504,35 +389,21 @@ def unpack_decode_udf(writers: dict[int, str], reader_schema_json: str, topic: s
             if res is not None:
                 return res
         env_dec = _env_decoder()
-        decoders = {  # worker-memoized per (writer, reader) schema pair
-            sid: _payload_decoder(wjson, reader_schema_json)
-            for sid, wjson in writers.items()
-        }
+        decoders = payload_decoders(writers, reader_schema_json)
         names = ["uuid", "message_type", "schema_id", "timestamp"] + [
             f"p_{n}" for n in reader_names
         ]
         cols: dict[str, list] = {n: [] for n in names}
         for b in blob:
-            mv = memoryview(bytes(b))
-            magic = bytes(mv[:1])
-            body = mv[1:]
-            if magic == MAGIC_ASCII:
-                body = memoryview(base64.urlsafe_b64decode(bytes(body)))
-            elif magic != MAGIC_BINARY:
-                raise ValueError(f"unknown envelope magic byte {magic!r}")
-            (u, mt, sid, payload, _prev, _meta, et, ts), _ = env_dec(body, 0)
+            (u, mt, sid, payload, _prev, _meta, et, ts), _ = env_dec(
+                _envelope_body(b), 0
+            )
             if et is not None:
                 raise ValueError(
                     f"topic {topic!r} carries encrypted payloads ({et}); "
                     "pass crypto_keys to Consumer.messages"
                 )
-            dec = decoders.get(int(sid))
-            if dec is None:
-                raise KeyError(
-                    f"message carries schema_id {int(sid)} but topic "
-                    f"{topic!r} has only {sorted(decoders)} registered — "
-                    "registry out of sync with the stream"
-                )
+            dec = payload_decoder_for(decoders, sid, topic)
             values, _ = dec(memoryview(bytes(payload)), 0)
             cols["uuid"].append(u)
             cols["message_type"].append(mt)
@@ -562,7 +433,7 @@ def encode_payload_udf(schema_json: str):
     def enc(data: pd.DataFrame) -> pd.Series:
         # positional compiled encoder: the struct column MUST be built in
         # schema field order (producer.prepare does)
-        rec = avro_codec.compile_encoder(schema)
+        rec = _payload_encoder(schema_json)
         out = []
         for values in zip(*[data[n] for n in field_names]):
             buf = bytearray()
@@ -577,37 +448,17 @@ def decode_payload_udf(writer_schema_json: str, reader_schema_json: str | None =
     """Returns a pandas UDF decoding Avro bytes to a struct column, with
     optional reader-schema resolution (reader_schema_id semantics,
     _avro_payload.py:59-63, consumer.py:226-233)."""
-    writer = avro_codec.parse_schema(writer_schema_json)
-    reader = (
-        avro_codec.parse_schema(reader_schema_json)
-        if reader_schema_json is not None
-        else writer
-    )
+    if reader_schema_json is None:
+        reader_schema_json = writer_schema_json
+    reader = avro_codec.parse_schema(reader_schema_json)
     spark_type = avro_codec.to_spark_type(reader)
-    reader_names = [f["name"] for f in avro_codec.parse_schema(reader)["fields"]]
+    reader_names = [f["name"] for f in reader["fields"]]
 
     @pandas_udf(spark_type)
     def dec(blob: pd.Series) -> pd.DataFrame:
-        rec = avro_codec.compile_decoder(writer, reader)
+        rec = _payload_decoder(writer_schema_json, reader_schema_json)
         rows = [rec(memoryview(bytes(b)), 0)[0] for b in blob]
         return pd.DataFrame(rows, columns=reader_names)
 
     return dec
 
-
-def _clean_row(d: dict[str, Any]) -> dict[str, Any]:
-    """numpy scalar -> python scalar normalization for the codec."""
-    out = {}
-    for k, v in d.items():
-        if hasattr(v, "item"):
-            v = v.item()
-        out[k] = v
-    return out
-
-
-def message_uuid_hex(uuid_col: Column) -> Column:
-    return F.lower(F.hex(uuid_col))
-
-
-def new_uuid_bytes() -> bytes:
-    return uuidlib.uuid4().bytes

@@ -1663,8 +1663,9 @@ def connected_components_star(
         # re-emits (root, member) edges verbatim, small-star re-groups
         # them verbatim — both proven by the fixpoint characterization),
         # so correctness is unchanged and the common case saves one
-        # action's worth of jobs per invocation.
-        if round_no == 0:
+        # action's worth of jobs per invocation.  A one-round budget has
+        # no next round, so it probes round 1.
+        if round_no == 0 and max_rounds > 1:
             continue
         chained = (
             cur.select("l")

@@ -82,14 +82,10 @@ class Producer:
             else F.unix_timestamp(F.current_timestamp())
         ).cast("int")
 
-        # fused fast path (the common case: no encryption, no meta, python
-        # wire backend): payload encode + envelope pack in ONE pandas UDF —
-        # half the Arrow crossings of the layered shape, identical bytes
-        if (
-            encrypt_key is None
-            and meta is None
-            and env.wire_codec_backend(self.store.spark) == "python"
-        ):
+        # fused fast path (the common case: no encryption, no meta):
+        # payload encode + envelope pack in ONE pandas UDF — half the Arrow
+        # crossings of the layered shape, identical bytes
+        if encrypt_key is None and meta is None:
             fused = env.encode_pack_udf(schema, message_type, schema_id)
             key = self._key_col(rs, schema)
             cols = [
@@ -147,12 +143,7 @@ class Producer:
             enc_type_col.alias("encryption_type"),
             ts.alias("timestamp"),
         )
-        # spark passed through so the wire codec can take the JVM
-        # from_avro/to_avro path when spark-avro is on the classpath
-        cols = [
-            key.alias("key"),
-            env.pack(envelope_struct, spark=self.store.spark).alias("value"),
-        ]
+        cols = [key.alias("key"), env.pack(envelope_struct).alias("value")]
         if order_by:
             cols.append(F.col(order_by).alias("__order"))
         return rows.select(*cols)

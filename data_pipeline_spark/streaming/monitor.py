@@ -171,9 +171,7 @@ def monitoring_sink_builder(
     def build_sink(topic: str, stream: DataFrame):
         decoded = stream.select(
             F.lit(topic).alias("topic"),
-            F.timestamp_seconds(
-                env.unpack(F.col("value"), spark=stream.sparkSession).timestamp
-            ).alias("ts"),
+            F.timestamp_seconds(env.unpack(F.col("value")).timestamp).alias("ts"),
         )
         flushed = counts_with_gap_flush(
             decoded,

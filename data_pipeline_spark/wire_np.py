@@ -57,6 +57,12 @@ def flat_field_types(schema: Any) -> list[tuple[str, str]] | None:
 # ---------------------------------------------------------------------------
 
 
+def _is_int_dtype(dtype) -> bool:
+    """numpy integer dtype; pandas extension dtypes (e.g. nullable
+    Int64Dtype) are not numpy dtypes and stay on the row path."""
+    return isinstance(dtype, np.dtype) and np.issubdtype(dtype, np.integer)
+
+
 def _zigzag64(v: np.ndarray) -> np.ndarray:
     """int64 -> uint64 zigzag, exactly (v << 1) ^ (v >> 63)."""
     return (v.astype(np.uint64) << np.uint64(1)) ^ (
@@ -167,7 +173,7 @@ def encode_pack_batch(
     for name, t in field_types:
         col = data[name]
         if t in ("long", "int"):
-            if not np.issubdtype(col.dtype, np.integer):
+            if not _is_int_dtype(col.dtype):
                 return None
             z = _zigzag64(col.to_numpy().astype(np.int64, copy=False))
             ln = _varint_len(z)
@@ -211,7 +217,7 @@ def encode_pack_batch(
     usrc, uoff, ulen = up
     if not (ulen == 16).all():
         return None  # row path raises the fixed-size error
-    if not np.issubdtype(ts.dtype, np.integer):
+    if not _is_int_dtype(ts.dtype):
         return None
     tz = _zigzag64(ts.to_numpy().astype(np.int64, copy=False))
     tlen = _varint_len(tz)
@@ -427,7 +433,10 @@ def unpack_decode_batch(
                     # the row path's bytes.decode('utf-8') is STRICT;
                     # from_buffers skips validation, so validate here and
                     # fall back (the row path then raises properly)
-                    sarr.validate(full=True)
+                    try:
+                        sarr.validate(full=True)
+                    except pa.ArrowInvalid:
+                        return None
                 cols[f"p_{name}"] = sarr.to_pandas()
                 fpos = fpos + slen
             else:  # pragma: no cover

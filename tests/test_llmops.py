@@ -681,6 +681,22 @@ def test_star_components_high_diameter_and_parity(spark):
     assert star == minlabel
 
 
+def test_star_components_single_round_budget(spark):
+    """max_rounds=1 probes round 1: an edge set that is already a union of
+    stars converges there and returns the star labels."""
+    edges = spark.createDataFrame(
+        [(1, 2), (3, 1), (5, 6)], "id_a LONG, id_b LONG"
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id LONG")
+    got = {
+        r.doc_id: r.component
+        for r in ld.connected_components_star(
+            edges, nodes, "doc_id", max_rounds=1
+        ).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7}
+
+
 def test_approx_distinct_error_bound(spark):
     """HLL at rsd=2% stays within 5% of the exact distinct count."""
     from data_pipeline_spark.queries import QUERIES

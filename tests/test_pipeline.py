@@ -249,7 +249,7 @@ def test_full_refresh_runner_and_manager(spark, registry, store):
 
 def test_permissive_unpack_quarantines_corrupt(spark, registry, store):
     """Corrupt wire bytes become null rows in PERMISSIVE mode; FAILFAST
-    raises (from_avro-style mode semantics)."""
+    raises (Spark's PERMISSIVE/FAILFAST parse-mode semantics)."""
     rs = registry.latest_schema_for_source("test.main.db", "events")
     producer = Producer(store, registry)
     producer.publish(_events(spark, 10), rs.schema_id, order_by="event_id")
@@ -628,55 +628,6 @@ def test_ledger_and_sidecar_compaction(spark, registry, store, tmp_path):
         spark.read.parquet(str(tmp_path / "ledger")).count()
         == len(before_c)
     )
-
-
-def test_wire_codec_backend_dispatch(spark, monkeypatch):
-    """The wire codec probes spark-avro once and routes pack/unpack through
-    the JVM from_avro/to_avro when present, falling back to the pandas
-    codec otherwise.  This sandbox has no spark-avro jar, so the live probe
-    must say 'python'; the 'jvm' route is asserted by faking the probe."""
-    from data_pipeline_spark import envelope as env
-
-    monkeypatch.setattr(env, "_WIRE_BACKEND", None)
-    assert env.wire_codec_backend(spark) == "python"
-    # memoized: a second call must not re-probe
-    monkeypatch.setattr(
-        env, "_jvm_wire_available", lambda s: (_ for _ in ()).throw(AssertionError)
-    )
-    assert env.wire_codec_backend(spark) == "python"
-
-    # python route actually packs/unpacks (roundtrip through columns)
-    df = spark.createDataFrame(
-        [(env.new_uuid_bytes(), "create", 1, b"xyz", None, None, None, 7)],
-        schema=env.ENVELOPE_STRUCT,
-    )
-    wire = df.select(env.pack(F.struct(*df.columns), spark=spark).alias("value"))
-    got = wire.select(env.unpack(F.col("value"), spark=spark).alias("e")).select("e.*")
-    row = got.collect()[0]
-    assert (row.message_type, row.schema_id, bytes(row.payload)) == ("create", 1, b"xyz")
-
-    # jvm route: force the backend and verify dispatch reaches the
-    # spark-avro entry points (faked — no jar in this sandbox)
-    calls = []
-    import pyspark.sql.avro.functions as avro_fns
-
-    monkeypatch.setattr(env, "_WIRE_BACKEND", "jvm")
-    monkeypatch.setattr(
-        avro_fns, "to_avro", lambda col, schema: (calls.append(("to", schema)), F.lit(b"x"))[1]
-    )
-    monkeypatch.setattr(
-        avro_fns,
-        "from_avro",
-        lambda col, schema, opts: (calls.append(("from", opts["mode"])), F.lit(None).cast(env.ENVELOPE_STRUCT))[1],
-    )
-    env.pack(F.lit(None).cast(env.ENVELOPE_STRUCT), spark=spark)
-    env.unpack(F.lit(b""), mode="PERMISSIVE", spark=spark)
-    assert [c[0] for c in calls] == ["to", "from"]
-    assert json.loads(calls[0][1])["name"] == "Envelope"  # true wire schema
-    assert calls[1][1] == "PERMISSIVE"
-    # without a session the dispatcher must not touch the JVM path
-    env.pack(F.lit(None).cast(env.ENVELOPE_STRUCT))
-    assert len(calls) == 2
 
 
 def test_refresh_requester_validates_before_enqueue(spark, registry):

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_spark import envelope as env
@@ -618,11 +617,6 @@ def test_fused_stream_tail_matches_batch(spark, tmp_path):
     """messages_stream WITHOUT crypto keys rides the fused unpack+decode
     UDF; its output must equal the batch consumer's rows exactly."""
     from data_pipeline_spark.consumer import Consumer
-
-    # pin the path under test: with spark-avro on the classpath the layered
-    # JVM codec would run instead and this parity would assert nothing
-    if env.wire_codec_backend(spark) != "python":
-        pytest.skip("fused wire path requires the python backend")
 
     reg = SchemaRegistry()
     rs = reg.register_schema("fus.main.db", "events", EVENT_SCHEMA)

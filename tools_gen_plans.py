@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for every bench query to plans/r12/.
+"""Dump .explain("formatted") for every bench query to plans/<round>/.
 
-Usage: python tools_gen_plans_r12.py before|after [name ...]
+Usage: python tools_gen_plans.py <round> before|after [name ...]
+       (e.g. python tools_gen_plans.py r13 after)
 
-Writes plans/r12/<query>_<tag>.txt at the bench scale factor
+Writes plans/<round>/<query>_<tag>.txt at the bench scale factor
 ($SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.1) and prints a one-line
 plan-shape summary per query (Exchange count, join strategies, Python-eval
 nodes, pushed-filter presence) so plan regressions/diffs are greppable.
@@ -60,11 +61,14 @@ def summarize(plan: str) -> str:
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or [n for n in BENCH_QUERIES if n in QUERIES]
-    outdir = Path(__file__).resolve().parent / "plans" / "r12"
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or [n for n in BENCH_QUERIES if n in QUERIES]
+    outdir = Path(__file__).resolve().parent / "plans" / rnd
     outdir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark("plans_r12")
+    spark = get_spark(f"plans_{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         try:
