@@ -1,13 +1,21 @@
-.PHONY: test bench smoke correctness
+.PHONY: test bench smoke correctness perfbench
 
+W ?= cdc_publish_tail
+SEED ?= 1
+
+# the ROADMAP tier-1 command, verbatim
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 correctness:
 	python -m pytest tests/test_correctness.py -q
 
 bench:
 	python bench.py
+
+# one benchmark run: make perfbench W=<workload> SEED=<n>
+perfbench:
+	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 8 --trace 0
 
 smoke:
 	python -c "import __spark_entry__ as e; from data_pipeline_spark.session import get_spark; s=get_spark('smoke'); print(len(e.entry(s).collect()), 'rows'); s.stop()"

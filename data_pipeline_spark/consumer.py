@@ -51,10 +51,31 @@ class Consumer:
         starting_offsets: dict[int, int] | None = None,
         from_committed: bool = False,
     ) -> DataFrame:
+        wire = self._wire(topic, starting_offsets, from_committed)
+        return wire.withColumn("envelope", env.unpack(F.col("value")))
+
+    def _wire(
+        self,
+        topic: str,
+        starting_offsets: dict[int, int] | None,
+        from_committed: bool,
+    ) -> DataFrame:
+        """The batch read behind ``raw`` and ``messages``, ending at the
+        topic's high watermarks as of this call.  ``commit`` re-executes
+        the consumed frame's plan, and the bound makes that re-execution
+        cover the offsets the caller collected and no later ones, by
+        contract rather than through the parquet scan's file-listing
+        cache.  The bound is a driver read of the watermark sidecar;
+        topics without one keep the unbounded read rather than pay a scan
+        job."""
         if from_committed and self.ledger is not None and starting_offsets is None:
             starting_offsets = self.ledger.committed(self.group, topic)
-        wire = self.store.read(topic, starting_offsets=starting_offsets)
-        return wire.withColumn("envelope", env.unpack(F.col("value")))
+        ending_offsets = (
+            self.store.high_watermarks(topic)
+            if self.store.has_sidecar(topic)
+            else None
+        )
+        return self.store.read(topic, starting_offsets, ending_offsets)
 
     # -- decoded tail -------------------------------------------------------
 
@@ -76,11 +97,17 @@ class Consumer:
         attribute the producer attached (E4; message.py:817-935 decrypt-if-
         needed step).  An encrypted message whose key_id is not provided
         raises at execution.
+
+        The frame is a snapshot: it ends at the high watermarks recorded
+        when this method runs (for topics with a watermark sidecar), so
+        collecting it and then passing it to ``commit`` covers the same
+        records even if more are published in between.  A publish that
+        has reserved its offsets but not yet appended its rows when this
+        method runs is out of scope: if its rows land between the collect
+        and the commit, they are committed without being delivered.
         """
         if crypto_keys is None:
-            if from_committed and self.ledger is not None and starting_offsets is None:
-                starting_offsets = self.ledger.committed(self.group, topic)
-            wire = self.store.read(topic, starting_offsets=starting_offsets)
+            wire = self._wire(topic, starting_offsets, from_committed)
             return self._decode_fused(wire, topic, reader_schema_id)
         raw = self.raw(topic, starting_offsets, from_committed)
         return self._decode_enveloped(raw, topic, reader_schema_id, crypto_keys)

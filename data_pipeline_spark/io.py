@@ -225,6 +225,69 @@ def load_spread(
 
 # Footer row-count memo per (path, fingerprint) — see parquet_num_rows.
 _NUM_ROWS: dict = {}
+# above this many files, reading every footer from the driver costs about
+# what the scan it replaces does; the footer functions return None instead
+_FOOTER_FILE_CAP = 256
+
+
+def _footer_files(path: str):
+    """(parquet files, fingerprint) of a parquet file or layout.
+    Directories are listed recursively (hive-partitioned layouts); the
+    fingerprint is every file's (path, size,
+    mtime), so an append anywhere in the tree invalidates the memo.  None
+    when the path is missing, holds no parquet file, or holds more than
+    ``_FOOTER_FILE_CAP`` of them."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return [path], (st.st_size, st.st_mtime_ns)
+        found = []
+        dirs = [path]
+        while dirs:
+            with os.scandir(dirs.pop()) as it:
+                for e in it:
+                    # Spark's listing rule: skip ``.`` names, and ``_``
+                    # names other than partition directories (``_col=v``)
+                    if e.name.startswith(".") or (
+                        e.name.startswith("_") and "=" not in e.name
+                    ):
+                        continue
+                    if e.is_dir():
+                        dirs.append(e.path)
+                    elif e.name.endswith(".parquet"):
+                        st = e.stat()
+                        found.append((e.path, st.st_size, st.st_mtime_ns))
+                        if len(found) > _FOOTER_FILE_CAP:
+                            return None
+    except OSError:
+        return None
+    if not found:
+        return None
+    found.sort()
+    return [f for f, _, _ in found], tuple(found)
+
+
+def _memo_footer_total(key, path: str, total_of):
+    """``total_of(files)`` for the parquet files under ``path``, memoized
+    on their fingerprint; None when ``_footer_files`` or ``total_of``
+    gives None or a footer cannot be read."""
+    listed = _footer_files(path)
+    if listed is None:
+        return None
+    files, sig = listed
+    hit = _NUM_ROWS.get(key)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    try:
+        total = total_of(files)
+    except Exception:
+        return None
+    if total is None:
+        return None
+    if len(_NUM_ROWS) > 512:
+        _NUM_ROWS.clear()
+    _NUM_ROWS[key] = (sig, total)
+    return total
 
 
 def parquet_num_rows(path: str) -> int | None:
@@ -233,64 +296,32 @@ def parquet_num_rows(path: str) -> int | None:
     parquet scan computes the same number the slow way: a full scan stage
     plus a job's fixed overhead (~0.1-0.3 s at sf0.1), for a value every
     footer already stores.  This is the same metadata Spark's own
-    statistics use; None when the path is missing or holds no parquet
-    files (callers fall back to a real count).  Memoized on the file-set
-    fingerprint so repeated probes (gate triggers, bench reps) pay one
-    footer read per layout version."""
+    statistics use.  Directories are listed recursively, so partitioned
+    layouts count too.  None when the path is missing, holds no parquet
+    files or more than ``_FOOTER_FILE_CAP`` of them (callers fall back to
+    a real count).  Memoized on the file-set fingerprint so repeated
+    probes (gate triggers, bench reps) pay one footer read per layout
+    version."""
     import pyarrow.parquet as pq
 
-    sig = _path_sig(path)
-    if sig is None:
-        return None
-    hit = _NUM_ROWS.get(path)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    try:
-        if os.path.isdir(path):
-            files = [
-                os.path.join(path, n)
-                for n in os.listdir(path)
-                if n.endswith(".parquet") and not n.startswith((".", "_"))
-            ]
-            if not files:
-                return None
-            total = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        else:
-            total = pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return None
-    if len(_NUM_ROWS) > 512:
-        _NUM_ROWS.clear()
-    _NUM_ROWS[path] = (sig, total)
-    return total
+    return _memo_footer_total(
+        path,
+        path,
+        lambda files: sum(pq.ParquetFile(f).metadata.num_rows for f in files),
+    )
 
 
 def parquet_nonnull_rows(path: str, col: str) -> int | None:
     """EXACT count of non-NULL values of ``col`` from parquet FOOTER
     statistics (num_rows minus the column's null_count per row group) —
-    driver-side metadata, no Spark job; None when the path is missing,
-    holds no parquet files, lacks the column, or any row group lacks a
-    null_count statistic (callers fall back to a real count)."""
+    driver-side metadata, no Spark job; same listing as
+    ``parquet_num_rows``.  None also when a file lacks the column (a
+    partition column lives in directory names, not footers) or any row
+    group lacks a null_count statistic (callers fall back to a real
+    count)."""
     import pyarrow.parquet as pq
 
-    sig = _path_sig(path)
-    if sig is None:
-        return None
-    key = (path, col)
-    hit = _NUM_ROWS.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    try:
-        if os.path.isdir(path):
-            files = [
-                os.path.join(path, n)
-                for n in os.listdir(path)
-                if n.endswith(".parquet") and not n.startswith((".", "_"))
-            ]
-        else:
-            files = [path]
-        if not files:
-            return None
+    def nonnull(files):
         total = 0
         for f in files:
             md = pq.ParquetFile(f).metadata
@@ -304,12 +335,9 @@ def parquet_nonnull_rows(path: str, col: str) -> int | None:
                 if st is None or not st.has_null_count:
                     return None
                 total += g.num_rows - st.null_count
-    except Exception:
-        return None
-    if len(_NUM_ROWS) > 512:
-        _NUM_ROWS.clear()
-    _NUM_ROWS[key] = (sig, total)
-    return total
+        return total
+
+    return _memo_footer_total((path, col), path, nonnull)
 
 
 def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:

@@ -7,6 +7,20 @@ UTC session timezone makes event-time arithmetic deterministic across
 clusters (the reference stores event time as epoch seconds —
 data_pipeline/envelope.py envelope `timestamp`; we normalize to UTC
 TimestampType at the boundary).
+
+Local masters start their Python workers from ``_pyworker`` instead of
+``pyspark.daemon``.  Every task on a reused worker runs
+``importlib.invalidate_caches()`` (``pyspark.worker_util.
+setup_spark_files``), and under CPython 3.11 that makes every zipimporter
+on the worker path re-parse its archive's central directory: 13 importers
+over pyspark.zip (1,328 entries), 2 over the py4j zip and 2 over the
+spark-core jar (5,359 entries) — 0.25-0.35 s per task on a 4-core host,
+more than the task itself for a 5k-row CDC batch.  ``_pyworker`` keeps
+those indexes, which cannot go stale: the archives do not change while a
+worker lives, and a zip added later with ``addPyFile`` is a new path with
+its own importer.  ``spark://`` masters keep the stock daemon: there the
+package zip reaches ``sys.path`` only per task, after the daemon has
+started, so the daemon module could not be imported from it.
 """
 
 from __future__ import annotations
@@ -122,6 +136,12 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
     )
+    if resolved_master.split("[")[0] == "local":
+        # local workers inherit the driver's PYTHONPATH, which carries the
+        # package parent (__init__.py)
+        builder = builder.config(
+            "spark.python.daemon.module", "data_pipeline_spark._pyworker"
+        )
     if resolved_master.startswith("spark://"):
         # standalone-cluster executor shape (overridable via extra_conf):
         # one executor per worker, python workers ride the executor's

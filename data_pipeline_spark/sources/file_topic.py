@@ -15,6 +15,15 @@ every consumer in the engine sees the same columns either way.  Batch reads
 prune on the `partition` directory column and push offset predicates into
 parquet row-group filters; `read_stream` is a Structured Streaming file
 source over the same layout.
+
+Metadata is driver-written: the topic watermark sidecar and the consumer
+offset ledger are directories of small parquet files that the DRIVER reads
+and writes with pyarrow (``_read_rows`` / ``_write_rows``), as Structured
+Streaming keeps its offset and commit logs.  Each holds a few rows per
+publish or commit, and a Spark job to read or write them cost more than
+the batch it described.  Both engines see the same layout: Spark-written
+and driver-written files mix in one directory, and names starting with
+``.`` or ``_`` (tmp files, ``_SUCCESS``, ``.crc``) are skipped by both.
 """
 
 from __future__ import annotations
@@ -26,6 +35,49 @@ import threading
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _read_rows(path: str, schema, columns: list[str], where=None) -> list[list]:
+    """``columns`` of a metadata directory as Python lists, read by the
+    driver.  The explicit pyarrow ``schema`` resolves Spark- and
+    driver-written files alike, and fills columns older files lack with
+    null."""
+    import pyarrow.dataset as pads
+
+    table = pads.dataset(path, format="parquet", schema=schema).to_table(
+        columns=columns, filter=where
+    )
+    return [c.to_pylist() for c in table.columns]
+
+
+def _write_rows(path: str, schema, rows: list[tuple]) -> str:
+    """Write ``rows`` into directory ``path`` as ONE parquet file, from the
+    driver; returns the file name.  tmp + atomic rename: a reader sees the
+    file whole or not at all, never torn."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema
+    )
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.rename(tmp, os.path.join(path, name))
+    return name
+
+
+def _max_per_key(pairs) -> dict:
+    """{key: max value} over (key, value) pairs, skipping null values."""
+    out: dict = {}
+    for k, v in pairs:
+        if v is not None and (k not in out or v > out[k]):
+            out[k] = v
+    return out
+
 
 TOPIC_SCHEMA = T.StructType(
     [
@@ -128,44 +180,14 @@ class TopicStore:
             ]
         )
 
-    def _append_meta_rows(self, topic: str, rows: list[tuple]) -> None:
-        """Append sidecar rows as ONE parquet file written by the driver.
-
-        The sidecar is metadata — a handful of rows per publish — but the
-        Spark append (createDataFrame -> write job + commit protocol) the
-        pre-r12 form used costs ~0.8 s per publish (r12 profile), the
-        single biggest term in a publish.  The driver writing a 4-row
-        parquet file is exactly the "driver does metadata, executors do
-        data" split (guide §5); tmp + atomic rename keeps the reservation
-        crash window identical — a reservation is either fully visible or
-        absent, never torn.  Spark readers see the same directory-of-
-        parquet-files layout either way.
-        """
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        meta = self._meta_dir(topic)
-        os.makedirs(meta, exist_ok=True)
-        cols = list(zip(*rows))
-        table = pa.Table.from_arrays(
-            [
-                pa.array(cols[0], type=pa.int32()),
-                pa.array(cols[1], type=pa.int64()),
-                pa.array(cols[2], type=pa.string()),
-                pa.array(cols[3], type=pa.int64()),
-            ],
-            schema=self._meta_arrow_schema(),
-        )
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(meta, f".{name}.tmp")
-        pq.write_table(table, tmp)
-        os.rename(tmp, os.path.join(meta, name))
-
     def _meta_dir(self, topic: str) -> str:
         # sibling of the data dir so topic parquet scans never see it
         return os.path.join(self.root, ".meta", topic)
+
+    def has_sidecar(self, topic: str) -> bool:
+        """Whether the topic has a watermark sidecar, i.e. whether
+        ``high_watermarks`` is a driver read rather than a topic scan."""
+        return os.path.isdir(self._meta_dir(topic))
 
     def exists(self, topic: str) -> bool:
         return os.path.isdir(self._dir(topic))
@@ -278,8 +300,13 @@ class TopicStore:
             # (find_publish), which is unambiguous because competing
             # publishes always reserve first and so can never occupy a
             # range that was already reserved.
-            self._append_meta_rows(
-                topic,
+            # the Spark append (createDataFrame -> write job + commit
+            # protocol) this replaced cost ~0.8 s per publish (r12
+            # profile); the atomic rename keeps the crash window identical
+            # — a reservation is either fully visible or absent
+            _write_rows(
+                self._meta_dir(topic),
+                self._meta_arrow_schema(),
                 [
                     (p, n, publish_id, highs.get(p, 0))
                     for p, n in new_highs.items()
@@ -312,19 +339,13 @@ class TopicStore:
         back to a data scan for topics written before the sidecar existed.
         """
         highs = {p: 0 for p in range(num_partitions)}
-        if os.path.isdir(self._meta_dir(topic)):
-            import pyarrow.dataset as pads
-
-            table = pads.dataset(
+        if self.has_sidecar(topic):
+            parts, nexts = _read_rows(
                 self._meta_dir(topic),
-                format="parquet",
-                schema=self._meta_arrow_schema(),
-            ).to_table(columns=["partition", "next_offset"])
-            seen: dict[int, int] = {}
-            for p, n in zip(*(c.to_pylist() for c in table.columns)):
-                if n is not None and (p not in seen or n > seen[p]):
-                    seen[p] = n
-            highs.update(seen)
+                self._meta_arrow_schema(),
+                ["partition", "next_offset"],
+            )
+            highs.update(_max_per_key(zip(parts, nexts)))
             return highs
         if not self.exists(topic):
             return highs
@@ -465,52 +486,90 @@ class TopicStore:
 class OffsetLedger:
     """Consumer-group committed offsets (S3): (group, topic, partition) ->
     next offset, persisted as parquet.  Commit takes max(offset)+1 per
-    partition like base_consumer.py:597-611."""
+    partition like base_consumer.py:597-611.
+
+    Like the watermark sidecar, the ledger is driver-written metadata: the
+    reference fetches and commits offsets as cheap metadata calls
+    (base_consumer.py:566-611), and here ``committed`` is a pyarrow read
+    (no Spark job) and ``commit_messages`` runs its one aggregation job and
+    writes the rows from the driver.  Files written by the earlier Spark
+    path (with their ``_SUCCESS`` and ``.crc`` siblings) and driver-written
+    files mix in one directory: both carry the same four columns, and every
+    read takes the max per key over all of them.
+    """
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
+    @staticmethod
+    def _arrow_schema():
+        import pyarrow as pa
+
+        return pa.schema(
+            [
+                ("group", pa.string()),
+                ("topic", pa.string()),
+                ("partition", pa.int32()),
+                ("next_offset", pa.int64()),
+            ]
+        )
+
     def committed(self, group: str, topic: str) -> dict[int, int]:
         if not os.path.exists(self.path):
             return {}
-        rows = (
-            self.spark.read.parquet(self.path)
-            .filter((F.col("group") == group) & (F.col("topic") == topic))
-            .groupBy("partition")
-            .agg(F.max("next_offset").alias("next_offset"))
-            .collect()
+        import pyarrow.dataset as pads
+
+        parts, nexts = _read_rows(
+            self.path,
+            self._arrow_schema(),
+            ["partition", "next_offset"],
+            (pads.field("group") == group) & (pads.field("topic") == topic),
         )
-        return {r.partition: r.next_offset for r in rows}
+        return _max_per_key(zip(parts, nexts))
 
     def compact(self) -> None:
         """Rewrite the ledger to one row per (group, topic, partition) —
         commits append, so an always-on consumer group accumulates
         O(commits) rows; `committed` already aggregates, compaction just
-        bounds the file."""
+        bounds the directory.  The compacted file lands (atomically)
+        before the files it replaces are removed, and only files listed
+        before the read are removed, so a crash or a concurrent commit
+        never loses a committed offset."""
         if not os.path.exists(self.path):
             return
-        rows = (
-            self.spark.read.parquet(self.path)
-            .groupBy("group", "topic", "partition")
-            .agg(F.max("next_offset").alias("next_offset"))
-            .collect()
+        old = [
+            n
+            for n in os.listdir(self.path)
+            if not n.endswith(".tmp")
+            and os.path.isfile(os.path.join(self.path, n))
+        ]
+        groups, topics, parts, nexts = _read_rows(
+            self.path,
+            self._arrow_schema(),
+            ["group", "topic", "partition", "next_offset"],
         )
-        self.spark.createDataFrame(
-            [(r.group, r.topic, r.partition, r.next_offset) for r in rows],
-            "group STRING, topic STRING, partition INT, next_offset LONG",
-        ).write.mode("overwrite").parquet(self.path)
+        latest = _max_per_key(zip(zip(groups, topics, parts), nexts))
+        _write_rows(
+            self.path,
+            self._arrow_schema(),
+            [(*key, n) for key, n in latest.items()],
+        )
+        for n in old:
+            os.remove(os.path.join(self.path, n))
 
     def commit_messages(self, group: str, topic: str, consumed: DataFrame) -> None:
-        """Commit max(offset)+1 per partition of the consumed batch."""
-        commits = (
+        """Commit max(offset)+1 per partition of the consumed batch: one
+        Spark aggregation job, rows written by the driver.  An empty batch
+        commits nothing."""
+        rows = (
             consumed.groupBy("partition")
             .agg((F.max("offset") + 1).alias("next_offset"))
-            .select(
-                F.lit(group).alias("group"),
-                F.lit(topic).alias("topic"),
-                "partition",
-                "next_offset",
-            )
+            .collect()
         )
-        commits.write.mode("append").parquet(self.path)
+        if rows:
+            _write_rows(
+                self.path,
+                self._arrow_schema(),
+                [(group, topic, r.partition, r.next_offset) for r in rows],
+            )

@@ -3895,6 +3895,32 @@ def test_bigram_uni_from_model_identity(spark):
     assert old_total == new_total
 
 
+@pytest.mark.parametrize("footer", [True, False], ids=["footer", "scan"])
+def test_bigram_oracle_on_both_total_paths(spark, duck, monkeypatch, footer):
+    """bigram_lm_perplexity matches its DuckDB oracle whether the token
+    total's non-NULL text count comes from parquet footers or, when the
+    footer read gives up (None), from the corpus scan."""
+    from data_pipeline_spark import queries_llm
+    from data_pipeline_spark.queries import QUERIES
+    from tests.conftest import SF_CORRECT
+    from tests.oracle_utils import compare_query, register_duck_views
+
+    calls = []
+    real = queries_llm.parquet_nonnull_rows
+
+    def probe(path, col):
+        calls.append(path)
+        return real(path, col) if footer else None
+
+    monkeypatch.setattr(queries_llm, "parquet_nonnull_rows", probe)
+    register_duck_views(duck, SF_CORRECT)
+    ok, detail = compare_query(spark, duck, QUERIES["bigram_lm_perplexity"], SF_CORRECT)
+    assert ok, detail
+    assert calls
+    if footer:
+        assert real(calls[0], "text") is not None
+
+
 def test_bigram_seq_inline_matches_window_form(spark):
     """bigram_lm_perplexity's (doc_id, w, prev) stream now derives prev
     IN-ROW from the token array (prev of position i is tokens[i-1], NULL

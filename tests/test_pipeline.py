@@ -4,6 +4,7 @@ topic -> consumer roundtrip, exactly-once recovery, tailer, refresh."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -159,6 +160,112 @@ def test_offset_ledger_commit_and_resume(spark, registry, store, tmp_path):
     producer.publish(more, rs.schema_id, order_by="event_id")
     batch2 = consumer.messages(rs.topic, from_committed=True)
     assert batch2.count() == 50
+
+
+def test_commit_after_collect_skips_later_publish(spark, registry, store, tmp_path):
+    """A publish landing between collect() and commit() is neither
+    committed nor lost: the consumed frame ends at the high watermarks of
+    its messages() call, so commit re-executes the same snapshot."""
+    rs = registry.latest_schema_for_source("test.main.db", "events")
+    producer = Producer(store, registry)
+    ledger = OffsetLedger(spark, str(tmp_path / "offsets"))
+    consumer = Consumer(store, registry, group="race", ledger=ledger)
+    events = _events(spark, 120)
+
+    producer.publish(events.filter(F.col("event_id") < 80), rs.schema_id, order_by="event_id")
+    batch_a = consumer.messages(rs.topic, from_committed=True)
+    got_a = sorted(r.payload.event_id for r in batch_a.collect())
+    producer.publish(events.filter(F.col("event_id") >= 80), rs.schema_id, order_by="event_id")
+    consumer.commit(rs.topic, batch_a)
+
+    got_b = sorted(
+        r.payload.event_id
+        for r in consumer.messages(rs.topic, from_committed=True).collect()
+    )
+    want = sorted(r.event_id for r in events.collect())
+    assert got_a == [e for e in want if e < 80]
+    assert got_b == [e for e in want if e >= 80]
+
+
+def _jobs_in_group(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ledger_spark_action_budget(spark, tmp_path):
+    """committed() is a driver read (0 jobs); commit_messages() runs one
+    aggregation and writes from the driver (1 job).  Adaptive execution
+    runs each shuffle stage as its own job, so the commit is counted with
+    it off, where one action is one job."""
+    import uuid
+
+    ledger = OffsetLedger(spark, str(tmp_path / "ledger"))
+    consumed = spark.createDataFrame(
+        [(p, o) for p in range(3) for o in range(5)], "partition INT, offset LONG"
+    )
+    tag = uuid.uuid4().hex
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _, n_commit = _jobs_in_group(
+            spark, f"commit-{tag}", lambda: ledger.commit_messages("g", "t", consumed)
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    got, n_read = _jobs_in_group(
+        spark, f"committed-{tag}", lambda: ledger.committed("g", "t")
+    )
+    assert got == {0: 5, 1: 5, 2: 5}
+    assert (n_commit, n_read) == (1, 0)
+
+
+def _spark_committed(spark, path, group, topic):
+    """The ledger read as Spark ran it before the driver-side read."""
+    return {
+        r.partition: r.next_offset
+        for r in spark.read.parquet(path)
+        .filter((F.col("group") == group) & (F.col("topic") == topic))
+        .groupBy("partition")
+        .agg(F.max("next_offset").alias("next_offset"))
+        .collect()
+    }
+
+
+def test_ledger_reads_spark_and_driver_written_files(spark, tmp_path):
+    """A ledger directory holding a Spark-written file (with _SUCCESS and
+    .crc siblings) and driver-written files reads the same committed()
+    map as Spark does; compact() keeps it; an empty consumed batch
+    changes nothing."""
+    path = str(tmp_path / "ledger")
+    spark.createDataFrame(
+        [("g", "t", 0, 7), ("g", "t", 1, 9), ("g", "u", 0, 50), ("h", "t", 2, 4)],
+        "group STRING, topic STRING, partition INT, next_offset LONG",
+    ).write.mode("append").parquet(path)
+    assert any(n.startswith(("_", ".")) for n in os.listdir(path))
+    ledger = OffsetLedger(spark, path)
+    consumed = spark.createDataFrame(
+        [(0, 3), (1, 20), (2, 10)], "partition INT, offset LONG"
+    )
+    ledger.commit_messages("g", "t", consumed)
+    want = {0: 7, 1: 21, 2: 11}
+    assert ledger.committed("g", "t") == _spark_committed(spark, path, "g", "t") == want
+    assert ledger.committed("g", "u") == {0: 50}
+    assert ledger.committed("h", "t") == {2: 4}
+
+    ledger.commit_messages("g", "t", consumed.limit(0))
+    assert ledger.committed("g", "t") == want
+
+    ledger.compact()
+    assert ledger.committed("g", "t") == _spark_committed(spark, path, "g", "t") == want
+    assert ledger.committed("g", "u") == {0: 50}
+    assert ledger.committed("h", "t") == {2: 4}
+    assert len(os.listdir(path)) == 1  # Spark's _SUCCESS and .crc files too
+    assert spark.read.parquet(path).count() == 5
 
 
 def test_reader_schema_resolution_on_consume(spark, registry, store):

@@ -729,3 +729,35 @@ def test_interleave_magic_mask_bit_identical(spark):
             fast.alias("fast"), ref.cast("long").alias("ref")
         ).filter(F.col("fast") != F.col("ref"))
         assert bad.count() == 0, f"divergence at bits={bits}"
+
+
+def test_footer_counts_on_partitioned_layout(spark, tmp_path, monkeypatch):
+    """parquet_num_rows / parquet_nonnull_rows list hive-partitioned
+    layouts recursively (skipping ``_`` and ``.`` names as Spark does),
+    match Spark's count, see appends deep in the tree, and fall
+    back (None) above the file-count cap."""
+    from data_pipeline_spark import io
+
+    path = str(tmp_path / "nested")
+    df = spark.range(0, 500).select(
+        (F.col("id") % 3).alias("a"),
+        (F.col("id") % 2).cast("string").alias("b"),
+        F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id")).alias("v"),
+    )
+    df.repartition(4).write.partitionBy("a", "b").parquet(path)
+    df.limit(7).write.parquet(path + "/a=1/_staging")
+    df.limit(7).write.parquet(path + "/.hidden")
+
+    def counts():
+        scan = spark.read.parquet(path)
+        return scan.count(), scan.filter(F.col("v").isNotNull()).count()
+
+    assert (io.parquet_num_rows(path), io.parquet_nonnull_rows(path, "v")) == counts()
+    assert io.parquet_nonnull_rows(path, "a") is None  # partition column
+
+    df.filter(F.col("id") < 40).write.mode("append").partitionBy("a", "b").parquet(path)
+    assert (io.parquet_num_rows(path), io.parquet_nonnull_rows(path, "v")) == counts()
+
+    monkeypatch.setattr(io, "_FOOTER_FILE_CAP", 2)
+    assert io.parquet_num_rows(path) is None
+    assert io.parquet_nonnull_rows(path, "v") is None

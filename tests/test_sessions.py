@@ -1,9 +1,16 @@
 """session_window sessions: batch/streaming parity and the pinned boundary
-divergence vs the cumulative-sum sessionization."""
+divergence vs the cumulative-sum sessionization; and the Spark session's
+Python worker daemon."""
 
 from __future__ import annotations
 
+import uuid
+import zipfile
+
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from data_pipeline_spark.io import load_table
 from data_pipeline_spark.streaming.sessions import session_aggregate
@@ -91,3 +98,51 @@ def test_session_aggregate_matches_cumsum(spark):
         .collect()
     )
     assert native == cumsum
+
+
+def _on_workers(spark, probe) -> set:
+    """Distinct values of ``probe()`` evaluated in a pandas UDF on four
+    tasks, i.e. on the session's (reused) Python workers."""
+
+    @pandas_udf("string")
+    def run(ids: pd.Series) -> pd.Series:
+        return ids.map(lambda _: probe())
+
+    df = spark.range(8).repartition(4)
+    return {r[0] for r in df.select(run("id")).collect()}
+
+
+def test_worker_daemon_keeps_zip_indexes(spark):
+    """Local Python workers come from data_pipeline_spark._pyworker, whose
+    zipimporter.invalidate_caches is a no-op (no per-task re-read of the
+    pyspark/py4j/spark-core archives)."""
+    if spark.sparkContext.master.split("[")[0] != "local":
+        pytest.skip("spark:// masters keep the stock pyspark.daemon")
+
+    def probe():
+        import os
+        import zipimport
+
+        fn = zipimport.zipimporter.invalidate_caches
+        return f"{os.path.basename(fn.__code__.co_filename)}:{fn.__qualname__}"
+
+    assert _on_workers(spark, probe) == {"_pyworker.py:_keep_zip_directory"}
+
+
+def test_worker_daemon_imports_zip_added_later(spark, tmp_path):
+    """A zip shipped with addPyFile after the workers are warm is a new
+    path with its own importer, so UDFs can still import from it."""
+    _on_workers(spark, lambda: "warm")
+    token = uuid.uuid4().hex
+    mod = f"late_{token}"
+    zpath = tmp_path / f"{mod}.zip"
+    with zipfile.ZipFile(zpath, "w") as z:
+        z.writestr(f"{mod}.py", f"TOKEN = {token!r}\n")
+    spark.sparkContext.addPyFile(str(zpath))
+
+    def probe():
+        import importlib
+
+        return importlib.import_module(mod).TOKEN
+
+    assert _on_workers(spark, probe) == {token}
