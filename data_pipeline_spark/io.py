@@ -1,9 +1,19 @@
-"""Table loaders for the driver-generated TPC-H-ish corpus (TESTDATA.md).
+"""Table loaders for the driver-generated TPC-H-ish corpus (TESTDATA.md),
+and the driver-side reader/writer of small metadata directories.
 
-These are plain parquet scans — Catalyst gets predicate pushdown and column
-pruning for free, which is the point: every operator downstream declares its
-projection/filters and the scan narrows itself (`PushedFilters`/`ReadSchema`
-in .explain).
+The loaders are plain parquet scans — Catalyst gets predicate pushdown and
+column pruning for free, which is the point: every operator downstream
+declares its projection/filters and the scan narrows itself
+(`PushedFilters`/`ReadSchema` in .explain).
+
+Metadata directories (the topic watermark sidecar, the consumer offset
+ledger, the ingest ledger) hold a few rows per publish, commit or trigger,
+and a Spark job to read or write them costs more than the batch they
+describe.  ``read_rows``/``write_rows`` read and write them from the DRIVER
+with pyarrow, as Structured Streaming keeps its offset and commit logs.
+Spark-written and driver-written files mix in one directory, and names
+starting with ``.`` or ``_`` (tmp files, ``_SUCCESS``, ``.crc``) are skipped
+by both engines.
 """
 
 from __future__ import annotations
@@ -338,6 +348,55 @@ def parquet_nonnull_rows(path: str, col: str) -> int | None:
         return total
 
     return _memo_footer_total((path, col), path, nonnull)
+
+
+def read_rows(
+    path: str, schema, columns: list[str], where=None, partitioning=None
+) -> list[list]:
+    """``columns`` of a metadata directory as Python lists, read by the
+    driver.  The explicit pyarrow ``schema`` resolves Spark- and
+    driver-written files alike, and fills columns older files lack with
+    null; ``partitioning`` (a pyarrow partitioning) reads hive partition
+    directories as columns."""
+    import pyarrow.dataset as pads
+
+    table = pads.dataset(
+        path, format="parquet", schema=schema, partitioning=partitioning
+    ).to_table(columns=columns, filter=where)
+    return [c.to_pylist() for c in table.columns]
+
+
+def write_rows(path: str, schema, rows: list[tuple]) -> str:
+    """Write ``rows`` into directory ``path`` as ONE parquet file, from the
+    driver; returns the file name.  tmp + atomic rename: a reader sees the
+    file whole or not at all, never torn, and a crash leaves at most a
+    dot-prefixed tmp file, which every reader skips."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema
+    )
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    # no Arrow schema blob in the footer: every reader passes an explicit
+    # schema, and Spark-written files carry none either (a one-row file
+    # is ~30% smaller without it)
+    pq.write_table(table, tmp, store_schema=False)
+    os.rename(tmp, os.path.join(path, name))
+    return name
+
+
+def max_per_key(pairs) -> dict:
+    """{key: max value} over (key, value) pairs, skipping null values."""
+    out: dict = {}
+    for k, v in pairs:
+        if v is not None and (k not in out or v > out[k]):
+            out[k] = v
+    return out
 
 
 def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:

@@ -586,7 +586,7 @@ def _batch_band_buckets(inc: DataFrame) -> DataFrame:
 
 def doc_shingle_index(
     df: DataFrame, id_col: str, text_col: str, n: int = 3,
-    with_bands: bool = True,
+    with_bands: bool = True, row_col: str | None = None,
 ) -> DataFrame:
     """Per-document dedup index row: ``(cor_id, h, n_sh, shingles,
     bands_v2)`` — the md5 of the text, the distinct-shingle count, the
@@ -608,9 +608,12 @@ def doc_shingle_index(
     frames feeding an unpruned gate (incremental_dedup_gate's in-memory
     path) — persisted sidecars should always keep the default so any
     later reader can band-prune.
-    """
-    from data_pipeline_spark.llmops.textstats import word_ngrams
 
+    ``row_col`` carries the whole input row along as one struct column of
+    that name, so a caller that materializes the result once (the
+    streaming ingest sink) holds each document and its index row
+    together, with no name clash between the two.
+    """
     from data_pipeline_spark.llmops.textstats import tokens_sql, word_ngrams_sql
 
     sh = F.array_distinct(
@@ -620,13 +623,20 @@ def doc_shingle_index(
             )
         )
     )
+    row = (
+        [F.struct(*[F.col(f"`{c}`") for c in df.columns]).alias(row_col)]
+        if row_col
+        else []
+    )
     base = df.select(
         F.col(id_col).alias("cor_id"),
         F.md5(text_col).alias("h"),
         sh.alias("shingles"),
+        *row,
     )
     base = base.select(
-        "cor_id", "h", F.size("shingles").alias("n_sh"), "shingles"
+        "cor_id", "h", F.size("shingles").alias("n_sh"), "shingles",
+        *([row_col] if row_col else []),
     )
     return _with_band_buckets(base, "shingles") if with_bands else base
 
@@ -728,32 +738,51 @@ def indexed_dedup_gate(
     ``max_literal_buckets`` pins the form (the parity test forces both
     sides of the crossover).
     """
-    bc = F.broadcast if broadcast_batch else (lambda d: d)
-    if band_prune and "bands_v2" not in index.columns:
-        raise ValueError(
-            "band_prune=True needs a 'bands_v2' column on the index — "
-            "r10 changed the MinHash family (the unwrapped r7 form "
-            "correlated the band orderings; see _MH_P), so buckets from "
-            "a pre-r10 'bands' sidecar can never collide with current "
-            "batch buckets.  Rebuild the sidecar with "
-            "doc_shingle_index(), or gate with band_prune=False."
-        )
+    inc, batch_buckets = stage_dedup_batch(
+        incoming, id_col, text_col, n, broadcast_batch, band_prune
+    )
+    return index_dedup_flags(
+        index,
+        inc,
+        id_col,
+        threshold,
+        broadcast_batch=broadcast_batch,
+        band_prune=band_prune,
+        batch_buckets=batch_buckets,
+        max_literal_buckets=max_literal_buckets,
+        index_rows=index_rows,
+    )
+
+
+def stage_dedup_batch(
+    incoming: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    broadcast_batch: bool = True,
+    band_prune: bool = False,
+) -> tuple[DataFrame, list | None]:
+    """Batch-staging half of ``indexed_dedup_gate``: the incoming docs as
+    gate rows ``(inc_id, h, inc_n, shingles)``, plus — for a broadcast
+    band-pruned gate — the batch's distinct band buckets as a sorted
+    driver list (None otherwise).  A caller that already holds these
+    rows (the streaming ingest sink stages its batch once per trigger)
+    builds them itself and calls ``index_dedup_flags`` directly."""
     batch_buckets: list | None = None
     if broadcast_batch:
         # the batch is trigger-bounded by the same contract that lets it
         # broadcast: materialize its index rows ONCE (one tokenize job)
-        # and let every branch below replay them — the exact/near/size
-        # branches otherwise each re-tokenize the batch per trigger.
-        # localCheckpoint (r12) keeps the materialized rows in executor
-        # block storage instead of round-tripping them through the driver
-        # as a Python LocalRelation: the old collect()+createDataFrame
-        # form re-deserialized the pickled batch rows (shingle arrays
-        # included) in a single task for EVERY broadcast build that read
-        # it — three 0.8-1.4 s single-task jobs per trigger at sf0.1 —
-        # while checkpointed blocks are read once each, in parallel.
-        # Fault tolerance is unchanged: the collected rows were driver-
-        # resident before, checkpoint blocks are executor-resident now;
-        # both re-run the trigger on loss.
+        # and let every branch of the flags half replay them — the
+        # exact/near/size branches otherwise each re-tokenize the batch.
+        # localCheckpoint keeps the rows in executor block storage rather
+        # than shipping them through the driver as a pickled (list-built)
+        # local frame, which every broadcast build that read it
+        # re-deserialized in a single task.  Fault tolerance is that of
+        # the trigger: lost blocks re-run it.  The streaming ingest sink
+        # skips this half: its trigger is already materialized (persisted
+        # staging) and its survivors' rows sit on the driver after the
+        # within-batch collapse, so it hands them back as a pandas-built
+        # (Arrow) LocalRelation — read without a job, no pickling.
         batch_idx = doc_shingle_index(
             incoming, id_col, text_col, n, with_bands=band_prune
         ).localCheckpoint(eager=True)
@@ -769,20 +798,45 @@ def indexed_dedup_gate(
                 }
             )
             local = local.drop("bands_v2")
-        inc = local.select(
-            F.col("cor_id").alias("inc_id"),
-            "h",
-            F.col("n_sh").alias("inc_n"),
-            "shingles",
-        )
     else:
-        inc = doc_shingle_index(
+        local = doc_shingle_index(
             incoming, id_col, text_col, n, with_bands=False
-        ).select(
-            F.col("cor_id").alias("inc_id"),
-            "h",
-            F.col("n_sh").alias("inc_n"),
-            "shingles",
+        )
+    inc = local.select(
+        F.col("cor_id").alias("inc_id"),
+        "h",
+        F.col("n_sh").alias("inc_n"),
+        "shingles",
+    )
+    return inc, batch_buckets
+
+
+def index_dedup_flags(
+    index: DataFrame,
+    inc: DataFrame,
+    id_col: str,
+    threshold: float = 0.8,
+    broadcast_batch: bool = True,
+    band_prune: bool = False,
+    batch_buckets: list | None = None,
+    max_literal_buckets: int | None = None,
+    index_rows: "int | Callable[[], int | None] | None" = None,
+) -> DataFrame:
+    """Index-flags half of ``indexed_dedup_gate``: flag staged gate rows
+    ``inc`` = (inc_id, h, inc_n, shingles) against ``index`` — exact md5
+    hits and (band-pruned) shingle-Jaccard near hits in ONE plan, so one
+    action decides the batch.  ``batch_buckets`` is the batch's distinct
+    band-bucket list, required for a broadcast band-pruned gate.  Returns
+    (id, exact_dup, near_dup, best_jaccard, keep) per staged row."""
+    bc = F.broadcast if broadcast_batch else (lambda d: d)
+    if band_prune and "bands_v2" not in index.columns:
+        raise ValueError(
+            "band_prune=True needs a 'bands_v2' column on the index — "
+            "r10 changed the MinHash family (the unwrapped r7 form "
+            "correlated the band orderings; see _MH_P), so buckets from "
+            "a pre-r10 'bands' sidecar can never collide with current "
+            "batch buckets.  Rebuild the sidecar with "
+            "doc_shingle_index(), or gate with band_prune=False."
         )
     # index side stays map-side: join the index hash stream against the
     # BROADCAST batch (inc_id, h) map — a matching index row yields the
@@ -844,7 +898,7 @@ def indexed_dedup_gate(
             # becomes a pickled LocalRelation that the broadcast build
             # re-deserializes row by row (r12: ~0.5 s driver+build for a
             # 50k-bucket trigger)
-            bframe = incoming.sparkSession.createDataFrame(
+            bframe = inc.sparkSession.createDataFrame(
                 pd.DataFrame({"bb": [int(b) for b in buckets]}),
                 schema="bb bigint",
             )
@@ -903,7 +957,7 @@ def indexed_dedup_gate(
     # them onto the incoming frame — without the hint the planner can't
     # size these derived frames and falls back to sort-merge
     out = (
-        incoming.select(F.col(id_col).alias("inc_id"))
+        inc.select("inc_id")
         .join(bc(exact.withColumn("exact", F.lit(1))),
               F.col("inc_id") == F.col("exact_id"), "left")
         .join(bc(best), "inc_id", "left")
@@ -919,6 +973,66 @@ def indexed_dedup_gate(
         F.col("best_jaccard"),
         ((exact_dup == 0) & (near_dup == 0)).cast("int").alias("keep"),
     )
+
+
+def collapse_batch(
+    rows, threshold: float = 0.8, max_df: int = 1000, near: bool = True
+) -> tuple[list, int, int]:
+    """Within-batch duplicate collapse on the DRIVER, over a trigger's
+    collected ``(id, h, shingles)`` rows (``doc_shingle_index`` columns:
+    md5 and 64-bit shingle-hash set).  Returns ``(survivor ids in input
+    order, n exact-dropped, n near-dropped)``.
+
+    The rules are those of the Spark form it replaces on the streaming
+    path (``exact_dup_groups`` then ``ngram_jaccard_pairs`` over the
+    exact keepers):
+
+    - exact: one keeper per md5, the min id; every other copy drops;
+    - near (``near=True``): over the exact keepers, every pair with
+      Jaccard >= ``threshold`` drops its LARGER id.  Jaccard is over the
+      df-filtered shingle space — a shingle in more than ``max_df``
+      keepers leaves both the intersection and the set sizes — and only
+      pairs sharing a kept shingle are candidates, so docs with empty
+      shingle sets never pair.
+
+    Shingles are compared as 64-bit hashes, as ``indexed_dedup_gate``
+    compares them: identical to the string-shingle Spark form barring
+    2^-64 collisions (pinned by a parity test).  Cost is the Spark
+    form's: sum over kept shingles of df^2 / 2 pair increments, bounded
+    by the trigger.  Rows with a NULL id never survive, as the id join
+    of the Spark form drops them."""
+    rows = [r for r in rows if r[0] is not None]
+    keeper: dict = {}
+    for i, h, _sh in rows:
+        if h not in keeper or i < keeper[h]:
+            keeper[h] = i
+    kept = [(i, set(sh or ())) for i, h, sh in rows if keeper[h] == i]
+    n_exact = len(rows) - len(kept)
+    if not near:
+        return [i for i, _ in kept], n_exact, 0
+    posting: dict = {}
+    for i, sh in kept:
+        for s in sh:
+            posting.setdefault(s, set()).add(i)
+    size = {i: len(sh) for i, sh in kept}
+    inter: dict = {}
+    for ids in posting.values():
+        ids = list(ids)
+        if len(ids) > max_df:
+            for i in ids:  # df-capped: out of the sizes too
+                size[i] -= 1
+            continue
+        for x in range(len(ids)):
+            for y in range(x + 1, len(ids)):
+                a, b = ids[x], ids[y]
+                pair = (a, b) if a < b else (b, a)
+                inter[pair] = inter.get(pair, 0) + 1
+    losers = {
+        b
+        for (a, b), k in inter.items()
+        if k / (size[a] + size[b] - k) >= threshold
+    }
+    return [i for i, _ in kept if i not in losers], n_exact, len(losers)
 
 
 def incremental_dedup_gate(

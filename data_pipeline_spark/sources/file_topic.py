@@ -18,12 +18,8 @@ source over the same layout.
 
 Metadata is driver-written: the topic watermark sidecar and the consumer
 offset ledger are directories of small parquet files that the DRIVER reads
-and writes with pyarrow (``_read_rows`` / ``_write_rows``), as Structured
-Streaming keeps its offset and commit logs.  Each holds a few rows per
-publish or commit, and a Spark job to read or write them cost more than
-the batch it described.  Both engines see the same layout: Spark-written
-and driver-written files mix in one directory, and names starting with
-``.`` or ``_`` (tmp files, ``_SUCCESS``, ``.crc``) are skipped by both.
+and writes with pyarrow (``io.read_rows`` / ``io.write_rows``; see the
+``io`` module docstring for the shared layout rules).
 """
 
 from __future__ import annotations
@@ -36,47 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _read_rows(path: str, schema, columns: list[str], where=None) -> list[list]:
-    """``columns`` of a metadata directory as Python lists, read by the
-    driver.  The explicit pyarrow ``schema`` resolves Spark- and
-    driver-written files alike, and fills columns older files lack with
-    null."""
-    import pyarrow.dataset as pads
-
-    table = pads.dataset(path, format="parquet", schema=schema).to_table(
-        columns=columns, filter=where
-    )
-    return [c.to_pylist() for c in table.columns]
-
-
-def _write_rows(path: str, schema, rows: list[tuple]) -> str:
-    """Write ``rows`` into directory ``path`` as ONE parquet file, from the
-    driver; returns the file name.  tmp + atomic rename: a reader sees the
-    file whole or not at all, never torn."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(path, exist_ok=True)
-    table = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=schema
-    )
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(path, f".{name}.tmp")
-    pq.write_table(table, tmp)
-    os.rename(tmp, os.path.join(path, name))
-    return name
-
-
-def _max_per_key(pairs) -> dict:
-    """{key: max value} over (key, value) pairs, skipping null values."""
-    out: dict = {}
-    for k, v in pairs:
-        if v is not None and (k not in out or v > out[k]):
-            out[k] = v
-    return out
+from data_pipeline_spark.io import max_per_key, read_rows, write_rows
 
 
 TOPIC_SCHEMA = T.StructType(
@@ -304,7 +260,7 @@ class TopicStore:
             # protocol) this replaced cost ~0.8 s per publish (r12
             # profile); the atomic rename keeps the crash window identical
             # — a reservation is either fully visible or absent
-            _write_rows(
+            write_rows(
                 self._meta_dir(topic),
                 self._meta_arrow_schema(),
                 [
@@ -340,12 +296,12 @@ class TopicStore:
         """
         highs = {p: 0 for p in range(num_partitions)}
         if self.has_sidecar(topic):
-            parts, nexts = _read_rows(
+            parts, nexts = read_rows(
                 self._meta_dir(topic),
                 self._meta_arrow_schema(),
                 ["partition", "next_offset"],
             )
-            highs.update(_max_per_key(zip(parts, nexts)))
+            highs.update(max_per_key(zip(parts, nexts)))
             return highs
         if not self.exists(topic):
             return highs
@@ -520,13 +476,13 @@ class OffsetLedger:
             return {}
         import pyarrow.dataset as pads
 
-        parts, nexts = _read_rows(
+        parts, nexts = read_rows(
             self.path,
             self._arrow_schema(),
             ["partition", "next_offset"],
             (pads.field("group") == group) & (pads.field("topic") == topic),
         )
-        return _max_per_key(zip(parts, nexts))
+        return max_per_key(zip(parts, nexts))
 
     def compact(self) -> None:
         """Rewrite the ledger to one row per (group, topic, partition) —
@@ -544,13 +500,13 @@ class OffsetLedger:
             if not n.endswith(".tmp")
             and os.path.isfile(os.path.join(self.path, n))
         ]
-        groups, topics, parts, nexts = _read_rows(
+        groups, topics, parts, nexts = read_rows(
             self.path,
             self._arrow_schema(),
             ["group", "topic", "partition", "next_offset"],
         )
-        latest = _max_per_key(zip(zip(groups, topics, parts), nexts))
-        _write_rows(
+        latest = max_per_key(zip(zip(groups, topics, parts), nexts))
+        write_rows(
             self.path,
             self._arrow_schema(),
             [(*key, n) for key, n in latest.items()],
@@ -568,7 +524,7 @@ class OffsetLedger:
             .collect()
         )
         if rows:
-            _write_rows(
+            write_rows(
                 self.path,
                 self._arrow_schema(),
                 [(group, topic, r.partition, r.next_offset) for r in rows],

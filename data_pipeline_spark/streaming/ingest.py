@@ -11,13 +11,40 @@ The gate never reads corpus text.  Beside the corpus lives an append-only
 ``doc_shingle_index`` sidecar — one row per admitted document carrying its
 md5, distinct-shingle count, and 64-bit shingle-hash set (~8 bytes per
 shingle vs the text itself) — written in the same epoch commit as the
-corpus append.  Each trigger gates the batch against the INDEX
-(``llmops.dedup.indexed_dedup_gate``: batch hash set and shingle map
-broadcast, index scanned map-side, exact-dup pass column-pruned to the
-md5 column alone), so steady-state per-trigger IO is O(index), not
-O(corpus text), and no tokenization of ingested data ever re-runs.  The
-index IS sufficient for exact decisions (full shingle posting per doc),
-so there is no corpus fallback to verify hits against.
+corpus append.  Each trigger gates the batch against the INDEX, so
+steady-state per-trigger IO is O(index), not O(corpus text), and no
+tokenization of ingested data ever re-runs.  The index IS sufficient for
+exact decisions (full shingle posting per doc), so there is no corpus
+fallback to verify hits against.
+
+One pass per trigger
+--------------------
+The batch is trigger-bounded (the contract that lets it broadcast), so a
+trigger runs as one pass over it:
+
+    a. stage: the batch, NULL text normalized to '', is persisted with
+       its sidecar columns (``doc_shingle_index``: cor_id, h, n_sh,
+       shingles, bands_v2; the input row rides along whole as ``_row``),
+       and ONE collect brings (id, md5, shingles, bands) to the driver;
+    b. collapse on the driver (``llmops.dedup.collapse_batch``): exact
+       copies collapse to one keeper (min id) and — by default — every
+       doc that is the larger side of a >= threshold shingle-Jaccard pair
+       drops, so a single micro-batch cannot admit two near-copies of a
+       new document;
+    c. decide in ONE action over the committed index
+       (``llmops.dedup.index_dedup_flags``: exact md5 hits plus
+       band-pruned Jaccard, the survivors' rows shipped back from the
+       driver as a broadcast local frame);
+    d. write the corpus and index rows from the persisted staging — the
+       gate never re-runs and the batch is never re-tokenized.
+
+Steps a and c are the only reads; with the two writes a steady-state
+trigger runs four Spark actions.  What the gate decided — in-batch exact
+and near drops, index exact and near rejections, admissions — is kept on
+the sink as ``last_decisions``.  ``broadcast_batch=False`` (a corpus-sized
+backfill, not a streaming trigger) keeps the collapse and the index gate
+in Spark (``exact_dup_groups`` + ``ngram_jaccard_pairs`` +
+``indexed_dedup_gate``): the reference path, same decisions.
 
 Exactly-once commit protocol
 ----------------------------
@@ -27,8 +54,9 @@ partition inside the index dir is the single commit point, appended LAST:
 
     1. purge: delete this writer's corpus/index partitions with epoch >
        last committed (debris from a crashed attempt; fs listing only)
-    2. gate the batch against the COMMITTED index (ledger semi-join — a
-       foreign writer's crash debris is invisible too)
+    2. gate the batch against the COMMITTED index (the committed
+       (writer, epoch) pairs are a partition filter on the sidecar read —
+       a foreign writer's crash debris is invisible too)
     3. append admitted rows   -> corpus_dir / writer=w/epoch=e
     4. append their index rows-> index_dir/docs / writer=w/epoch=e
     5. append (epoch, n)      -> index_dir/ledger / writer=w
@@ -40,23 +68,30 @@ skipped.  ``compact()`` folds the accumulated per-epoch partitions into
 one consolidated partition with the same ledger-append-as-commit-point
 protocol (superseded pairs are REVOKED by ``n_admitted = -1`` ledger
 rows rather than deleted-in-place, so no crash window double-counts or
-loses a document); ``vacuum()`` sweeps revoked/orphaned directories.  Epoch ids are scoped to ONE streaming checkpoint, so each
-stream derives a stable ``writer_id`` from its ``ledger_path`` and owns
-its partitions; concurrent foreign writers are never touched by a purge
-and their uncommitted debris never gates.  Two writers admitting
-CONCURRENTLY can each admit a doc that duplicates the other's in-flight
-batch (admission is serializable per writer, not globally) — serialize
-writers with ``coordination.LeaseLock`` on the index dir if the corpus
-has multiple live ingest streams.
+loses a document); ``vacuum()`` sweeps revoked/orphaned directories.
 
-Within a batch, exact copies collapse to one keeper (min id) and — by
-default — near-duplicate pairs collapse too (``ngram_jaccard_pairs`` over
-the batch; every doc that is the larger side of a >=threshold pair drops),
-so a single micro-batch cannot admit two near-copies of a new document.
+The ledger is driver-written metadata, like the consumer offset ledger:
+the driver reads and appends it with pyarrow (``io.read_rows`` /
+``io.write_rows``, tmp file + atomic rename), so reading the commit state
+runs no Spark job.  Files an earlier Spark writer left (with their
+``_SUCCESS``/``.crc`` siblings) read the same.  A compact append spans one
+file per writer directory, so its revocation rows carry the compacting
+writer (``revoked_by``) and land first: they take effect only once that
+writer's own commit row, written last, exists — the commit stays one
+atomic rename.
+
+Epoch ids are scoped to ONE streaming checkpoint, so each stream derives
+a stable ``writer_id`` from its ``ledger_path`` and owns its partitions;
+concurrent foreign writers are never touched by a purge and their
+uncommitted debris never gates.  Two writers admitting CONCURRENTLY can
+each admit a doc that duplicates the other's in-flight batch (admission
+is serializable per writer, not globally) — serialize writers with
+``coordination.LeaseLock`` on the index dir if the corpus has multiple
+live ingest streams.
 
 This directory-layout protocol uses local-FS listing/removal; a cluster
-deployment swaps those two calls for the Hadoop FileSystem API — the
-partition layout and ledger semantics are unchanged.
+deployment swaps those calls (and the driver's ledger I/O) for the Hadoop
+FileSystem API — the partition layout and ledger semantics are unchanged.
 """
 
 from __future__ import annotations
@@ -64,29 +99,89 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipeline_spark.io import read_rows, write_rows
 from data_pipeline_spark.llmops.dedup import (
+    collapse_batch,
     doc_shingle_index,
     exact_dup_groups,
+    index_dedup_flags,
     indexed_dedup_gate,
     ngram_jaccard_pairs,
 )
 
 _WRITER_COL = "ingest_writer"
 _EPOCH_COL = "ingest_epoch"
+# the input row, carried whole through the staged frame
+_ROW = "_row"
 
 
 class ChaosCrash(RuntimeError):
     """Injected crash for exactly-once protocol tests."""
 
 
+class GateDecisions(NamedTuple):
+    """What the gate decided on one trigger, in documents: dropped as
+    in-batch exact / near copies, rejected by the committed index as
+    exact / near duplicates (a doc that is both counts as exact), and
+    admitted."""
+
+    epoch: int
+    batch_exact: int
+    batch_near: int
+    index_exact: int
+    index_near: int
+    admitted: int
+
+
 def _has_partitions(path: str) -> bool:
     return os.path.isdir(path) and any(
         e.startswith(f"{_WRITER_COL}=") for e in os.listdir(path)
     )
+
+
+def _ledger_schema(writer: bool = False, revoked_by: bool = True):
+    """Ledger columns.  In files the writer lives in the partition
+    directory, and only revocation files carry ``revoked_by``."""
+    import pyarrow as pa
+
+    return pa.schema(
+        ([(_WRITER_COL, pa.string())] if writer else [])
+        + [("epoch_id", pa.int64()), ("n_admitted", pa.int64())]
+        + ([("revoked_by", pa.string())] if revoked_by else [])
+    )
+
+
+def _sql_str(v: str) -> str:
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _pairs_filter(pairs: list[tuple[str, int]]) -> Column:
+    """Partition predicate selecting exactly the (writer, epoch) ``pairs``
+    — one parsed expression, pruned at file listing."""
+    by_writer: dict[str, list[int]] = {}
+    for w, e in pairs:
+        by_writer.setdefault(w, []).append(e)
+    if not by_writer:
+        return F.lit(False)
+    return F.expr(
+        " OR ".join(
+            f"(`{_WRITER_COL}` = {_sql_str(w)} AND `{_EPOCH_COL}` IN "
+            f"({', '.join(str(int(e)) for e in sorted(es))}))"
+            for w, es in sorted(by_writer.items())
+        )
+    )
+
+
+def _append(rows: DataFrame, base: str, writer: str, epoch: int) -> None:
+    rows.withColumn(_WRITER_COL, F.lit(writer)).withColumn(
+        _EPOCH_COL, F.lit(epoch)
+    ).write.mode("append").partitionBy(_WRITER_COL, _EPOCH_COL).parquet(base)
 
 
 class DedupGatedIngest:
@@ -142,6 +237,10 @@ class DedupGatedIngest:
         # 'bands' sidecar fails loud); set False to gate without bands.
         self.band_prune = band_prune
         self.crash_points: set[str] = set()  # test-injectable crash windows
+        # the decisions of the last trigger this sink committed
+        self.last_decisions: GateDecisions | None = None
+        # the sidecar schema, inferred by the first read (see _read_docs)
+        self._docs_schema = None
 
     # -- layout ------------------------------------------------------------
     @property
@@ -156,43 +255,83 @@ class DedupGatedIngest:
         if point in self.crash_points:
             raise ChaosCrash(point)
 
-    # -- commit state ------------------------------------------------------
-    def _ledger(self) -> DataFrame | None:
+    # -- commit state (driver-read ledger) ---------------------------------
+    def _ledger_rows(self) -> list[tuple[str, int, int]] | None:
+        """Every effective (writer, epoch, n_admitted) ledger row, read by
+        the driver; None when nothing was ever committed.  A revocation
+        row counts only once the writer that wrote it has committed (see
+        ``_append_ledger``); rows without ``revoked_by`` (Spark-written
+        ledgers) always count."""
         if not _has_partitions(self._ledger_dir):
             return None
-        return self.spark.read.parquet(self._ledger_dir)
+        import pyarrow as pa
+        import pyarrow.dataset as pads
 
-    def _committed_pairs(self) -> DataFrame | None:
+        writers, epochs, ns, by = read_rows(
+            self._ledger_dir,
+            _ledger_schema(writer=True),
+            [_WRITER_COL, "epoch_id", "n_admitted", "revoked_by"],
+            partitioning=pads.partitioning(
+                pa.schema([(_WRITER_COL, pa.string())]), flavor="hive"
+            ),
+        )
+        committed = {w for w, n in zip(writers, ns) if n >= 0}
+        return [
+            (w, e, n)
+            for w, e, n, b in zip(writers, epochs, ns, by)
+            if b is None or b in committed
+        ]
+
+    def _append_ledger(
+        self, commit: tuple[str, int, int], revoked: list[tuple[str, int]] = ()
+    ) -> None:
+        """THE commit point: the ``commit`` (writer, epoch, n_admitted) row,
+        plus ``n_admitted = -1`` revocation rows for the superseded
+        ``revoked`` pairs.  Each writer directory gets one driver-written
+        file; the revocation files land first and name the committing
+        writer, so they stay inert (``_ledger_rows``) until the commit
+        row's file — the last rename — lands."""
+        writer, epoch, n = commit
+        by_writer: dict[str, list[tuple]] = {}
+        for w, e in revoked:
+            by_writer.setdefault(w, []).append((e, -1, writer))
+        for w, rows in by_writer.items():
+            write_rows(self._ledger_part(w), _ledger_schema(), rows)
+        write_rows(
+            self._ledger_part(writer),
+            _ledger_schema(revoked_by=False),
+            [(epoch, n)],
+        )
+
+    def _ledger_part(self, writer: str) -> str:
+        return os.path.join(self._ledger_dir, f"{_WRITER_COL}={writer}")
+
+    def _committed_pairs(self) -> list[tuple[str, int]] | None:
         """(writer, epoch) pairs that are committed AND not revoked.
         ``compact`` revokes superseded pairs by appending an
         ``n_admitted = -1`` ledger row, so committed = pairs whose
         minimum n_admitted is still >= 0."""
-        led = self._ledger()
-        if led is None:
+        rows = self._ledger_rows()
+        if rows is None:
             return None
-        return (
-            led.groupBy(_WRITER_COL, F.col("epoch_id").alias(_EPOCH_COL))
-            .agg(F.min("n_admitted").alias("_mn"))
-            .filter(F.col("_mn") >= 0)
-            .select(_WRITER_COL, _EPOCH_COL)
-        )
+        low: dict[tuple[str, int], int] = {}
+        for w, e, n in rows:
+            low[(w, e)] = min(n, low.get((w, e), n))
+        return sorted(p for p, n in low.items() if n >= 0)
 
     def _last_committed(self) -> int:
         if self._last_epoch is None:
-            led = self._ledger()
-            top = None
-            if led is not None:
-                # revocation rows (n_admitted < 0) don't count: an epoch
-                # whose data was compacted away is still a committed epoch
-                # for replay-skip purposes
-                top = (
-                    led.filter(
-                        (F.col(_WRITER_COL) == self.writer_id)
-                        & (F.col("n_admitted") >= 0)
-                    )
-                    .agg(F.max("epoch_id"))
-                    .first()[0]
-                )
+            # revocation rows (n_admitted < 0) don't count: an epoch
+            # whose data was compacted away is still a committed epoch
+            # for replay-skip purposes
+            top = max(
+                (
+                    e
+                    for w, e, n in self._ledger_rows() or []
+                    if w == self.writer_id and n >= 0
+                ),
+                default=None,
+            )
             self._last_epoch = -1 if top is None else top
         return self._last_epoch
 
@@ -215,11 +354,6 @@ class DedupGatedIngest:
                 if epoch > last:
                     shutil.rmtree(os.path.join(wdir, entry))
 
-    def _index_of(self, admitted: DataFrame) -> DataFrame:
-        """Sidecar rows for an admitted batch — the hook a semantic
-        (embedding) gate overrides with its ANN index rows."""
-        return doc_shingle_index(admitted, self.id_col, self.text_col, self.n)
-
     def _index_cols(self) -> list[str]:
         """Columns a committed_index() read projects (the rest of the
         sidecar row never loads at gate time)."""
@@ -234,48 +368,117 @@ class DedupGatedIngest:
         must read through this hook, or a schema-evolved dir (e.g.
         pre-``model_v`` files beside post-retrain ones) can have its
         evolution laundered away by whichever file the schema sampler
-        happens to pick."""
-        return self.spark.read.parquet(self._docs_dir)
+        happens to pick.
+
+        The text sidecar's schema never evolves, so the first read's
+        inferred schema is kept and later reads pass it explicitly:
+        schema inference is a Spark job of its own, once per trigger
+        otherwise."""
+        if self._docs_schema is None:
+            docs = self.spark.read.parquet(self._docs_dir)
+            self._docs_schema = docs.schema
+            return docs
+        return self.spark.read.schema(self._docs_schema).parquet(self._docs_dir)
 
     def committed_index(self) -> DataFrame | None:
-        """COMMITTED dedup-index rows: docs partitions semi-joined against
-        the (small, broadcast) ledger, so neither this writer's nor any
-        foreign writer's crash debris — nor a compacted-away or
-        not-yet-committed compact partition — ever gates a batch."""
-        committed = self._committed_pairs()
-        if committed is None or not _has_partitions(self._docs_dir):
+        """COMMITTED dedup-index rows: the committed (writer, epoch) pairs
+        are a partition filter on the sidecar read, so neither this
+        writer's nor any foreign writer's crash debris — nor a
+        compacted-away or not-yet-committed compact partition — ever
+        gates a batch."""
+        pairs = self._committed_pairs()
+        if pairs is None or not _has_partitions(self._docs_dir):
             return None
         return (
             self._read_docs()
-            .join(F.broadcast(committed), [_WRITER_COL, _EPOCH_COL], "left_semi")
+            .filter(_pairs_filter(pairs))
             .select(*self._index_cols())
         )
 
     # -- gate --------------------------------------------------------------
-    def gate_batch(self, batch: DataFrame) -> DataFrame:
-        """Pure admission decision (no writes): collapse within-batch
-        exact copies (keeper = min id) and near-dup pairs (larger id of
-        every >=threshold pair drops), then gate the survivors against
-        the committed index.  Reads index partitions only — never corpus
-        files (asserted by the chaos suite's plan check).
+    def _stage(self, batch: DataFrame) -> DataFrame:
+        """The batch as one frame: each input row whole under ``_row`` plus
+        its sidecar columns (cor_id, h, n_sh, shingles, bands_v2).
 
         NULL text normalizes to '' (and the normalized form is what an
-        admitted row stores): without it,
-        SQL NULL join semantics make NULL-text rows collapse WITHIN a
-        batch (groupBy treats NULLs as equal) yet never match ACROSS
-        batches (joins skip NULL keys) — every later NULL doc would be
-        admitted forever."""
+        admitted row stores): without it, SQL NULL join semantics make
+        NULL-text rows collapse WITHIN a batch (groupBy treats NULLs as
+        equal) yet never match ACROSS batches (joins skip NULL keys) —
+        every later NULL doc would be admitted forever."""
         batch = batch.withColumn(
             self.text_col, F.coalesce(F.col(self.text_col), F.lit(""))
         )
+        return doc_shingle_index(
+            batch, self.id_col, self.text_col, self.n, row_col=_ROW
+        )
+
+    def _collapse(self, staged: DataFrame) -> tuple[list, list, int, int]:
+        """The staging action and the within-batch collapse on the driver:
+        (surviving ids, collected rows, n exact-dropped, n near-dropped)."""
+        rows = staged.select("cor_id", "h", "n_sh", "shingles", "bands_v2").collect()
+        keys, n_exact, n_near = collapse_batch(
+            [(r[0], r[1], r[3]) for r in rows],
+            self.threshold,
+            near=self.within_batch_neardup,
+        )
+        return keys, rows, n_exact, n_near
+
+    def _index_flags(
+        self, staged: DataFrame, keys: list, rows: list
+    ) -> DataFrame | None:
+        """Flags (id, exact_dup, near_dup, ..., keep) of the surviving
+        ``keys`` against the committed index — lazy; None when there is
+        nothing to decide against.  The survivors' staged rows go back
+        as a pandas-built local frame (Arrow, no job to read it)."""
+        index = self.committed_index() if keys else None
+        if index is None:
+            return None
+        alive = set(keys)
+        surv = [r for r in rows if r[0] in alive]
+        inc = self.spark.createDataFrame(
+            pd.DataFrame(
+                [tuple(r[:4]) for r in surv],
+                columns=["inc_id", "h", "inc_n", "shingles"],
+            ),
+            schema=f"inc_id {staged.schema['cor_id'].dataType.simpleString()}, "
+            "h STRING, inc_n INT, shingles ARRAY<BIGINT>",
+        )
+        buckets = (
+            sorted({b for r in surv for b in (r[4] or [])})
+            if self.band_prune
+            else None
+        )
+        return index_dedup_flags(
+            index,
+            inc,
+            self.id_col,
+            self.threshold,
+            band_prune=self.band_prune,
+            batch_buckets=buckets,
+            index_rows=self._live_rows,
+        )
+
+    def _reference_decisions(self, staged: DataFrame) -> DataFrame:
+        """Per-doc decision codes of the Spark reference path
+        (``broadcast_batch=False``): (cor_id, _reason) with 0 = admit,
+        1/2 = in-batch exact/near drop, 3/4 = index exact/near reject."""
+        batch = staged.select(f"{_ROW}.*")
         keepers = exact_dup_groups(batch, self.id_col, self.text_col).select(
             F.col("keeper_id").alias(self.id_col)
         )
-        batch = batch.join(keepers, self.id_col)
+        survivors = batch.join(keepers, self.id_col)
+        reasons = staged.select("cor_id").join(
+            keepers.select(
+                F.col(self.id_col).alias("cor_id"), F.lit(1).alias("_keeper")
+            ),
+            "cor_id",
+            "left",
+        )
+        loser = F.lit(False)
         if self.within_batch_neardup:
             losers = (
                 ngram_jaccard_pairs(
-                    batch,
+                    survivors,
                     self.id_col,
                     self.text_col,
                     self.n,
@@ -285,24 +488,108 @@ class DedupGatedIngest:
                 .select(F.col("id_b").alias(self.id_col))
                 .distinct()
             )
-            batch = batch.join(losers, self.id_col, "left_anti")
+            survivors = survivors.join(losers, self.id_col, "left_anti")
+            reasons = reasons.join(
+                losers.select(
+                    F.col(self.id_col).alias("cor_id"), F.lit(1).alias("_loser")
+                ),
+                "cor_id",
+                "left",
+            )
+            loser = F.col("_loser").isNotNull()
+        exact = near = F.lit(False)
         index = self.committed_index()
-        if index is None:
-            return batch
-        flags = indexed_dedup_gate(
-            index,
-            batch,
-            self.id_col,
-            self.text_col,
-            n=self.n,
-            threshold=self.threshold,
-            broadcast_batch=self.broadcast_batch,
-            band_prune=self.band_prune,
-            index_rows=self._live_rows,
+        if index is not None:
+            flags = indexed_dedup_gate(
+                index,
+                survivors,
+                self.id_col,
+                self.text_col,
+                n=self.n,
+                threshold=self.threshold,
+                broadcast_batch=False,
+                band_prune=self.band_prune,
+                index_rows=self._live_rows,
+            )
+            reasons = reasons.join(
+                flags.select(
+                    F.col(self.id_col).alias("cor_id"), "exact_dup", "near_dup"
+                ),
+                "cor_id",
+                "left",
+            )
+            exact, near = F.col("exact_dup") == 1, F.col("near_dup") == 1
+        return reasons.select(
+            "cor_id",
+            F.when(F.col("_keeper").isNull(), 1)
+            .when(loser, 2)
+            .when(exact, 3)
+            .when(near, 4)
+            .otherwise(0)
+            .alias("_reason"),
         )
-        return batch.join(
-            flags.filter(F.col("keep") == 1).select(self.id_col), self.id_col
+
+    def gate_batch(self, batch: DataFrame) -> DataFrame:
+        """Pure admission decision (no writes): the batch's rows that the
+        within-batch collapse keeps (keeper = min id per md5; larger id
+        of every >= threshold pair drops) and the committed index admits.
+        One staging action runs eagerly (the collapse is driver-side);
+        the returned frame's plan reads index partitions only — never
+        corpus files (asserted by the chaos suite's plan check)."""
+        staged = self._stage(batch)
+        if not self.broadcast_batch:
+            gated = staged.join(
+                self._reference_decisions(staged).filter(F.col("_reason") == 0),
+                "cor_id",
+                "left_semi",
+            )
+            return gated.select(f"{_ROW}.*")
+        keys, rows, _, _ = self._collapse(staged)
+        gated = staged.filter(F.col("cor_id").isin(keys))
+        flags = self._index_flags(staged, keys, rows)
+        if flags is not None:
+            gated = gated.join(
+                flags.filter(F.col("keep") == 1).select(
+                    F.col(self.id_col).alias("cor_id")
+                ),
+                "cor_id",
+                "left_semi",
+            )
+        return gated.select(f"{_ROW}.*")
+
+    def _decide(self, staged: DataFrame) -> tuple[DataFrame, tuple]:
+        """(admitted slice of ``staged``, decision counts) for one trigger:
+        the staging action, the driver collapse and ONE index action —
+        or, on the reference path, one aggregation over checkpointed
+        Spark decisions."""
+        if not self.broadcast_batch:
+            reasons = self._reference_decisions(staged).localCheckpoint(
+                eager=False
+            )
+            got = dict(reasons.groupBy("_reason").count().collect())
+            admitted = staged.join(
+                reasons.filter(F.col("_reason") == 0), "cor_id", "left_semi"
+            )
+            return admitted, tuple(got.get(c, 0) for c in (1, 2, 3, 4, 0))
+        keys, rows, n_exact, n_near = self._collapse(staged)
+        flags = self._index_flags(staged, keys, rows)
+        rejected: dict = {}
+        if flags is not None:
+            rejected = dict(
+                flags.filter(F.col("keep") == 0)
+                .select(self.id_col, "exact_dup")
+                .collect()
+            )
+        admit = [k for k in keys if k not in rejected]
+        n_index_exact = sum(1 for v in rejected.values() if v)
+        counts = (
+            n_exact,
+            n_near,
+            n_index_exact,
+            len(rejected) - n_index_exact,
+            len(admit),
         )
+        return staged.filter(F.col("cor_id").isin(admit)), counts
 
     def gate_flags(self, batch: DataFrame) -> DataFrame:
         """Observability form of the gate: the full per-document flag
@@ -338,31 +625,42 @@ class DedupGatedIngest:
         scan) — the lazy supplier behind the gate's adaptive literal/join
         crossover (dedup.adaptive_literal_bound); only evaluated on fat
         triggers whose bucket set exceeds the literal floor."""
-        stats = self.ingest_stats()
-        if stats is None:
+        stats = self._writer_stats()
+        return None if stats is None else sum(s[3] for s in stats)
+
+    def _writer_stats(self) -> list[tuple] | None:
+        """Per writer: (writer, n_epochs, n_live_epochs, n_admitted_live,
+        max_epoch), aggregated on the driver from the ledger rows."""
+        rows = self._ledger_rows()
+        if rows is None:
             return None
-        return stats.agg(F.sum("n_admitted_live")).first()[0] or 0
+        pairs: dict[tuple[str, int], list[int]] = {}
+        for w, e, n in rows:
+            hi_lo = pairs.setdefault((w, e), [n, n])
+            hi_lo[0], hi_lo[1] = max(hi_lo[0], n), min(hi_lo[1], n)
+        stats: dict[str, list[int]] = {}
+        for (w, e), (hi, lo) in sorted(pairs.items()):
+            s = stats.setdefault(w, [0, 0, 0, e])
+            s[0] += 1
+            if lo >= 0:
+                s[1] += 1
+                s[2] += hi
+            s[3] = max(s[3], e)
+        return [(w, *s) for w, s in stats.items()]
 
     def ingest_stats(self) -> DataFrame | None:
         """Per-writer ingest history off the ledger: committed epochs,
         admitted totals, and the live (non-revoked) epoch count — the
-        O(ledger) view an operator checks before anything corpus-sized."""
-        led = self._ledger()
-        if led is None:
+        O(ledger) view an operator checks before anything corpus-sized.
+        Aggregated on the driver; the frame is local (no job)."""
+        stats = self._writer_stats()
+        if stats is None:
             return None
-        per_pair = led.groupBy(
-            _WRITER_COL, F.col("epoch_id").alias(_EPOCH_COL)
-        ).agg(
-            F.max("n_admitted").alias("n_admitted"),
-            (F.min("n_admitted") >= 0).cast("int").alias("live"),
-        )
-        return per_pair.groupBy(_WRITER_COL).agg(
-            F.count(F.lit(1)).alias("n_epochs"),
-            F.sum("live").alias("n_live_epochs"),
-            F.sum(
-                F.when(F.col("live") == 1, F.col("n_admitted")).otherwise(0)
-            ).alias("n_admitted_live"),
-            F.max(_EPOCH_COL).alias("max_epoch"),
+        cols = [_WRITER_COL, "n_epochs", "n_live_epochs", "n_admitted_live", "max_epoch"]
+        return self.spark.createDataFrame(
+            pd.DataFrame(stats, columns=cols),
+            schema=f"{_WRITER_COL} STRING, n_epochs LONG, n_live_epochs LONG, "
+            "n_admitted_live LONG, max_epoch LONG",
         )
 
     # -- commit ------------------------------------------------------------
@@ -389,39 +687,40 @@ class DedupGatedIngest:
         if epoch_id <= self._last_committed():
             return 0
         self._purge_uncommitted()
-        admitted = self.gate_batch(batch).persist()
+        staged = self._stage(batch).persist()
         try:
-            n_admitted = admitted.count()
+            admitted, counts = self._decide(staged)
             self._chaos("after_gate")
+            n_admitted = counts[-1]
             if n_admitted:
-                tagged = admitted.withColumn(
-                    _WRITER_COL, F.lit(self.writer_id)
-                ).withColumn(_EPOCH_COL, F.lit(epoch_id))
-                tagged.write.mode("append").partitionBy(
-                    _WRITER_COL, _EPOCH_COL
-                ).parquet(self.corpus_dir)
-                self._chaos("after_corpus")
-                idx = (
-                    self._index_of(admitted)
-                    .withColumn(_WRITER_COL, F.lit(self.writer_id))
-                    .withColumn(_EPOCH_COL, F.lit(epoch_id))
+                _append(
+                    admitted.select(f"{_ROW}.*"),
+                    self.corpus_dir,
+                    self.writer_id,
+                    epoch_id,
                 )
-                self._index_layout(idx, bulk=False).write.mode(
-                    "append"
-                ).partitionBy(_WRITER_COL, _EPOCH_COL).parquet(self._docs_dir)
+                self._chaos("after_corpus")
+                _append(
+                    self._index_layout(self._index_of(admitted), bulk=False),
+                    self._docs_dir,
+                    self.writer_id,
+                    epoch_id,
+                )
                 self._chaos("after_index")
             # ledger append LAST is the commit point: everything above is
             # purgeable debris until this row lands
-            self.spark.createDataFrame(
-                [(epoch_id, n_admitted, self.writer_id)],
-                f"epoch_id LONG, n_admitted LONG, {_WRITER_COL} STRING",
-            ).write.mode("append").partitionBy(_WRITER_COL).parquet(
-                self._ledger_dir
-            )
+            self._append_ledger((self.writer_id, epoch_id, n_admitted))
             self._last_epoch = epoch_id
+            self.last_decisions = GateDecisions(epoch_id, *counts)
             return n_admitted
         finally:
-            admitted.unpersist()
+            staged.unpersist()
+
+    def _index_of(self, admitted: DataFrame) -> DataFrame:
+        """Sidecar rows for the admitted slice of the staged frame — the
+        hook a semantic (embedding) gate overrides with its ANN index
+        rows.  Here they are the staged columns themselves."""
+        return admitted.drop(_ROW)
 
     def _index_layout(self, idx: DataFrame, bulk: bool) -> DataFrame:
         """Physical-layout hook for index sidecar writes (identity here).
@@ -433,12 +732,10 @@ class DedupGatedIngest:
     def corpus(self) -> DataFrame:
         """The ingested corpus without the commit-protocol partition
         columns (committed, non-revoked epochs only)."""
-        committed = self._committed_pairs()
+        pairs = self._committed_pairs()
         df = self.spark.read.parquet(self.corpus_dir)
-        if committed is not None:
-            df = df.join(
-                F.broadcast(committed), [_WRITER_COL, _EPOCH_COL], "left_semi"
-            )
+        if pairs is not None:
+            df = df.filter(_pairs_filter(pairs))
         return df.drop(_WRITER_COL, _EPOCH_COL)
 
     # -- compaction --------------------------------------------------------
@@ -446,23 +743,13 @@ class DedupGatedIngest:
         """Delete corpus/index partition directories whose (writer, epoch)
         pair is NOT committed-and-live: compact-crash orphans and
         partitions a completed ``compact`` revoked but did not get to
-        delete.  Pure cleanup — the ledger semi-join already hides these
-        from every reader — so a crash anywhere in here is harmless.
+        delete.  Pure cleanup — the ledger partition filter already hides
+        these from every reader — so a crash anywhere in here is harmless.
         Never touches a LIVE stream writer's uncommitted current epoch:
         only partitions of writers other than this one, or of this
         writer at-or-below its committed watermark, are candidates."""
-        committed = self._committed_pairs()
-        live: set[tuple[str, int]] = set()
-        revoked: set[tuple[str, int]] = set()
-        if committed is not None:
-            live = {(r[0], r[1]) for r in committed.collect()}
-            revoked = {
-                (r[0], r[1])
-                for r in self._ledger()
-                .filter(F.col("n_admitted") < 0)
-                .select(_WRITER_COL, "epoch_id")
-                .collect()
-            }
+        live = set(self._committed_pairs() or [])
+        revoked = {(w, e) for w, e, n in self._ledger_rows() or [] if n < 0}
         removed = 0
         for base in (self.corpus_dir, self._docs_dir):
             if not os.path.isdir(base):
@@ -523,18 +810,10 @@ class DedupGatedIngest:
         import uuid
 
         self.vacuum()
-        snapshot = self._committed_pairs()
-        if snapshot is None:
-            return 0
-        pairs = [(r[0], r[1]) for r in snapshot.collect()]
+        pairs = self._committed_pairs()
         if not pairs:
             return 0
         cw = "c" + uuid.uuid4().hex[:12]
-        pair_df = F.broadcast(
-            self.spark.createDataFrame(
-                pairs, f"{_WRITER_COL} STRING, {_EPOCH_COL} LONG"
-            )
-        )
         n_docs = 0
         for base in (self.corpus_dir, self._docs_dir):
             if not _has_partitions(base):
@@ -549,10 +828,8 @@ class DedupGatedIngest:
                     if base == self._docs_dir
                     else self.spark.read.parquet(base)
                 )
-                .join(pair_df, [_WRITER_COL, _EPOCH_COL], "left_semi")
+                .filter(_pairs_filter(pairs))
                 .drop(_WRITER_COL, _EPOCH_COL)
-                .withColumn(_WRITER_COL, F.lit(cw))
-                .withColumn(_EPOCH_COL, F.lit(0))
             )
             if base == self.corpus_dir:
                 rows = rows.persist()
@@ -561,16 +838,11 @@ class DedupGatedIngest:
                 # the one whole-index rewrite: cluster the sidecar so
                 # the gate's pushed list filters skip files/row groups
                 rows = self._index_layout(rows, bulk=True)
-            rows.write.mode("append").partitionBy(_WRITER_COL, _EPOCH_COL).parquet(
-                base
-            )
+            _append(rows, base, cw, 0)
             if base == self.corpus_dir:
                 rows.unpersist()
         self._chaos("compact_before_ledger")
-        ledger_rows = [(0, n_docs, cw)] + [(e, -1, w) for w, e in pairs]
-        self.spark.createDataFrame(
-            ledger_rows, f"epoch_id LONG, n_admitted LONG, {_WRITER_COL} STRING"
-        ).write.mode("append").partitionBy(_WRITER_COL).parquet(self._ledger_dir)
+        self._append_ledger((cw, 0, n_docs), pairs)
         self._chaos("compact_after_ledger")
         for base in (self.corpus_dir, self._docs_dir):
             for w, e in pairs:
@@ -662,10 +934,13 @@ class SemanticGatedIngest(DedupGatedIngest):
     unserialized foreign admit concurrent with a retrain would commit
     old-version rows and trip the mixed-version guard on the next gate.
 
-    Within a batch, near-copies collapse driver-side (the batch is
-    trigger-bounded by the same contract that lets it broadcast): the
-    larger id of every >= threshold pair drops, mirroring the text
-    gate's within-batch rule.
+    Each trigger runs the text gate's one-pass ``_admit`` through its
+    hooks: the staging is the batch itself, whose one collect brings the
+    vectors to the driver; within the batch, near-copies collapse there
+    (the batch is trigger-bounded by the same contract that lets it
+    broadcast): the larger id of every >= threshold pair drops, mirroring
+    the text gate's within-batch rule; the index decision is
+    ``semantic_gate_flags``; the sidecar rows are encoded at write time.
     """
 
     def __init__(
@@ -929,12 +1204,54 @@ class SemanticGatedIngest(DedupGatedIngest):
         return coarse, books, err_bound
 
     # -- protocol hooks ----------------------------------------------------
+    def _stage(self, batch: DataFrame) -> DataFrame:
+        """The batch as (cor_id, _row): the vectors need no staging, the
+        sidecar rows come from the model at write time (``_index_of``)."""
+        return batch.select(
+            F.col(self.id_col).alias("cor_id"),
+            F.struct(*[F.col(f"`{c}`") for c in batch.columns]).alias(_ROW),
+        )
+
+    def _collapse(self, staged: DataFrame) -> tuple[list, list, int, int]:
+        rows = staged.select(
+            "cor_id", F.col(_ROW)[self.vec_col].alias("v")
+        ).collect()
+        losers = (
+            self._within_batch_losers(rows) if self.within_batch_neardup else set()
+        )
+        keys = [r[0] for r in rows if r[0] is not None and r[0] not in losers]
+        return keys, rows, 0, len(losers)
+
+    def _index_flags(
+        self, staged: DataFrame, keys: list, rows: list
+    ) -> DataFrame | None:
+        from data_pipeline_spark.llmops import pq
+
+        if not rows:  # an empty FIRST trigger must not train
+            return None
+        coarse, books, _err = self._ensure_model(staged.select(f"{_ROW}.*"))
+        index = self.committed_index() if keys else None
+        if index is None:
+            return None
+        return pq.semantic_gate_flags(
+            index,
+            staged.filter(F.col("cor_id").isin(keys)).select(f"{_ROW}.*"),
+            coarse,
+            books,
+            self.id_col,
+            self.vec_col,
+            threshold=self.sem_threshold,
+            n_probe=self.n_probe,
+            margin=self.margin,
+        ).withColumn("exact_dup", F.lit(0))  # every rejection is a near one
+
     def _index_of(self, admitted: DataFrame) -> DataFrame:
         from data_pipeline_spark.llmops import pq
 
-        coarse, books, _err = self._ensure_model(admitted)
+        batch = admitted.select(f"{_ROW}.*")
+        coarse, books, _err = self._ensure_model(batch)
         return pq.semantic_index_rows(
-            admitted, coarse, books, self.id_col, self.vec_col
+            batch, coarse, books, self.id_col, self.vec_col
         ).withColumn("model_v", F.lit(int(self._model_version or 1)))
 
     def _index_cols(self) -> list[str]:
@@ -1039,10 +1356,7 @@ class SemanticGatedIngest(DedupGatedIngest):
         if v is None:
             return False
         if self.retrain_after is not None:
-            stats = self.ingest_stats()
-            live = 0
-            if stats is not None:
-                live = stats.agg(F.sum("n_admitted_live")).first()[0] or 0
+            live = self._live_rows() or 0
             if live - self._models[v][3] >= self.retrain_after:
                 return True
         if self.retrain_drift is not None:
@@ -1101,10 +1415,7 @@ class SemanticGatedIngest(DedupGatedIngest):
         from data_pipeline_spark.llmops import pq
 
         self.vacuum()
-        snapshot = self._committed_pairs()
-        if snapshot is None:
-            return 0
-        pairs = [(r[0], r[1]) for r in snapshot.collect()]
+        pairs = self._committed_pairs()
         if not pairs:
             return 0
         new_v = (self._active_version() or 1) + 1
@@ -1142,31 +1453,14 @@ class SemanticGatedIngest(DedupGatedIngest):
             os.replace(tmp, path)
             self._chaos("retrain_after_model")
             cw = "c" + uuid.uuid4().hex[:12]
-            corpus.withColumn(_WRITER_COL, F.lit(cw)).withColumn(
-                _EPOCH_COL, F.lit(0)
-            ).write.mode("append").partitionBy(_WRITER_COL, _EPOCH_COL).parquet(
-                self.corpus_dir
-            )
+            _append(corpus, self.corpus_dir, cw, 0)
             self._chaos("retrain_after_corpus")
-            idx = (
-                pq.semantic_index_rows(
-                    corpus, coarse, books, self.id_col, self.vec_col
-                )
-                .withColumn("model_v", F.lit(new_v))
-                .withColumn(_WRITER_COL, F.lit(cw))
-                .withColumn(_EPOCH_COL, F.lit(0))
-            )
-            self._index_layout(idx, bulk=True).write.mode(
-                "append"
-            ).partitionBy(_WRITER_COL, _EPOCH_COL).parquet(self._docs_dir)
+            idx = pq.semantic_index_rows(
+                corpus, coarse, books, self.id_col, self.vec_col
+            ).withColumn("model_v", F.lit(new_v))
+            _append(self._index_layout(idx, bulk=True), self._docs_dir, cw, 0)
             self._chaos("retrain_before_ledger")
-            ledger_rows = [(0, n_docs, cw)] + [(e, -1, w) for w, e in pairs]
-            self.spark.createDataFrame(
-                ledger_rows,
-                f"epoch_id LONG, n_admitted LONG, {_WRITER_COL} STRING",
-            ).write.mode("append").partitionBy(_WRITER_COL).parquet(
-                self._ledger_dir
-            )
+            self._append_ledger((cw, 0, n_docs), pairs)
             self._chaos("retrain_after_ledger")
             for base in (self.corpus_dir, self._docs_dir):
                 for w, e in pairs:
@@ -1188,56 +1482,22 @@ class SemanticGatedIngest(DedupGatedIngest):
         return n
 
     # -- gate --------------------------------------------------------------
-    def _within_batch_losers(self, batch: DataFrame) -> list[int]:
-        """Larger id of every within-batch >= threshold pair (driver
-        pairwise over the trigger-bounded batch — the semantic twin of
-        the text gate's ngram_jaccard_pairs collapse)."""
+    def _within_batch_losers(self, rows: list) -> set:
+        """Larger id of every within-batch >= threshold pair among the
+        collected (id, vector) rows (driver pairwise over the
+        trigger-bounded batch — the semantic twin of the text gate's
+        shingle-Jaccard collapse)."""
         import numpy as np
 
-        rows = batch.select(
-            F.col(self.id_col).cast("long").alias("i"),
-            F.col(self.vec_col).alias("v"),
-        ).filter(F.col("v").isNotNull()).collect()
+        rows = [r for r in rows if r[0] is not None and r[1] is not None]
         if len(rows) < 2:
-            return []
-        ids = np.asarray([r.i for r in rows], np.int64)
-        x = np.asarray([r.v for r in rows], np.float64)
+            return set()
+        x = np.asarray([r[1] for r in rows], np.float64)
         n = np.linalg.norm(x, axis=1)
         n[n == 0] = 1.0
         sims = (x / n[:, None]) @ (x / n[:, None]).T
-        losers: set[int] = set()
         ii, jj = np.where(np.triu(sims >= self.sem_threshold, k=1))
-        for a, b in zip(ii, jj):
-            losers.add(int(max(ids[a], ids[b])))
-        return sorted(losers)
-
-    def gate_batch(self, batch: DataFrame) -> DataFrame:
-        from data_pipeline_spark.llmops import pq
-
-        if batch.isEmpty():  # an empty FIRST trigger must not train
-            return batch
-        coarse, books, _err = self._ensure_model(batch)
-        if self.within_batch_neardup:
-            losers = self._within_batch_losers(batch)
-            if losers:
-                batch = batch.filter(~F.col(self.id_col).isin(losers))
-        index = self.committed_index()
-        if index is None:
-            return batch
-        flags = pq.semantic_gate_flags(
-            index,
-            batch,
-            coarse,
-            books,
-            self.id_col,
-            self.vec_col,
-            threshold=self.sem_threshold,
-            n_probe=self.n_probe,
-            margin=self.margin,
-        )
-        return batch.join(
-            flags.filter(F.col("keep") == 1).select(self.id_col), self.id_col
-        )
+        return {max(rows[a][0], rows[b][0]) for a, b in zip(ii, jj)}
 
     def gate_flags(self, batch: DataFrame) -> DataFrame:
         from data_pipeline_spark.llmops import pq

@@ -491,3 +491,89 @@ def test_maintenance_compact_sorted_epoch_keeps_partition_columns(
         for r in full.collect()
     }
     assert rows == {(d, sink.writer_id, 0) for d, _t in DOCS1}
+
+
+# -- per-trigger cost and decisions -------------------------------------------
+
+
+def _actions_in_group(spark, group: str, fn):
+    """(result, Spark actions run by ``fn``): jobs of the group counted as
+    SQL executions — adaptive execution runs one action as a varying
+    number of stage jobs — plus any job run outside an execution."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    actions = set()
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        execution = store.jobWithAssociatedSql(job)._2()
+        actions.add(f"x{execution.get()}" if execution.isDefined() else f"j{job}")
+    return out, len(actions)
+
+
+def test_steady_state_trigger_action_budget(spark, tmp_path):
+    """A steady-state trigger stages its batch once, decides against the
+    index in one action and writes twice; the commit state is read by
+    the driver (no Spark job at all)."""
+    import uuid
+
+    sink = _sink(spark, tmp_path)
+    sink.admit_batch(_df(spark, DOCS1), 0)
+    sink.admit_batch(_df(spark, DOCS2), 1)  # the sink's first indexed trigger
+    probe = _df(
+        spark,
+        [
+            (40, DOCS1[1][1]),  # exact dup of committed doc 2
+            (41, "a steady state arrival with words nobody has used yet"),
+        ],
+    )
+    tag = uuid.uuid4().hex
+    n, actions = _actions_in_group(
+        spark, f"admit-{tag}", lambda: sink.admit_batch(probe, 2)
+    )
+    assert n == 1
+    assert actions <= 5, actions
+
+    fresh = _sink(spark, tmp_path)
+    assert _actions_in_group(spark, f"last-{tag}", fresh._last_committed) == (2, 0)
+    pairs, a = _actions_in_group(spark, f"pairs-{tag}", fresh._committed_pairs)
+    assert len(pairs) == 3 and a == 0
+    stats, a = _actions_in_group(
+        spark, f"stats-{tag}", lambda: fresh.ingest_stats().collect()
+    )
+    assert [tuple(r)[1:] for r in stats] == [(3, 3, 6, 2)] and a == 0
+
+
+@pytest.mark.parametrize("broadcast_batch", [True, False])
+def test_per_trigger_decision_counts(spark, tmp_path, broadcast_batch):
+    """The sink keeps what its gate decided on the last trigger; the
+    driver path and the Spark reference path count alike."""
+    from data_pipeline_spark.streaming.ingest import GateDecisions
+
+    sink = _sink(spark, tmp_path, broadcast_batch=broadcast_batch)
+    assert sink.last_decisions is None
+    sink.admit_batch(_df(spark, DOCS1), 0)
+    assert sink.last_decisions == GateDecisions(0, 0, 0, 0, 0, 3)
+    # 11 is a near copy of 10 inside the batch (8 of 10 shingles shared),
+    # 10 an exact copy of committed doc 1
+    sink.admit_batch(_df(spark, DOCS2), 1)
+    assert sink.last_decisions == GateDecisions(1, 0, 1, 1, 0, 2)
+    sink.admit_batch(
+        _df(
+            spark,
+            [
+                (30, "late arrival with novel words and fresh phrasing"),
+                (31, "late arrival with novel words and fresh phrasing"),
+                (32, "the quick brown fox jumps over the lazy dog near the gate"),
+            ],
+        ),
+        2,
+    )
+    assert sink.last_decisions == GateDecisions(2, 1, 0, 0, 1, 1)
+    # a replayed epoch decides nothing and keeps the record
+    assert sink.admit_batch(_df(spark, DOCS2), 1) == 0
+    assert sink.last_decisions.epoch == 2
