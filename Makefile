@@ -1,4 +1,4 @@
-.PHONY: test bench smoke correctness perfbench
+.PHONY: test bench smoke correctness perfbench profile
 
 W ?= cdc_publish_tail
 SEED ?= 1
@@ -16,6 +16,11 @@ bench:
 # one benchmark run: make perfbench W=<workload> SEED=<n>
 perfbench:
 	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 8 --trace 0
+
+# per-query layer profile (bench timing policy): make profile Q="q1 q2 ..."
+# profiles the bench set when Q is empty
+profile:
+	python tools_profile.py $(Q)
 
 smoke:
 	python -c "import __spark_entry__ as e; from data_pipeline_spark.session import get_spark; s=get_spark('smoke'); print(len(e.entry(s).collect()), 'rows'); s.stop()"

@@ -58,16 +58,6 @@ class TopicStore:
     can publish to the same root.
     """
 
-    # sidecar row shape: one row per partition per publish.  publish_id +
-    # base_offset (nullable; null for untagged publishes and pre-r7 files —
-    # the explicit read schema fills them in) tag the RESERVED offset range
-    # [base_offset, next_offset) so a crashed publisher can later verify,
-    # against rows actually on disk, whether its data append landed
-    # (find_publish / StreamingPublisher.publish_batch).
-    _META_SCHEMA = (
-        "partition INT, next_offset LONG, publish_id STRING, base_offset LONG"
-    )
-
     def __init__(
         self, spark: SparkSession, root: str, serialize_publishes: bool = False
     ):
@@ -120,9 +110,14 @@ class TopicStore:
     def _dir(self, topic: str) -> str:
         return os.path.join(self.root, topic)
 
-    # pyarrow schema of the watermark sidecar — must stay type-identical to
-    # _META_SCHEMA (partition INT == int32) so Spark- and driver-written
-    # files mix freely in one directory
+    # the watermark sidecar's row: one per partition per publish.
+    # publish_id + base_offset (null for untagged publishes and pre-r7
+    # files — the explicit read schema fills them in) tag the RESERVED
+    # offset range [base_offset, next_offset) so a crashed publisher can
+    # later verify, against rows actually on disk, whether its data append
+    # landed (find_publish / StreamingPublisher.publish_batch).  Sidecars
+    # written by Spark before the driver path (partition INT == int32)
+    # read through the same schema.
     @staticmethod
     def _meta_arrow_schema():
         import pyarrow as pa
@@ -315,22 +310,17 @@ class TopicStore:
             highs[r.partition] = r.high + 1
         return highs
 
-    def _read_meta(self, topic: str) -> DataFrame:
-        # explicit schema: pre-r7 sidecar files lack publish_id/base_offset
-        # and parquet fills the missing columns with null; without it a
-        # mixed directory resolves to whichever file's schema is sampled.
-        return self.spark.read.schema(self._META_SCHEMA).parquet(
-            self._meta_dir(topic)
-        )
-
     def compact_meta(self, topic: str) -> None:
         """Rewrite the watermark sidecar to O(partitions x publishers) rows.
 
         The sidecar appends one row per partition per publish, so a
         long-lived topic accumulates O(publishes) rows; reads already
         aggregate max(next_offset), so compaction is purely a size bound.
-        The snapshot is collected (tiny) before the overwrite so the read
-        never races the rewrite.
+        Like ``OffsetLedger.compact`` it runs on the driver: the compacted
+        file lands (atomically) before the files it replaces are removed,
+        and only files listed before the read are removed, so a concurrent
+        ``high_watermarks`` or a crash mid-compaction never sees the
+        reservations vanish (which would hand out offsets again).
 
         Surviving rows per partition: the max-next_offset row (the
         watermark) PLUS each PUBLISHER's latest tagged reservation
@@ -344,34 +334,25 @@ class TopicStore:
         meta = self._meta_dir(topic)
         if not os.path.isdir(meta):
             return
-        df = self._read_meta(topic)
-        watermark = (
-            df.groupBy("partition")
-            .agg(
-                F.max_by(
-                    F.struct("next_offset", "publish_id", "base_offset"),
-                    "next_offset",
-                ).alias("top")
-            )
-            .select("partition", "top.*")
-        )
-        latest_tagged = (
-            df.filter(F.col("publish_id").isNotNull())
-            .withColumn("publisher", F.split("publish_id", ":").getItem(0))
-            .groupBy("partition", "publisher")
-            .agg(
-                F.max_by(
-                    F.struct("next_offset", "publish_id", "base_offset"),
-                    "base_offset",
-                ).alias("top")
-            )
-            .select("partition", "top.*")
-        )
-        rows = watermark.unionByName(latest_tagged).distinct().collect()
-        self.spark.createDataFrame(
-            [(r.partition, r.next_offset, r.publish_id, r.base_offset) for r in rows],
-            self._META_SCHEMA,
-        ).write.mode("overwrite").parquet(meta)
+        old = [
+            n
+            for n in os.listdir(meta)
+            if not n.endswith(".tmp") and os.path.isfile(os.path.join(meta, n))
+        ]
+        schema = self._meta_arrow_schema()
+        watermark: dict[int, tuple] = {}
+        latest_tagged: dict[tuple[int, str], tuple] = {}
+        for row in zip(*read_rows(meta, schema, schema.names)):
+            part, nxt, pid, base = row
+            if part not in watermark or nxt > watermark[part][1]:
+                watermark[part] = row
+            if pid is not None:
+                key = (part, pid.split(":")[0])
+                if key not in latest_tagged or base > latest_tagged[key][3]:
+                    latest_tagged[key] = row
+        write_rows(meta, schema, list({*watermark.values(), *latest_tagged.values()}))
+        for n in old:
+            os.remove(os.path.join(meta, n))
 
     def find_publish(
         self, topic: str, publish_id: str
@@ -385,21 +366,21 @@ class TopicStore:
         earlier ranges were verified data-free before the re-attempt, and a
         crashed append can never complete later (the job died with its
         driver)."""
-        if not os.path.isdir(self._meta_dir(topic)):
+        if not self.has_sidecar(topic):
             return None
-        rows = (
-            self._read_meta(topic)
-            .filter(F.col("publish_id") == publish_id)
-            .groupBy("partition")
-            .agg(
-                F.max("base_offset").alias("base"),
-                F.max_by("next_offset", "base_offset").alias("next"),
-            )
-            .collect()
+        import pyarrow.dataset as pads
+
+        parts, bases, nexts = read_rows(
+            self._meta_dir(topic),
+            self._meta_arrow_schema(),
+            ["partition", "base_offset", "next_offset"],
+            pads.field("publish_id") == publish_id,
         )
-        if not rows:
-            return None
-        return {r.partition: (r.base, r.next) for r in rows}
+        out: dict[int, tuple[int, int]] = {}
+        for p, b, n in zip(parts, bases, nexts):
+            if p not in out or b > out[p][0]:
+                out[p] = (b, n)
+        return out or None
 
     # -- consumer side ------------------------------------------------------
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from data_pipeline_spark.consumer import Consumer
 from data_pipeline_spark.consumer_source import ConsumerSource
+from data_pipeline_spark.io import read_rows, write_rows
 
 
 class DynamicSubscriptionRunner:
@@ -109,22 +110,31 @@ class ExactlyOnceBatchSink:
         self.sink_id = sink_id
         self._last_epoch: int | None = None
 
+    @staticmethod
+    def _ledger_schema():
+        import pyarrow as pa
+
+        return pa.schema([("sink_id", pa.string()), ("epoch_id", pa.int64())])
+
     def _last_committed(self) -> int:
-        # One max() per process start, O(1) per batch after — epoch ids are
-        # strictly increasing per checkpoint and replays re-deliver the
-        # last epoch, so the high watermark is a complete replay filter
+        # One driver read per process start, O(1) per batch after — epoch
+        # ids are strictly increasing per checkpoint and replays re-deliver
+        # the last epoch, so the high watermark is a complete replay filter
         # (collecting the whole ledger per batch was O(stream lifetime)).
+        # A ledger holding only a crashed first append's ``_temporary``
+        # reads as empty.
         if self._last_epoch is None:
+            self._last_epoch = -1
             if os.path.exists(self.ledger_path):
-                top = (
-                    self.spark.read.parquet(self.ledger_path)
-                    .filter(F.col("sink_id") == self.sink_id)
-                    .agg(F.max("epoch_id"))
-                    .first()[0]
+                import pyarrow.dataset as pads
+
+                (epochs,) = read_rows(
+                    self.ledger_path,
+                    self._ledger_schema(),
+                    ["epoch_id"],
+                    pads.field("sink_id") == self.sink_id,
                 )
-                self._last_epoch = -1 if top is None else top
-            else:
-                self._last_epoch = -1
+                self._last_epoch = max(epochs, default=-1)
         return self._last_epoch
 
     def write(self, df: DataFrame, epoch_id: int) -> bool:
@@ -138,9 +148,7 @@ class ExactlyOnceBatchSink:
             .option("partitionOverwriteMode", "dynamic")
             .parquet(self.out_dir)
         )
-        self.spark.createDataFrame(
-            [(self.sink_id, epoch_id)], "sink_id STRING, epoch_id LONG"
-        ).write.mode("append").parquet(self.ledger_path)
+        write_rows(self.ledger_path, self._ledger_schema(), [(self.sink_id, epoch_id)])
         self._last_epoch = epoch_id
         return True
 

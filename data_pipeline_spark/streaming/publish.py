@@ -13,9 +13,10 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_spark.io import read_rows, write_rows
 from data_pipeline_spark.producer import Producer
 
 
@@ -84,7 +85,11 @@ class StreamingPublisher:
         # (the pre-r5 shape) was O(stream lifetime) driver work per trigger.
         self._last_epoch: int | None = None
 
-    _LEDGER_SCHEMA = "epoch_id LONG, phase STRING, pre_highs STRING"
+    @staticmethod
+    def _ledger_schema():
+        import pyarrow as pa
+
+        return pa.schema([("epoch_id", pa.int64()), ("phase", pa.string())])
 
     def _publish_id(self, epoch_id: int) -> str:
         """Deterministic per (checkpoint, epoch): stable across restarts so
@@ -94,41 +99,39 @@ class StreamingPublisher:
         ).hexdigest()[:12]
         return f"{stable}:{epoch_id}"
 
-    def _append_ledger(
-        self, spark: SparkSession, epoch_id: int, phase: str, pre_highs: str | None
-    ) -> None:
-        spark.createDataFrame(
-            [(epoch_id, phase, pre_highs)], self._LEDGER_SCHEMA
-        ).write.mode("append").parquet(self.ledger_path)
+    def _append_ledger(self, epoch_id: int, phase: str) -> None:
+        write_rows(self.ledger_path, self._ledger_schema(), [(epoch_id, phase)])
 
-    def _seed(self, spark: SparkSession) -> None:
+    def _seed(self) -> None:
         """One ledger read per process start: last committed epoch + any
-        dangling intent (at most one — epochs are sequential)."""
+        dangling intent (at most one — epochs are sequential).  The driver
+        reads the ledger (``io.read_rows``), so Spark-written ledgers, and
+        a directory holding only a crashed first append's ``_temporary``,
+        read too (the latter as empty)."""
         if self._last_epoch is not None:
             return
         self._pending: int | None = None
         if not os.path.exists(self.ledger_path):
             self._last_epoch = -1
             return
-        rows = spark.read.parquet(self.ledger_path).collect()
+        epochs, phases = read_rows(
+            self.ledger_path, self._ledger_schema(), ["epoch_id", "phase"]
+        )
         # pre-r6 ledgers have no phase column: treat those rows as commits
-        commits = [
-            r.epoch_id
-            for r in rows
-            if getattr(r, "phase", None) in (None, "commit")
-        ]
-        self._last_epoch = max(commits, default=-1)
+        self._last_epoch = max(
+            (e for e, p in zip(epochs, phases) if p in (None, "commit")),
+            default=-1,
+        )
         intents = [
-            r.epoch_id
-            for r in rows
-            if getattr(r, "phase", None) == "intent"
-            and r.epoch_id > self._last_epoch
+            e
+            for e, p in zip(epochs, phases)
+            if p == "intent" and e > self._last_epoch
         ]
         if intents:
             self._pending = max(intents)
 
-    def _last_committed(self, spark: SparkSession) -> int:
-        self._seed(spark)
+    def _last_committed(self) -> int:
+        self._seed()
         return self._last_epoch
 
     def _landed(self, epoch_id: int) -> bool:
@@ -163,8 +166,7 @@ class StreamingPublisher:
         )
 
     def publish_batch(self, batch: DataFrame, epoch_id: int) -> bool:
-        spark = batch.sparkSession
-        if epoch_id <= self._last_committed(spark):
+        if epoch_id <= self._last_committed():
             return False  # replayed micro-batch: already appended
         store = self.producer.store
         topic = self.producer.registry.get_schema_by_id(self.schema_id).topic
@@ -175,13 +177,13 @@ class StreamingPublisher:
                 # earlier would skip verification on the next replay if the
                 # commit append (or verification itself) throws here.
                 if self._landed(epoch_id):
-                    self._append_ledger(spark, epoch_id, "commit", None)
+                    self._append_ledger(epoch_id, "commit")
                     self._last_epoch = epoch_id
                     self._pending = None
                     return False
                 # intent already on the ledger; fall through to publish
             else:
-                self._append_ledger(spark, epoch_id, "intent", None)
+                self._append_ledger(epoch_id, "intent")
                 # mirror the on-disk intent in memory: if anything below
                 # throws and the SAME publisher object retries the epoch
                 # (query restart without process death), the retry must go
@@ -196,7 +198,7 @@ class StreamingPublisher:
                 encrypt_key=self.encrypt_key,
                 publish_id=self._publish_id(epoch_id),
             )
-            self._append_ledger(spark, epoch_id, "commit", None)
+            self._append_ledger(epoch_id, "commit")
             self._pending = None
             self._last_epoch = epoch_id
             return True

@@ -4,6 +4,7 @@ through the full wire path + streaming publish."""
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -14,6 +15,7 @@ from data_pipeline_spark.operators.cdc import apply_cdc, merge_upsert
 from data_pipeline_spark.producer import Producer
 from data_pipeline_spark.registry import SchemaRegistry
 from data_pipeline_spark.sources.file_topic import TopicStore
+from data_pipeline_spark.streaming.dynamic import ExactlyOnceBatchSink
 from data_pipeline_spark.streaming.publish import StreamingPublisher
 from tests.conftest import SF_SMOKE
 
@@ -148,7 +150,7 @@ def _pub_fixture(spark, tmp_path):
 
 def _write_intent(spark, ledger, epoch):
     spark.createDataFrame(
-        [(epoch, "intent", None)], StreamingPublisher._LEDGER_SCHEMA
+        [(epoch, "intent", None)], "epoch_id LONG, phase STRING, pre_highs STRING"
     ).write.mode("append").parquet(ledger)
 
 
@@ -201,7 +203,7 @@ def test_streaming_publisher_reservation_without_data_republishes(spark, tmp_pat
     fake_new = {p: h + 3 for p, h in pre.items()}
     spark.createDataFrame(
         [(p, n, pid, pre[p]) for p, n in fake_new.items()],
-        TopicStore._META_SCHEMA,
+        "partition INT, next_offset LONG, publish_id STRING, base_offset LONG",
     ).write.mode("append").parquet(store._meta_dir(rs.topic))
     assert store.high_watermarks(rs.topic) == fake_new  # watermarks DID move
 
@@ -350,11 +352,11 @@ def test_same_object_retry_after_commit_append_failure(spark, tmp_path):
     real_append = pub._append_ledger
     calls = {"fail_next_commit": True}
 
-    def flaky(spark_s, epoch_id, phase, pre):
+    def flaky(epoch_id, phase):
         if phase == "commit" and calls["fail_next_commit"]:
             calls["fail_next_commit"] = False
             raise OSError("transient fs error on commit append")
-        return real_append(spark_s, epoch_id, phase, pre)
+        return real_append(epoch_id, phase)
 
     pub._append_ledger = flaky
     import pytest as _pytest
@@ -366,6 +368,48 @@ def test_same_object_retry_after_commit_append_failure(spark, tmp_path):
     # same-object retry (query restart without process death)
     assert pub.publish_batch(batch(10, 10), 1) is False  # verified: skip
     assert store.read(rs.topic).count() == 20  # NOT 30 — no duplicates
+
+
+def test_ledger_holding_only_a_crashed_first_append_restarts(spark, tmp_path):
+    """A first ledger append that died mid-write leaves only Spark's
+    ``_temporary/0/`` in the ledger directory, from which Spark cannot
+    infer a schema.  The publisher and the batch sink restart from it:
+    epoch 0 is published and written exactly once."""
+    rs, store, producer, batch, ledger = _pub_fixture(spark, tmp_path)
+    sink_ledger = str(tmp_path / "sink_ledger")
+    out = str(tmp_path / "out")
+    for path in (ledger, sink_ledger):
+        os.makedirs(os.path.join(path, "_temporary", "0"))
+
+    def pub():
+        return StreamingPublisher(producer, rs.schema_id, ledger, order_by="event_id")
+
+    assert pub().publish_batch(batch(0, 10), 0) is True
+    assert pub().publish_batch(batch(0, 10), 0) is False  # replay skipped
+    assert store.read(rs.topic).count() == 10
+
+    def sink():
+        return ExactlyOnceBatchSink(spark, out, sink_ledger, "s1")
+
+    assert sink().write(spark.range(5), epoch_id=0) is True
+    assert sink().write(spark.range(5), epoch_id=0) is False
+    assert spark.read.parquet(out).count() == 5
+
+
+def test_publisher_reads_pre_phase_spark_ledger(spark, tmp_path):
+    """A Spark-written ledger from before the two-phase protocol (rows
+    without ``phase``) counts its rows as commits, and driver-written
+    rows mix into it."""
+    rs, store, producer, batch, ledger = _pub_fixture(spark, tmp_path)
+    spark.createDataFrame([(0,)], "epoch_id LONG").write.parquet(ledger)
+
+    def pub():
+        return StreamingPublisher(producer, rs.schema_id, ledger, order_by="event_id")
+
+    assert pub().publish_batch(batch(0, 10), 0) is False
+    assert pub().publish_batch(batch(10, 10), 1) is True
+    assert pub().publish_batch(batch(10, 10), 1) is False
+    assert store.read(rs.topic).count() == 10
 
 
 def test_publisher_chaos_every_crash_window_exactly_once(spark, tmp_path):
@@ -388,11 +432,11 @@ def test_publisher_chaos_every_crash_window_exactly_once(spark, tmp_path):
         real = pub._append_ledger
         state = {"armed": True}
 
-        def flaky(s, e, phase, pre):
+        def flaky(e, phase):
             if phase == "intent" and state["armed"]:
                 state["armed"] = False
                 raise Boom("before intent")
-            return real(s, e, phase, pre)
+            return real(e, phase)
 
         pub._append_ledger = flaky
 
@@ -422,11 +466,11 @@ def test_publisher_chaos_every_crash_window_exactly_once(spark, tmp_path):
         real = pub._append_ledger
         state = {"armed": True}
 
-        def flaky(s, e, phase, pre):
+        def flaky(e, phase):
             if phase == "commit" and state["armed"]:
                 state["armed"] = False
                 raise Boom("after data, before commit")
-            return real(s, e, phase, pre)
+            return real(e, phase)
 
         pub._append_ledger = flaky
 

@@ -154,7 +154,7 @@ def test_topic_info_surfaces_reservation_gap(spark, tmp_path):
     highs = store.high_watermarks(rs.topic)
     spark.createDataFrame(
         [(p, h + 3, "crashed:1", h) for p, h in highs.items()],
-        TopicStore._META_SCHEMA,
+        "partition INT, next_offset LONG, publish_id STRING, base_offset LONG",
     ).write.mode("append").parquet(store._meta_dir(rs.topic))
 
     intro = Introspector(spark, reg, store)

@@ -224,6 +224,78 @@ def test_ledger_spark_action_budget(spark, tmp_path):
     assert (n_commit, n_read) == (1, 0)
 
 
+def _tagged_sidecar(spark, registry, store):
+    """A topic whose sidecar holds two tagged publishes (``w:0``, ``v:0``)
+    around an untagged one; returns it with the reserved ranges."""
+    rs = registry.latest_schema_for_source("test.main.db", "events")
+    prod = Producer(store, registry)
+    ranges = {}
+    for n, pid in ((30, "w:0"), (40, None), (50, "v:0")):
+        before = store.high_watermarks(rs.topic)
+        batch = _events(spark, n).filter(F.col("event_id") >= n - 10)
+        after = prod.publish(
+            batch, rs.schema_id, order_by="event_id", publish_id=pid
+        ).high_watermarks
+        ranges[pid] = {p: (before[p], after[p]) for p in after}
+    return rs.topic, ranges
+
+
+def test_sidecar_compaction_and_lookup_run_no_spark_job(spark, registry, store):
+    """compact_meta and find_publish are driver reads of the sidecar:
+    no Spark job, same reserved ranges before and after compaction."""
+    import uuid
+
+    topic, ranges = _tagged_sidecar(spark, registry, store)
+    tag = uuid.uuid4().hex
+    found, n_find = _jobs_in_group(
+        spark, f"find-{tag}", lambda: store.find_publish(topic, "w:0")
+    )
+    _, n_compact = _jobs_in_group(
+        spark, f"compact-{tag}", lambda: store.compact_meta(topic)
+    )
+    assert (n_find, n_compact) == (0, 0)
+    assert found == ranges["w:0"]
+    assert store.find_publish(topic, "v:0") == ranges["v:0"]
+    assert store.find_publish(topic, "nobody:0") is None
+
+
+def test_sidecar_compaction_crash_keeps_reservations(
+    spark, registry, store, monkeypatch
+):
+    """A compaction that dies between removing the files it replaced
+    leaves high_watermarks and find_publish unchanged (the compacted file
+    landed first); a rerun converges to one compacted file."""
+    topic, ranges = _tagged_sidecar(spark, registry, store)
+
+    def reads():
+        return (
+            store.high_watermarks(topic),
+            store.find_publish(topic, "w:0"),
+            store.find_publish(topic, "v:0"),
+        )
+
+    before = reads()
+    assert before[1:] == (ranges["w:0"], ranges["v:0"])
+    real_remove = os.remove
+    removed = []
+
+    def dying_remove(path):
+        if removed:
+            raise OSError("crash mid-compaction")
+        removed.append(path)
+        real_remove(path)
+
+    monkeypatch.setattr(os, "remove", dying_remove)
+    with pytest.raises(OSError):
+        store.compact_meta(topic)
+    monkeypatch.undo()
+    assert removed and reads() == before
+    store.compact_meta(topic)
+    assert reads() == before
+    meta = store._meta_dir(topic)
+    assert len([n for n in os.listdir(meta) if not n.startswith((".", "_"))]) == 1
+
+
 def _spark_committed(spark, path, group, topic):
     """The ledger read as Spark ran it before the driver-side read."""
     return {
