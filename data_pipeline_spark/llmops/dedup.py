@@ -536,54 +536,6 @@ def _with_band_buckets(df: DataFrame, shingles_col: str) -> DataFrame:
     return staged.withColumn("bands_v2", bands).drop("_x")
 
 
-def _bucket_array(mins: list):
-    """band bucket t = xxhash64 of the band's rows_per_band minimums plus
-    the band id — shared by the in-row and exploded formulations so their
-    bucket values are bit-identical."""
-    return F.array(
-        *[
-            F.xxhash64(
-                *mins[t * _INDEX_ROWS : (t + 1) * _INDEX_ROWS], F.lit(t)
-            )
-            for t in range(_INDEX_BANDS)
-        ]
-    )
-
-
-def _batch_band_buckets(inc: DataFrame) -> DataFrame:
-    """DISTINCT band-bucket values of a batch frame carrying an in-row
-    ``shingles`` array — the EXPLODED formulation of ``_with_band_buckets``
-    (same modular hash family, same bucket hash, bit-identical values):
-    explode the shingle stream, derive the 30 family columns in codegen,
-    groupBy(doc) with 30 map-side-combined mins, hash the bands,
-    explode + distinct.
-
-    Why a second formulation: the in-row zip_with/transform pipeline runs
-    INTERPRETED (higher-order functions have no codegen) at ~1 ms/doc —
-    fine amortized once per ADMITTED doc on the index write path, but the
-    gate recomputes the batch side every trigger, where this codegen
-    explode+groupBy form measures ~10x faster.  Batch-sized input, so the
-    |docs|-row shuffle is trivial.  Docs with empty shingle sets drop out
-    at the explode — identical to the in-row form's empty ``bands``."""
-    sh = inc.select(F.col("inc_id"), F.explode("shingles").alias("s"))
-    x = F.shiftrightunsigned(F.xxhash64("s"), 33) % _MH_P
-    hashed = sh.select(
-        "inc_id",
-        *[
-            ((F.lit(_mh_consts(j)[0]) * x + F.lit(_mh_consts(j)[1])) % _MH_P)
-            .alias(f"k{j}")
-            for j in range(_INDEX_NUM_PERM)
-        ],
-    )
-    mins_df = hashed.groupBy("inc_id").agg(
-        *[F.min(f"k{j}").alias(f"m{j}") for j in range(_INDEX_NUM_PERM)]
-    )
-    bands = _bucket_array([F.col(f"m{j}") for j in range(_INDEX_NUM_PERM)])
-    return (
-        mins_df.select(F.explode(bands).alias("bb")).distinct()
-    )
-
-
 def doc_shingle_index(
     df: DataFrame, id_col: str, text_col: str, n: int = 3,
     with_bands: bool = True, row_col: str | None = None,
@@ -671,7 +623,6 @@ def indexed_dedup_gate(
     text_col: str,
     n: int = 3,
     threshold: float = 0.8,
-    broadcast_batch: bool = True,
     band_prune: bool = False,
     max_literal_buckets: int | None = None,
     index_rows: "int | Callable[[], int | None] | None" = None,
@@ -694,11 +645,6 @@ def indexed_dedup_gate(
     hashes (identical to string-shingle Jaccard barring 2^-64 collisions).
     The per-(incoming, corpus) intersection aggregation is bounded by
     |batch shingles| x their corpus document frequency.
-
-    ``broadcast_batch=False`` is the BACKFILL escape hatch: a one-off
-    batch too large to broadcast (a re-crawled archive, not a streaming
-    trigger) falls back to shuffle joins — same decisions, corpus-sized
-    cost, run deliberately.
 
     ``band_prune=True`` turns on the MinHash band-bucket pre-filter for
     the near pass: phase one scans only the index's (cor_id, bands)
@@ -739,14 +685,13 @@ def indexed_dedup_gate(
     sides of the crossover).
     """
     inc, batch_buckets = stage_dedup_batch(
-        incoming, id_col, text_col, n, broadcast_batch, band_prune
+        incoming, id_col, text_col, n, band_prune
     )
     return index_dedup_flags(
         index,
         inc,
         id_col,
         threshold,
-        broadcast_batch=broadcast_batch,
         band_prune=band_prune,
         batch_buckets=batch_buckets,
         max_literal_buckets=max_literal_buckets,
@@ -759,49 +704,41 @@ def stage_dedup_batch(
     id_col: str,
     text_col: str,
     n: int = 3,
-    broadcast_batch: bool = True,
     band_prune: bool = False,
 ) -> tuple[DataFrame, list | None]:
     """Batch-staging half of ``indexed_dedup_gate``: the incoming docs as
-    gate rows ``(inc_id, h, inc_n, shingles)``, plus — for a broadcast
-    band-pruned gate — the batch's distinct band buckets as a sorted
-    driver list (None otherwise).  A caller that already holds these
-    rows (the streaming ingest sink stages its batch once per trigger)
-    builds them itself and calls ``index_dedup_flags`` directly."""
+    gate rows ``(inc_id, h, inc_n, shingles)``, plus — for a band-pruned
+    gate — the batch's distinct band buckets as a sorted driver list
+    (None otherwise).  A caller that already holds these rows (the
+    streaming ingest sink stages its batch once per trigger) builds them
+    itself and calls ``index_dedup_flags`` directly."""
+    # the batch is trigger-bounded by the same contract that lets it
+    # broadcast: materialize its index rows ONCE (one tokenize job) and
+    # let every branch of the flags half replay them — the exact/near/size
+    # branches otherwise each re-tokenize the batch.  localCheckpoint
+    # keeps the rows in executor block storage rather than shipping them
+    # through the driver as a pickled (list-built) local frame, which
+    # every broadcast build that read it re-deserialized in a single task.
+    # Fault tolerance is that of the trigger: lost blocks re-run it.  The
+    # streaming ingest sink skips this half: its trigger is already
+    # materialized (persisted staging) and its survivors' rows sit on the
+    # driver after the within-batch collapse, so it hands them back as a
+    # pandas-built (Arrow) LocalRelation — read without a job, no pickling.
+    local = doc_shingle_index(
+        incoming, id_col, text_col, n, with_bands=band_prune
+    ).localCheckpoint(eager=True)
     batch_buckets: list | None = None
-    if broadcast_batch:
-        # the batch is trigger-bounded by the same contract that lets it
-        # broadcast: materialize its index rows ONCE (one tokenize job)
-        # and let every branch of the flags half replay them — the
-        # exact/near/size branches otherwise each re-tokenize the batch.
-        # localCheckpoint keeps the rows in executor block storage rather
-        # than shipping them through the driver as a pickled (list-built)
-        # local frame, which every broadcast build that read it
-        # re-deserialized in a single task.  Fault tolerance is that of
-        # the trigger: lost blocks re-run it.  The streaming ingest sink
-        # skips this half: its trigger is already materialized (persisted
-        # staging) and its survivors' rows sit on the driver after the
-        # within-batch collapse, so it hands them back as a pandas-built
-        # (Arrow) LocalRelation — read without a job, no pickling.
-        batch_idx = doc_shingle_index(
-            incoming, id_col, text_col, n, with_bands=band_prune
-        ).localCheckpoint(eager=True)
-        local = batch_idx
-        if band_prune:
-            # band buckets ride the same materialized rows; ship ONLY the
-            # bands column to the driver (the shingle arrays stay put)
-            batch_buckets = sorted(
-                {
-                    b
-                    for r in batch_idx.select("bands_v2").collect()
-                    for b in (r.bands_v2 or [])
-                }
-            )
-            local = local.drop("bands_v2")
-    else:
-        local = doc_shingle_index(
-            incoming, id_col, text_col, n, with_bands=False
+    if band_prune:
+        # band buckets ride the same materialized rows; ship ONLY the
+        # bands column to the driver (the shingle arrays stay put)
+        batch_buckets = sorted(
+            {
+                b
+                for r in local.select("bands_v2").collect()
+                for b in (r.bands_v2 or [])
+            }
         )
+        local = local.drop("bands_v2")
     inc = local.select(
         F.col("cor_id").alias("inc_id"),
         "h",
@@ -816,7 +753,6 @@ def index_dedup_flags(
     inc: DataFrame,
     id_col: str,
     threshold: float = 0.8,
-    broadcast_batch: bool = True,
     band_prune: bool = False,
     batch_buckets: list | None = None,
     max_literal_buckets: int | None = None,
@@ -825,10 +761,10 @@ def index_dedup_flags(
     """Index-flags half of ``indexed_dedup_gate``: flag staged gate rows
     ``inc`` = (inc_id, h, inc_n, shingles) against ``index`` — exact md5
     hits and (band-pruned) shingle-Jaccard near hits in ONE plan, so one
-    action decides the batch.  ``batch_buckets`` is the batch's distinct
-    band-bucket list, required for a broadcast band-pruned gate.  Returns
-    (id, exact_dup, near_dup, best_jaccard, keep) per staged row."""
-    bc = F.broadcast if broadcast_batch else (lambda d: d)
+    action decides the batch.  The batch side broadcasts into every join.
+    ``batch_buckets`` is the batch's distinct band-bucket list, required
+    for a band-pruned gate.  Returns (id, exact_dup, near_dup,
+    best_jaccard, keep) per staged row."""
     if band_prune and "bands_v2" not in index.columns:
         raise ValueError(
             "band_prune=True needs a 'bands_v2' column on the index — "
@@ -847,13 +783,13 @@ def index_dedup_flags(
     # |batch| x partitions rows; the index itself never shuffles.
     exact = (
         index.select("h")
-        .join(bc(inc.select("inc_id", "h")), "h")
+        .join(F.broadcast(inc.select("inc_id", "h")), "h")
         .select(F.col("inc_id").alias("exact_id"))
         .distinct()
     )
 
     near_source = index
-    if band_prune and broadcast_batch:
+    if band_prune:
         # phase 1 FUSED into the index scan: the batch's distinct band
         # buckets (<= _INDEX_BANDS per doc, trigger-bounded by the same
         # contract that lets the batch broadcast) collect to the driver
@@ -920,19 +856,6 @@ def index_dedup_flags(
                 % ",".join(str(int(b)) for b in buckets)
             )
             near_source = index.filter(F.arrays_overlap("bands_v2", lit_arr))
-    elif band_prune:
-        # BACKFILL path (batch too large to broadcast/collect): the same
-        # pruning as a value join — explode the index's bands, semi-join
-        # the batch buckets, semi-join the surviving ids back.  Two extra
-        # exchanges, chosen only when the batch is corpus-sized.
-        inc_buckets = _batch_band_buckets(inc)
-        candidates = (
-            index.select("cor_id", F.explode("bands_v2").alias("bb"))
-            .join(inc_buckets, "bb", "left_semi")
-            .select("cor_id")
-            .distinct()
-        )
-        near_source = index.join(candidates, "cor_id", "left_semi")
 
     inc_sh = inc.select("inc_id", F.explode("shingles").alias("sh"))
     # per-doc sizes ride the exploded rows (functionally dependent on
@@ -942,12 +865,12 @@ def index_dedup_flags(
         "cor_id", F.col("n_sh").alias("cor_n"), F.explode("shingles").alias("sh")
     )
     inter = (
-        cor_sh.join(bc(inc_sh), "sh")
+        cor_sh.join(F.broadcast(inc_sh), "sh")
         .groupBy("inc_id", "cor_id", "cor_n")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     inc_sizes = inc.select("inc_id", "inc_n")
-    jac = inter.join(bc(inc_sizes), "inc_id").withColumn(
+    jac = inter.join(F.broadcast(inc_sizes), "inc_id").withColumn(
         "jaccard",
         F.col("n_inter") / (F.col("inc_n") + F.col("cor_n") - F.col("n_inter")),
     )
@@ -958,9 +881,9 @@ def index_dedup_flags(
     # size these derived frames and falls back to sort-merge
     out = (
         inc.select("inc_id")
-        .join(bc(exact.withColumn("exact", F.lit(1))),
+        .join(F.broadcast(exact.withColumn("exact", F.lit(1))),
               F.col("inc_id") == F.col("exact_id"), "left")
-        .join(bc(best), "inc_id", "left")
+        .join(F.broadcast(best), "inc_id", "left")
     )
     exact_dup = F.coalesce(F.col("exact"), F.lit(0))
     near_dup = (F.coalesce(F.col("best_jaccard"), F.lit(0.0)) >= threshold).cast(

@@ -41,10 +41,9 @@ trigger runs as one pass over it:
 Steps a and c are the only reads; with the two writes a steady-state
 trigger runs four Spark actions.  What the gate decided — in-batch exact
 and near drops, index exact and near rejections, admissions — is kept on
-the sink as ``last_decisions``.  ``broadcast_batch=False`` (a corpus-sized
-backfill, not a streaming trigger) keeps the collapse and the index gate
-in Spark (``exact_dup_groups`` + ``ngram_jaccard_pairs`` +
-``indexed_dedup_gate``): the reference path, same decisions.
+the sink as ``last_decisions``.  The Spark form of the same decisions
+(``exact_dup_groups`` + ``ngram_jaccard_pairs`` + ``indexed_dedup_gate``)
+stays in ``llmops.dedup`` as the reference the tests compare against.
 
 Exactly-once commit protocol
 ----------------------------
@@ -106,10 +105,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_spark.io import read_rows, write_rows
-from data_pipeline_spark.llmops.dedup import (
+# ngram_jaccard_pairs is not called here: it stays importable from this
+# module because perfbench's traced run wraps the dedup layers by name here
+from data_pipeline_spark.llmops.dedup import (  # noqa: F401
     collapse_batch,
     doc_shingle_index,
-    exact_dup_groups,
     index_dedup_flags,
     indexed_dedup_gate,
     ngram_jaccard_pairs,
@@ -119,6 +119,9 @@ _WRITER_COL = "ingest_writer"
 _EPOCH_COL = "ingest_epoch"
 # the input row, carried whole through the staged frame
 _ROW = "_row"
+# writer ids that start with this are compaction writers (compact/retrain),
+# whose uncommitted partitions vacuum removes: stream writers may not use it
+_COMPACT_PREFIX = "c"
 
 
 class ChaosCrash(RuntimeError):
@@ -187,7 +190,20 @@ def _append(rows: DataFrame, base: str, writer: str, epoch: int) -> None:
 class DedupGatedIngest:
     """foreachBatch sink: gate each batch against the committed dedup
     index and append only novel documents (see module docstring for the
-    sidecar layout and commit protocol)."""
+    sidecar layout and commit protocol).
+
+    ``writer_id`` names this stream's (writer, epoch) partitions; by
+    default it derives from ``ledger_path``.  Ids starting with ``c`` are
+    reserved for compaction writers, whose uncommitted partitions
+    ``vacuum()`` deletes, so such an id raises ``ValueError``.
+
+    The near-dup gate always band-prunes: a trigger scans only the
+    index's (cor_id, bands_v2) columns and explodes the shingles of
+    band-colliding candidates, O(candidates) instead of O(index).  A
+    >= threshold pair escapes the bands with p <= 1-(1-t^3)^10 (8e-4 at
+    t=0.8).  The sidecar must carry the VERSIONED ``bands_v2`` column
+    (``doc_shingle_index`` emits it; a pre-r10 'bands' sidecar fails
+    loud)."""
 
     def __init__(
         self,
@@ -202,9 +218,12 @@ class DedupGatedIngest:
         writer_id: str | None = None,
         within_batch_neardup: bool = True,
         serialize_writers: bool = False,
-        broadcast_batch: bool = True,
-        band_prune: bool = True,
     ):
+        if writer_id is not None and writer_id.startswith(_COMPACT_PREFIX):
+            raise ValueError(
+                f"writer_id {writer_id!r}: ids starting with "
+                f"{_COMPACT_PREFIX!r} are reserved for compaction writers"
+            )
         self.spark = spark
         self.corpus_dir = corpus_dir
         self.index_dir = index_dir or corpus_dir + "_index"
@@ -226,16 +245,6 @@ class DedupGatedIngest:
         # (two writers each admitting a doc that duplicates the other's
         # in-flight batch); single-stream deployments skip the lock cost
         self.serialize_writers = serialize_writers
-        self.broadcast_batch = broadcast_batch
-        # band_prune: steady-state triggers scan only (cor_id, bands_v2)
-        # of the index and explode shingles for band-colliding candidates
-        # — O(candidates) per trigger instead of O(index).  A >= threshold
-        # pair escapes the bands with p <= 1-(1-t^3)^10 (8e-4 at t=0.8);
-        # admission decisions on the chaos/flood fixtures are identical.
-        # Requires sidecars with the VERSIONED bands_v2 column (r10's
-        # modular MinHash family — doc_shingle_index emits it; a pre-r10
-        # 'bands' sidecar fails loud); set False to gate without bands.
-        self.band_prune = band_prune
         self.crash_points: set[str] = set()  # test-injectable crash windows
         # the decisions of the last trigger this sink committed
         self.last_decisions: GateDecisions | None = None
@@ -340,26 +349,39 @@ class DedupGatedIngest:
         committed epoch — debris of a crashed attempt.  Foreign writers'
         partitions are never touched."""
         last = self._last_committed()
+        for _w, epoch, path in self._epoch_dirs(self.writer_id):
+            if epoch > last:
+                shutil.rmtree(path)
+
+    def _epoch_dirs(self, writer: str | None = None):
+        """(writer, epoch, path) of every ``writer=/epoch=`` partition
+        directory of the corpus and the index sidecar — only ``writer``'s
+        when given."""
         for base in (self.corpus_dir, self._docs_dir):
-            wdir = os.path.join(base, f"{_WRITER_COL}={self.writer_id}")
-            if not os.path.isdir(wdir):
+            if not os.path.isdir(base):
                 continue
-            for entry in os.listdir(wdir):
-                if not entry.startswith(f"{_EPOCH_COL}="):
+            wentries = (
+                os.listdir(base)
+                if writer is None
+                else [f"{_WRITER_COL}={writer}"]
+            )
+            for wentry in wentries:
+                wdir = os.path.join(base, wentry)
+                if not (wentry.startswith(f"{_WRITER_COL}=") and os.path.isdir(wdir)):
                     continue
-                try:
-                    epoch = int(entry.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if epoch > last:
-                    shutil.rmtree(os.path.join(wdir, entry))
+                for eentry in os.listdir(wdir):
+                    if not eentry.startswith(f"{_EPOCH_COL}="):
+                        continue
+                    try:
+                        epoch = int(eentry.split("=", 1)[1])
+                    except ValueError:
+                        continue
+                    yield wentry.split("=", 1)[1], epoch, os.path.join(wdir, eentry)
 
     def _index_cols(self) -> list[str]:
         """Columns a committed_index() read projects (the rest of the
         sidecar row never loads at gate time)."""
-        return ["cor_id", "h", "n_sh", "shingles"] + (
-            ["bands_v2"] if self.band_prune else []
-        )
+        return ["cor_id", "h", "n_sh", "shingles", "bands_v2"]
 
     def _read_docs(self) -> DataFrame:
         """Raw read of the index sidecar dir.  The one override point for
@@ -443,90 +465,14 @@ class DedupGatedIngest:
             schema=f"inc_id {staged.schema['cor_id'].dataType.simpleString()}, "
             "h STRING, inc_n INT, shingles ARRAY<BIGINT>",
         )
-        buckets = (
-            sorted({b for r in surv for b in (r[4] or [])})
-            if self.band_prune
-            else None
-        )
         return index_dedup_flags(
             index,
             inc,
             self.id_col,
             self.threshold,
-            band_prune=self.band_prune,
-            batch_buckets=buckets,
+            band_prune=True,
+            batch_buckets=sorted({b for r in surv for b in (r[4] or [])}),
             index_rows=self._live_rows,
-        )
-
-    def _reference_decisions(self, staged: DataFrame) -> DataFrame:
-        """Per-doc decision codes of the Spark reference path
-        (``broadcast_batch=False``): (cor_id, _reason) with 0 = admit,
-        1/2 = in-batch exact/near drop, 3/4 = index exact/near reject."""
-        batch = staged.select(f"{_ROW}.*")
-        keepers = exact_dup_groups(batch, self.id_col, self.text_col).select(
-            F.col("keeper_id").alias(self.id_col)
-        )
-        survivors = batch.join(keepers, self.id_col)
-        reasons = staged.select("cor_id").join(
-            keepers.select(
-                F.col(self.id_col).alias("cor_id"), F.lit(1).alias("_keeper")
-            ),
-            "cor_id",
-            "left",
-        )
-        loser = F.lit(False)
-        if self.within_batch_neardup:
-            losers = (
-                ngram_jaccard_pairs(
-                    survivors,
-                    self.id_col,
-                    self.text_col,
-                    self.n,
-                    self.threshold,
-                    cache=False,  # per-trigger caller: no CacheManager growth
-                )
-                .select(F.col("id_b").alias(self.id_col))
-                .distinct()
-            )
-            survivors = survivors.join(losers, self.id_col, "left_anti")
-            reasons = reasons.join(
-                losers.select(
-                    F.col(self.id_col).alias("cor_id"), F.lit(1).alias("_loser")
-                ),
-                "cor_id",
-                "left",
-            )
-            loser = F.col("_loser").isNotNull()
-        exact = near = F.lit(False)
-        index = self.committed_index()
-        if index is not None:
-            flags = indexed_dedup_gate(
-                index,
-                survivors,
-                self.id_col,
-                self.text_col,
-                n=self.n,
-                threshold=self.threshold,
-                broadcast_batch=False,
-                band_prune=self.band_prune,
-                index_rows=self._live_rows,
-            )
-            reasons = reasons.join(
-                flags.select(
-                    F.col(self.id_col).alias("cor_id"), "exact_dup", "near_dup"
-                ),
-                "cor_id",
-                "left",
-            )
-            exact, near = F.col("exact_dup") == 1, F.col("near_dup") == 1
-        return reasons.select(
-            "cor_id",
-            F.when(F.col("_keeper").isNull(), 1)
-            .when(loser, 2)
-            .when(exact, 3)
-            .when(near, 4)
-            .otherwise(0)
-            .alias("_reason"),
         )
 
     def gate_batch(self, batch: DataFrame) -> DataFrame:
@@ -537,13 +483,6 @@ class DedupGatedIngest:
         the returned frame's plan reads index partitions only — never
         corpus files (asserted by the chaos suite's plan check)."""
         staged = self._stage(batch)
-        if not self.broadcast_batch:
-            gated = staged.join(
-                self._reference_decisions(staged).filter(F.col("_reason") == 0),
-                "cor_id",
-                "left_semi",
-            )
-            return gated.select(f"{_ROW}.*")
         keys, rows, _, _ = self._collapse(staged)
         gated = staged.filter(F.col("cor_id").isin(keys))
         flags = self._index_flags(staged, keys, rows)
@@ -559,18 +498,7 @@ class DedupGatedIngest:
 
     def _decide(self, staged: DataFrame) -> tuple[DataFrame, tuple]:
         """(admitted slice of ``staged``, decision counts) for one trigger:
-        the staging action, the driver collapse and ONE index action —
-        or, on the reference path, one aggregation over checkpointed
-        Spark decisions."""
-        if not self.broadcast_batch:
-            reasons = self._reference_decisions(staged).localCheckpoint(
-                eager=False
-            )
-            got = dict(reasons.groupBy("_reason").count().collect())
-            admitted = staged.join(
-                reasons.filter(F.col("_reason") == 0), "cor_id", "left_semi"
-            )
-            return admitted, tuple(got.get(c, 0) for c in (1, 2, 3, 4, 0))
+        the staging action, the driver collapse and ONE index action."""
         keys, rows, n_exact, n_near = self._collapse(staged)
         flags = self._index_flags(staged, keys, rows)
         rejected: dict = {}
@@ -615,8 +543,7 @@ class DedupGatedIngest:
             self.text_col,
             n=self.n,
             threshold=self.threshold,
-            broadcast_batch=self.broadcast_batch,
-            band_prune=self.band_prune,
+            band_prune=True,
             index_rows=self._live_rows,
         )
 
@@ -732,7 +659,9 @@ class DedupGatedIngest:
     def corpus(self) -> DataFrame:
         """The ingested corpus without the commit-protocol partition
         columns (committed, non-revoked epochs only)."""
-        pairs = self._committed_pairs()
+        return self._corpus_of(self._committed_pairs())
+
+    def _corpus_of(self, pairs: list[tuple[str, int]] | None) -> DataFrame:
         df = self.spark.read.parquet(self.corpus_dir)
         if pairs is not None:
             df = df.filter(_pairs_filter(pairs))
@@ -750,39 +679,23 @@ class DedupGatedIngest:
         writer at-or-below its committed watermark, are candidates."""
         live = set(self._committed_pairs() or [])
         revoked = {(w, e) for w, e, n in self._ledger_rows() or [] if n < 0}
+        last = self._last_committed()
         removed = 0
-        for base in (self.corpus_dir, self._docs_dir):
-            if not os.path.isdir(base):
+        for writer, epoch, path in self._epoch_dirs():
+            if (writer, epoch) in live:
                 continue
-            for wentry in os.listdir(base):
-                if not wentry.startswith(f"{_WRITER_COL}="):
-                    continue
-                writer = wentry.split("=", 1)[1]
-                wdir = os.path.join(base, wentry)
-                for eentry in os.listdir(wdir):
-                    if not eentry.startswith(f"{_EPOCH_COL}="):
-                        continue
-                    try:
-                        epoch = int(eentry.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if (writer, epoch) in live:
-                        continue
-                    if (
-                        writer == self.writer_id
-                        and epoch > self._last_committed()
-                    ):
-                        continue  # this stream's own in-flight epoch
-                    # foreign UNCOMMITTED (never-revoked) debris belongs to
-                    # its writer's replay, not to vacuum: skip pairs with
-                    # no ledger trace at all unless they are compact
-                    # leftovers (compact writers never replay)
-                    if not writer.startswith("c") and (
-                        (writer, epoch) not in revoked
-                    ):
-                        continue
-                    shutil.rmtree(os.path.join(wdir, eentry))
-                    removed += 1
+            if writer == self.writer_id and epoch > last:
+                continue  # this stream's own in-flight epoch
+            # foreign UNCOMMITTED (never-revoked) debris belongs to its
+            # writer's replay, not to vacuum: skip pairs with no ledger
+            # trace at all unless they are compact leftovers (compact
+            # writers never replay; __init__ keeps stream ids off the prefix)
+            if not writer.startswith(_COMPACT_PREFIX) and (
+                (writer, epoch) not in revoked
+            ):
+                continue
+            shutil.rmtree(path)
+            removed += 1
         return removed
 
     def compact(self) -> int:
@@ -807,51 +720,67 @@ class DedupGatedIngest:
         invisible — no window double-counts or loses a document.  Epochs
         committed by live streams AFTER the snapshot are untouched.
         Returns the number of documents in the compacted partition."""
-        import uuid
-
         self.vacuum()
         pairs = self._committed_pairs()
         if not pairs:
             return 0
-        cw = "c" + uuid.uuid4().hex[:12]
-        n_docs = 0
-        for base in (self.corpus_dir, self._docs_dir):
-            if not _has_partitions(base):
-                continue  # nothing ever admitted through this dataset
-            rows = (
+        # a dataset nothing was ever admitted through has no partitions
+        corpus = (
+            self._corpus_of(pairs).persist()
+            if _has_partitions(self.corpus_dir)
+            else None
+        )
+        try:
+            n_docs = 0 if corpus is None else corpus.count()
+            index = (
                 # the docs dir MUST go through the back-compat read hook:
                 # a plain read of a schema-evolved sidecar can sample a
                 # pre-evolution footer and silently drop the new column
                 # from the rewrite (destroying e.g. model_v evidence)
-                (
-                    self._read_docs()
-                    if base == self._docs_dir
-                    else self.spark.read.parquet(base)
-                )
+                self._read_docs()
                 .filter(_pairs_filter(pairs))
                 .drop(_WRITER_COL, _EPOCH_COL)
+                if _has_partitions(self._docs_dir)
+                else None
             )
-            if base == self.corpus_dir:
-                rows = rows.persist()
-                n_docs = rows.count()
-            else:
-                # the one whole-index rewrite: cluster the sidecar so
-                # the gate's pushed list filters skip files/row groups
-                rows = self._index_layout(rows, bulk=True)
-            _append(rows, base, cw, 0)
-            if base == self.corpus_dir:
-                rows.unpersist()
-        self._chaos("compact_before_ledger")
+            self._rewrite("compact", pairs, corpus, index, n_docs)
+        finally:
+            if corpus is not None:
+                corpus.unpersist()
+        return n_docs
+
+    def _rewrite(
+        self,
+        stage: str,
+        pairs: list[tuple[str, int]],
+        corpus: DataFrame | None,
+        index: DataFrame | None,
+        n_docs: int,
+    ) -> None:
+        """Steps 3-5 of ``compact``, shared with the semantic ``retrain``:
+        append ``corpus`` and ``index`` rows to a fresh compact writer's
+        epoch 0 (the index in its bulk layout), commit that pair with
+        ``n_docs`` while revoking the superseded ``pairs`` in one ledger
+        append, then delete the superseded directories.  Crash windows:
+        ``{stage}_after_corpus``, ``_before_ledger``, ``_after_ledger``."""
+        import uuid
+
+        cw = _COMPACT_PREFIX + uuid.uuid4().hex[:12]
+        if corpus is not None:
+            _append(corpus, self.corpus_dir, cw, 0)
+        self._chaos(f"{stage}_after_corpus")
+        if index is not None:
+            # the one whole-index rewrite: cluster the sidecar so the
+            # gate's pushed filters skip files/row groups
+            _append(self._index_layout(index, bulk=True), self._docs_dir, cw, 0)
+        self._chaos(f"{stage}_before_ledger")
         self._append_ledger((cw, 0, n_docs), pairs)
-        self._chaos("compact_after_ledger")
+        self._chaos(f"{stage}_after_ledger")
         for base in (self.corpus_dir, self._docs_dir):
             for w, e in pairs:
-                path = os.path.join(
-                    base, f"{_WRITER_COL}={w}", f"{_EPOCH_COL}={e}"
-                )
+                path = os.path.join(base, f"{_WRITER_COL}={w}", f"{_EPOCH_COL}={e}")
                 if os.path.isdir(path):
                     shutil.rmtree(path)
-        return n_docs
 
     def foreach_batch(self):
         def fn(batch: DataFrame, epoch_id: int) -> None:
@@ -1410,7 +1339,6 @@ class SemanticGatedIngest(DedupGatedIngest):
 
     def _retrain(self) -> int:
         import json
-        import uuid
 
         from data_pipeline_spark.llmops import pq
 
@@ -1419,7 +1347,7 @@ class SemanticGatedIngest(DedupGatedIngest):
         if not pairs:
             return 0
         new_v = (self._active_version() or 1) + 1
-        corpus = self.corpus().persist()
+        corpus = self._corpus_of(pairs).persist()
         try:
             n_docs = corpus.count()
             n_lists_eff = self._lists_for(n_docs)
@@ -1452,23 +1380,10 @@ class SemanticGatedIngest(DedupGatedIngest):
                 )
             os.replace(tmp, path)
             self._chaos("retrain_after_model")
-            cw = "c" + uuid.uuid4().hex[:12]
-            _append(corpus, self.corpus_dir, cw, 0)
-            self._chaos("retrain_after_corpus")
             idx = pq.semantic_index_rows(
                 corpus, coarse, books, self.id_col, self.vec_col
             ).withColumn("model_v", F.lit(new_v))
-            _append(self._index_layout(idx, bulk=True), self._docs_dir, cw, 0)
-            self._chaos("retrain_before_ledger")
-            self._append_ledger((cw, 0, n_docs), pairs)
-            self._chaos("retrain_after_ledger")
-            for base in (self.corpus_dir, self._docs_dir):
-                for w, e in pairs:
-                    p = os.path.join(
-                        base, f"{_WRITER_COL}={w}", f"{_EPOCH_COL}={e}"
-                    )
-                    if os.path.isdir(p):
-                        shutil.rmtree(p)
+            self._rewrite("retrain", pairs, corpus, idx, n_docs)
         finally:
             corpus.unpersist()
         self._models[new_v] = (coarse, books, err_bound, n_docs)

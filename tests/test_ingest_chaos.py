@@ -269,15 +269,14 @@ def test_compact_crash_windows_never_lose_or_duplicate(spark, tmp_path, crash_at
 
 
 def test_string_doc_ids_and_backfill_gate_path(spark, tmp_path):
-    """The sink is generic over the id type (index schema follows it),
-    and the broadcast_batch=False backfill path produces identical
-    decisions via shuffle joins."""
+    """The sink is generic over the id type (index schema follows it): a
+    backfill batch of string-id docs takes the one gate path a streaming
+    trigger takes, exact copies of committed docs included."""
     sink = DedupGatedIngest(
         spark,
         corpus_dir=str(tmp_path / "corpus"),
         ledger_path=str(tmp_path / "ledger"),
         threshold=0.5,
-        broadcast_batch=False,
     )
     b1 = spark.createDataFrame(
         [
@@ -323,6 +322,65 @@ def test_gate_flags_and_ingest_stats_observability(spark, tmp_path):
     assert total_live == 5
     s = {r[0]: r for r in rows}[sink.writer_id]
     assert s.n_live_epochs == 0 and s.n_epochs == 2
+
+
+def test_gate_flags_on_empty_sink_keep_everything(spark, tmp_path):
+    sink = _sink(spark, tmp_path)
+    rows = sink.gate_flags(_df(spark, DOCS2 + [(14, None)])).collect()
+    assert sorted(r.doc_id for r in rows) == [10, 11, 12, 13, 14]
+    assert all(
+        (r.exact_dup, r.near_dup, r.best_jaccard, r.keep) == (0, 0, None, 1)
+        for r in rows
+    )
+
+
+def test_gate_flags_equal_the_band_pruned_library_gate(spark, tmp_path):
+    """On a committed sink, gate_flags is the library gate against the
+    committed index — no within-batch collapse (10 and 11 are both
+    judged against doc 1)."""
+    from data_pipeline_spark.llmops.dedup import indexed_dedup_gate
+
+    sink = _sink(spark, tmp_path)
+    sink.admit_batch(_df(spark, DOCS1), 0)
+    batch = _df(spark, DOCS2)
+    got = sorted(map(tuple, sink.gate_flags(batch).collect()))
+    want = sorted(
+        map(
+            tuple,
+            indexed_dedup_gate(
+                sink.committed_index(),
+                batch,
+                "doc_id",
+                "text",
+                threshold=0.5,
+                band_prune=True,
+            ).collect(),
+        )
+    )
+    assert got == want
+    flags = {r[0]: (r[1], r[2], r[4]) for r in got}
+    assert flags[10] == (1, 1, 0)  # exact copy of doc 1
+    assert flags[11] == (0, 1, 0)  # near copy of doc 1
+    assert flags[12] == (0, 0, 1) and flags[13] == (0, 0, 1)  # novel
+
+
+def test_compact_writer_prefix_is_reserved(spark, tmp_path):
+    """vacuum() removes uncommitted partitions of compaction writers
+    (ids starting with 'c'), so a stream writer may not take such an id:
+    its in-flight epoch would be swept by another sink's vacuum.  A
+    crashed writer with any other explicit id keeps its debris."""
+    for wid in ("crawler-1", "c0"):
+        with pytest.raises(ValueError, match="reserved"):
+            _sink(spark, tmp_path, writer_id=wid)
+
+    a = _sink(spark, tmp_path, "a", writer_id="w-crawler-1")
+    a.crash_points = {"after_index"}
+    with pytest.raises(ChaosCrash):
+        a.admit_batch(_df(spark, DOCS1), 0)
+    debris = _writer_epoch_dir(a, 0)
+    assert os.path.isdir(debris)
+    assert _sink(spark, tmp_path, "b").vacuum() == 0
+    assert os.path.isdir(debris)
 
 
 def test_null_text_normalizes_for_admission(spark, tmp_path):
@@ -548,13 +606,11 @@ def test_steady_state_trigger_action_budget(spark, tmp_path):
     assert [tuple(r)[1:] for r in stats] == [(3, 3, 6, 2)] and a == 0
 
 
-@pytest.mark.parametrize("broadcast_batch", [True, False])
-def test_per_trigger_decision_counts(spark, tmp_path, broadcast_batch):
-    """The sink keeps what its gate decided on the last trigger; the
-    driver path and the Spark reference path count alike."""
+def test_per_trigger_decision_counts(spark, tmp_path):
+    """The sink keeps what its gate decided on the last trigger."""
     from data_pipeline_spark.streaming.ingest import GateDecisions
 
-    sink = _sink(spark, tmp_path, broadcast_batch=broadcast_batch)
+    sink = _sink(spark, tmp_path)
     assert sink.last_decisions is None
     sink.admit_batch(_df(spark, DOCS1), 0)
     assert sink.last_decisions == GateDecisions(0, 0, 0, 0, 0, 3)

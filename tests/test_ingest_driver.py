@@ -131,22 +131,19 @@ def test_driver_collapse_df_cap_branch(spark):
 
 
 def test_sink_collapse_paths_agree(spark, tmp_path):
-    """Through the sink: the driver collapse (streaming path) and the
-    Spark reference (``broadcast_batch=False``) gate a first batch to the
-    same rows."""
+    """Through the sink: the driver collapse gates a first batch to the
+    rows the Spark reference (``exact_dup_groups`` +
+    ``ngram_jaccard_pairs``) keeps."""
     rows = _seeded_batch(11)
-    got = {}
-    for bb in (True, False):
-        sink = DedupGatedIngest(
-            spark,
-            corpus_dir=str(tmp_path / f"corpus_{bb}"),
-            ledger_path=str(tmp_path / f"ledger_{bb}"),
-            threshold=0.6,
-            broadcast_batch=bb,
-        )
-        batch = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-        got[bb] = sorted(r.doc_id for r in sink.gate_batch(batch).collect())
-    assert got[True] == got[False]
+    sink = DedupGatedIngest(
+        spark,
+        corpus_dir=str(tmp_path / "corpus"),
+        ledger_path=str(tmp_path / "ledger"),
+        threshold=0.6,
+    )
+    batch = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    got = sorted(r.doc_id for r in sink.gate_batch(batch).collect())
+    assert got == _spark_survivors(_normalized(spark, rows, "LONG"), 0.6, 1000)
 
 
 # -- driver-read ledger --------------------------------------------------------

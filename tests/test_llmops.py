@@ -3755,7 +3755,13 @@ def test_band_buckets_sql_twin_bit_identical(spark):
         )
 
     mins = [mh_min(j) for j in range(ld._INDEX_NUM_PERM)]
-    bands_old = F.when(F.size(col) > 0, ld._bucket_array(mins)).otherwise(
+    bucket_array = F.array(
+        *[
+            F.xxhash64(*mins[t * ld._INDEX_ROWS : (t + 1) * ld._INDEX_ROWS], F.lit(t))
+            for t in range(ld._INDEX_BANDS)
+        ]
+    )
+    bands_old = F.when(F.size(col) > 0, bucket_array).otherwise(
         F.array().cast("array<bigint>")
     )
     old = (

@@ -527,10 +527,11 @@ def test_band_candidates_are_a_strict_subset(spark):
 
     corpus, batch = _gate_fixture_docs(spark)
     idx = ld.doc_shingle_index(corpus, "doc_id", "text")
-    inc = ld.doc_shingle_index(batch, "doc_id", "text", with_bands=False).select(
-        F.col("cor_id").alias("inc_id"), "shingles"
+    buckets = (
+        ld.doc_shingle_index(batch, "doc_id", "text")
+        .select(F.explode("bands_v2").alias("bb"))
+        .distinct()
     )
-    buckets = ld._batch_band_buckets(inc)
     candidates = (
         idx.select("cor_id", F.explode("bands_v2").alias("bb"))
         .join(F.broadcast(buckets), "bb", "left_semi")
@@ -540,24 +541,6 @@ def test_band_candidates_are_a_strict_subset(spark):
     cand = {r.cor_id for r in candidates.collect()}
     assert 100 in cand                      # the true near-dup source
     assert len(cand) < idx.count() / 2, cand  # most of the corpus pruned
-
-
-def test_exploded_batch_buckets_equal_inrow_bands(spark):
-    """The gate's codegen explode+groupBy bucket formulation and the
-    index's in-row zip_with formulation must be bit-identical — they are
-    two evaluations of the same KM double-hash + band-hash arithmetic."""
-    from data_pipeline_spark.llmops import dedup as ld
-
-    corpus, batch = _gate_fixture_docs(spark)
-    both = corpus.union(batch)
-    idx = ld.doc_shingle_index(both, "doc_id", "text")
-    inrow = {
-        bb for r in idx.select(F.explode("bands_v2").alias("bb")).collect()
-        for bb in [r.bb]
-    }
-    inc = idx.select(F.col("cor_id").alias("inc_id"), "shingles")
-    exploded = {r.bb for r in ld._batch_band_buckets(inc).collect()}
-    assert inrow == exploded
 
 
 def test_band_pruned_gate_plan_prunes_index_columns(spark, tmp_path):

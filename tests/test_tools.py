@@ -1,5 +1,6 @@
 """Auxiliary tool tests: DDL compiler, binlog source, ts->offset, crypto,
-meta attributes, rotating sink."""
+meta attributes, rotating sink, and the names perfbench's traced run
+wraps."""
 
 from __future__ import annotations
 
@@ -459,3 +460,21 @@ def test_interval_bucket_join_semantics(spark):
         (1, "A"), (2, "A"), (2, "B"), (3, "B"), (4, "C"),
         (5, None), (5, None), (6, None),
     ]
+
+
+def test_perfbench_wrap_targets_resolve():
+    """Every (owner, attr) a benchmark workload wraps for its traced run
+    (``--trace 1``) still exists, so a cleanup that deletes or moves a
+    wrapped name fails here rather than in the benchmark.  No Spark."""
+    from perfbench.workloads import WORKLOADS
+
+    for cls in WORKLOADS.values():
+        wrapped = []
+
+        class Tracer:
+            def wrap(self, owner, attr, name):
+                assert callable(getattr(owner, attr, None)), (cls.name, owner, attr)
+                wrapped.append(name)
+
+        cls.__new__(cls).wrap(Tracer())
+        assert wrapped, cls.name
