@@ -33,19 +33,24 @@ def entry(spark: SparkSession) -> DataFrame:
 # second, and a representative spread of the long-green set fills the
 # remaining window; the rest follow.
 _PRIORITY = [
-    # -- r13 evidence targets ------------------------------------------------
-    # CODE CHANGED this optimization round (every restructured query and
-    # every consumer of the changed operators: the in-row bigram stream,
-    # posting-list sizes, the singleton-attach pin, the shared spread
-    # checkpoint, the tail-through-aggregation strip, the vectorized wire
-    # kernels, the star round-1 probe skip, the WARC verify fold)
-    "bigram_lm_perplexity",
-    "jaccard_neardup_pairs",
+    # -- one distributed connected-components algorithm ----------------------
+    # CODE CHANGED: every consumer of dedup.connected_components, whose
+    # above-bound graphs now take the large-star/small-star rounds
+    # (min-label propagation deleted)
     "neardup_cluster_assignment",
     "neardup_cluster_assignment_star",
     "leakage_safe_split",
     "embedding_neardup_clusters",
     "neardup_quality_survivors",
+    # -- r13 evidence targets ------------------------------------------------
+    # code changed in the r13 optimization round (every restructured query
+    # and every consumer of the changed operators: the in-row bigram
+    # stream, posting-list sizes, the singleton-attach pin, the shared
+    # spread checkpoint, the tail-through-aggregation strip, the
+    # vectorized wire kernels, the star round-1 probe skip, the WARC
+    # verify fold)
+    "bigram_lm_perplexity",
+    "jaccard_neardup_pairs",
     "lsh_exact_neardup",
     "incremental_dedup_gate",
     "duplicate_span_stats",

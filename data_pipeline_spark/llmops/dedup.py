@@ -1413,133 +1413,68 @@ def simhash_neardup_pairs(
     ).select("id_a", "id_b", "hamming")
 
 
+# Edge count at or below which ``connected_components`` labels on the
+# driver: the collected id pairs stay a few MB, and one collect beats the
+# fixed overhead of several distributed rounds.
+UNION_FIND_MAX_EDGES = 100_000
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
     id_col: str,
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    max_iterations: int = 25,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
-    """Connected components by min-label propagation to fixpoint.
+    """Connected components of the (src_col, dst_col) edge graph.
 
     Returns (id_col, component) where component = the smallest node id
     reachable — the canonical representative of each near-dup cluster.
-    Nodes with no edges are singleton components of themselves.
+    Nodes with no edges are singleton components of themselves.  Every
+    edge endpoint must be a row of ``nodes``: the output is exactly one
+    row per node, and an endpoint outside ``nodes`` is undefined input
+    (the driver branch drops it, the distributed branch labels it).
 
     Scale shape: the edge list is the OUTPUT of banded/inverted-index
     candidate generation, typically orders of magnitude smaller than the
-    corpus.  At or below ``driver_threshold`` edges the exact labels come
-    from a driver-side union-find (O(E a(E)) after one collect of id
-    pairs — cheaper than 3-5 distributed rounds of fixed overhead; the
-    threshold bounds driver memory to a few MB of ids).  Above it,
-    distributed min-label propagation runs: near-dup graphs are unions of
-    small dense clusters (tiny diameter), so it converges in a handful of
-    rounds; each round is one edge⋈label join + a min aggregation, both
-    hash-partitioned on the node id so the partitioning is reused, with
-    ``localCheckpoint`` truncating the iterative lineage (a growing plan
-    tree is the classic iterative-Spark failure mode).  For adversarial
-    HIGH-DIAMETER graphs use ``connected_components_star`` (O(log n)
-    rounds on any topology).
+    corpus.  At or below ``UNION_FIND_MAX_EDGES`` edges the exact labels
+    come from a driver-side union-find (O(E a(E)) after one collect of id
+    pairs).  Above it, ``connected_components_star`` runs: O(log n)
+    distributed rounds on any topology, so a high-diameter chain costs
+    no more rounds than a graph of small dense clusters.
     """
-    # Materialize the DIRECTED edge list once — half the rows/blocks of
-    # the pre-r12 both-directions form; the mirror direction is derived
-    # later, in-row for the distributed rounds, and union(a,b) ==
-    # union(b,a) makes it redundant for the driver union-find.  The size
-    # probe is a count over the checkpointed blocks (a bounded
-    # limit+collect was tried instead and measured WORSE: CollectLimit's
-    # incremental scale-up launched 4 jobs to gather 100k rows from 32
-    # small blocks where count + collect are exactly 2).
+    # Materialize the DIRECTED edge list once; union(a,b) == union(b,a)
+    # makes the mirror direction redundant for the driver union-find, and
+    # the star rounds derive it in-row.  The size probe is a count over
+    # the checkpointed blocks (a bounded limit+collect was tried instead
+    # and measured WORSE: CollectLimit's incremental scale-up launched 4
+    # jobs to gather 100k rows from 32 small blocks where count + collect
+    # are exactly 2).
     canon = edges.select(
         F.col(src_col).alias("id"), F.col(dst_col).alias("nbr")
     ).localCheckpoint(eager=True)
-    if canon.count() <= driver_threshold:
+    if canon.count() <= UNION_FIND_MAX_EDGES:
         # no distinct on this path (one exchange + AQE round saved):
         # union-find is duplicate-tolerant, and for unique canonical
         # edge lists the row count is |E| either way
         return _driver_union_find(
             [(r.id, r.nbr) for r in canon.collect()], canon, nodes, id_col
         )
-    # Both edge directions via ONE in-row explode, not union(fwd, rev):
-    # Spark has no common-subexpression elimination, so the union form
-    # plans the ENTIRE upstream subtree twice (here: one block read of
-    # the checkpoint per direction — cheap, but the explode form also
-    # keeps the r12-profiled single-branch shape for un-checkpointed
-    # callers).  The distributed rounds join und every iteration — dedup
-    # once so a caller's duplicate edges don't inflate every round.
-    und = (
-        canon.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("id"), F.col("nbr")),
-                    F.struct(
-                        F.col("nbr").alias("id"), F.col("id").alias("nbr")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.id", "e.nbr")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    # Only nodes that appear in an edge can ever change label: propagate
-    # over that set alone (|near-dup docs|, tiny vs |corpus|) and re-attach
-    # the untouched singletons once at the end.
-    # `node`/`component` get fresh attribute ids via alias so the per-round
-    # edge⋈label join is never an ambiguous self-join against `und`
-    labels = (
-        und.select("id")
-        .distinct()
-        .select(F.col("id").alias("node"), F.col("id").alias("component"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iterations):
-        nbr_min = (
-            und.join(labels, und.nbr == labels.node)
-            .groupBy(und.id.alias("node"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        proposed = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                "component",
-                F.least("component", "nbr_component").alias("new_component"),
-            )
-        ).localCheckpoint(eager=True)
-        changed = proposed.filter(
-            F.col("new_component") < F.col("component")
-        ).count()
-        labels = proposed.select("node", F.col("new_component").alias("component"))
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "rounds (graph diameter exceeds the budget) — raise "
-            "max_iterations or use connected_components_star (O(log n) "
-            "rounds on any topology); returning partial labels would "
-            "silently mis-cluster"
-        )
-    return _attach_singletons(labels, nodes, id_col)
+    return connected_components_star(canon, nodes, id_col, "id", "nbr")
 
 
 def _attach_singletons(
     labels: DataFrame, nodes: DataFrame, id_col: str
 ) -> DataFrame:
     """Nodes untouched by any edge become singleton components of
-    themselves — shared tail of every components formulation so singleton
-    semantics can never diverge between paths."""
+    themselves — the star rounds' tail (the driver union-find attaches its
+    own, bounded labels with a broadcast join)."""
     # shuffle_hash pin (r13): labels grow with the GRAPH, and the
     # checkpoint-inherited Catalyst estimate for them chains through
     # aggregate-over-explode rounds (the garbage-small class of
     # ROUND10_NOTES §15) — without the pin the static planner flipped
     # this anti-join to a labels BROADCAST when the upstream pipeline's
-    # estimate moved.  Both consumers of this helper are the distributed
-    # paths (the bounded driver-union-find path has its own broadcast
-    # attach); the co-keyed anti-join is their any-scale shape.
+    # estimate moved.  The co-keyed anti-join is the any-scale shape.
     singletons = (
         nodes.select(F.col(id_col).alias("node"))
         .join(labels.select("node").hint("shuffle_hash"), "node", "left_anti")
@@ -1554,8 +1489,8 @@ def _driver_union_find(
     """Exact small-graph path: union-find with path compression over the
     already-collected (id, nbr) pairs (direction-insensitive: union(a,b)
     == union(b,a), so the caller passes each edge ONCE), labels = min
-    node id per component — identical output to the distributed
-    propagation.  ``edge_frame`` supplies the session and the id dtype."""
+    node id per component — identical output to the star rounds.
+    ``edge_frame`` supplies the session and the id dtype."""
     parent: dict = {}
 
     def find(x):
@@ -1590,12 +1525,12 @@ def _driver_union_find(
         columns=["node", "component"],
     )
     labels = spark.createDataFrame(pdf, schema=schema)
-    # Labels here are bounded by driver_threshold BY CONSTRUCTION (this
-    # path only runs below it), so the singleton attach can be one
+    # Labels here are bounded by UNION_FIND_MAX_EDGES BY CONSTRUCTION
+    # (this path only runs below it), so the singleton attach can be one
     # broadcast LEFT join against the node set — no anti-join + union
     # re-scan of the label relation, and the broadcast build reads it
-    # exactly once.  The distributed path keeps the co-keyed anti-join
-    # form (its label set grows with the graph).
+    # exactly once.  The star rounds keep the co-keyed anti-join form
+    # (their label set grows with the graph).
     return (
         nodes.select(F.col(id_col))
         .join(
@@ -1620,11 +1555,11 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the documented escape hatch for HIGH-DIAMETER graphs, same signature
-    and output as ``connected_components``.
+    the distributed branch of ``connected_components`` (graphs above
+    ``UNION_FIND_MAX_EDGES``), same signature and output.
 
-    Min-label propagation needs O(diameter) rounds (a 1M-node path graph
-    is 1M rounds); star contraction converges in O(log n) rounds on any
+    Label propagation needs O(diameter) rounds (a 1M-node path graph is
+    1M rounds); star contraction converges in O(log n) rounds on any
     graph.  Per round:
 
     - large-star: every node links its strictly-larger neighbors to the
@@ -1633,10 +1568,10 @@ def connected_components_star(
       smaller neighbors AND itself to the minimum of those.
 
     Both preserve connectivity; the fixpoint is a star per component
-    rooted at the component's minimum id.  Near-dup graphs (tiny dense
-    clusters) never need this — ``connected_components`` does fewer
-    passes there — but adversarial chain topologies (e.g. overlapping
-    shingle chains across a scraped mirror farm) do.
+    rooted at the component's minimum id.  Called directly it skips the
+    driver bound, which is how ``neardup_components(star=True)`` reaches
+    it; adversarial chain topologies (e.g. overlapping shingle chains
+    across a scraped mirror farm) converge here in a handful of rounds.
     """
     # no distinct on the canonicalized input (one exchange + AQE round
     # saved): round 1's collect_set dedups duplicate edges in-row, the
@@ -1660,8 +1595,9 @@ def connected_components_star(
         # previous round) and link every strictly-larger neighbor to
         # m = min(N(u) u {u}) with an in-row explode — the r7 form spent
         # a groupBy + a join + a distinct here (3 shuffles)
-        # both directions in-row (same no-CSE argument as the und build in
-        # connected_components: one branch over cur, not two)
+        # both directions in-row, not union(fwd, rev): Spark has no
+        # common-subexpression elimination, so the union form would plan
+        # cur twice — one branch over cur, not two
         adj = cur.select(
             F.explode(
                 F.array(
@@ -1899,6 +1835,10 @@ def neardup_components(
     only in the uncontracted form; the contracted form keeps them,
     matching the uncapped oracle).  Pinned by the shared recursive-CTE
     oracle and tests/test_llmops.py."""
+    if not (isinstance(contract, bool) or contract == "auto"):
+        raise ValueError(
+            f"contract must be 'auto', True or False, got {contract!r}"
+        )
     if contract == "auto":
         contract = duplicate_rate(docs, text_col) >= CONTRACT_MIN_DUP_RATE
     if contract:

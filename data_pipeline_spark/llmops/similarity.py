@@ -257,46 +257,14 @@ def neardup_pairs(
 def _plane_signs(plane_seed: int, dim: int) -> list[int]:
     """Deterministic +-1 hyperplane: component i of plane `s` is +1 iff
     md5('s:i') first hex nibble >= '8'.  Computed driver-side (hashlib md5
-    == SQL md5) and embedded as literals so the executor-side expression is
-    a flat integer array, not dim x md5 calls."""
+    == SQL md5) so the bucket UDF ships a flat integer plane matrix, not
+    dim x md5 calls."""
     import hashlib
 
     return [
         1 if hashlib.md5(f"{plane_seed}:{i}".encode()).hexdigest()[0] >= "8" else -1
         for i in range(dim)
     ]
-
-
-def _hyperplane_sign(vec: Column, plane_seed: int, dim: int) -> Column:
-    signs = F.array(*[F.lit(s).cast("bigint") for s in _plane_signs(plane_seed, dim)])
-    dot = F.aggregate(
-        F.zip_with(_qvec(vec), signs, lambda x, s: x * s),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    return (dot >= 0).cast("int")
-
-
-def lsh_bucket(vec: Column, num_planes: int, dim: int) -> Column:
-    """Random-hyperplane (SimHash-for-vectors) LSH bucket id: ``num_planes``
-    sign bits packed into an int.  P(same bucket) = (1 - theta/pi)^planes."""
-    return _bucket_from_q(_qvec(vec), num_planes, dim)
-
-
-def _bucket_from_q(qvec: Column, num_planes: int, dim: int) -> Column:
-    """Bucket id from a pre-quantized vector (quantize once, 8 dots)."""
-    bucket = F.lit(0)
-    for s in range(num_planes):
-        signs = F.array(
-            *[F.lit(v).cast("bigint") for v in _plane_signs(s, dim)]
-        )
-        dot = F.aggregate(
-            F.zip_with(qvec, signs, lambda x, sgn: x * sgn),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket * 2 + (dot >= 0).cast("int")
-    return bucket
 
 
 def _bucket_tables_udf(num_tables: int, planes_per_table: int, dim: int):

@@ -65,9 +65,10 @@ def broadcast_build_subtrees(df: DataFrame) -> list[list[str]]:
     """The operator lines inside each BroadcastExchange subtree of the plan
     tree — i.e. what each broadcast actually builds over.  Lets tests
     distinguish a driver-bounded broadcast (LocalTableScan of a relation
-    bounded by construction, e.g. union-find labels below driver_threshold)
-    from a corpus-sized one (subtree contains a parquet scan or a shuffle),
-    which is the r10 rehearsal's bug class."""
+    bounded by construction, e.g. the union-find labels of a graph at or
+    below dedup.UNION_FIND_MAX_EDGES) from a corpus-sized one (subtree
+    contains a parquet scan or a shuffle), which is the r10 rehearsal's
+    bug class."""
     tree = formatted_plan(df).split("\n\n")[0].splitlines()
 
     def marker_pos(line: str) -> int:

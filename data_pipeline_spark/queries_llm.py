@@ -2273,7 +2273,8 @@ def embedding_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Near-dup cluster assignment: the pairs->clusters->representative "
     "step a dedup pipeline needs after candidate generation.  Connected "
-    "components over the Jaccard>=0.8 pair graph by min-label propagation "
+    "components over the Jaccard>=0.8 pair graph: a driver union-find up "
+    "to a fixed edge bound, large-star/small-star rounds above it "
     "(singletons are their own component); the oracle computes the same "
     "fixpoint as a recursive CTE.  Representative = smallest doc_id in "
     "the cluster, so survivors are deterministic.",
@@ -2336,12 +2337,12 @@ def neardup_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(c.doc_id = c.component AS INT) AS is_representative
     FROM comp c
     """,
-    doc="Cluster assignment via the large-star/small-star contraction "
-    "(O(log n) rounds on ANY topology — the scale path for high-diameter "
-    "pair graphs, where min-label propagation needs O(diameter) rounds). "
-    "Same oracle as neardup_cluster_assignment: both algorithms compute "
-    "the identical component fixpoint, so the driver verifies the star "
-    "variant against the same recursive CTE.",
+    doc="Cluster assignment via the large-star/small-star contraction at "
+    "every graph size (O(log n) rounds on ANY topology), skipping the "
+    "driver union-find that neardup_cluster_assignment uses on small "
+    "pair graphs.  Same oracle as neardup_cluster_assignment: both paths "
+    "compute the identical component fixpoint, so the driver verifies "
+    "the star variant against the same recursive CTE.",
     tags=("llm", "dedup", "iterative"),
 )
 def neardup_cluster_assignment_star(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -645,10 +645,9 @@ def test_connected_components_chain_and_singletons(spark):
 
 def test_star_components_high_diameter_and_parity(spark):
     """Large-star/small-star CC: a 31-node path graph (diameter 30, where
-    min-label propagation needs O(diameter) rounds and would NOT converge
-    within its default budget) collapses to one component in O(log n)
-    rounds; on a near-dup-shaped clustered graph the result is identical
-    to the min-label implementation."""
+    label propagation would need O(diameter) rounds) collapses to one
+    component in O(log n) rounds; on a near-dup-shaped clustered graph the
+    result is identical to ``connected_components``' driver union-find."""
     # path graph 0-1-2-...-30
     path_edges = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a LONG, id_b LONG"
@@ -674,11 +673,11 @@ def test_star_components_high_diameter_and_parity(spark):
         r.doc_id: r.component
         for r in ld.connected_components_star(edges, nodes, "doc_id").collect()
     }
-    minlabel = {
+    uf = {
         r.doc_id: r.component
         for r in ld.connected_components(edges, nodes, "doc_id").collect()
     }
-    assert star == minlabel
+    assert star == uf
 
 
 def test_star_components_single_round_budget(spark):
@@ -1034,29 +1033,53 @@ def test_strip_duplicated_segments_removes_cross_doc_boilerplate(spark):
     assert got[4] == (md5(""), 0, 1)  # fully boilerplate -> empty text
 
 
-def test_connected_components_distributed_path_matches_union_find(spark):
-    """driver_threshold=0 forces the distributed min-label rounds; output
-    must equal the small-graph union-find path exactly."""
+def test_connected_components_distributed_path_matches_union_find(
+    spark, monkeypatch
+):
+    """The dispatcher's two branches return identical rows on in-contract
+    input (every endpoint a node) carrying duplicate, reversed and
+    self-loop edges: a bound of 0 sends the graph to the star rounds."""
     edges = spark.createDataFrame(
-        [(2, 1), (2, 3), (3, 4), (7, 8), (10, 11), (11, 12)],
+        [
+            (2, 1), (2, 3), (3, 4), (7, 8), (10, 11), (11, 12),
+            (2, 1), (1, 2), (8, 7), (12, 11),  # duplicate / reversed
+            (5, 5), (4, 4),  # self-loops
+        ],
         "id_a LONG, id_b LONG",
     )
     nodes = spark.createDataFrame(
         [(i,) for i in [1, 2, 3, 4, 5, 7, 8, 10, 11, 12]], "doc_id LONG"
     )
-    dist = {
-        r.doc_id: r.component
-        for r in ld.connected_components(
-            edges, nodes, "doc_id", driver_threshold=0
-        ).collect()
-    }
-    uf = {
+
+    def rows():
+        comp = ld.connected_components(edges, nodes, "doc_id")
+        return sorted((r.doc_id, r.component) for r in comp.collect())
+
+    uf = rows()
+    monkeypatch.setattr(ld, "UNION_FIND_MAX_EDGES", 0)
+    dist = rows()
+    assert dist == uf == [
+        (1, 1), (2, 1), (3, 1), (4, 1), (5, 5),
+        (7, 7), (8, 7), (10, 10), (11, 10), (12, 10),
+    ]
+
+
+def test_connected_components_distributed_path_high_diameter(
+    spark, monkeypatch
+):
+    """Above the driver bound a 40-node path graph (diameter 39) still
+    collapses to one component labelled 0, and the singleton keeps its
+    own label — the distributed branch has no diameter-bound budget."""
+    monkeypatch.setattr(ld, "UNION_FIND_MAX_EDGES", 0)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(39)], "id_a LONG, id_b LONG"
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(41)], "doc_id LONG")
+    got = {
         r.doc_id: r.component
         for r in ld.connected_components(edges, nodes, "doc_id").collect()
     }
-    assert dist == uf == {
-        1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 7: 7, 8: 7, 10: 10, 11: 10, 12: 10,
-    }
+    assert got == {**{i: 0 for i in range(40)}, 40: 40}
 
 
 def test_incremental_dedup_gate_flags(spark):
@@ -3503,6 +3526,17 @@ def test_contract_auto_duplicate_rate_probe(spark, monkeypatch):
                 ).collect()
             }
             assert got == auto_rows
+
+
+def test_neardup_components_rejects_unknown_contract(spark):
+    """Only "auto", True and False select a contraction mode; any other
+    value (a typo'd "off" is truthy) raises instead of contracting."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c d")], "doc_id LONG, text STRING"
+    )
+    for bad in ("off", "on", None, 1):
+        with pytest.raises(ValueError, match="contract must be"):
+            ld.neardup_components(docs, "doc_id", "text", contract=bad)
 
 
 def test_persisted_ivf_centroid_reload_parity(spark):

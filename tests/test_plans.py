@@ -271,7 +271,7 @@ def test_no_corpus_sized_broadcasts_in_heavy_family(spark):
     cap at 500k docs).  The fixed queries carry shuffle_hash pins, so any
     broadcast in their plans must build over a DRIVER-LOCAL relation
     (LocalTableScan — e.g. the union-find labels, bounded by
-    driver_threshold by construction; the r12 singleton attach broadcasts
+    UNION_FIND_MAX_EDGES by construction; the r12 singleton attach broadcasts
     them so the corpus node side is never shuffled), never over a subtree
     that reads or shuffles the corpus.  The bigram LM keeps exactly its
     two deliberate word-keyed model broadcasts (unigram + context totals —
