@@ -8,26 +8,24 @@ lock record carrying (owner, expiry).  A crashed holder's lock self-expires
 — the property the reference gets from ephemeral-node session loss — so a
 wedged batch can never fence out its replacement forever.
 
-Two storage backends implement the same protocol (`LeaseLock(...,
-backend=...)`, default from ``SPARK_GRAFT_LOCK_BACKEND``, else "flock"):
+`LeaseLock` uses NO flock, no byte-range locks and no overwriting rename.
+The lock is a monotone chain of epoch files in a directory; every state
+transition (acquire, renew, release, stale break) is the atomic creation
+of the NEXT epoch file, arbitrated purely by create-if-absent.  This is
+the HDFS / object-store shape: the only primitives used are atomic
+create-if-absent (HDFS ``create(overwrite=false)``, S3 ``If-None-Match:
+*`` conditional PUT, GCS ``ifGenerationMatch=0``, ABFS
+create-no-overwrite) plus directory listing, so the same protocol runs on
+a local disk, a POSIX cluster FS and an object store.  Locally the
+create-if-absent publish is emulated with ``os.link`` (atomic, fails if
+the destination exists — the POSIX rename-no-overwrite);
+`LeaseLock._publish_epoch` is the one seam a real object-store deployment
+swaps for its conditional PUT.  The epoch number doubles as a
+monotonically-increasing fencing token.
 
-- **flock** (`FlockLeaseLock`) — one lock file + an flock-ed guard sidecar
-  serializing the multi-step break/renew/release sequences.  Requires a
-  filesystem with POSIX flock semantics: a single host, or a cluster FS
-  (NFSv4, Lustre, GPFS) that provides them.
-- **epoch** (`EpochLeaseLock`) — NO flock, no byte-range locks, no
-  overwriting rename.  The lock is a monotone chain of epoch files in a
-  directory; every state transition (acquire, renew, release, stale
-  break) is the atomic creation of the NEXT epoch file, arbitrated purely
-  by create-if-absent.  This is the HDFS / object-store shape: the only
-  primitives used are atomic create-if-absent (HDFS ``create(overwrite=
-  false)``, S3 ``If-None-Match: *`` conditional PUT, GCS
-  ``ifGenerationMatch=0``, ABFS create-no-overwrite) plus directory
-  listing.  Locally the create-if-absent publish is emulated with
-  ``os.link`` (atomic, fails if the destination exists — the POSIX
-  rename-no-overwrite); `_publish_epoch` is the one seam a real
-  object-store deployment swaps for its conditional PUT.  The epoch
-  number doubles as a monotonically-increasing fencing token.
+`process_mutex` is a different tool: a blocking kernel flock for
+sidecar-cache builds under the local tempdir, released by the kernel the
+moment its holder dies.
 """
 
 from __future__ import annotations
@@ -44,201 +42,8 @@ class LockTimeout(TimeoutError):
     """Another live instance holds the lock."""
 
 
-def _default_backend() -> str:
-    return os.environ.get("SPARK_GRAFT_LOCK_BACKEND", "flock")
-
-
 class LeaseLock:
     """`with LeaseLock(name, namespace, root): ...` — one holder at a time.
-
-    - acquire: atomic create of the lock record; a record whose lease
-      expired (holder died without releasing) is broken and retried.
-    - renew(): extends the lease; long batches call it between stages.
-    - release: a holder whose lease expired and was taken over must never
-      clobber the new holder's lock (renew raises LockTimeout, release is
-      a no-op).
-
-    Instantiating ``LeaseLock`` directly dispatches on ``backend`` (or the
-    ``SPARK_GRAFT_LOCK_BACKEND`` env var): "flock" → `FlockLeaseLock`,
-    "epoch" → `EpochLeaseLock`.  Both subclasses honor the identical
-    protocol and test surface (`_read`, `acquired`, context manager).
-    """
-
-    def __new__(cls, *args, backend: str | None = None, **kwargs):
-        if cls is LeaseLock:
-            chosen = backend or _default_backend()
-            try:
-                cls = _BACKENDS[chosen]
-            except KeyError:
-                raise ValueError(
-                    f"unknown lock backend {chosen!r}; known: {sorted(_BACKENDS)}"
-                ) from None
-        return object.__new__(cls)
-
-    def __init__(
-        self,
-        name: str,
-        namespace: str,
-        root: str,
-        lease_seconds: float = 60,
-        timeout: float = 10,
-        owner: str | None = None,
-        backend: str | None = None,  # consumed by __new__ dispatch
-    ):
-        self.name = name
-        self.namespace = namespace
-        self.root = root
-        self.lease_seconds = lease_seconds
-        self.timeout = timeout
-        # unique per INSTANCE, not just per process: two locks in one
-        # process (e.g. two publisher threads with serialize_publishes)
-        # sharing a pid-only owner would pass each other's ownership
-        # checks after a stale break and release() the wrong live lock
-        self.owner = owner or f"pid-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        self.acquired = False
-        os.makedirs(root, exist_ok=True)
-
-    # -- protocol (implemented per backend) ----------------------------------
-
-    def acquire(self) -> None:
-        raise NotImplementedError
-
-    def renew(self) -> None:
-        raise NotImplementedError
-
-    def release(self) -> None:
-        raise NotImplementedError
-
-    def _read(self) -> dict | None:
-        """Current live lease record ({owner, expires_at}) or None."""
-        raise NotImplementedError
-
-    # -- context manager (ZKLock usage shape) -------------------------------
-
-    def __enter__(self) -> "LeaseLock":
-        self.acquire()
-        return self
-
-    def __exit__(self, exc_type, exc, tb) -> None:
-        self.release()
-
-
-class FlockLeaseLock(LeaseLock):
-    """Lock-file lease with an flock guard (POSIX-flock filesystems)."""
-
-    def __init__(self, *args, **kwargs):
-        super().__init__(*args, **kwargs)
-        self.path = os.path.join(self.root, f"{self.name}-{self.namespace}.lock")
-
-    @contextlib.contextmanager
-    def _guard(self):
-        """Serialize read-verify-mutate sequences on the lock file.
-
-        Plain O_EXCL create is atomic on its own, but breaking a stale
-        lease (read → observe expired → remove) and rewriting on renew/
-        release are multi-step: without mutual exclusion two contenders can
-        both observe the same stale lease, and the slower remove() deletes
-        the faster contender's FRESH lock — two live holders.  The guard is
-        an flock-ed sidecar held across every such sequence (the atomicity
-        ZK provides server-side).  It is advisory between LeaseLock
-        instances only, which is the contract: all contenders run this
-        protocol.
-        """
-        fd = os.open(self.path + ".guard", os.O_CREAT | os.O_RDWR)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            yield
-        finally:
-            os.close(fd)  # closing drops the flock
-
-    def _try_create(self) -> bool:
-        try:
-            fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            return False
-        with os.fdopen(fd, "w") as f:
-            json.dump(
-                {"owner": self.owner, "expires_at": time.time() + self.lease_seconds},
-                f,
-            )
-        return True
-
-    def _read(self) -> dict | None:
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None  # being created/deleted concurrently
-
-    def acquire(self) -> None:
-        deadline = time.time() + self.timeout
-        while True:
-            if self._try_create():
-                self.acquired = True
-                return
-            with self._guard():
-                cur = self._read()
-                if cur is not None and cur["expires_at"] < time.time():
-                    # stale lease: holder died without releasing — break it
-                    # (ephemeral-node-expiry analogue).  Remove + re-create
-                    # under the guard so no other contender can break the
-                    # lock we are about to create.
-                    try:
-                        os.remove(self.path)
-                    except FileNotFoundError:
-                        pass
-                    if self._try_create():
-                        self.acquired = True
-                        return
-                    continue
-            if time.time() >= deadline:
-                holder = cur["owner"] if cur else "unknown"
-                raise LockTimeout(
-                    f"lock {self.path} held by {holder!r}; another instance "
-                    "is already running against this source"
-                )
-            time.sleep(0.05)
-
-    def renew(self) -> None:
-        if not self.acquired:
-            raise RuntimeError("cannot renew a lock that is not held")
-        with self._guard():
-            cur = self._read()
-            if cur is None or cur.get("owner") != self.owner:
-                # lease expired and was taken over while we ran: we are no
-                # longer the holder and must NOT clobber the usurper's lock
-                self.acquired = False
-                holder = cur.get("owner") if cur else "unknown"
-                raise LockTimeout(
-                    f"lease on {self.path} was taken over by {holder!r}; "
-                    "this instance lost the lock"
-                )
-            tmp = f"{self.path}.{self.owner}.tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "owner": self.owner,
-                        "expires_at": time.time() + self.lease_seconds,
-                    },
-                    f,
-                )
-            os.replace(tmp, self.path)
-
-    def release(self) -> None:
-        if not self.acquired:
-            return
-        with self._guard():
-            cur = self._read()
-            if cur is not None and cur.get("owner") == self.owner:
-                try:
-                    os.remove(self.path)
-                except FileNotFoundError:
-                    pass
-        self.acquired = False
-
-
-class EpochLeaseLock(LeaseLock):
-    """Flock-free lease: a monotone epoch chain arbitrated by create-if-absent.
 
     State = the highest-numbered ``e-<n>.json`` file in the lock directory
     (a lease record, or a ``released`` tombstone).  Every transition
@@ -247,10 +52,13 @@ class EpochLeaseLock(LeaseLock):
     - acquire: if the top epoch is absent/released/expired, publish
       ``e-<n+1>`` with our lease.  Exactly one contender's create-if-absent
       wins — the 8-way stale-break race needs no guard because the create
-      IS the arbitration.
-    - renew: publish ``e-<n+1>`` re-asserting ownership.  Losing that
-      create means a contender observed our lease expired and usurped —
-      we raise LockTimeout rather than steal it back.
+      IS the arbitration.  A top record that exists but does not parse
+      (a publisher died mid-write on a store without atomic create) reads
+      as an expired lease, so the next acquirer publishes over it.
+    - renew(): publish ``e-<n+1>`` re-asserting ownership; long batches
+      call it between stages.  Losing that create means a contender
+      observed our lease expired and usurped — we raise LockTimeout
+      rather than steal it back.
     - release: publish a ``released`` tombstone at n+1 (only if still the
       owner — a usurped holder publishes nothing).
 
@@ -263,14 +71,30 @@ class EpochLeaseLock(LeaseLock):
 
     The epoch number is a fencing token: it increases monotonically across
     holders, so downstream writers can reject operations stamped with a
-    stale token — the ZooKeeper-recipe property flock cannot give.
+    stale token — the ZooKeeper-recipe property a bare lock file cannot
+    give.
     """
 
     _GC_KEEP = 8  # epochs kept behind top before best-effort deletion
 
-    def __init__(self, *args, **kwargs):
-        super().__init__(*args, **kwargs)
-        self.dir = os.path.join(self.root, f"{self.name}-{self.namespace}.lockd")
+    def __init__(
+        self,
+        name: str,
+        namespace: str,
+        root: str,
+        lease_seconds: float = 60,
+        timeout: float = 10,
+        owner: str | None = None,
+    ):
+        self.lease_seconds = lease_seconds
+        self.timeout = timeout
+        # unique per INSTANCE, not just per process: two locks in one
+        # process (e.g. two publisher threads with serialize_publishes)
+        # sharing a pid-only owner would pass each other's ownership
+        # checks after a stale break and release() the wrong live lock
+        self.owner = owner or f"pid-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+        self.acquired = False
+        self.dir = os.path.join(root, f"{name}-{namespace}.lockd")
         self.epoch = 0  # last epoch this instance published
         os.makedirs(self.dir, exist_ok=True)
 
@@ -316,11 +140,17 @@ class EpochLeaseLock(LeaseLock):
             os.unlink(tmp)
 
     def _read_epoch(self, n: int) -> dict | None:
+        """Epoch n's record; None if the file is gone (GC'd between list
+        and read — the caller re-lists).  A file that exists but does not
+        parse is a torn write whose publisher died: it holds nothing, so
+        it reads as a lease that has already expired."""
         try:
             with open(self._epoch_path(n)) as f:
                 return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None  # GC'd between list and read — caller re-lists
+        except FileNotFoundError:
+            return None
+        except (json.JSONDecodeError, UnicodeDecodeError):
+            return {"owner": None, "expires_at": 0.0}
 
     # -- protocol -------------------------------------------------------------
 
@@ -338,6 +168,7 @@ class EpochLeaseLock(LeaseLock):
             # ever be GC'd after a HIGHER epoch exists — re-list finds it
 
     def _read(self) -> dict | None:
+        """Current live lease record ({owner, expires_at}) or None."""
         _, rec = self._top()
         if rec is None or rec.get("released"):
             return None
@@ -426,78 +257,32 @@ class EpochLeaseLock(LeaseLock):
             self._publish_verified(n + 1, {"released": True, "owner": self.owner})
         self.acquired = False
 
+    # -- context manager (ZKLock usage shape) -------------------------------
 
-_BACKENDS: dict[str, type[LeaseLock]] = {
-    "flock": FlockLeaseLock,
-    "epoch": EpochLeaseLock,
-}
+    def __enter__(self) -> "LeaseLock":
+        self.acquire()
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        self.release()
 
 
 @contextlib.contextmanager
-def process_mutex(
-    base: str,
-    name: str = "build",
-    backend: str | None = None,
-    lease_seconds: float = 600.0,
-):
+def process_mutex(base: str):
     """Blocking cross-process critical section rooted at ``base``.
 
     Used by sidecar-cache builds (one process builds, others wait, all
-    re-check existence after acquiring).  Backend-dispatched like
-    LeaseLock: the flock path holds a kernel lock for exactly the build's
-    lifetime (crash → auto-release); the epoch path takes a lease and
-    RENEWS it from a daemon thread every lease/3 while the build runs —
-    a fixed unrenewed lease would silently stop excluding once a build
-    outlives it, letting a second builder race the first (the exact
-    overwrite race the mutex exists for), while expiry still breaks a
-    CRASHED builder within lease_seconds — the semantics a real
-    object-store lease service provides.  If a renewal ever fails (the
-    lease was usurped despite renewal — e.g. extreme clock skew), the
-    thread stops renewing and the build runs to completion: artifacts
-    publish via staged atomic renames and every waiter re-checks
-    ``done()`` after acquiring, so the worst case is duplicate work,
-    never a torn artifact.
+    re-check existence after acquiring).  Every caller roots ``base`` under
+    the local tempdir, so a kernel flock on ``base/.lock`` is always
+    available.  It is held for exactly the build's lifetime and has no
+    expiry to outlive: a long build keeps excluding however long it runs,
+    and a crashed builder's lock is dropped by the kernel at once, where a
+    lease would block every waiter until it expired.
     """
-    chosen = backend or _default_backend()
     os.makedirs(base, exist_ok=True)
-    if chosen == "flock":
-        fd = os.open(os.path.join(base, ".lock"), os.O_CREAT | os.O_RDWR)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            yield
-        finally:
-            os.close(fd)  # closing drops the flock
-        return
-    import threading
-
-    lock = LeaseLock(
-        "mutex",
-        name,
-        base,
-        lease_seconds=lease_seconds,
-        timeout=86400,  # waiters block ~like the flock branch does
-        backend=chosen,
-    )
-    lock.acquire()
-    stop = threading.Event()
-
-    def _renew_loop() -> None:
-        while not stop.wait(lease_seconds / 3):
-            try:
-                lock.renew()
-            except Exception:
-                return  # usurped: stop renewing (see docstring)
-
-    renewer = threading.Thread(
-        target=_renew_loop, name=f"mutex-renew-{name}", daemon=True
-    )
-    renewer.start()
+    fd = os.open(os.path.join(base, ".lock"), os.O_CREAT | os.O_RDWR)
     try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
         yield
     finally:
-        stop.set()
-        renewer.join(timeout=10)
-        try:
-            lock.release()
-        except Exception:
-            pass  # usurped while building: nothing left to release
+        os.close(fd)  # closing drops the flock

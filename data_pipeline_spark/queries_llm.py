@@ -37,12 +37,12 @@ def _sidecar_lock(base):
     after acquiring makes the losers no-op.  Artifacts are staged in tmp
     names and renamed into place under the lock, so an unlocked fast-path
     reader (the ``done()`` check before taking the lock) only ever sees
-    fully-published dirs.  Backend-dispatched (coordination.process_mutex):
-    flock on POSIX hosts, the create-if-absent epoch lease on stores
-    without flock semantics (SPARK_GRAFT_LOCK_BACKEND=epoch)."""
+    fully-published dirs.  ``base`` is always under the local tempdir, so
+    the mutex is a kernel flock (coordination.process_mutex): a crashed
+    builder releases it at once."""
     from data_pipeline_spark.coordination import process_mutex
 
-    return process_mutex(str(base), name="sidecar")
+    return process_mutex(str(base))
 
 
 def _publish_dir(stage, final) -> None:

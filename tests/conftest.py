@@ -28,16 +28,6 @@ def spark():
     s.stop()
 
 
-@pytest.fixture(params=["flock", "epoch"])
-def lock_backend(request, monkeypatch):
-    """Run a coordination-protocol test under BOTH storage backends: the
-    POSIX-flock one and the create-if-absent epoch one (the HDFS /
-    object-store shape with no flock anywhere).  Env-based so locks built
-    deep inside TopicStore / SemanticGatedIngest dispatch too."""
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_BACKEND", request.param)
-    return request.param
-
-
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -399,7 +399,7 @@ def test_null_text_normalizes_for_admission(spark, tmp_path):
     assert sorted(r.doc_id for r in sink.corpus().collect()) == [1, 3]
 
 
-def test_serialized_writers_share_one_corpus(spark, tmp_path, lock_backend):
+def test_serialized_writers_share_one_corpus(spark, tmp_path):
     """serialize_writers: two streams interleaving commits under the
     lease each see the other's committed docs — the cross-stream
     duplicate window closes."""

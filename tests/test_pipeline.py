@@ -573,7 +573,7 @@ def test_zombie_refresh_detection(spark):
     assert mgr.set_zombie_refreshes_to_fail(lease_seconds=60, now=now + 10**6) == []
 
 
-def test_lease_lock_single_instance(tmp_path, lock_backend):
+def test_lease_lock_single_instance(tmp_path):
     """T12: second instance times out while the lease is live; a crashed
     holder's expired lease is broken; release is owner-checked."""
     from data_pipeline_spark.coordination import LeaseLock, LockTimeout
@@ -599,7 +599,7 @@ def test_lease_lock_single_instance(tmp_path, lock_backend):
         assert lock2.acquired
 
 
-def test_lease_lock_usurped_holder_cannot_clobber(tmp_path, lock_backend):
+def test_lease_lock_usurped_holder_cannot_clobber(tmp_path):
     """A holder whose lease expired and was taken over must not delete or
     rewrite the new holder's lock (renew raises, release is a no-op)."""
     from data_pipeline_spark.coordination import LeaseLock, LockTimeout
@@ -624,7 +624,7 @@ def test_lease_lock_usurped_holder_cannot_clobber(tmp_path, lock_backend):
     assert new._read() is None
 
 
-def test_lease_lock_concurrent_stale_break_single_winner(tmp_path, lock_backend):
+def test_lease_lock_concurrent_stale_break_single_winner(tmp_path):
     """Many contenders racing to break the same stale lease: exactly one
     acquires; the loser must not delete the winner's fresh lock."""
     import threading
@@ -662,7 +662,7 @@ def test_lease_lock_concurrent_stale_break_single_winner(tmp_path, lock_backend)
 
 
 def test_epoch_lock_never_touches_flock(tmp_path, monkeypatch):
-    """The epoch backend's whole protocol — acquire, renew, stale break,
+    """The lease's whole protocol — acquire, renew, stale break,
     usurped-release, contention timeout — runs with fcntl.flock poisoned:
     the object-store deployment contract is NO flock anywhere."""
     import fcntl
@@ -670,20 +670,18 @@ def test_epoch_lock_never_touches_flock(tmp_path, monkeypatch):
     from data_pipeline_spark.coordination import LeaseLock, LockTimeout
 
     def boom(*a, **k):
-        raise AssertionError("epoch backend called fcntl.flock")
+        raise AssertionError("LeaseLock called fcntl.flock")
 
     monkeypatch.setattr(fcntl, "flock", boom)
     root = str(tmp_path / "locks")
-    with LeaseLock("refresh", "ns.db", root, timeout=1, backend="epoch") as lk:
+    with LeaseLock("refresh", "ns.db", root, timeout=1) as lk:
         lk.renew()
         with pytest.raises(LockTimeout):
-            LeaseLock("refresh", "ns.db", root, timeout=0, backend="epoch").acquire()
-    dead = LeaseLock(
-        "refresh", "ns.db", root, lease_seconds=-1, timeout=0, backend="epoch"
-    )
+            LeaseLock("refresh", "ns.db", root, timeout=0).acquire()
+    dead = LeaseLock("refresh", "ns.db", root, lease_seconds=-1, timeout=0)
     dead.acquire()
     dead.acquired = False  # crash — lease expires, next acquirer breaks it
-    with LeaseLock("refresh", "ns.db", root, timeout=0, backend="epoch"):
+    with LeaseLock("refresh", "ns.db", root, timeout=0):
         # the usurped holder cannot renew its way back in
         dead.acquired = True
         with pytest.raises(LockTimeout):
@@ -699,17 +697,15 @@ def test_epoch_lock_fencing_token_monotone(tmp_path):
     root = str(tmp_path / "locks")
     seen = []
     for _ in range(3):
-        with LeaseLock("refresh", "ns.db", root, backend="epoch") as lk:
+        with LeaseLock("refresh", "ns.db", root) as lk:
             seen.append(lk.epoch)
             lk.renew()
             seen.append(lk.epoch)
     # usurpation keeps the chain monotone (stale holder never reuses a slot)
-    stale = LeaseLock(
-        "refresh", "ns.db", root, lease_seconds=-1, timeout=0, backend="epoch"
-    )
+    stale = LeaseLock("refresh", "ns.db", root, lease_seconds=-1, timeout=0)
     stale.acquire()
     seen.append(stale.epoch)
-    usurper = LeaseLock("refresh", "ns.db", root, timeout=0, backend="epoch")
+    usurper = LeaseLock("refresh", "ns.db", root, timeout=0)
     usurper.acquire()
     seen.append(usurper.epoch)
     usurper.release()
@@ -721,25 +717,48 @@ def test_epoch_lock_gc_bounds_directory(tmp_path):
     unboundedly — publishers GC epochs more than _GC_KEEP behind top."""
     import os
 
-    from data_pipeline_spark.coordination import EpochLeaseLock, LeaseLock
+    from data_pipeline_spark.coordination import LeaseLock
 
     root = str(tmp_path / "locks")
-    with LeaseLock("refresh", "ns.db", root, backend="epoch") as lk:
+    with LeaseLock("refresh", "ns.db", root) as lk:
         for _ in range(50):
             lk.renew()
         files = [f for f in os.listdir(lk.dir) if f.startswith("e-")]
-        assert len(files) <= EpochLeaseLock._GC_KEEP + 1
+        assert len(files) <= LeaseLock._GC_KEEP + 1
     # state is still correct after heavy GC: released, re-acquirable
-    with LeaseLock("refresh", "ns.db", root, timeout=0, backend="epoch") as lk2:
+    with LeaseLock("refresh", "ns.db", root, timeout=0) as lk2:
         assert lk2.epoch > 50
+
+
+def test_epoch_lock_torn_top_epoch_reads_expired(tmp_path):
+    """A top epoch file that exists but does not parse (its publisher died
+    mid-write) holds nothing: the next acquirer publishes above it instead
+    of re-listing forever."""
+    import threading
+
+    from data_pipeline_spark.coordination import LeaseLock
+
+    root = str(tmp_path / "locks")
+    with LeaseLock("refresh", "ns.db", root) as lk:
+        pass
+    torn = lk.epoch + 1
+    open(lk._epoch_path(torn), "w").close()  # zero-length top epoch
+
+    contender = LeaseLock("refresh", "ns.db", root, timeout=0.5)
+    t = threading.Thread(target=contender.acquire, daemon=True)
+    t.start()
+    t.join(5)
+    assert not t.is_alive(), "acquire() never returned on a torn top epoch"
+    assert contender.acquired and contender.epoch > torn
+    contender.release()
+    assert LeaseLock("refresh", "ns.db", root)._read() is None
 
 
 def _epoch_race_proc(root: str, owner: str, q) -> None:
     from data_pipeline_spark.coordination import LeaseLock, LockTimeout
 
     lk = LeaseLock(
-        "refresh", "ns.db", root, lease_seconds=60, timeout=1.5,
-        owner=owner, backend="epoch",
+        "refresh", "ns.db", root, lease_seconds=60, timeout=1.5, owner=owner
     )
     try:
         lk.acquire()
@@ -758,8 +777,7 @@ def test_epoch_lock_stale_break_race_across_processes(tmp_path):
 
     root = str(tmp_path / "locks")
     dead = LeaseLock(
-        "refresh", "ns.db", root, lease_seconds=-1, timeout=0,
-        owner="dead", backend="epoch",
+        "refresh", "ns.db", root, lease_seconds=-1, timeout=0, owner="dead"
     )
     dead.acquire()  # expired immediately
 
@@ -777,7 +795,7 @@ def test_epoch_lock_stale_break_race_across_processes(tmp_path):
     while not q.empty():
         winners.append(q.get())
     assert len(winners) == 1
-    holder = LeaseLock("refresh", "ns.db", root, timeout=0, backend="epoch")._read()
+    holder = LeaseLock("refresh", "ns.db", root, timeout=0)._read()
     assert holder is not None and holder["owner"] == winners[0]
 
 
@@ -910,9 +928,7 @@ def test_encrypted_publish_consume_roundtrip(spark, registry, store):
         consumer.messages(rs.topic, crypto_keys={2: key}).collect()
 
 
-def test_concurrent_publishes_serialized_unique_offsets(
-    spark, registry, tmp_path, lock_backend
-):
+def test_concurrent_publishes_serialized_unique_offsets(spark, registry, tmp_path):
     """With serialize_publishes, racing producer threads never duplicate a
     (partition, offset) pair — the Kafka broker-side append serialization
     TopicStore otherwise lacks."""
@@ -1053,38 +1069,68 @@ def test_fused_consume_raises_named_error_on_encrypted_topic(spark, tmp_path):
         Consumer(store, reg).messages(rs.topic).collect()
 
 
-def test_process_mutex_renews_past_lease_expiry(tmp_path):
-    """A sidecar build that outlives the epoch lease must keep mutual
-    exclusion: the holder renews from a daemon thread, so a waiter never
-    breaks the 'expired' lease mid-build (the overwrite race the mutex
-    exists for).  Pinned with a sub-second lease and a build 3x longer —
-    without renewal the waiter would usurp at ~1 lease and interleave."""
+def test_process_mutex_excludes_for_the_whole_build(tmp_path):
+    """A waiter that arrives mid-build enters only after the holder
+    leaves, however long the build runs — the overwrite race the sidecar
+    mutex exists for."""
     import threading
     import time
 
     from data_pipeline_spark.coordination import process_mutex
 
     base = str(tmp_path / "cache")
-    lease_s = 0.4
+    hold_s = 1.2
     events = []
 
     def holder():
-        with process_mutex(base, backend="epoch", lease_seconds=lease_s):
+        with process_mutex(base):
             events.append(("h-in", time.monotonic()))
-            time.sleep(3 * lease_s)
+            time.sleep(hold_s)
             events.append(("h-out", time.monotonic()))
 
     def waiter():
-        time.sleep(lease_s / 2)  # arrive mid-hold, past nothing
-        with process_mutex(base, backend="epoch", lease_seconds=lease_s):
+        time.sleep(hold_s / 6)  # arrive mid-hold
+        with process_mutex(base):
             events.append(("w-in", time.monotonic()))
 
     t1 = threading.Thread(target=holder)
     t2 = threading.Thread(target=waiter)
     t1.start()
     t2.start()
-    t1.join()
-    t2.join()
+    t1.join(30)
+    t2.join(30)
+    assert not t1.is_alive() and not t2.is_alive()
     assert [e[0] for e in sorted(events, key=lambda e: e[1])] == [
         "h-in", "h-out", "w-in",
     ]
+
+
+def _mutex_crash_proc(base: str, marker: str) -> None:
+    from data_pipeline_spark.coordination import process_mutex
+
+    with process_mutex(base):
+        open(marker, "w").close()
+        os._exit(3)  # die mid-build: no finally, no release
+
+
+def test_process_mutex_released_when_holder_dies(tmp_path):
+    """A builder process that dies inside the mutex frees it at once: the
+    kernel drops a dead process's flock, so the next builder does not wait
+    out any lease."""
+    import multiprocessing as mp
+    import time
+
+    from data_pipeline_spark.coordination import process_mutex
+
+    base = str(tmp_path / "cache")
+    marker = str(tmp_path / "child-held")
+    p = mp.get_context("fork").Process(
+        target=_mutex_crash_proc, args=(base, marker)
+    )
+    p.start()
+    p.join(30)
+    assert p.exitcode == 3 and os.path.exists(marker)
+    t0 = time.monotonic()
+    with process_mutex(base):
+        waited = time.monotonic() - t0
+    assert waited < 2.0

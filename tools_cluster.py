@@ -5,9 +5,10 @@ Every number the repo produced through r10 came from a single-JVM
 serialization to separate executor JVMs, broadcast transport over netty,
 python-worker spawn under each executor, driver-vs-executor memory
 accounting, and multi-process contention on the file-backed coordination
-protocols (LeaseLock flock, topic publish leases, sidecar caches).  This
-harness stands up a REAL master + N worker processes from the installed
-pyspark distribution and lets every existing entry point (bench.py,
+protocols (LeaseLock epoch chains behind topic publishes and ingest
+commits, the sidecar-cache flock).  This harness stands up a REAL
+master + N worker processes from the installed pyspark distribution and
+lets every existing entry point (bench.py,
 tools_verify.py, tools_scale_rehearsal.py, pytest) run against it
 unchanged via ``SPARK_GRAFT_MASTER=spark://127.0.0.1:7077`` (honored by
 data_pipeline_spark.session.get_spark).
