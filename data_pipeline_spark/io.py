@@ -408,10 +408,6 @@ def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
     return load_table(spark, sf_dir, name).count()
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every corpus table as a temp view (for spark.sql paths)."""
     for name in TABLES:

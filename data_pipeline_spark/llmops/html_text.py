@@ -21,8 +21,6 @@ from __future__ import annotations
 
 from html.parser import HTMLParser
 
-from pyspark.sql import DataFrame
-
 _SKIP = {"script", "style", "noscript", "template", "head", "svg",
          "iframe"}
 _BLOCK = {
@@ -87,38 +85,6 @@ def extract_html(html: str) -> dict:
         "text": "\n".join(lines),
         "links": p.links,
     }
-
-
-HTML_EXTRACT_SCHEMA = (
-    "doc_id long, title string, text string, n_links long, n_chars long"
-)
-
-
-def html_extract(df: DataFrame, id_col: str, html_col: str) -> DataFrame:
-    """Map-side HTML extraction over (id, html) rows."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for did, doc in zip(pdf[id_col], pdf[html_col]):
-                out = extract_html(doc or "")
-                rows.append(
-                    (
-                        int(did), out["title"], out["text"],
-                        len(out["links"]), len(out["text"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "title", "text", "n_links",
-                               "n_chars"]
-            )
-
-    return df.select(id_col, html_col).mapInPandas(
-        run, schema=HTML_EXTRACT_SCHEMA
-    )
 
 
 def wrap_in_html(doc_id: int, text: str) -> str:

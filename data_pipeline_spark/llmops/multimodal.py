@@ -3264,39 +3264,6 @@ def decode_audio(content: bytes, fmt: str = "unknown") -> tuple[int, int, bytes]
     return codec[0](content)
 
 
-def synthesize_bmp_media(
-    df: DataFrame, id_col: str, text_col: str, width: int = 4, height: int = 4
-) -> DataFrame:
-    """Deterministic REAL media fixture: a valid 24-bit BMP per row whose
-    pixels are the row's utf-8 text bytes (cycled to fill width*height).
-    Unlike ``attach_media``'s opaque 'raw' blobs, these rows exercise the
-    real decode -> pixel-statistics path end-to-end in distributed queries.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        need = 3 * width * height
-        for pdf in batches:
-            blobs = []
-            for t in pdf["text"]:
-                raw = (t or "").encode("utf-8") or b"\x00"
-                rgb = (raw * (need // len(raw) + 1))[:need]
-                blobs.append(_encode_bmp(width, height, rgb))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].reset_index(drop=True),
-                    "content": blobs,
-                    "media_type": "image",
-                    "format": "bmp",
-                    "n_bytes": [len(b) for b in blobs],
-                }
-            )
-
-    prepared = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(text_col).alias("text")
-    )
-    return prepared.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
 def synthesize_multiformat_media(
     df: DataFrame, id_col: str, text_col: str, width: int = 4, height: int = 4
 ) -> DataFrame:

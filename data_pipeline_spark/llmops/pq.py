@@ -106,7 +106,8 @@ def _train_books(
     x: np.ndarray, m: int, n_centroids: int | None, iters: int
 ) -> np.ndarray:
     """Per-subspace k-means over a driver-side training matrix (raw
-    vectors for pq_train, IVF residuals for pq_train_residual)."""
+    vectors for pq_train, IVF residuals for ivfpq_topk and
+    semantic_model_train)."""
     n, d = x.shape
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -141,47 +142,6 @@ def _train_books(
         if len(b) < width:  # pad with the last centroid (never nearer)
             out[j, len(b) :] = b[-1]
     return out
-
-
-def pq_train_residual(
-    listed: DataFrame,
-    coarse: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 8,
-    n_centroids: int | None = 32,
-    sample: int = 4096,
-    iters: int = 10,
-) -> np.ndarray:
-    """Codebooks over IVF RESIDUALS (vector − assigned coarse centroid) —
-    the Jegou et al. §V / Faiss IndexIVFPQ layout.  After coarse routing
-    the residual cloud is centered near the assigned centroid, so the
-    same m×k code budget quantizes it more finely wherever the corpus
-    has cluster structure (on the uniform-sphere synthetic corpus the
-    residuals stay near unit length and the gain is small — the r10
-    recall table in ROUND10_NOTES.md separates the routing, code and
-    re-rank-depth contributions; on the near-dup-structured rehearsal
-    corpus the residual codes are what make the per-cluster ADC ranking
-    sharp).
-
-    ``listed`` must carry ``list_id`` (the SPARK-side assignment — the
-    sample's residuals are computed against the same list each vector is
-    encoded under later, so the lossless ``n_centroids=None`` certificate
-    covers every residual subvector actually produced by pq_encode).
-    """
-    rows = (
-        listed.select(
-            F.col(vec_col).alias("v"),
-            F.col("list_id"),
-            F.md5(F.col(id_col).cast("string")).alias("h"),
-        )
-        .orderBy("h")
-        .limit(sample)
-        .collect()
-    )
-    x = np.asarray([r.v for r in rows], np.float64)
-    lids = np.asarray([r.list_id for r in rows], np.int64)
-    return _train_books(x - coarse[lids], m, n_centroids, iters)
 
 
 def pq_encode(

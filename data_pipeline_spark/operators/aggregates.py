@@ -90,12 +90,6 @@ def scan_stats(df: DataFrame, pk: str) -> DataFrame:
     )
 
 
-def grouped_counts(df: DataFrame, keys: Sequence[str], alias: str = "n") -> DataFrame:
-    """Plain per-key counts (per-topic published stats, meteorite counters —
-    _producer_retry.py:85-118, tools/meteorite_wrappers.py:32-77)."""
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(alias))
-
-
 def rollup_counts(df: DataFrame, keys: Sequence[str], alias: str = "n") -> DataFrame:
     """ROLLUP counts — declared engine surface beyond the reference (SURVEY
     §2.4 note): hierarchical totals in one pass via partial aggregation."""

@@ -11,21 +11,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_spark.operators.joins import latest_per_key
-
-
-def exact_dedup_first(
-    df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | str]
-) -> DataFrame:
-    """Deterministic exact dedup: keep the first row per key under an explicit
-    order.  ``dropDuplicates`` keeps an *arbitrary* row, which is fine for
-    exactly-once replay dedup but untestable; an explicit order makes the
-    result reproducible at any parallelism (one shuffle on ``keys``)."""
-    order_cols = [F.col(c).asc() if isinstance(c, str) else c for c in order_by]
-    return latest_per_key(df, keys, order_cols)
 
 
 def compaction_view(df: DataFrame, keys: Sequence[str], offset_col: str) -> DataFrame:
@@ -38,8 +27,3 @@ def compaction_view(df: DataFrame, keys: Sequence[str], offset_col: str) -> Data
 def set_difference(a: DataFrame, b: DataFrame) -> DataFrame:
     """`a EXCEPT b` — new_topics = refreshed − current (consumer.py:274-293)."""
     return a.subtract(b)
-
-
-def set_union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Distinct union — offset-commit merge (base_consumer.py:932-947)."""
-    return a.union(b).distinct()

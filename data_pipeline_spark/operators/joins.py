@@ -96,12 +96,6 @@ def anti_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> Dat
     return left.join(right, on=on, how="left_anti")
 
 
-def semi_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """Rows of ``left`` that have a match in ``right`` (left_semi) — the
-    topic-filter patterns of base_consumer.py:906-914 expressed relationally."""
-    return left.join(right, on=on, how="left_semi")
-
-
 def salted_join(
     big: DataFrame,
     small: DataFrame,

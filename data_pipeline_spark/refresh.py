@@ -50,16 +50,6 @@ class RefreshJob:
     last_heartbeat: int | None = None  # worker liveness (T11)
 
 
-def plan_ranges(df: DataFrame, pk: str, batch_size: int) -> list[tuple[int, int]]:
-    """(lo, hi] pk ranges covering the table — the refresh runner's range
-    planning (:414-439) from one MIN/MAX scan, no per-batch queries."""
-    stats = scan_stats(df, pk).collect()[0]
-    if stats.row_count == 0:
-        return []
-    lo, hi = int(stats.min_pk) - 1, int(stats.max_pk)
-    return [(b, min(b + batch_size, hi)) for b in range(lo, hi, batch_size)]
-
-
 class FullRefreshRunner:
     """Executes one refresh: batched scan -> RefreshMessages -> topic."""
 

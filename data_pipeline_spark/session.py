@@ -21,6 +21,31 @@ worker lives, and a zip added later with ``addPyFile`` is a new path with
 its own importer.  ``spark://`` masters keep the stock daemon: there the
 package zip reaches ``sys.path`` only per task, after the daemon has
 started, so the daemon module could not be imported from it.
+
+Sessions also turn off PySpark's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled=false``).  With it on,
+every ``pyspark.sql.functions`` call and every Column method walks the
+Python stack and adds five py4j round trips (active session, origin class
+lookup, a conf read, origin set and clear) to record where it was called:
+``F.col("a")`` costs 13 py4j calls instead of 3, and
+``(F.col("a") + F.lit(1)).alias("b")`` 38 instead of 8.  Plans are built
+on the driver for every query, CDC batch and ingest trigger, so this was
+about half of the engine's py4j traffic: the star connected-components
+query makes about 1600 py4j calls instead of about 3200.  Results, plans
+and Spark jobs do not change.  Errors keep their error class and message,
+but a runtime error's ``== DataFrame ==`` block no longer names the Python
+line that built the failing expression (it names a JVM frame instead);
+``get_spark``'s docstring says how to get the line back.
+
+Sessions also keep up to 1000 generated classes in Spark's whole-stage
+codegen cache (``spark.sql.codegen.cache.maxEntries``, Spark's default
+100).  The cache is an LRU shared by every query in the JVM, and a
+working set larger than it gets no hits when it cycles: one round of the
+``llm_dedup_ops`` benchmark (an ingest trigger and five LLM catalog
+queries) generates about 224 distinct classes, so with 100 entries every
+round compiled all of them again, at about 12 ms each on a 4-core host
+(about 2.6 s of a 10-12 s round).  With 1000 entries a warm round
+compiles 8-34.
 """
 
 from __future__ import annotations
@@ -86,6 +111,15 @@ def get_spark(
       multimodal decode).
     - UTC session tz so epoch<->timestamp round-trips match the reference's
       epoch-seconds event time.
+    - DataFrame call-site capture off (see the module docstring).  To get
+      the Python call site back into error messages, pass
+      ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+      "true"}``.  It has to be set here: PySpark reads the flag once per
+      process, at the first Column call made with an active session, and
+      caches it, so setting it on a running session does nothing.
+    - A codegen cache of 1000 generated classes (see the module
+      docstring), so repeated queries and micro-batches reuse their
+      compiled code.  It is a static conf: only the builder can set it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # SPARK_GRAFT_MASTER lets every entry point (bench, tests, rehearsal,
@@ -135,6 +169,8 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/dps_warehouse"),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if resolved_master.split("[")[0] == "local":
         # local workers inherit the driver's PYTHONPATH, which carries the

@@ -189,18 +189,3 @@ def monitoring_sink_builder(
         )
 
     return build_sink
-
-
-def heartbeat_frame(spark, topics: list[str], period_seconds: int = 600) -> DataFrame:
-    """Synthetic heartbeat messages for idle-topic liveness (T3,
-    envelope_v1.avsc heartbeat enum): unioned into a monitored stream so
-    auditors can distinguish idle from stalled.  In production this is a
-    `rate` source; batch form for tests/backfill."""
-    return spark.createDataFrame(
-        [(t,) for t in topics], "topic STRING"
-    ).select(
-        "topic",
-        F.lit("heartbeat").alias("message_type"),
-        F.unix_timestamp(F.current_timestamp()).alias("epoch"),
-        F.lit(period_seconds).alias("period_seconds"),
-    )

@@ -1,14 +1,17 @@
 """session_window sessions: batch/streaming parity and the pinned boundary
 divergence vs the cumulative-sum sessionization; and the Spark session's
-Python worker daemon."""
+Python worker daemon, call-site capture and codegen cache defaults."""
 
 from __future__ import annotations
 
 import uuid
 import zipfile
+from functools import reduce
 
 import pandas as pd
 import pytest
+from py4j.java_gateway import GatewayClient
+from pyspark.errors import utils as error_utils
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -146,3 +149,51 @@ def test_worker_daemon_imports_zip_added_later(spark, tmp_path):
         return importlib.import_module(mod).TOKEN
 
     assert _on_workers(spark, probe) == {token}
+
+
+def test_session_turns_off_call_site_capture(spark, monkeypatch):
+    """get_spark turns DataFrame call-site capture off, so building a
+    Column costs no extra py4j round trips (8 calls here, 38 with capture
+    on)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+    # pyspark caches the flag process-wide; re-read it from this session
+    monkeypatch.setattr(error_utils, "_enable_debugging_cache", None)
+    assert error_utils.is_debugging_enabled() is False
+
+    calls = 0
+    send = GatewayClient.send_command
+
+    def counted(client, *a, **kw):
+        nonlocal calls
+        calls += 1
+        return send(client, *a, **kw)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    (F.col("a") + F.lit(1)).alias("b")
+    monkeypatch.undo()
+    assert calls <= 10
+
+
+def test_session_codegen_cache_keeps_a_cycling_working_set(spark):
+    """get_spark sizes Spark's whole-stage codegen cache above its default
+    100 entries, so a set of plans larger than that, run again, compiles
+    nothing.  At 100 entries the LRU evicts each generated class before its
+    plan comes round again, and all 300 of the branches' classes are
+    compiled again."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()  # updated once per compile
+
+    def distinct_plans():
+        # one codegen stage per branch; the inlined literal makes each
+        # branch's generated class distinct
+        return reduce(
+            lambda a, b: a.union(b),
+            [spark.range(0, 1, 1, 1).selectExpr(f"id * {k} + {k} AS v") for k in range(150)],
+        )
+
+    assert len(distinct_plans().collect()) == 150
+    before = compiles.getCount()
+    assert len(distinct_plans().collect()) == 150
+    assert compiles.getCount() == before

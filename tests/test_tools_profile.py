@@ -31,6 +31,7 @@ def test_profile_reports_every_layer():
     assert proc.returncode == 0, proc.stderr[-3000:]
     out = json.loads(proc.stdout.splitlines()[-1])
     assert set(out["queries"]) == {"q1_pricing_summary", "pq_ann_topk"}
+    assert out["dataframe_debugging"] is False  # get_spark's default
     for name, rec in out["queries"].items():
         assert set(rec) == FIELDS, name
         assert rec["actions"] >= 1 and rec["stages"] > 0, name

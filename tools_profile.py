@@ -16,7 +16,9 @@ those of them run while building or optimizing (``construction_actions``:
 probes, checkpoints, convergence loops) and the raw job count; the stage
 totals of ``trace.STAGE_KEYS``; the driver gap (the part of the wall no
 job covers); the py4j calls; and the five slowest stages.  It prints a
-table sorted by wall; the last stdout line is one JSON object.
+table sorted by wall; the last stdout line is one JSON object, which also
+records ``dataframe_debugging``: whether PySpark's call-site capture was
+on, since it roughly doubles the py4j calls of every plan build.
 """
 
 from __future__ import annotations
@@ -26,6 +28,8 @@ import os
 import sys
 import tempfile
 from pathlib import Path
+
+from pyspark.errors.utils import is_debugging_enabled
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
@@ -71,7 +75,7 @@ def op_record(top, phases, m: dict, stages: dict[int, dict], stage_ids) -> dict:
     return rec
 
 
-def profile(names: list[str], reps: int) -> dict[str, dict]:
+def profile(names: list[str], reps: int) -> tuple[dict[str, dict], bool]:
     with tempfile.TemporaryDirectory(prefix="spark_graft_evlog_") as evlog:
         spark = get_spark(
             "profile",
@@ -83,6 +87,7 @@ def profile(names: list[str], reps: int) -> dict[str, dict]:
             },
         )
         spark.sparkContext.setLogLevel("ERROR")
+        debugging = is_debugging_enabled()  # read while the session is active
         tracer = trace.Tracer(spark.sparkContext)
         tracer.install_py4j_counter()
         op = 0
@@ -116,7 +121,7 @@ def profile(names: list[str], reps: int) -> dict[str, dict]:
         )
         if top.name not in out or rec["wall_s"] < out[top.name]["wall_s"]:
             out[top.name] = rec
-    return out
+    return out, debugging
 
 
 def main() -> None:
@@ -125,7 +130,7 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {', '.join(unknown)}")
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    out = profile(names, reps)
+    out, debugging = profile(names, reps)
 
     cols = {"wall_s": "wall", "build_s": "build", "optimize_s": "opt",
             "execute_s": "exec", "actions": "act", "construction_actions": "cons",
@@ -137,7 +142,8 @@ def main() -> None:
             f"{rec[c]:8.3f}" if c.endswith("_s") else f"{rec[c]:8.0f}" for c in cols
         ))
     print(json.dumps(
-        {"sf_dir": bench.SF_DIR, "reps": reps, "queries": out},
+        {"sf_dir": bench.SF_DIR, "reps": reps,
+         "dataframe_debugging": debugging, "queries": out},
         separators=(",", ":"),
     ), flush=True)
 
