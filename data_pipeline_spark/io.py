@@ -11,9 +11,11 @@ ledger, the ingest ledger) hold a few rows per publish, commit or trigger,
 and a Spark job to read or write them costs more than the batch they
 describe.  ``read_rows``/``write_rows`` read and write them from the DRIVER
 with pyarrow, as Structured Streaming keeps its offset and commit logs.
-Spark-written and driver-written files mix in one directory, and names
-starting with ``.`` or ``_`` (tmp files, ``_SUCCESS``, ``.crc``) are skipped
-by both engines.
+``write_table`` is the one file primitive under ``write_rows``; the
+dedup-gated ingest sink also writes each trigger's corpus and index files
+through it.  Spark-written and driver-written files mix in one directory,
+and names starting with ``.`` or ``_`` (tmp files, ``_SUCCESS``, ``.crc``)
+are skipped by both engines.
 """
 
 from __future__ import annotations
@@ -366,28 +368,39 @@ def read_rows(
     return [c.to_pylist() for c in table.columns]
 
 
-def write_rows(path: str, schema, rows: list[tuple]) -> str:
-    """Write ``rows`` into directory ``path`` as ONE parquet file, from the
-    driver; returns the file name.  tmp + atomic rename: a reader sees the
-    file whole or not at all, never torn, and a crash leaves at most a
-    dot-prefixed tmp file, which every reader skips."""
+def write_table(path: str, table) -> str:
+    """Write the pyarrow ``table`` into directory ``path`` as ONE parquet
+    file, from the driver; returns the file name.  tmp + atomic rename: a
+    reader sees the file whole or not at all, never torn, and a crash
+    leaves at most a dot-prefixed tmp file, which every reader skips.  The
+    table's schema metadata, if any, lands in the footer's key-value
+    metadata."""
     import uuid
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     os.makedirs(path, exist_ok=True)
-    table = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=schema
-    )
     name = f"part-{uuid.uuid4().hex}.parquet"
     tmp = os.path.join(path, f".{name}.tmp")
-    # no Arrow schema blob in the footer: every reader passes an explicit
-    # schema, and Spark-written files carry none either (a one-row file
-    # is ~30% smaller without it)
-    pq.write_table(table, tmp, store_schema=False)
+    # no Arrow schema blob in the footer (Spark reads the parquet schema,
+    # pyarrow readers pass an explicit one, and Spark-written files carry
+    # none either: a one-row file is ~30% smaller without it) unless the
+    # table carries schema metadata, which pyarrow writes only beside it
+    pq.write_table(table, tmp, store_schema=bool(table.schema.metadata))
     os.rename(tmp, os.path.join(path, name))
     return name
+
+
+def write_rows(path: str, schema, rows: list[tuple]) -> str:
+    """``write_table`` of ``rows`` (tuples in ``schema``'s field order)."""
+    import pyarrow as pa
+
+    return write_table(
+        path,
+        pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=schema
+        ),
+    )
 
 
 def max_per_key(pairs) -> dict:

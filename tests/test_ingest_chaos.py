@@ -460,6 +460,20 @@ def _writer_epoch_dir(sink, epoch):
     )
 
 
+def _spark_written_epoch(sink, batch, epoch):
+    """Commit ``batch`` (all novel) as ``epoch`` the way the sink wrote
+    every trigger before its per-trigger files moved to the driver: one
+    Spark append per dataset, a part file per batch partition (with
+    ``.crc`` siblings and ``_SUCCESS``), then the ledger row."""
+    from data_pipeline_spark.streaming import ingest
+
+    staged = sink._stage(batch)
+    ingest._append(staged.select("_row.*"), sink.corpus_dir, sink.writer_id, epoch)
+    ingest._append(staged.drop("_row"), sink._docs_dir, sink.writer_id, epoch)
+    sink._append_ledger((sink.writer_id, epoch, batch.count()))
+    sink._last_epoch = None
+
+
 def test_maintenance_compact_of_committed_epoch_composes_with_ingest(
     spark, tmp_path
 ):
@@ -469,7 +483,9 @@ def test_maintenance_compact_of_committed_epoch_composes_with_ingest(
     from data_pipeline_spark.operators.maintenance import compact_small_files
 
     sink = _sink(spark, tmp_path)
-    sink.admit_batch(_df(spark, DOCS1).repartition(3), 0)  # multi-file epoch
+    # a trigger writes one file per epoch, so the multi-file epoch 0 is
+    # one a Spark writer left
+    _spark_written_epoch(sink, _df(spark, DOCS1).repartition(3), 0)
     sink.admit_batch(_df(spark, DOCS2), 1)
     before = sorted(r.doc_id for r in sink.corpus().collect())
 
@@ -574,9 +590,9 @@ def _actions_in_group(spark, group: str, fn):
 
 
 def test_steady_state_trigger_action_budget(spark, tmp_path):
-    """A steady-state trigger stages its batch once, decides against the
-    index in one action and writes twice; the commit state is read by
-    the driver (no Spark job at all)."""
+    """A steady-state trigger stages its batch once and decides against
+    the index in one action; its corpus and index files and the commit
+    state are written and read by the driver (no Spark job at all)."""
     import uuid
 
     sink = _sink(spark, tmp_path)
@@ -594,7 +610,7 @@ def test_steady_state_trigger_action_budget(spark, tmp_path):
         spark, f"admit-{tag}", lambda: sink.admit_batch(probe, 2)
     )
     assert n == 1
-    assert actions <= 5, actions
+    assert actions <= 2, actions
 
     fresh = _sink(spark, tmp_path)
     assert _actions_in_group(spark, f"last-{tag}", fresh._last_committed) == (2, 0)
@@ -633,3 +649,238 @@ def test_per_trigger_decision_counts(spark, tmp_path):
     # a replayed epoch decides nothing and keeps the record
     assert sink.admit_batch(_df(spark, DOCS2), 1) == 0
     assert sink.last_decisions.epoch == 2
+
+
+# -- driver-written trigger files ---------------------------------------------
+
+
+def _files(path):
+    return sorted(os.listdir(path)) if os.path.isdir(path) else []
+
+
+@pytest.mark.parametrize("target", ["corpus", "index"])
+def test_trigger_file_rename_crash_leaves_only_skipped_tmp(
+    spark, tmp_path, monkeypatch, target
+):
+    """A crash inside a trigger's corpus or index file write, before its
+    rename, leaves one dot-tmp file in the uncommitted epoch directory:
+    every reader skips it, and the replay commits the epoch once."""
+    sink = _sink(spark, tmp_path)
+    assert sink.admit_batch(_df(spark, DOCS1), 0) == 3
+    base = sink.corpus_dir if target == "corpus" else sink._docs_dir
+    leaf = os.path.join(base, f"ingest_writer={sink.writer_id}", "ingest_epoch=1")
+    real = os.rename
+
+    def crash(src, dst):
+        if os.path.dirname(dst) == leaf:
+            raise OSError("crash before the rename")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash)
+    with pytest.raises(OSError):
+        sink.admit_batch(_df(spark, DOCS2), 1)
+    monkeypatch.undo()
+    debris = _files(leaf)
+    assert len(debris) == 1 and debris[0].startswith(".") and debris[0].endswith(".tmp")
+
+    assert sorted(r.doc_id for r in sink.corpus().collect()) == [1, 2, 3]
+    assert sorted(r.cor_id for r in sink.committed_index().collect()) == [1, 2, 3]
+    assert spark.read.parquet(base).count() == 3
+
+    recovered = _sink(spark, tmp_path)
+    assert recovered.admit_batch(_df(spark, DOCS2), 1) == 2
+    assert recovered.admit_batch(_df(spark, DOCS2), 1) == 0
+    assert sorted(r.doc_id for r in recovered.corpus().collect()) == [1, 2, 3, 12, 13]
+    assert sorted(r.cor_id for r in recovered.committed_index().collect()) == [
+        1, 2, 3, 12, 13
+    ]
+    for b in (sink.corpus_dir, sink._docs_dir):
+        files = _files(os.path.join(b, f"ingest_writer={sink.writer_id}", "ingest_epoch=1"))
+        assert len(files) == 1 and files[0].startswith("part-"), files
+
+
+# triggers of the back-compat run: exact and near copies of earlier epochs
+# land in the driver-written epochs too
+COMPAT_EPOCHS = [
+    DOCS1 + [(4, "a fourth document so the spark epoch spans four files")],
+    DOCS2,
+    [
+        (30, "late arrival with novel words and fresh phrasing"),
+        (31, DOCS2[2][1]),  # exact dup of committed 12
+        (32, "the quick brown fox jumps over the lazy dog near the gate"),
+        (33, "yet another unseen document about compaction and vacuum"),
+    ],
+    [
+        (40, "late arrival with novel words and fresh phrasing again"),  # near 30
+        (41, "a final novel document before the maintenance pass"),
+    ],
+]
+COMPAT_PROBE = [
+    (50, DOCS1[2][1]),  # exact dup of a Spark-written doc
+    (51, "yet another unseen document about compaction and vacuum"),  # of 33
+    (52, "a post maintenance arrival with words nobody has used"),
+]
+
+
+def _compat_run(spark, root, spark_epochs, monkeypatch):
+    """Admit COMPAT_EPOCHS through a sink whose first ``spark_epochs``
+    triggers write their files the way a Spark writer did (four part
+    files, ``.crc``, ``_SUCCESS``), then gate a probe, compact with a crash
+    after the ledger append, vacuum, and admit the probe."""
+    from data_pipeline_spark.streaming import ingest
+
+    def spark_write(path, table):
+        spark.createDataFrame(table).repartition(4).write.mode("append").parquet(path)
+
+    sink = _sink(spark, root)
+    decisions = []
+    for e, rows in enumerate(COMPAT_EPOCHS):
+        if e < spark_epochs:
+            monkeypatch.setattr(ingest, "write_table", spark_write)
+        n = sink.admit_batch(_df(spark, rows), e)
+        monkeypatch.undo()
+        decisions.append((n, sink.last_decisions))
+    out = {"decisions": decisions}
+    out["layout"] = [
+        _files(os.path.join(b, f"ingest_writer={sink.writer_id}", f"ingest_epoch={e}"))
+        for b in (sink.corpus_dir, sink._docs_dir)
+        for e in range(len(COMPAT_EPOCHS))
+    ]
+    out["corpus"] = sorted(tuple(r) for r in sink.corpus().collect())
+    out["index"] = sorted(tuple(r) for r in sink.committed_index().collect())
+    out["flags"] = sorted(
+        tuple(r) for r in sink.gate_flags(_df(spark, COMPAT_PROBE)).collect()
+    )
+    sink.crash_points = {"compact_after_ledger"}
+    with pytest.raises(ChaosCrash):
+        sink.compact()
+    sink.crash_points = set()
+    out["vacuumed"] = sink.vacuum()
+    out["compacted"] = sorted(tuple(r) for r in sink.corpus().collect())
+    out["probe"] = sink.admit_batch(_df(spark, COMPAT_PROBE), len(COMPAT_EPOCHS))
+    out["after"] = sorted(tuple(r) for r in sink.corpus().collect())
+    out["index_after"] = sorted(tuple(r) for r in sink.committed_index().collect())
+    return out
+
+
+def test_spark_written_epochs_then_driver_epochs_match_all_spark(
+    spark, tmp_path, monkeypatch
+):
+    """Epochs a Spark writer left beside driver-written ones gate,
+    compact, vacuum and read exactly as an all-Spark-written sink."""
+    ref = _compat_run(spark, tmp_path / "ref", len(COMPAT_EPOCHS), monkeypatch)
+    mixed = _compat_run(spark, tmp_path / "mixed", 2, monkeypatch)
+
+    for leaf in ref["layout"] + mixed["layout"][:2] + mixed["layout"][4:6]:
+        parts = [f for f in leaf if f.startswith("part-") and f.endswith(".parquet")]
+        assert len(parts) > 1 and "_SUCCESS" in leaf, leaf
+        assert any(f.endswith(".crc") for f in leaf), leaf
+    for leaf in mixed["layout"][2:4] + mixed["layout"][6:]:
+        assert len(leaf) == 1 and leaf[0].startswith("part-"), leaf
+
+    assert [d[0] for d in ref["decisions"]] == [4, 2, 2, 1]
+    assert ref["vacuumed"] == 2 * len(COMPAT_EPOCHS)
+    assert ref["probe"] == 1
+    ref.pop("layout"), mixed.pop("layout")
+    assert mixed == ref
+
+
+def test_corpus_round_trips_input_types(spark, tmp_path):
+    """An admitted row comes back through ``corpus()`` as it went in —
+    nested struct (NULL with a non-nullable field too), array, map,
+    decimal, timestamp, date, binary, day-time interval and a
+    user-defined type (NULL too) alike; NULL text reads as '', the form
+    the gate admitted."""
+    import datetime
+    import decimal
+
+    from pyspark.ml.linalg import Vectors, VectorUDT
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("text", T.StringType()),
+            T.StructField(
+                "meta",
+                T.StructType(
+                    [
+                        T.StructField("a", T.IntegerType(), False),
+                        T.StructField("tags", T.ArrayType(T.StringType())),
+                    ]
+                ),
+            ),
+            T.StructField("attrs", T.MapType(T.StringType(), T.IntegerType())),
+            T.StructField("price", T.DecimalType(12, 3)),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("day", T.DateType()),
+            T.StructField("small", T.ByteType()),
+            T.StructField("raw", T.BinaryType()),
+            T.StructField("dur", T.DayTimeIntervalType()),
+            T.StructField("vec", VectorUDT()),
+        ]
+    )
+    rows = [
+        (
+            1, "the quick brown fox jumps over the lazy dog near the wall",
+            (7, ["x", None]), {"k": 1, "j": None}, decimal.Decimal("12.345"),
+            datetime.datetime(2024, 1, 2, 3, 4, 5, 6), datetime.date(2020, 2, 29),
+            -3, b"\x00\xff", datetime.timedelta(days=2, microseconds=7),
+            Vectors.dense([1.0, -2.5]),
+        ),
+        (2, None, None, None, None, None, None, None, None, None, None),
+        (
+            3, "completely different content about streaming watermark sidecars",
+            (0, []), {}, decimal.Decimal("-0.001"),
+            datetime.datetime(1969, 12, 31, 23, 59, 59, 999999),
+            datetime.date(1970, 1, 1), 127, b"", datetime.timedelta(seconds=-1),
+            Vectors.sparse(4, [1], [3.0]),
+        ),
+    ]
+    batch = spark.createDataFrame(rows, schema)
+    sink = _sink(spark, tmp_path)
+    assert sink.admit_batch(batch, 0) == 3
+
+    got = sink.corpus()
+    # a parquet read makes every field nullable: compare the types alone
+    assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+        (f.name, f.dataType.simpleString()) for f in batch.schema
+    ]
+    want = sorted(
+        tuple(r) for r in batch.fillna("", subset=["text"]).collect()
+    )
+    assert sorted(tuple(r) for r in got.collect()) == want
+
+
+def test_semantic_corpus_round_trips_rows_beside_the_vector(spark, tmp_path):
+    """The semantic sink stores the input row whole, whatever rides
+    beside the vector — here a NULL nested struct with a non-nullable
+    field."""
+    from pyspark.sql import types as T
+
+    from data_pipeline_spark.streaming.ingest import SemanticGatedIngest
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.DoubleType())),
+            T.StructField(
+                "meta", T.StructType([T.StructField("a", T.IntegerType(), False)])
+            ),
+        ]
+    )
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0], (1,)),
+        (2, [0.0, 1.0, 0.0, 0.0], None),
+        (3, [0.0, 0.0, 1.0, 0.0], (3,)),
+    ]
+    sink = SemanticGatedIngest(
+        spark,
+        corpus_dir=str(tmp_path / "corpus"),
+        ledger_path=str(tmp_path / "ledger"),
+        n_lists=2,
+        m=2,
+        n_centroids=4,
+    )
+    assert sink.admit_batch(spark.createDataFrame(rows, schema), 0) == 3
+    assert sorted(tuple(r) for r in sink.corpus().collect()) == rows

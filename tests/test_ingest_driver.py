@@ -284,8 +284,14 @@ def test_crashed_ledger_append_leaves_only_skipped_tmp(spark, tmp_path, monkeypa
     ledger = tmp_path / "corpus_index" / "ledger"
     before = {n for _d, _s, fs in os.walk(ledger) for n in fs}
 
+    real = os.rename
+
     def crash(src, dst):
-        raise OSError("crash before the rename")
+        # the trigger's corpus and index files rename first; the cut is
+        # at the ledger append
+        if str(dst).startswith(str(ledger)):
+            raise OSError("crash before the rename")
+        return real(src, dst)
 
     monkeypatch.setattr(os, "rename", crash)
     with pytest.raises(OSError):
@@ -336,3 +342,71 @@ def test_compact_append_cut_between_files_revokes_nothing(spark, tmp_path, monke
     assert fresh.compact() == 2
     assert sorted(r.doc_id for r in fresh.corpus().collect()) == [1, 2]
     assert len(fresh._committed_pairs()) == 1
+
+
+# -- io.write_table -------------------------------------------------------------
+
+
+def test_write_table_is_one_atomic_file_spark_reads_with_its_schema(
+    spark, tmp_path, monkeypatch
+):
+    """``io.write_table`` renames one finished file into place; a crash
+    before the rename leaves only a dot-tmp file that pyarrow and Spark
+    readers skip; Spark reads the written file back with the table's
+    schema and values."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    from data_pipeline_spark.io import write_rows, write_table
+
+    table = pa.table(
+        {
+            "id": pa.array([1, 2], pa.int64()),
+            "s": pa.array(["a", None], pa.string()),
+            "xs": pa.array([[1, 2], []], pa.list_(pa.int64())),
+            "st": pa.array(
+                [{"a": 1, "b": "x"}, None],
+                pa.struct([("a", pa.int32()), ("b", pa.string())]),
+            ),
+            "m": pa.array([[("k", 1.5)], None], pa.map_(pa.string(), pa.float64())),
+            "dec": pa.array([decimal.Decimal("1.25"), None], pa.decimal128(9, 2)),
+            "ts": pa.array(
+                [datetime.datetime(2024, 5, 6, 7, 8, 9, 10), None],
+                pa.timestamp("us", tz="UTC"),
+            ),
+        }
+    )
+    out = tmp_path / "t"
+    name = write_table(str(out), table)
+    assert os.listdir(out) == [name] and name.startswith("part-")
+
+    real = os.rename
+
+    def crash(src, dst):
+        raise OSError("crash before the rename")
+
+    monkeypatch.setattr(os, "rename", crash)
+    with pytest.raises(OSError):
+        write_table(str(out), table)
+    monkeypatch.setattr(os, "rename", real)
+    debris = sorted(set(os.listdir(out)) - {name})
+    assert len(debris) == 1 and debris[0].startswith(".") and debris[0].endswith(".tmp")
+
+    assert pads.dataset(str(out), format="parquet").to_table().equals(table)
+    df = spark.read.parquet(str(out))
+    assert df.schema.simpleString() == (
+        "struct<id:bigint,s:string,xs:array<bigint>,st:struct<a:int,b:string>,"
+        "m:map<string,double>,dec:decimal(9,2),ts:timestamp>"
+    )
+    assert df.toArrow().cast(table.schema).equals(table)
+
+    # write_rows is write_table over the rows in schema order
+    schema = pa.schema([("id", pa.int64()), ("s", pa.string())])
+    rows_dir = tmp_path / "rows"
+    write_rows(str(rows_dir), schema, [(1, "a"), (2, None)])
+    assert pads.dataset(str(rows_dir), format="parquet").to_table().equals(
+        table.select(["id", "s"])
+    )
