@@ -27,7 +27,8 @@ trigger runs as one pass over it:
        bands_v2) with the input row riding along whole as ``_row``, and
        ONE Arrow collect (``toArrow()``) brings the staged table to the
        driver — ``_row`` in Spark's own Arrow conversion, so every input
-       type keeps its type;
+       type keeps its type (year-month intervals as their month counts,
+       the value Spark stores in parquet);
     b. collapse on the driver (``llmops.dedup.collapse_batch``): exact
        copies collapse to one keeper (min id) and — by default — every
        doc that is the larger side of a >= threshold shingle-Jaccard pair
@@ -39,10 +40,10 @@ trigger runs as one pass over it:
        driver as a broadcast local frame);
     d. cut the admitted slice from the staged table and write the corpus
        file (``_row`` flattened, its footer carrying the row's Spark
-       schema) and the index file (the staged sidecar columns) from the
-       DRIVER, one parquet file each (``io.write_table``) — the gate never
-       re-runs, the batch is never re-tokenized, and no Spark write job
-       runs.
+       schema and the Spark version) and the index file (the staged
+       sidecar columns) from the DRIVER, one parquet file each
+       (``io.write_table``) — the gate never re-runs, the batch is never
+       re-tokenized, and no Spark write job runs.
 
 Steps a and c are the only Spark actions: a steady-state trigger runs
 two (a sink's first trigger against an index runs a third, the sidecar
@@ -122,6 +123,7 @@ from typing import NamedTuple
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_pipeline_spark.io import read_rows, write_rows, write_table
 # ngram_jaccard_pairs is not called here: it stays importable from this
@@ -140,8 +142,14 @@ _EPOCH_COL = "ingest_epoch"
 _ROW = "_row"
 # the footer key Spark keeps a file's own schema under: a driver-written
 # corpus file carries the input row's, so Spark reads it back with types
-# parquet alone cannot name (user-defined types, day-time intervals)
+# parquet alone cannot name (user-defined types, intervals)
 _SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+# the footer key naming the Spark version that wrote a file: without it
+# Spark reads dates before 1582-10-15 and timestamps before 1900 under
+# ``spark.sql.parquet.datetimeRebaseModeInRead`` (EXCEPTION raises on
+# them); with it they read as written, proleptic Gregorian as pyarrow
+# writes them
+_SPARK_VERSION_KEY = "org.apache.spark.version"
 # writer ids that start with this are compaction writers (compact/retrain),
 # whose uncommitted partitions vacuum removes: stream writers may not use it
 _COMPACT_PREFIX = "c"
@@ -217,15 +225,69 @@ def _append(rows: DataFrame, base: str, writer: str, epoch: int) -> None:
     ).write.mode("append").partitionBy(_WRITER_COL, _EPOCH_COL).parquet(base)
 
 
+def _year_months_as(dt: T.DataType, to: T.DataType) -> T.DataType:
+    """``dt`` with every year-month interval, however nested, as ``to``."""
+    if isinstance(dt, T.YearMonthIntervalType):
+        return to
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _year_months_as(f.dataType, to), f.nullable)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_year_months_as(dt.elementType, to), dt.containsNull)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _year_months_as(dt.keyType, to),
+            _year_months_as(dt.valueType, to),
+            dt.valueContainsNull,
+        )
+    return dt
+
+
+_MONTHS = T.YearMonthIntervalType(
+    T.YearMonthIntervalType.MONTH, T.YearMonthIntervalType.MONTH
+)
+
+
+def _month_counts(field: T.StructField) -> Column | None:
+    """Column ``field`` with its year-month intervals as INT month counts
+    (through INTERVAL MONTH: an INTERVAL YEAR casts to INT in years), or
+    None if it holds none."""
+    ints = _year_months_as(field.dataType, T.IntegerType())
+    if ints == field.dataType:
+        return None
+    return (
+        F.col(f"`{field.name}`")
+        .cast(_year_months_as(field.dataType, _MONTHS))
+        .cast(ints)
+        .alias(field.name)
+    )
+
+
 def _to_arrow(frame: DataFrame):
-    """``frame.toArrow()`` (one action, PySpark's own Arrow collect)
-    without its closing cast to the Python-side Arrow schema, which here
-    changes only timestamp zone names: pyarrow cannot make that cast for
-    a struct column whose NULL rows hold nulls in a non-nullable field —
-    a NULL nested struct or user-defined type such as an ML vector —
-    while the collected batches hold such rows fine."""
+    """``frame.toArrow()`` (one action, PySpark's own Arrow collect) — the
+    one Arrow collect of this module — with two departures, each for a
+    type the Arrow path cannot carry to a parquet file:
+
+    - year-month intervals arrive as their INT month counts, the value
+      Spark itself stores in parquet (pyarrow writes no parquet type for
+      Arrow's month interval); a corpus file's footer schema names the
+      interval type, so Spark reads them back typed;
+    - the closing cast to the Python-side Arrow schema is skipped: it
+      changes only timestamp zone names here, and pyarrow cannot make it
+      for a struct column whose NULL rows hold nulls in a non-nullable
+      field — a NULL nested struct or user-defined type such as an ML
+      vector — while the collected batches hold such rows fine."""
     import pyarrow as pa
 
+    cols = [(f, _month_counts(f)) for f in frame.schema.fields]
+    if any(c is not None for _, c in cols):
+        frame = frame.select(
+            *[F.col(f"`{f.name}`") if c is None else c for f, c in cols]
+        )
     return pa.Table.from_batches(
         frame._collect_as_arrow(empty_list_if_zero_records=False)
     )
@@ -697,7 +759,10 @@ class DedupGatedIngest:
             write_table(
                 _epoch_path(self.corpus_dir, self.writer_id, epoch_id),
                 _rows_of(admitted).replace_schema_metadata(
-                    {_SPARK_SCHEMA_KEY: frame.schema[_ROW].dataType.json()}
+                    {
+                        _SPARK_SCHEMA_KEY: frame.schema[_ROW].dataType.json(),
+                        _SPARK_VERSION_KEY: self.spark.version,
+                    }
                 ),
             )
             self._chaos("after_corpus")
@@ -1266,12 +1331,11 @@ class SemanticGatedIngest(DedupGatedIngest):
 
         batch = self._frame(admitted)
         coarse, books, _err = self._ensure_model(batch)
-        return (
-            pq.semantic_index_rows(batch, coarse, books, self.id_col, self.vec_col)
-            .withColumn("model_v", F.lit(int(self._model_version or 1)))
-            .toArrow()
-            .sort_by("list_id")
-        )
+        return _to_arrow(
+            pq.semantic_index_rows(
+                batch, coarse, books, self.id_col, self.vec_col
+            ).withColumn("model_v", F.lit(int(self._model_version or 1)))
+        ).sort_by("list_id")
 
     def _index_cols(self) -> list[str]:
         return [

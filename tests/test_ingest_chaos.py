@@ -460,32 +460,33 @@ def _writer_epoch_dir(sink, epoch):
     )
 
 
-def _spark_written_epoch(sink, batch, epoch):
-    """Commit ``batch`` (all novel) as ``epoch`` the way the sink wrote
-    every trigger before its per-trigger files moved to the driver: one
-    Spark append per dataset, a part file per batch partition (with
-    ``.crc`` siblings and ``_SUCCESS``), then the ledger row."""
-    from data_pipeline_spark.streaming import ingest
+def _spark_write(path, table):
+    """``io.write_table`` the way a Spark writer committed a trigger's
+    files before they moved to the driver: four part files, with
+    ``.crc`` siblings and ``_SUCCESS``."""
+    from pyspark.sql import SparkSession
 
-    staged = sink._stage(batch)
-    ingest._append(staged.select("_row.*"), sink.corpus_dir, sink.writer_id, epoch)
-    ingest._append(staged.drop("_row"), sink._docs_dir, sink.writer_id, epoch)
-    sink._append_ledger((sink.writer_id, epoch, batch.count()))
-    sink._last_epoch = None
+    SparkSession.active().createDataFrame(table).repartition(4).write.mode(
+        "append"
+    ).parquet(path)
 
 
 def test_maintenance_compact_of_committed_epoch_composes_with_ingest(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Compacting a committed epoch's leaf dir while the sink keeps
     admitting: corpus contents, gate decisions, and replay semantics all
     unchanged; the leaf holds fewer (validated) files."""
     from data_pipeline_spark.operators.maintenance import compact_small_files
 
+    from data_pipeline_spark.streaming import ingest
+
     sink = _sink(spark, tmp_path)
     # a trigger writes one file per epoch, so the multi-file epoch 0 is
     # one a Spark writer left
-    _spark_written_epoch(sink, _df(spark, DOCS1).repartition(3), 0)
+    with monkeypatch.context() as m:
+        m.setattr(ingest, "write_table", _spark_write)
+        assert sink.admit_batch(_df(spark, DOCS1), 0) == len(DOCS1)
     sink.admit_batch(_df(spark, DOCS2), 1)
     before = sorted(r.doc_id for r in sink.corpus().collect())
 
@@ -729,16 +730,13 @@ def _compat_run(spark, root, spark_epochs, monkeypatch):
     after the ledger append, vacuum, and admit the probe."""
     from data_pipeline_spark.streaming import ingest
 
-    def spark_write(path, table):
-        spark.createDataFrame(table).repartition(4).write.mode("append").parquet(path)
-
     sink = _sink(spark, root)
     decisions = []
     for e, rows in enumerate(COMPAT_EPOCHS):
-        if e < spark_epochs:
-            monkeypatch.setattr(ingest, "write_table", spark_write)
-        n = sink.admit_batch(_df(spark, rows), e)
-        monkeypatch.undo()
+        with monkeypatch.context() as m:
+            if e < spark_epochs:
+                m.setattr(ingest, "write_table", _spark_write)
+            n = sink.admit_batch(_df(spark, rows), e)
         decisions.append((n, sink.last_decisions))
     out = {"decisions": decisions}
     out["layout"] = [
@@ -790,7 +788,9 @@ def test_corpus_round_trips_input_types(spark, tmp_path):
     nested struct (NULL with a non-nullable field too), array, map,
     decimal, timestamp, date, binary, day-time interval and a
     user-defined type (NULL too) alike; NULL text reads as '', the form
-    the gate admitted."""
+    the gate admitted.  A date before 1582-10-15 and a timestamp before
+    1900 read back even where the session's parquet datetime rebase
+    mode raises on files it cannot date."""
     import datetime
     import decimal
 
@@ -836,20 +836,58 @@ def test_corpus_round_trips_input_types(spark, tmp_path):
             datetime.date(1970, 1, 1), 127, b"", datetime.timedelta(seconds=-1),
             Vectors.sparse(4, [1], [3.0]),
         ),
+        (
+            4, "a chronicle written long before the gregorian calendar reform",
+            (1, ["y"]), {"m": 2}, decimal.Decimal("0.000"),
+            datetime.datetime(1850, 1, 1), datetime.date(1000, 1, 1), 0,
+            b"\x01", datetime.timedelta(0), Vectors.dense([0.0]),
+        ),
     ]
     batch = spark.createDataFrame(rows, schema)
     sink = _sink(spark, tmp_path)
-    assert sink.admit_batch(batch, 0) == 3
+    assert sink.admit_batch(batch, 0) == 4
 
-    got = sink.corpus()
-    # a parquet read makes every field nullable: compare the types alone
-    assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
-        (f.name, f.dataType.simpleString()) for f in batch.schema
-    ]
-    want = sorted(
-        tuple(r) for r in batch.fillna("", subset=["text"]).collect()
+    rebase = "spark.sql.parquet.datetimeRebaseModeInRead"
+    spark.conf.set(rebase, "EXCEPTION")
+    try:
+        got = sink.corpus()
+        # a parquet read makes every field nullable: compare the types alone
+        assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+            (f.name, f.dataType.simpleString()) for f in batch.schema
+        ]
+        want = sorted(
+            tuple(r) for r in batch.fillna("", subset=["text"]).collect()
+        )
+        assert sorted(tuple(r) for r in got.collect()) == want
+    finally:
+        spark.conf.unset(rebase)
+
+
+def test_corpus_round_trips_year_month_intervals(spark, tmp_path):
+    """Year-month intervals — top level, NULL, and nested in a struct, an
+    array and a map value — come back through ``corpus()`` typed and
+    equal, and through ``compact()``'s Spark rewrite too."""
+    batch = spark.sql(
+        """SELECT 1L AS doc_id,
+                  'a document that carries interval columns' AS text,
+                  INTERVAL '1-2' YEAR TO MONTH AS ym,
+                  CAST(NULL AS INTERVAL YEAR TO MONTH) AS none,
+                  named_struct('m', INTERVAL '3' MONTH,
+                               'ys', array(INTERVAL '-5' YEAR),
+                               'by', map('k', INTERVAL '1' YEAR)) AS nested"""
     )
-    assert sorted(tuple(r) for r in got.collect()) == want
+    shown = [F.col(c).cast("string").alias(c) for c in batch.columns]
+    want = batch.select(*shown).collect()
+    sink = _sink(spark, tmp_path)
+    assert sink.admit_batch(batch, 0) == 1
+    for step in ("ingest", "compact"):
+        if step == "compact":
+            sink.compact()
+        got = sink.corpus()
+        assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+            (f.name, f.dataType.simpleString()) for f in batch.schema
+        ], step
+        assert got.select(*shown).collect() == want, step
 
 
 def test_semantic_corpus_round_trips_rows_beside_the_vector(spark, tmp_path):
