@@ -33,6 +33,13 @@ def entry(spark: SparkSession) -> DataFrame:
 # second, and a representative spread of the long-green set fills the
 # remaining window; the rest follow.
 _PRIORITY = [
+    # -- one Spark job per side of a CDC batch --------------------------------
+    # CODE CHANGED: every query that publishes to and tails a topic (the
+    # staged publish, the tail's observed offsets)
+    "topic_transport_roundtrip",
+    "wire_key_roundtrip",
+    "encrypted_transport_roundtrip",
+    "envelope_roundtrip",
     # -- one distributed connected-components algorithm ----------------------
     # CODE CHANGED: every consumer of dedup.connected_components, whose
     # above-bound graphs now take the large-star/small-star rounds
@@ -59,10 +66,6 @@ _PRIORITY = [
     "segment_dedup_stats",
     "corpus_health_by_source",
     "warc_file_source",
-    "envelope_roundtrip",
-    "topic_transport_roundtrip",
-    "wire_key_roundtrip",
-    "encrypted_transport_roundtrip",
     # -- recency rotation: the 8 queries whose latest verdict is still r9
     # (4 are rows-only by nature — approx sketches, the iterative BPE
     # trainer, the Misra-Gries bound certificate)

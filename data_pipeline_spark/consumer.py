@@ -51,7 +51,7 @@ class Consumer:
         starting_offsets: dict[int, int] | None = None,
         from_committed: bool = False,
     ) -> DataFrame:
-        wire = self._wire(topic, starting_offsets, from_committed)
+        wire, _ends = self._wire(topic, starting_offsets, from_committed)
         return wire.withColumn("envelope", env.unpack(F.col("value")))
 
     def _wire(
@@ -59,15 +59,15 @@ class Consumer:
         topic: str,
         starting_offsets: dict[int, int] | None,
         from_committed: bool,
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, dict[int, int] | None]:
         """The batch read behind ``raw`` and ``messages``, ending at the
-        topic's high watermarks as of this call.  ``commit`` re-executes
-        the consumed frame's plan, and the bound makes that re-execution
-        cover the offsets the caller collected and no later ones, by
-        contract rather than through the parquet scan's file-listing
-        cache.  The bound is a driver read of the watermark sidecar;
-        topics without one keep the unbounded read rather than pay a scan
-        job."""
+        topic's high watermarks as of this call, and those watermarks.
+        The bound makes the frame a snapshot: an action on it, and a
+        fallback ``commit`` that re-executes it, cover no offset reserved
+        after this call, by contract rather than through the parquet
+        scan's file-listing cache.  The bound is a driver read of the
+        watermark sidecar; topics without one keep the unbounded read
+        (and None) rather than pay a scan job."""
         if from_committed and self.ledger is not None and starting_offsets is None:
             starting_offsets = self.ledger.committed(self.group, topic)
         ending_offsets = (
@@ -75,7 +75,10 @@ class Consumer:
             if self.store.has_sidecar(topic)
             else None
         )
-        return self.store.read(topic, starting_offsets, ending_offsets)
+        return (
+            self.store.read(topic, starting_offsets, ending_offsets),
+            ending_offsets,
+        )
 
     # -- decoded tail -------------------------------------------------------
 
@@ -99,18 +102,27 @@ class Consumer:
         raises at execution.
 
         The frame is a snapshot: it ends at the high watermarks recorded
-        when this method runs (for topics with a watermark sidecar), so
-        collecting it and then passing it to ``commit`` covers the same
-        records even if more are published in between.  A publish that
-        has reserved its offsets but not yet appended its rows when this
-        method runs is out of scope: if its rows land between the collect
-        and the commit, they are committed without being delivered.
+        when this method runs (for topics with a watermark sidecar).  It
+        also observes (``OffsetLedger.observe``) the max offset per
+        partition that its first action reads, and ``commit`` of this
+        frame after that action writes exactly those offsets, with no
+        Spark job.  A publish that has reserved its offsets but not yet
+        landed its files when the action runs is therefore never
+        committed past: its rows are delivered by the next tail.  Only the
+        fallback commit (no action ran on this frame yet) re-executes the
+        plan, and it commits what it then finds in the snapshot.  The
+        observation is named per topic, so one plan can hold tails of
+        several topics but not two tails of one topic.
         """
+        wire, ends = self._wire(topic, starting_offsets, from_committed)
         if crypto_keys is None:
-            wire = self._wire(topic, starting_offsets, from_committed)
-            return self._decode_fused(wire, topic, reader_schema_id)
-        raw = self.raw(topic, starting_offsets, from_committed)
-        return self._decode_enveloped(raw, topic, reader_schema_id, crypto_keys)
+            out = self._decode_fused(wire, topic, reader_schema_id)
+        else:
+            raw = wire.withColumn("envelope", env.unpack(F.col("value")))
+            out = self._decode_enveloped(raw, topic, reader_schema_id, crypto_keys)
+        if ends is None:
+            return out
+        return OffsetLedger.observe(out, topic, ends)
 
     def messages_stream(
         self,

@@ -106,8 +106,9 @@ class Introspector:
             highs = self.store.high_watermarks(topic)
             info["high_watermarks"] = highs
             # O(1) sidecar read: watermark positions are RESERVATIONS — an
-            # upper bound on rows, exact unless a publisher crashed between
-            # its reservation and the data append (which leaves a gap)
+            # upper bound on rows, exact unless a publisher crashed after
+            # its reservation (a gap until the next publish lands the
+            # staged files)
             info["reserved_count"] = sum(highs.values())
             info["message_count"] = info["reserved_count"]
             # callers that need exactness must pass check_gap=True; the

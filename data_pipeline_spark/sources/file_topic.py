@@ -20,13 +20,21 @@ Metadata is driver-written: the topic watermark sidecar and the consumer
 offset ledger are directories of small parquet files that the DRIVER reads
 and writes with pyarrow (``io.read_rows`` / ``io.write_rows``; see the
 ``io`` module docstring for the shared layout rules).
+
+A publish is one Spark job: it writes the batch into a hidden staging
+directory (``<root>/.staging/<topic>/<token>/partition=p/``), reserves the
+staged offsets in the sidecar (the commit point), then renames the staged
+files into the topic.  Whoever next holds the topic's lease rolls a
+reserved staging directory forward and deletes an unreserved one.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import shutil
 import threading
+import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -103,12 +111,16 @@ class TopicStore:
 
     @staticmethod
     def _post_reserve_hook(topic: str) -> None:
-        """No-op seam between the sidecar reservation and the data append;
-        crash-consistency tests override it to simulate dying in that
-        window (the one gap not injectable from outside _publish_locked)."""
+        """No-op seam between the sidecar reservation and the renames that
+        land the staged files; crash-consistency tests override it to
+        simulate dying in that window."""
 
     def _dir(self, topic: str) -> str:
         return os.path.join(self.root, topic)
+
+    def _staging_dir(self, topic: str) -> str:
+        # sibling of .meta: no topic scan, topics() or dataset walk sees it
+        return os.path.join(self.root, ".staging", topic)
 
     # the watermark sidecar's row: one per partition per publish.
     # publish_id + base_offset (null for untagged publishes and pre-r7
@@ -186,9 +198,9 @@ class TopicStore:
         """``publish`` returning (new high watermarks, rows appended).
 
         The count comes from the reservation delta computed INSIDE the
-        lease off the already-materialized wire batch — exact under
-        concurrent writers and free (no second execution of the encode
-        pipeline, no extra watermark read)."""
+        lease off the staged files' footers — exact under concurrent
+        writers and free (no second execution of the encode pipeline, no
+        extra watermark read)."""
         with self.publish_lease(topic):
             return self._publish_locked(
                 df, topic, num_partitions, order_by, publish_id
@@ -202,6 +214,7 @@ class TopicStore:
         order_by: Column | str | None,
         publish_id: str | None = None,
     ) -> tuple[dict[int, int], int]:
+        self._settle_staging(topic)
         highs = self.high_watermarks(topic, num_partitions)
         key_or_value = F.coalesce(F.col("key"), F.col("value"))
         part = F.pmod(F.xxhash64(key_or_value), F.lit(num_partitions)).cast("int")
@@ -225,56 +238,104 @@ class TopicStore:
             .withColumn("publish_ts", F.unix_timestamp(F.current_timestamp()))
             .select("partition", "offset", "key", "value", "publish_ts")
         )
-        # Persist before the write so the watermark aggregation below reads
-        # the SAME materialisation that went to disk.  Recomputing the lazy
-        # plan would re-evaluate monotonically_increasing_id / the shuffle,
-        # which is not deterministic across executions — a sidecar computed
-        # from a second run can desync from the files and reuse
-        # (partition, offset) pairs on the next publish.
-        out = out.persist()
-        try:
-            new_highs = dict(highs)
-            for r in (
-                out.groupBy("partition").agg(F.max("offset").alias("high")).collect()
-            ):
-                new_highs[r.partition] = r.high + 1
-            # RESERVE the range in the watermark sidecar BEFORE the data
-            # append: a crash between the two leaves an offset GAP (safe —
-            # reads are range-filtered and resume positions tolerate
-            # skips), whereas the old data-then-sidecar order could leave
-            # the sidecar BEHIND the data and hand the same offsets to the
-            # next publish — duplicate (partition, offset) pairs, the one
-            # unrecoverable corruption.  The sidecar stays the O(1)
-            # watermark read either way.  Watermark advancement is a
-            # RESERVATION, not proof the data landed — replay verification
-            # must check rows on disk within [base_offset, next_offset)
-            # (find_publish), which is unambiguous because competing
-            # publishes always reserve first and so can never occupy a
-            # range that was already reserved.
-            # the Spark append (createDataFrame -> write job + commit
-            # protocol) this replaced cost ~0.8 s per publish (r12
-            # profile); the atomic rename keeps the crash window identical
-            # — a reservation is either fully visible or absent
-            write_rows(
-                self._meta_dir(topic),
-                self._meta_arrow_schema(),
-                [
-                    (p, n, publish_id, highs.get(p, 0))
-                    for p, n in new_highs.items()
-                ],
-            )
-            # crash-window test seam: the reserve->data gap is the one
-            # window that cannot be injected from outside this method
-            self._post_reserve_hook(topic)
-            out.write.mode("append").partitionBy("partition").parquet(
-                self._dir(topic)
-            )
-        finally:
-            out.unpersist()
+        # The batch's one Spark job.  The new watermarks come from the
+        # staged files' footers, never from a second execution of the
+        # plan: monotonically_increasing_id and the shuffle are not
+        # deterministic across executions, so a recount could desync the
+        # sidecar from the files and hand out (partition, offset) pairs
+        # again.
+        stage = os.path.join(self._staging_dir(topic), uuid.uuid4().hex)
+        out.write.partitionBy("partition").parquet(stage)
+        staged = self._staged(stage)
+        new_highs = dict(highs)
+        for p, _first, last, _path in staged:
+            new_highs[p] = max(new_highs[p], last + 1)
+        # RESERVE the range in the watermark sidecar BEFORE any staged
+        # file becomes visible: the reservation is the commit point.  A
+        # crash before it leaves an unreserved staging directory, which
+        # the next lease holder deletes (nothing was published); a crash
+        # after it leaves a reserved one, which the next lease holder
+        # lands.  Either way the sidecar never falls behind the data,
+        # the order whose failure hands the same offsets to the next
+        # publish (duplicate (partition, offset) pairs, the one
+        # unrecoverable corruption).  Replay verification counts rows on
+        # disk within [base_offset, next_offset) (find_publish), which is
+        # unambiguous because competing publishes always reserve first
+        # and so can never occupy a range that was already reserved.
+        write_rows(
+            self._meta_dir(topic),
+            self._meta_arrow_schema(),
+            [
+                (p, n, publish_id, highs.get(p, 0))
+                for p, n in new_highs.items()
+            ],
+        )
+        self._post_reserve_hook(topic)
+        self._land(topic, stage, staged)
         n_appended = sum(
             n - highs.get(p, 0) for p, n in new_highs.items()
         )
         return new_highs, n_appended
+
+    @staticmethod
+    def _staged(stage: str) -> list[tuple[int, int, int, str]]:
+        """(partition, first offset, last offset, path) of each parquet
+        file of a staged batch, from its footer, in ascending offset
+        order per partition."""
+        import pyarrow.parquet as pq
+
+        out = []
+        for d in os.listdir(stage):
+            if not d.startswith("partition="):
+                continue  # _SUCCESS, an aborted job's _temporary
+            p = int(d.split("=", 1)[1])
+            for n in os.listdir(os.path.join(stage, d)):
+                if n.startswith((".", "_")):
+                    continue  # .crc siblings
+                path = os.path.join(stage, d, n)
+                md = pq.ParquetFile(path).metadata
+                col = md.schema.names.index("offset")
+                stats = [
+                    md.row_group(g).column(col).statistics
+                    for g in range(md.num_row_groups)
+                ]
+                if stats:
+                    first = min(st.min for st in stats)
+                    out.append((p, first, max(st.max for st in stats), path))
+        return sorted(out)
+
+    def _land(self, topic: str, stage: str, staged) -> None:
+        """Rename the staged files into ``partition=p/``, each partition
+        in ascending offset order, so a reader that sees a staged row also
+        sees every lower offset of the batch in that partition; then drop
+        the staging directory (with Hadoop's ``.crc`` siblings)."""
+        os.makedirs(self._dir(topic), exist_ok=True)
+        for p, _first, _last, path in staged:
+            dest = os.path.join(self._dir(topic), f"partition={p}")
+            os.makedirs(dest, exist_ok=True)
+            os.rename(path, os.path.join(dest, os.path.basename(path)))
+        shutil.rmtree(stage)
+
+    def _settle_staging(self, topic: str) -> None:
+        """The crash rule for staged batches a dead publish left behind,
+        applied under the topic's lease.  A batch stages its offsets from
+        the watermark and every publish settles before it reserves, so a
+        staged file whose first offset lies below the watermark has its
+        reservation (the commit point): the directory is rolled forward.
+        One at the watermark has none and is deleted.  Driver-only; nothing
+        to do after a clean publish."""
+        root = self._staging_dir(topic)
+        if not (os.path.isdir(root) and os.listdir(root)):
+            return
+        with self.publish_lease(topic):
+            highs = self.high_watermarks(topic)
+            for token in os.listdir(root):
+                stage = os.path.join(root, token)
+                staged = self._staged(stage)
+                if staged and all(first < highs.get(p, 0) for p, first, _l, _f in staged):
+                    self._land(topic, stage, staged)
+                else:
+                    shutil.rmtree(stage)
 
     # -- metadata -----------------------------------------------------------
 
@@ -365,9 +426,12 @@ class TopicStore:
         the LATEST attempt per partition (max base_offset) is the live one —
         earlier ranges were verified data-free before the re-attempt, and a
         crashed append can never complete later (the job died with its
-        driver)."""
+        driver).  A staged batch the crashed attempt left is settled first
+        (``_settle_staging``), so the range's rows are on disk whole or not
+        at all when the caller counts them."""
         if not self.has_sidecar(topic):
             return None
+        self._settle_staging(topic)
         import pyarrow.dataset as pads
 
         parts, bases, nexts = read_rows(
@@ -423,16 +487,18 @@ class TopicStore:
 class OffsetLedger:
     """Consumer-group committed offsets (S3): (group, topic, partition) ->
     next offset, persisted as parquet.  Commit takes max(offset)+1 per
-    partition like base_consumer.py:597-611.
+    partition like base_consumer.py:597-611, which commits the offsets of
+    the messages the consumer delivered.
 
     Like the watermark sidecar, the ledger is driver-written metadata: the
     reference fetches and commits offsets as cheap metadata calls
     (base_consumer.py:566-611), and here ``committed`` is a pyarrow read
-    (no Spark job) and ``commit_messages`` runs its one aggregation job and
-    writes the rows from the driver.  Files written by the earlier Spark
-    path (with their ``_SUCCESS`` and ``.crc`` siblings) and driver-written
-    files mix in one directory: both carry the same four columns, and every
-    read takes the max per key over all of them.
+    (no Spark job) and ``commit_messages`` writes the rows from the driver,
+    from the offsets an earlier action observed when it can (see there).
+    Files written by the earlier Spark path (with their ``_SUCCESS`` and
+    ``.crc`` siblings) and driver-written files mix in one directory: both
+    carry the same four columns, and every read takes the max per key over
+    all of them.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -495,18 +561,64 @@ class OffsetLedger:
         for n in old:
             os.remove(os.path.join(self.path, n))
 
+    @staticmethod
+    def observe(frame: DataFrame, topic: str, partitions) -> DataFrame:
+        """``frame`` observing what its first action reads: max(offset) for
+        each of ``partitions`` and a count of rows outside them.  The
+        observation is named per topic, one name for every call, so a plan
+        may union several topics' frames; one plan holding two frames of
+        the same topic fails analysis (``DUPLICATED_METRICS_NAME``)."""
+        from pyspark.sql import Observation
+
+        known = sorted(partitions)
+        # one SQL expression: each Column-API call is a few py4j round
+        # trips, and this runs once per tail
+        maxes = "".join(f"max(IF(`partition` = {p}, `offset`, NULL)), " for p in known)
+        outside = f"count_if(`partition` NOT IN ({', '.join(map(str, known))}))"
+        seen = Observation(f"offsets:{topic}")
+        out = frame.observe(seen, F.expr(f"array({maxes}{outside})").alias("seen"))
+        out._offsets_seen = (seen, known)
+        return out
+
+    @staticmethod
+    def _observed(consumed: DataFrame) -> dict[int, int] | None:
+        """max(offset)+1 per partition that an action on an ``observe``d
+        frame saw, or None when the frame carries no completed observation
+        covering every row it read (an action whose plan dropped the
+        observation completes it with no metrics)."""
+        seen, known = getattr(consumed, "_offsets_seen", (None, None))
+        if (
+            seen is None
+            or not seen._jo.future().isCompleted()
+            or not seen._jo.getRow().length()
+        ):
+            return None
+        *maxes, outside = seen.get["seen"]
+        if outside:
+            return None  # rows outside the snapshot's partitions
+        return {p: m + 1 for p, m in zip(known, maxes) if m is not None}
+
     def commit_messages(self, group: str, topic: str, consumed: DataFrame) -> None:
-        """Commit max(offset)+1 per partition of the consumed batch: one
-        Spark aggregation job, rows written by the driver.  An empty batch
-        commits nothing."""
-        rows = (
-            consumed.groupBy("partition")
-            .agg((F.max("offset") + 1).alias("next_offset"))
-            .collect()
-        )
-        if rows:
+        """Commit max(offset)+1 per partition of the consumed batch, rows
+        written by the driver.  An empty batch commits nothing.
+
+        For the frame ``Consumer.messages`` returned, once an action on it
+        (or on a frame derived from it) ran, this writes the offsets that
+        action observed, with no Spark job: the commit covers what was
+        read, never rows that landed afterwards.  Any other frame (never
+        actioned, derived, or holding rows outside the observed partitions)
+        runs one aggregation job over it — the reference path."""
+        nexts = self._observed(consumed)
+        if nexts is None:
+            nexts = {
+                r.partition: r.next_offset
+                for r in consumed.groupBy("partition")
+                .agg((F.max("offset") + 1).alias("next_offset"))
+                .collect()
+            }
+        if nexts:
             write_rows(
                 self.path,
                 self._arrow_schema(),
-                [(group, topic, r.partition, r.next_offset) for r in rows],
+                [(group, topic, p, n) for p, n in nexts.items()],
             )

@@ -29,22 +29,23 @@ class StreamingPublisher:
 
     1. append an INTENT row for the epoch;
     2. publish the batch tagged with a deterministic publish id — the
-       TopicStore records the reserved offset range [base, next) per
-       partition in its watermark sidecar, then appends the data as one
-       atomic Spark job commit;
+       TopicStore stages the data in one Spark write, records the staged
+       offset range [base, next) per partition in its watermark sidecar
+       (the commit point), then renames the staged files into the topic;
     3. append a COMMIT row.
 
     A replay of an epoch with an intent but no commit looks up its
-    reservation (`TopicStore.find_publish`) and counts the rows ACTUALLY
-    on disk inside the reserved range:
+    reservation (`TopicStore.find_publish`, which first rolls a reserved
+    staged batch forward and deletes an unreserved one) and counts the
+    rows ACTUALLY on disk inside the reserved range:
 
-    - full count present  -> the data append landed before the crash:
-      record the commit and skip (no duplicates);
-    - no reservation, or a reserved range with zero rows (crash between
-      the sidecar reservation and the data append) -> the publish never
-      landed: publish normally (no loss — the empty range stays a gap,
-      which offset-range readers tolerate);
-    - a partial count would mean the atomic job commit was violated and
+    - full count present  -> the data landed before the crash, or was
+      just rolled forward: record the commit and skip (no duplicates);
+    - no reservation, or a reserved range with zero rows (a reservation
+      whose data never staged, as the Spark append before staging could
+      leave) -> the publish never landed: publish normally (no loss — the
+      empty range stays a gap, which offset-range readers tolerate);
+    - a partial count would mean the roll-forward was violated and
       raises rather than guessing.
 
     This is exact even with OTHER writers on the topic: every publish
@@ -161,8 +162,8 @@ class StreamingPublisher:
             return False  # reservation is a gap: crash before data append
         raise RuntimeError(
             f"topic {topic!r} epoch {epoch_id}: {present}/{expected} rows in "
-            "the reserved range — partial append should be impossible (the "
-            "data write is one atomic job commit)"
+            "the reserved range — partial append should be impossible (a "
+            "reserved staged batch is rolled forward whole before counting)"
         )
 
     def publish_batch(self, batch: DataFrame, epoch_id: int) -> bool:

@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_spark import envelope as env
@@ -513,3 +514,138 @@ def test_publisher_chaos_every_crash_window_exactly_once(spark, tmp_path):
     assert got == want  # exactly-once across every window
     assert len(set((r.partition, r.offset) for r in
                    store.read(rs.topic).collect())) == 50
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _arm_publish_crash(point, store, monkeypatch):
+    """Fail the next staged publish once, at ``point``: after the staged
+    write (the reservation append raises), at ``_post_reserve_hook``,
+    after the first staged file's rename, or after the last rename but
+    before the staging directory is removed."""
+    import shutil
+
+    from data_pipeline_spark.sources import file_topic
+
+    armed = [True]
+
+    def fire():
+        if armed[0]:
+            armed[0] = False
+            raise _Crash(point)
+
+    if point == "staged":
+        real_write = file_topic.write_rows
+        meta = os.path.join(store.root, ".meta")
+
+        def write_rows(path, *a):
+            if path.startswith(meta):
+                fire()
+            return real_write(path, *a)
+
+        monkeypatch.setattr(file_topic, "write_rows", write_rows)
+    elif point == "reserved":
+        monkeypatch.setattr(store, "_post_reserve_hook", lambda topic: fire())
+    elif point == "first_rename":
+        real_rename = os.rename
+
+        def rename(src, dst):
+            real_rename(src, dst)
+            if "/.staging/" in src:
+                fire()
+
+        monkeypatch.setattr(os, "rename", rename)
+    else:
+        real_rmtree = shutil.rmtree
+
+        def rmtree(path, *a, **k):
+            if "/.staging/" in path:
+                fire()
+            return real_rmtree(path, *a, **k)
+
+        monkeypatch.setattr(shutil, "rmtree", rmtree)
+
+
+def _staged_rows(store, topic):
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
+        for d, _dirs, files in os.walk(store._staging_dir(topic))
+        for f in files
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+@pytest.mark.parametrize("point", ["staged", "reserved", "first_rename", "last_rename"])
+def test_staged_publish_crash_matrix_exactly_once(spark, tmp_path, monkeypatch, point):
+    """A publish killed at each file operation of the staged protocol,
+    then replayed by a fresh StreamingPublisher: every epoch lands exactly
+    once, the replay's ``_landed`` never meets a partial range, and staged
+    rows never show in ``read``, ``high_watermarks`` or ``topics()``."""
+    rs, store, producer, batch, ledger = _pub_fixture(spark, tmp_path)
+
+    def make_pub():
+        return StreamingPublisher(producer, rs.schema_id, ledger, order_by="event_id")
+
+    assert make_pub().publish_batch(batch(0, 10), 0) is True
+    highs = store.high_watermarks(rs.topic)
+    _arm_publish_crash(point, store, monkeypatch)
+    with pytest.raises(_Crash):
+        make_pub().publish_batch(batch(100, 10), 1)
+    monkeypatch.undo()
+
+    visible = store.read(rs.topic).count()
+    staged = _staged_rows(store, rs.topic)
+    assert store.topics() == [rs.topic]
+    if point == "staged":  # staged but unreserved: nothing published
+        assert (visible, staged) == (10, 10)
+        assert store.high_watermarks(rs.topic) == highs
+    else:  # reserved: the batch is split between topic and staging
+        assert visible + staged == 20 and visible >= 10
+        assert sum(store.high_watermarks(rs.topic).values()) == 20
+    if point == "first_rename":
+        assert visible > 10
+    if point == "last_rename":
+        assert staged == 0
+
+    # a fresh publisher replays the epoch: the unreserved batch is
+    # re-published, a reserved one is rolled forward and counted whole
+    assert make_pub().publish_batch(batch(100, 10), 1) is (point == "staged")
+    assert make_pub().publish_batch(batch(200, 10), 2) is True
+    assert _staged_rows(store, rs.topic) == 0
+    assert not os.listdir(store._staging_dir(rs.topic))
+
+    rows = store.read(rs.topic).collect()
+    assert len({(r.partition, r.offset) for r in rows}) == len(rows) == 30
+    got = sorted(
+        r.event_id
+        for r in Consumer(store, producer.registry)
+        .messages(rs.topic).select("payload.event_id").collect()
+    )
+    assert got == sorted(e * 100 + i for e in range(3) for i in range(10))
+
+
+@pytest.mark.parametrize("point", ["staged", "reserved"])
+def test_next_publish_settles_a_crashed_staging(spark, tmp_path, monkeypatch, point):
+    """The next publish on the topic applies the crash rule before it
+    assigns offsets: an unreserved staging directory is deleted, a
+    reserved one lands; the crashed epoch's replay then resolves it
+    exactly once."""
+    rs, store, producer, batch, ledger = _pub_fixture(spark, tmp_path)
+
+    def make_pub():
+        return StreamingPublisher(producer, rs.schema_id, ledger, order_by="event_id")
+
+    _arm_publish_crash(point, store, monkeypatch)
+    with pytest.raises(_Crash):
+        make_pub().publish_batch(batch(0, 10), 0)
+    monkeypatch.undo()
+    producer.publish(batch(500, 10), rs.schema_id, order_by="event_id")
+    assert _staged_rows(store, rs.topic) == 0
+    assert store.read(rs.topic).count() == (10 if point == "staged" else 20)
+    assert make_pub().publish_batch(batch(0, 10), 0) is (point == "staged")
+    rows = store.read(rs.topic).collect()
+    assert len({(r.partition, r.offset) for r in rows}) == len(rows) == 20

@@ -224,6 +224,150 @@ def test_ledger_spark_action_budget(spark, tmp_path):
     assert (n_commit, n_read) == (1, 0)
 
 
+
+def _aggregated(frame):
+    """What the reference commit path writes for ``frame``."""
+    return {
+        r.partition: r.n
+        for r in frame.groupBy("partition")
+        .agg((F.max("offset") + 1).alias("n"))
+        .collect()
+    }
+
+
+def test_commit_after_collect_runs_no_spark_job(spark, registry, store, tmp_path):
+    """After the tail's collect, commit writes the offsets that collect
+    observed: no Spark job, and exactly what the aggregation commits."""
+    import uuid
+
+    rs = registry.latest_schema_for_source("test.main.db", "events")
+    Producer(store, registry).publish(_events(spark, 120), rs.schema_id, order_by="event_id")
+    ledger = OffsetLedger(spark, str(tmp_path / "offsets"))
+    consumer = Consumer(store, registry, group="g", ledger=ledger)
+    msgs = consumer.messages(rs.topic, from_committed=True)
+    assert len(msgs.collect()) == 120
+    _, n_jobs = _jobs_in_group(
+        spark, f"commit-{uuid.uuid4().hex}", lambda: consumer.commit(rs.topic, msgs)
+    )
+    assert n_jobs == 0
+    assert ledger.committed("g", rs.topic) == _aggregated(msgs)
+    assert ledger.committed("g", rs.topic) == store.high_watermarks(rs.topic)
+    assert consumer.messages(rs.topic, from_committed=True).count() == 0
+
+
+def test_commit_of_unobserved_frames_matches_aggregation(spark, registry, store, tmp_path):
+    """A never-actioned frame, a derived frame, an emptied frame and a
+    messages_union frame commit exactly what the aggregation commits; so
+    does an observed frame that read rows outside its known partitions."""
+    reg2 = registry.register_schema("test.main.db", "events2", EVENT_SCHEMA)
+    rs = registry.latest_schema_for_source("test.main.db", "events")
+    prod = Producer(store, registry)
+    prod.publish(_events(spark, 90), rs.schema_id, order_by="event_id")
+    prod.publish(_events(spark, 40), reg2.schema_id, num_partitions=2, order_by="event_id")
+    ledger = OffsetLedger(spark, str(tmp_path / "offsets"))
+    consumer = Consumer(store, registry, ledger=ledger)
+    frames = {
+        "unactioned": consumer.messages(rs.topic),
+        "select": consumer.messages(rs.topic).select("partition", "offset"),
+        "limit0": consumer.messages(rs.topic).limit(0),
+        "union": consumer.messages_union([rs.topic, reg2.topic]),
+    }
+    for name, frame in frames.items():
+        ledger.commit_messages(name, rs.topic, frame)
+        assert ledger.committed(name, rs.topic) == _aggregated(frame), name
+    assert ledger.committed("limit0", rs.topic) == {}
+
+    observed = consumer.messages(rs.topic)
+    observed.limit(0).collect()  # completes the observation with no metrics
+    ledger.commit_messages("limit0-first", rs.topic, observed)
+    assert ledger.committed("limit0-first", rs.topic) == _aggregated(observed)
+
+    outside = OffsetLedger.observe(
+        spark.createDataFrame([(0, 4), (1, 6), (2, 9)], "partition INT, offset LONG"),
+        "t",
+        [0, 1],
+    )
+    outside.collect()
+    ledger.commit_messages("outside", "t", outside)
+    assert ledger.committed("outside", "t") == {0: 5, 1: 7, 2: 10}
+
+
+def test_collect_between_reservation_and_landing_loses_nothing(
+    spark, registry, store, tmp_path, monkeypatch
+):
+    """A tail collected after a publish reserved its offsets but before
+    its files landed sees none of them; committing that tail afterwards
+    does not skip them (committing the snapshot's watermarks, which
+    already hold the reservation, would), and the next tail delivers
+    them."""
+    rs = registry.latest_schema_for_source("test.main.db", "events")
+    prod = Producer(store, registry)
+    ledger = OffsetLedger(spark, str(tmp_path / "offsets"))
+    consumer = Consumer(store, registry, group="gap", ledger=ledger)
+    events = _events(spark, 100)
+    prod.publish(events.filter(F.col("event_id") < 60), rs.schema_id, order_by="event_id")
+    first = consumer.messages(rs.topic, from_committed=True)
+    assert first.count() == 60
+    consumer.commit(rs.topic, first)
+
+    seen = {}
+
+    def hook(topic):
+        seen["frame"] = consumer.messages(rs.topic, from_committed=True)
+        seen["rows"] = seen["frame"].collect()
+
+    monkeypatch.setattr(store, "_post_reserve_hook", hook)
+    prod.publish(events.filter(F.col("event_id") >= 60), rs.schema_id, order_by="event_id")
+    monkeypatch.undo()
+    assert seen["rows"] == []
+    consumer.commit(rs.topic, seen["frame"])
+
+    got = sorted(
+        r.payload.event_id
+        for r in consumer.messages(rs.topic, from_committed=True).collect()
+    )
+    assert got == sorted(r.event_id for r in events.collect() if r.event_id >= 60)
+
+
+def test_publish_runs_one_spark_write_and_persists_nothing(spark, store):
+    """One publish is one Spark write job (counted with adaptive execution
+    off, where one action is one job) and leaves no RDD persisted, also
+    when the write raises; the failed write's staged files never reach a
+    reader and the next publish removes them."""
+    import uuid
+
+    jsc = spark.sparkContext._jsc
+    persisted = set(jsc.getPersistentRDDs().keySet())
+    batch = spark.createDataFrame(
+        [(bytes([i]), bytes([i, i])) for i in range(40)], "key BINARY, value BINARY"
+    )
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        counts = []
+        for _ in range(2):  # a new topic, then one with a sidecar
+            highs, n_jobs = _jobs_in_group(
+                spark, f"publish-{uuid.uuid4().hex}", lambda: store.publish(batch, "t")
+            )
+            counts.append(n_jobs)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert counts == [1, 1]
+    assert sum(highs.values()) == 80
+    assert set(jsc.getPersistentRDDs().keySet()) == persisted
+
+    bad = batch.withColumn(
+        "value", F.when(F.col("value").isNotNull(), F.raise_error(F.lit("boom")))
+    )
+    with pytest.raises(Exception, match="boom"):
+        store.publish(bad, "t")
+    assert set(jsc.getPersistentRDDs().keySet()) == persisted
+    assert store.high_watermarks("t") == highs
+    assert store.read("t").count() == 80
+    store.publish(batch.limit(1), "t")
+    assert not os.listdir(store._staging_dir("t"))
+    assert store.read("t").count() == 81
+
 def _tagged_sidecar(spark, registry, store):
     """A topic whose sidecar holds two tagged publishes (``w:0``, ``v:0``)
     around an untagged one; returns it with the reserved ranges."""
