@@ -1,4 +1,4 @@
-.PHONY: test bench smoke correctness perfbench profile
+.PHONY: test chaos bench smoke correctness perfbench profile
 
 W ?= cdc_publish_tail
 SEED ?= 1
@@ -6,6 +6,13 @@ SEED ?= 1
 # the ROADMAP tier-1 command, verbatim
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# the commit-protocol tests (commit log, ledgers, topic sidecar, staged
+# publish, ingest crash windows): a few minutes instead of the tier-1 run
+chaos:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	python -m pytest tests/test_commit_log.py tests/test_cdc.py tests/test_ingest_chaos.py tests/test_ingest_driver.py -q -p no:cacheprovider && \
+	python -m pytest tests/test_pipeline.py -q -p no:cacheprovider -k "ledger or sidecar or commit or reservation or publish_runs_one or publish_crash or concurrent_publishes"
 
 correctness:
 	python -m pytest tests/test_correctness.py -q

@@ -70,11 +70,7 @@ class Consumer:
         (and None) rather than pay a scan job."""
         if from_committed and self.ledger is not None and starting_offsets is None:
             starting_offsets = self.ledger.committed(self.group, topic)
-        ending_offsets = (
-            self.store.high_watermarks(topic)
-            if self.store.has_sidecar(topic)
-            else None
-        )
+        ending_offsets = self.store.sidecar_watermarks(topic)
         return (
             self.store.read(topic, starting_offsets, ending_offsets),
             ending_offsets,

@@ -1,20 +1,23 @@
 """Table loaders for the driver-generated TPC-H-ish corpus (TESTDATA.md),
-and the driver-side reader/writer of small metadata directories.
+and the driver-side commit log under every ledger.
 
 The loaders are plain parquet scans — Catalyst gets predicate pushdown and
 column pruning for free, which is the point: every operator downstream
 declares its projection/filters and the scan narrows itself
 (`PushedFilters`/`ReadSchema` in .explain).
 
-Metadata directories (the topic watermark sidecar, the consumer offset
-ledger, the ingest ledger) hold a few rows per publish, commit or trigger,
-and a Spark job to read or write them costs more than the batch they
-describe.  ``read_rows``/``write_rows`` read and write them from the DRIVER
-with pyarrow, as Structured Streaming keeps its offset and commit logs.
-``write_table`` is the one file primitive under ``write_rows``; the
-dedup-gated ingest sink also writes each trigger's corpus and index files
-through it.  Spark-written and driver-written files mix in one directory,
-and names starting with ``.`` or ``_`` (tmp files, ``_SUCCESS``, ``.crc``)
+Every ledger of the package is a ``CommitLog``: a directory of small
+parquet files the DRIVER appends (tmp file + atomic rename) and reads
+with pyarrow, as Structured Streaming keeps its offset and commit logs —
+the consumer offsets, each topic's watermark sidecar, the streaming
+publisher's and the batch sink's epochs, and the ingest ledger.  A Spark
+job to read or write them would cost more than the batch they describe.
+Each owner keeps its row schema and its fold (max per key, commit phases,
+revocation, a compaction keep policy); the log owns the files.
+``write_table`` is the one file primitive under the log; the dedup-gated
+ingest sink also writes each trigger's corpus and index files through
+it.  Spark-written and driver-written files mix in one directory, and
+names starting with ``.`` or ``_`` (tmp files, ``_SUCCESS``, ``.crc``)
 are skipped by both engines.
 """
 
@@ -352,22 +355,6 @@ def parquet_nonnull_rows(path: str, col: str) -> int | None:
     return _memo_footer_total((path, col), path, nonnull)
 
 
-def read_rows(
-    path: str, schema, columns: list[str], where=None, partitioning=None
-) -> list[list]:
-    """``columns`` of a metadata directory as Python lists, read by the
-    driver.  The explicit pyarrow ``schema`` resolves Spark- and
-    driver-written files alike, and fills columns older files lack with
-    null; ``partitioning`` (a pyarrow partitioning) reads hive partition
-    directories as columns."""
-    import pyarrow.dataset as pads
-
-    table = pads.dataset(
-        path, format="parquet", schema=schema, partitioning=partitioning
-    ).to_table(columns=columns, filter=where)
-    return [c.to_pylist() for c in table.columns]
-
-
 def write_table(path: str, table) -> str:
     """Write the pyarrow ``table`` into directory ``path`` as ONE parquet
     file, from the driver; returns the file name.  tmp + atomic rename: a
@@ -401,6 +388,98 @@ def write_rows(path: str, schema, rows: list[tuple]) -> str:
             [dict(zip(schema.names, r)) for r in rows], schema=schema
         ),
     )
+
+
+class CommitLog:
+    """An append-only log of small parquet rows in directory ``path``,
+    read and written by the DRIVER (see the module docstring).  Its owner
+    keeps only the row ``schema`` (a pyarrow schema) and its fold.
+
+    - ``append`` writes one file (``write_rows``: tmp + atomic rename),
+      into ``path`` or, for a log with a ``part_col``, into the hive
+      sub-directory ``<part_col>=<part>``;
+    - ``rows`` reads every row with the explicit schema, so files the
+      Spark writer left (with ``_SUCCESS``/``.crc`` siblings) and files
+      older than a column read too (the column as null); a missing
+      directory reads as empty;
+    - ``compact(keep)`` rewrites a flat log to the rows ``keep`` returns.
+
+    A compaction lands its file before it removes any, and removes only
+    files it listed before reading, so a fold over ``rows`` is the same
+    before, during and after it: a reader that overlaps it lists again,
+    and a crash at any point leaves the fold unchanged."""
+
+    def __init__(self, path: str, schema, part_col: str | None = None):
+        self.path = path
+        self.schema = schema
+        self.part_col = part_col
+
+    def append(self, rows: list[tuple], part=None, columns=None) -> str:
+        """One new file of ``rows`` (tuples over ``columns``, by default
+        every column but ``part_col``), into the ``part`` sub-directory
+        when given; returns the file name."""
+        import pyarrow as pa
+
+        names = columns or [n for n in self.schema.names if n != self.part_col]
+        path = self.path
+        if part is not None:
+            path = os.path.join(path, f"{self.part_col}={part}")
+        return write_rows(
+            path, pa.schema([self.schema.field(n) for n in names]), rows
+        )
+
+    def rows(self, columns=None, where=None) -> list[tuple]:
+        """The log's rows as tuples over ``columns`` (default: all),
+        filtered by the pyarrow expression ``where``.  A file removed
+        between the listing and the read (a compaction's) makes the read
+        list again: the compacted file landed before the removal, so the
+        new listing folds the same.  A listing that fails twice alike
+        raises."""
+        import pyarrow as pa
+        import pyarrow.dataset as pads
+
+        part = None
+        if self.part_col is not None:
+            part = pads.partitioning(
+                pa.schema([self.schema.field(self.part_col)]), flavor="hive"
+            )
+        seen: object = ()  # no failed listing yet
+        while True:
+            files = None
+            try:
+                ds = pads.dataset(
+                    self.path, format="parquet", schema=self.schema, partitioning=part
+                )
+                files = ds.files
+                table = ds.to_table(columns=columns, filter=where)
+                return list(zip(*(c.to_pylist() for c in table.columns)))
+            except FileNotFoundError:
+                if not os.path.isdir(self.path):
+                    return []
+                if files == seen:
+                    raise
+                seen = files
+
+    def compact(self, keep) -> None:
+        """Rewrite a flat log to ``keep(rows)``: list its files, read
+        them, land the kept rows as one file, then remove the listed files
+        (Spark's ``_SUCCESS``/``.crc`` siblings too, never a tmp file in
+        flight).  A listed file that a concurrent compaction already
+        removed is gone, not an error."""
+        try:
+            listed = [
+                e.path
+                for e in os.scandir(self.path)
+                if not e.name.endswith(".tmp") and e.is_file()
+            ]
+        except FileNotFoundError:
+            return
+        self.append(keep(self.rows()))
+        for path in listed:
+            try:
+                os.remove(path)
+            except FileNotFoundError:
+                pass
 
 
 def max_per_key(pairs) -> dict:

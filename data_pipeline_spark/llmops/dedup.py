@@ -1788,8 +1788,10 @@ def duplicate_rate(df: DataFrame, text_col: str, n: int = 3) -> float:
 
 
 # Skip-the-contraction threshold, grounded in the r12 forced-rate sweep
-# (tools_contract_crossover.py, 50k-doc corpus, PAIR-style duplicates —
-# the conservative case, least removable clique mass per duplicate):
+# (CONTRACT_CROSSOVER_r12.json; its script is
+# ``git show 7d101e6:tools_contract_crossover.py``; 50k-doc corpus,
+# PAIR-style duplicates — the conservative case, least removable clique
+# mass per duplicate):
 # parity 0 mismatches at every rate; walls cross over near ~14% there,
 # while pile-style duplication (real crawls) crosses near zero and wins
 # 7.4x with 45 GB less spill at 100x/30% (ROUND11_NOTES §4).  The

@@ -17,9 +17,9 @@ parquet row-group filters; `read_stream` is a Structured Streaming file
 source over the same layout.
 
 Metadata is driver-written: the topic watermark sidecar and the consumer
-offset ledger are directories of small parquet files that the DRIVER reads
-and writes with pyarrow (``io.read_rows`` / ``io.write_rows``; see the
-``io`` module docstring for the shared layout rules).
+offset ledger are ``io.CommitLog`` directories, small parquet files the
+DRIVER appends and reads with pyarrow; each keeps only its schema and its
+fold here.
 
 A publish is one Spark job: it writes the batch into a hidden staging
 directory (``<root>/.staging/<topic>/<token>/partition=p/``), reserves the
@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_pipeline_spark.io import max_per_key, read_rows, write_rows
+from data_pipeline_spark.io import CommitLog, max_per_key
 
 
 TOPIC_SCHEMA = T.StructType(
@@ -147,10 +147,8 @@ class TopicStore:
         # sibling of the data dir so topic parquet scans never see it
         return os.path.join(self.root, ".meta", topic)
 
-    def has_sidecar(self, topic: str) -> bool:
-        """Whether the topic has a watermark sidecar, i.e. whether
-        ``high_watermarks`` is a driver read rather than a topic scan."""
-        return os.path.isdir(self._meta_dir(topic))
+    def _meta(self, topic: str) -> CommitLog:
+        return CommitLog(self._meta_dir(topic), self._meta_arrow_schema())
 
     def exists(self, topic: str) -> bool:
         return os.path.isdir(self._dir(topic))
@@ -262,13 +260,8 @@ class TopicStore:
         # disk within [base_offset, next_offset) (find_publish), which is
         # unambiguous because competing publishes always reserve first
         # and so can never occupy a range that was already reserved.
-        write_rows(
-            self._meta_dir(topic),
-            self._meta_arrow_schema(),
-            [
-                (p, n, publish_id, highs.get(p, 0))
-                for p, n in new_highs.items()
-            ],
+        self._meta(topic).append(
+            [(p, n, publish_id, highs.get(p, 0)) for p, n in new_highs.items()]
         )
         self._post_reserve_hook(topic)
         self._land(topic, stage, staged)
@@ -350,15 +343,10 @@ class TopicStore:
         dot/underscore-prefixed names are skipped by both engines).  Falls
         back to a data scan for topics written before the sidecar existed.
         """
-        highs = {p: 0 for p in range(num_partitions)}
-        if self.has_sidecar(topic):
-            parts, nexts = read_rows(
-                self._meta_dir(topic),
-                self._meta_arrow_schema(),
-                ["partition", "next_offset"],
-            )
-            highs.update(max_per_key(zip(parts, nexts)))
+        highs = self.sidecar_watermarks(topic, num_partitions)
+        if highs is not None:
             return highs
+        highs = {p: 0 for p in range(num_partitions)}
         if not self.exists(topic):
             return highs
         rows = (
@@ -371,17 +359,25 @@ class TopicStore:
             highs[r.partition] = r.high + 1
         return highs
 
+    def sidecar_watermarks(
+        self, topic: str, num_partitions: int = 4
+    ) -> dict[int, int] | None:
+        """``high_watermarks`` as the sidecar alone has them (a driver
+        read, no Spark job), or None when it holds no reservation."""
+        marks = max_per_key(self._meta(topic).rows(["partition", "next_offset"]))
+        if not marks:
+            return None
+        return {**{p: 0 for p in range(num_partitions)}, **marks}
+
     def compact_meta(self, topic: str) -> None:
         """Rewrite the watermark sidecar to O(partitions x publishers) rows.
 
         The sidecar appends one row per partition per publish, so a
         long-lived topic accumulates O(publishes) rows; reads already
         aggregate max(next_offset), so compaction is purely a size bound.
-        Like ``OffsetLedger.compact`` it runs on the driver: the compacted
-        file lands (atomically) before the files it replaces are removed,
-        and only files listed before the read are removed, so a concurrent
-        ``high_watermarks`` or a crash mid-compaction never sees the
-        reservations vanish (which would hand out offsets again).
+        ``CommitLog.compact`` keeps a concurrent ``high_watermarks`` and a
+        crash mid-compaction from seeing the reservations vanish (which
+        would hand out offsets again); this supplies the keep policy.
 
         Surviving rows per partition: the max-next_offset row (the
         watermark) PLUS each PUBLISHER's latest tagged reservation
@@ -392,28 +388,21 @@ class TopicStore:
         one would compact the dangling tag away and find_publish would
         re-append an already-landed batch.
         """
-        meta = self._meta_dir(topic)
-        if not os.path.isdir(meta):
-            return
-        old = [
-            n
-            for n in os.listdir(meta)
-            if not n.endswith(".tmp") and os.path.isfile(os.path.join(meta, n))
-        ]
-        schema = self._meta_arrow_schema()
-        watermark: dict[int, tuple] = {}
-        latest_tagged: dict[tuple[int, str], tuple] = {}
-        for row in zip(*read_rows(meta, schema, schema.names)):
-            part, nxt, pid, base = row
-            if part not in watermark or nxt > watermark[part][1]:
-                watermark[part] = row
-            if pid is not None:
-                key = (part, pid.split(":")[0])
-                if key not in latest_tagged or base > latest_tagged[key][3]:
-                    latest_tagged[key] = row
-        write_rows(meta, schema, list({*watermark.values(), *latest_tagged.values()}))
-        for n in old:
-            os.remove(os.path.join(meta, n))
+
+        def keep(rows):
+            watermark: dict[int, tuple] = {}
+            latest_tagged: dict[tuple[int, str], tuple] = {}
+            for row in rows:
+                part, nxt, pid, base = row
+                if part not in watermark or nxt > watermark[part][1]:
+                    watermark[part] = row
+                if pid is not None:
+                    key = (part, pid.split(":")[0])
+                    if key not in latest_tagged or base > latest_tagged[key][3]:
+                        latest_tagged[key] = row
+            return list({*watermark.values(), *latest_tagged.values()})
+
+        self._meta(topic).compact(keep)
 
     def find_publish(
         self, topic: str, publish_id: str
@@ -429,19 +418,14 @@ class TopicStore:
         driver).  A staged batch the crashed attempt left is settled first
         (``_settle_staging``), so the range's rows are on disk whole or not
         at all when the caller counts them."""
-        if not self.has_sidecar(topic):
-            return None
         self._settle_staging(topic)
         import pyarrow.dataset as pads
 
-        parts, bases, nexts = read_rows(
-            self._meta_dir(topic),
-            self._meta_arrow_schema(),
+        out: dict[int, tuple[int, int]] = {}
+        for p, b, n in self._meta(topic).rows(
             ["partition", "base_offset", "next_offset"],
             pads.field("publish_id") == publish_id,
-        )
-        out: dict[int, tuple[int, int]] = {}
-        for p, b, n in zip(parts, bases, nexts):
+        ):
             if p not in out or b > out[p][0]:
                 out[p] = (b, n)
         return out or None
@@ -490,76 +474,56 @@ class OffsetLedger:
     partition like base_consumer.py:597-611, which commits the offsets of
     the messages the consumer delivered.
 
-    Like the watermark sidecar, the ledger is driver-written metadata: the
+    Like the watermark sidecar, the ledger is an ``io.CommitLog``: the
     reference fetches and commits offsets as cheap metadata calls
     (base_consumer.py:566-611), and here ``committed`` is a pyarrow read
     (no Spark job) and ``commit_messages`` writes the rows from the driver,
     from the offsets an earlier action observed when it can (see there).
-    Files written by the earlier Spark path (with their ``_SUCCESS`` and
-    ``.crc`` siblings) and driver-written files mix in one directory: both
-    carry the same four columns, and every read takes the max per key over
-    all of them.
+    Files written by the earlier Spark path carry the same four columns,
+    and every read takes the max per key over all files.
     """
 
     def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    @staticmethod
-    def _arrow_schema():
         import pyarrow as pa
 
-        return pa.schema(
-            [
-                ("group", pa.string()),
-                ("topic", pa.string()),
-                ("partition", pa.int32()),
-                ("next_offset", pa.int64()),
-            ]
+        self.spark = spark
+        self.path = path
+        self._log = CommitLog(
+            path,
+            pa.schema(
+                [
+                    ("group", pa.string()),
+                    ("topic", pa.string()),
+                    ("partition", pa.int32()),
+                    ("next_offset", pa.int64()),
+                ]
+            ),
         )
 
     def committed(self, group: str, topic: str) -> dict[int, int]:
-        if not os.path.exists(self.path):
-            return {}
         import pyarrow.dataset as pads
 
-        parts, nexts = read_rows(
-            self.path,
-            self._arrow_schema(),
-            ["partition", "next_offset"],
-            (pads.field("group") == group) & (pads.field("topic") == topic),
+        return max_per_key(
+            self._log.rows(
+                ["partition", "next_offset"],
+                (pads.field("group") == group) & (pads.field("topic") == topic),
+            )
         )
-        return max_per_key(zip(parts, nexts))
 
     def compact(self) -> None:
         """Rewrite the ledger to one row per (group, topic, partition) —
         commits append, so an always-on consumer group accumulates
         O(commits) rows; `committed` already aggregates, compaction just
-        bounds the directory.  The compacted file lands (atomically)
-        before the files it replaces are removed, and only files listed
-        before the read are removed, so a crash or a concurrent commit
-        never loses a committed offset."""
-        if not os.path.exists(self.path):
-            return
-        old = [
-            n
-            for n in os.listdir(self.path)
-            if not n.endswith(".tmp")
-            and os.path.isfile(os.path.join(self.path, n))
-        ]
-        groups, topics, parts, nexts = read_rows(
-            self.path,
-            self._arrow_schema(),
-            ["group", "topic", "partition", "next_offset"],
+        bounds the directory (``CommitLog.compact``: a crash or a
+        concurrent commit never loses a committed offset)."""
+        self._log.compact(
+            lambda rows: [
+                (*key, n)
+                for key, n in max_per_key(
+                    ((g, t, p), n) for g, t, p, n in rows
+                ).items()
+            ]
         )
-        latest = max_per_key(zip(zip(groups, topics, parts), nexts))
-        write_rows(
-            self.path,
-            self._arrow_schema(),
-            [(*key, n) for key, n in latest.items()],
-        )
-        for n in old:
-            os.remove(os.path.join(self.path, n))
 
     @staticmethod
     def observe(frame: DataFrame, topic: str, partitions) -> DataFrame:
@@ -617,8 +581,4 @@ class OffsetLedger:
                 .collect()
             }
         if nexts:
-            write_rows(
-                self.path,
-                self._arrow_schema(),
-                [(group, topic, p, n) for p, n in nexts.items()],
-            )
+            self._log.append([(group, topic, p, n) for p, n in nexts.items()])

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from data_pipeline_spark.consumer import Consumer
 from data_pipeline_spark.consumer_source import ConsumerSource
-from data_pipeline_spark.io import read_rows, write_rows
+from data_pipeline_spark.io import CommitLog
 
 
 class DynamicSubscriptionRunner:
@@ -104,37 +104,30 @@ class ExactlyOnceBatchSink:
     """
 
     def __init__(self, spark: SparkSession, out_dir: str, ledger_path: str, sink_id: str):
+        import pyarrow as pa
+
         self.spark = spark
         self.out_dir = out_dir
         self.ledger_path = ledger_path
         self.sink_id = sink_id
         self._last_epoch: int | None = None
-
-    @staticmethod
-    def _ledger_schema():
-        import pyarrow as pa
-
-        return pa.schema([("sink_id", pa.string()), ("epoch_id", pa.int64())])
+        self._ledger = CommitLog(
+            ledger_path, pa.schema([("sink_id", pa.string()), ("epoch_id", pa.int64())])
+        )
 
     def _last_committed(self) -> int:
         # One driver read per process start, O(1) per batch after — epoch
         # ids are strictly increasing per checkpoint and replays re-deliver
         # the last epoch, so the high watermark is a complete replay filter
         # (collecting the whole ledger per batch was O(stream lifetime)).
-        # A ledger holding only a crashed first append's ``_temporary``
-        # reads as empty.
+        # A missing ledger, or one holding only a crashed first append's
+        # ``_temporary``, reads as empty.
         if self._last_epoch is None:
-            self._last_epoch = -1
-            if os.path.exists(self.ledger_path):
-                import pyarrow.dataset as pads
+            import pyarrow.dataset as pads
 
-                (epochs,) = read_rows(
-                    self.ledger_path,
-                    self._ledger_schema(),
-                    ["epoch_id"],
-                    pads.field("sink_id") == self.sink_id,
-                )
-                self._last_epoch = max(epochs, default=-1)
+            mine = pads.field("sink_id") == self.sink_id
+            rows = self._ledger.rows(["epoch_id"], mine)
+            self._last_epoch = max((e for (e,) in rows), default=-1)
         return self._last_epoch
 
     def write(self, df: DataFrame, epoch_id: int) -> bool:
@@ -148,7 +141,7 @@ class ExactlyOnceBatchSink:
             .option("partitionOverwriteMode", "dynamic")
             .parquet(self.out_dir)
         )
-        write_rows(self.ledger_path, self._ledger_schema(), [(self.sink_id, epoch_id)])
+        self._ledger.append([(self.sink_id, epoch_id)])
         self._last_epoch = epoch_id
         return True
 

@@ -86,15 +86,17 @@ protocol (superseded pairs are REVOKED by ``n_admitted = -1`` ledger
 rows rather than deleted-in-place, so no crash window double-counts or
 loses a document); ``vacuum()`` sweeps revoked/orphaned directories.
 
-The ledger is driver-written metadata, like the consumer offset ledger:
-the driver reads and appends it with pyarrow (``io.read_rows`` /
-``io.write_rows``, tmp file + atomic rename), so reading the commit state
-runs no Spark job.  Files an earlier Spark writer left (with their
-``_SUCCESS``/``.crc`` siblings) read the same.  A compact append spans one
-file per writer directory, so its revocation rows carry the compacting
-writer (``revoked_by``) and land first: they take effect only once that
-writer's own commit row, written last, exists — the commit stays one
-atomic rename.
+The ledger is an ``io.CommitLog`` partitioned by writer, like the
+consumer offset ledger: the driver appends and reads it with pyarrow (tmp
+file + atomic rename), so reading the commit state runs no Spark job.
+Files an earlier Spark writer left (with their ``_SUCCESS``/``.crc``
+siblings) read the same.  A compact append spans one file per writer
+directory, so its revocation rows carry the compacting writer
+(``revoked_by``) and land first: they take effect only once that writer's
+own commit row, written last, exists — the commit stays one atomic
+rename.  Purging uncommitted epochs stays here rather than in the log:
+the sink deletes what no ledger row names, where a topic publish rolls a
+reserved staging directory forward.
 
 Epoch ids are scoped to ONE streaming checkpoint, so each stream derives
 a stable ``writer_id`` from its ``ledger_path`` and owns its partitions;
@@ -125,7 +127,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_pipeline_spark.io import read_rows, write_rows, write_table
+from data_pipeline_spark.io import CommitLog, write_table
 # ngram_jaccard_pairs is not called here: it stays importable from this
 # module because perfbench's traced run wraps the dedup layers by name here
 from data_pipeline_spark.llmops.dedup import (  # noqa: F401
@@ -176,18 +178,6 @@ class GateDecisions(NamedTuple):
 def _has_partitions(path: str) -> bool:
     return os.path.isdir(path) and any(
         e.startswith(f"{_WRITER_COL}=") for e in os.listdir(path)
-    )
-
-
-def _ledger_schema(writer: bool = False, revoked_by: bool = True):
-    """Ledger columns.  In files the writer lives in the partition
-    directory, and only revocation files carry ``revoked_by``."""
-    import pyarrow as pa
-
-    return pa.schema(
-        ([(_WRITER_COL, pa.string())] if writer else [])
-        + [("epoch_id", pa.int64()), ("n_admitted", pa.int64())]
-        + ([("revoked_by", pa.string())] if revoked_by else [])
     )
 
 
@@ -343,6 +333,8 @@ class DedupGatedIngest:
         within_batch_neardup: bool = True,
         serialize_writers: bool = False,
     ):
+        import pyarrow as pa
+
         if writer_id is not None and writer_id.startswith(_COMPACT_PREFIX):
             raise ValueError(
                 f"writer_id {writer_id!r}: ids starting with "
@@ -374,6 +366,20 @@ class DedupGatedIngest:
         self.last_decisions: GateDecisions | None = None
         # the sidecar schema, inferred by the first read (see _read_docs)
         self._docs_schema = None
+        # the writer lives in the partition directory, and only revocation
+        # files carry revoked_by
+        self._ledger = CommitLog(
+            os.path.join(self.index_dir, "ledger"),
+            pa.schema(
+                [
+                    (_WRITER_COL, pa.string()),
+                    ("epoch_id", pa.int64()),
+                    ("n_admitted", pa.int64()),
+                    ("revoked_by", pa.string()),
+                ]
+            ),
+            _WRITER_COL,
+        )
 
     # -- layout ------------------------------------------------------------
     @property
@@ -382,38 +388,22 @@ class DedupGatedIngest:
 
     @property
     def _ledger_dir(self) -> str:
-        return os.path.join(self.index_dir, "ledger")
+        return self._ledger.path
 
     def _chaos(self, point: str) -> None:
         if point in self.crash_points:
             raise ChaosCrash(point)
 
     # -- commit state (driver-read ledger) ---------------------------------
-    def _ledger_rows(self) -> list[tuple[str, int, int]] | None:
+    def _ledger_rows(self) -> list[tuple[str, int, int]]:
         """Every effective (writer, epoch, n_admitted) ledger row, read by
-        the driver; None when nothing was ever committed.  A revocation
+        the driver; none when nothing was ever committed.  A revocation
         row counts only once the writer that wrote it has committed (see
         ``_append_ledger``); rows without ``revoked_by`` (Spark-written
         ledgers) always count."""
-        if not _has_partitions(self._ledger_dir):
-            return None
-        import pyarrow as pa
-        import pyarrow.dataset as pads
-
-        writers, epochs, ns, by = read_rows(
-            self._ledger_dir,
-            _ledger_schema(writer=True),
-            [_WRITER_COL, "epoch_id", "n_admitted", "revoked_by"],
-            partitioning=pads.partitioning(
-                pa.schema([(_WRITER_COL, pa.string())]), flavor="hive"
-            ),
-        )
-        committed = {w for w, n in zip(writers, ns) if n >= 0}
-        return [
-            (w, e, n)
-            for w, e, n, b in zip(writers, epochs, ns, by)
-            if b is None or b in committed
-        ]
+        rows = self._ledger.rows()
+        committed = {w for w, _e, n, _b in rows if n >= 0}
+        return [(w, e, n) for w, e, n, b in rows if b is None or b in committed]
 
     def _append_ledger(
         self, commit: tuple[str, int, int], revoked: list[tuple[str, int]] = ()
@@ -429,26 +419,18 @@ class DedupGatedIngest:
         for w, e in revoked:
             by_writer.setdefault(w, []).append((e, -1, writer))
         for w, rows in by_writer.items():
-            write_rows(self._ledger_part(w), _ledger_schema(), rows)
-        write_rows(
-            self._ledger_part(writer),
-            _ledger_schema(revoked_by=False),
-            [(epoch, n)],
+            self._ledger.append(rows, part=w)
+        self._ledger.append(
+            [(epoch, n)], part=writer, columns=["epoch_id", "n_admitted"]
         )
 
-    def _ledger_part(self, writer: str) -> str:
-        return os.path.join(self._ledger_dir, f"{_WRITER_COL}={writer}")
-
-    def _committed_pairs(self) -> list[tuple[str, int]] | None:
+    def _committed_pairs(self) -> list[tuple[str, int]]:
         """(writer, epoch) pairs that are committed AND not revoked.
         ``compact`` revokes superseded pairs by appending an
         ``n_admitted = -1`` ledger row, so committed = pairs whose
         minimum n_admitted is still >= 0."""
-        rows = self._ledger_rows()
-        if rows is None:
-            return None
         low: dict[tuple[str, int], int] = {}
-        for w, e, n in rows:
+        for w, e, n in self._ledger_rows():
             low[(w, e)] = min(n, low.get((w, e), n))
         return sorted(p for p, n in low.items() if n >= 0)
 
@@ -457,15 +439,9 @@ class DedupGatedIngest:
             # revocation rows (n_admitted < 0) don't count: an epoch
             # whose data was compacted away is still a committed epoch
             # for replay-skip purposes
-            top = max(
-                (
-                    e
-                    for w, e, n in self._ledger_rows() or []
-                    if w == self.writer_id and n >= 0
-                ),
-                default=None,
-            )
-            self._last_epoch = -1 if top is None else top
+            rows = self._ledger_rows()
+            mine = (e for w, e, n in rows if w == self.writer_id and n >= 0)
+            self._last_epoch = max(mine, default=-1)
         return self._last_epoch
 
     def _purge_uncommitted(self) -> None:
@@ -531,9 +507,9 @@ class DedupGatedIngest:
         are a partition filter on the sidecar read, so neither this
         writer's nor any foreign writer's crash debris — nor a
         compacted-away or not-yet-committed compact partition — ever
-        gates a batch."""
+        gates a batch.  None while no pair is committed."""
         pairs = self._committed_pairs()
-        if pairs is None or not _has_partitions(self._docs_dir):
+        if not pairs or not _has_partitions(self._docs_dir):
             return None
         return (
             self._read_docs()
@@ -682,22 +658,18 @@ class DedupGatedIngest:
             index_rows=self._live_rows,
         )
 
-    def _live_rows(self) -> int | None:
+    def _live_rows(self) -> int:
         """Committed live index size off the LEDGER (O(ledger), no index
         scan) — the lazy supplier behind the gate's adaptive literal/join
         crossover (dedup.adaptive_literal_bound); only evaluated on fat
         triggers whose bucket set exceeds the literal floor."""
-        stats = self._writer_stats()
-        return None if stats is None else sum(s[3] for s in stats)
+        return sum(s[3] for s in self._writer_stats())
 
-    def _writer_stats(self) -> list[tuple] | None:
+    def _writer_stats(self) -> list[tuple]:
         """Per writer: (writer, n_epochs, n_live_epochs, n_admitted_live,
         max_epoch), aggregated on the driver from the ledger rows."""
-        rows = self._ledger_rows()
-        if rows is None:
-            return None
         pairs: dict[tuple[str, int], list[int]] = {}
-        for w, e, n in rows:
+        for w, e, n in self._ledger_rows():
             hi_lo = pairs.setdefault((w, e), [n, n])
             hi_lo[0], hi_lo[1] = max(hi_lo[0], n), min(hi_lo[1], n)
         stats: dict[str, list[int]] = {}
@@ -716,7 +688,7 @@ class DedupGatedIngest:
         O(ledger) view an operator checks before anything corpus-sized.
         Aggregated on the driver; the frame is local (no job)."""
         stats = self._writer_stats()
-        if stats is None:
+        if not stats:
             return None
         cols = [_WRITER_COL, "n_epochs", "n_live_epochs", "n_admitted_live", "max_epoch"]
         return self.spark.createDataFrame(
@@ -797,11 +769,12 @@ class DedupGatedIngest:
         columns (committed, non-revoked epochs only)."""
         return self._corpus_of(self._committed_pairs())
 
-    def _corpus_of(self, pairs: list[tuple[str, int]] | None) -> DataFrame:
-        df = self.spark.read.parquet(self.corpus_dir)
-        if pairs is not None:
-            df = df.filter(_pairs_filter(pairs))
-        return df.drop(_WRITER_COL, _EPOCH_COL)
+    def _corpus_of(self, pairs: list[tuple[str, int]]) -> DataFrame:
+        return (
+            self.spark.read.parquet(self.corpus_dir)
+            .filter(_pairs_filter(pairs))
+            .drop(_WRITER_COL, _EPOCH_COL)
+        )
 
     # -- compaction --------------------------------------------------------
     def vacuum(self) -> int:
@@ -813,8 +786,8 @@ class DedupGatedIngest:
         Never touches a LIVE stream writer's uncommitted current epoch:
         only partitions of writers other than this one, or of this
         writer at-or-below its committed watermark, are candidates."""
-        live = set(self._committed_pairs() or [])
-        revoked = {(w, e) for w, e, n in self._ledger_rows() or [] if n < 0}
+        live = set(self._committed_pairs())
+        revoked = {(w, e) for w, e, n in self._ledger_rows() if n < 0}
         last = self._last_committed()
         removed = 0
         for writer, epoch, path in self._epoch_dirs():

@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_pipeline_spark.io import read_rows, write_rows
+from data_pipeline_spark.io import CommitLog
 from data_pipeline_spark.producer import Producer
 
 
@@ -70,9 +70,14 @@ class StreamingPublisher:
         order_by: str | None = None,
         encrypt_key: tuple[int, bytes] | None = None,
     ):
+        import pyarrow as pa
+
         self.producer = producer
         self.schema_id = schema_id
         self.ledger_path = ledger_path
+        self._ledger = CommitLog(
+            ledger_path, pa.schema([("epoch_id", pa.int64()), ("phase", pa.string())])
+        )
         self.message_type = message_type
         self.num_partitions = num_partitions
         self.order_by = order_by
@@ -86,12 +91,6 @@ class StreamingPublisher:
         # (the pre-r5 shape) was O(stream lifetime) driver work per trigger.
         self._last_epoch: int | None = None
 
-    @staticmethod
-    def _ledger_schema():
-        import pyarrow as pa
-
-        return pa.schema([("epoch_id", pa.int64()), ("phase", pa.string())])
-
     def _publish_id(self, epoch_id: int) -> str:
         """Deterministic per (checkpoint, epoch): stable across restarts so
         a replay finds the crashed attempt's reservation."""
@@ -101,33 +100,23 @@ class StreamingPublisher:
         return f"{stable}:{epoch_id}"
 
     def _append_ledger(self, epoch_id: int, phase: str) -> None:
-        write_rows(self.ledger_path, self._ledger_schema(), [(epoch_id, phase)])
+        self._ledger.append([(epoch_id, phase)])
 
     def _seed(self) -> None:
         """One ledger read per process start: last committed epoch + any
         dangling intent (at most one — epochs are sequential).  The driver
-        reads the ledger (``io.read_rows``), so Spark-written ledgers, and
-        a directory holding only a crashed first append's ``_temporary``,
-        read too (the latter as empty)."""
+        reads the ledger (``io.CommitLog``), so Spark-written ledgers, and
+        a missing one or one holding only a crashed first append's
+        ``_temporary``, read too (the latter two as empty)."""
         if self._last_epoch is not None:
             return
         self._pending: int | None = None
-        if not os.path.exists(self.ledger_path):
-            self._last_epoch = -1
-            return
-        epochs, phases = read_rows(
-            self.ledger_path, self._ledger_schema(), ["epoch_id", "phase"]
-        )
+        rows = self._ledger.rows()
         # pre-r6 ledgers have no phase column: treat those rows as commits
         self._last_epoch = max(
-            (e for e, p in zip(epochs, phases) if p in (None, "commit")),
-            default=-1,
+            (e for e, p in rows if p in (None, "commit")), default=-1
         )
-        intents = [
-            e
-            for e, p in zip(epochs, phases)
-            if p == "intent" and e > self._last_epoch
-        ]
+        intents = [e for e, p in rows if p == "intent" and e > self._last_epoch]
         if intents:
             self._pending = max(intents)
 

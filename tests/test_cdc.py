@@ -527,7 +527,7 @@ def _arm_publish_crash(point, store, monkeypatch):
     before the staging directory is removed."""
     import shutil
 
-    from data_pipeline_spark.sources import file_topic
+    from data_pipeline_spark import io
 
     armed = [True]
 
@@ -537,7 +537,7 @@ def _arm_publish_crash(point, store, monkeypatch):
             raise _Crash(point)
 
     if point == "staged":
-        real_write = file_topic.write_rows
+        real_write = io.write_rows
         meta = os.path.join(store.root, ".meta")
 
         def write_rows(path, *a):
@@ -545,7 +545,7 @@ def _arm_publish_crash(point, store, monkeypatch):
                 fire()
             return real_write(path, *a)
 
-        monkeypatch.setattr(file_topic, "write_rows", write_rows)
+        monkeypatch.setattr(io, "write_rows", write_rows)
     elif point == "reserved":
         monkeypatch.setattr(store, "_post_reserve_hook", lambda topic: fire())
     elif point == "first_rename":

@@ -77,6 +77,25 @@ def test_crash_window_replay_is_exactly_once(spark, tmp_path, crash_at):
     assert _corpus_ids(spark, tmp_path) == [1, 2, 3, 12, 13]
 
 
+@pytest.mark.parametrize("crash_at", ["after_corpus", "after_index"])
+def test_first_trigger_crash_leaves_nothing_committed(spark, tmp_path, crash_at):
+    """A sink whose first trigger dies before its ledger row has no
+    committed pair: the files the trigger left are neither corpus nor
+    index, and the replay admits the batch once."""
+    sink = _sink(spark, tmp_path)
+    sink.crash_points = {crash_at}
+    with pytest.raises(ChaosCrash):
+        sink.admit_batch(_df(spark, DOCS1), 0)
+    assert _corpus_ids(spark, tmp_path) == [1, 2, 3]  # the debris is there
+
+    fresh = _sink(spark, tmp_path)
+    assert fresh._committed_pairs() == []
+    assert fresh.committed_index() is None
+    assert fresh.corpus().collect() == []
+    assert fresh.admit_batch(_df(spark, DOCS1), 0) == 3
+    assert sorted(r.doc_id for r in fresh.corpus().collect()) == [1, 2, 3]
+
+
 def test_partial_corpus_append_is_purged_and_rewritten(spark, tmp_path):
     sink = _sink(spark, tmp_path)
     assert sink.admit_batch(_df(spark, DOCS1), 0) == 3

@@ -315,21 +315,21 @@ def test_compact_append_cut_between_files_revokes_nothing(spark, tmp_path, monke
     """compact's ledger append writes the revocation files first and its
     own commit row last; cut in between, the revocations stay inert, the
     compacted copy stays an orphan, and vacuum plus a rerun converge."""
-    import data_pipeline_spark.streaming.ingest as ingest
+    import data_pipeline_spark.io as io
 
     sink = _sink(spark, tmp_path, "a")
     sink.admit_batch(_df(spark, [(1, "the quick brown fox jumps over the lazy dog")]), 0)
     sink.admit_batch(_df(spark, [(2, "spark writes parquet files into warehouse tables")]), 1)
     pairs = sink._committed_pairs()
 
-    real = ingest.write_rows
+    real = io.write_rows
 
     def cut(path, schema, rows):
         if os.path.basename(path).startswith(f"{W}=c"):
             raise ChaosCrash("between ledger files")
         return real(path, schema, rows)
 
-    monkeypatch.setattr(ingest, "write_rows", cut)
+    monkeypatch.setattr(io, "write_rows", cut)
     with pytest.raises(ChaosCrash):
         sink.compact()
     monkeypatch.undo()
