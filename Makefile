@@ -1,4 +1,4 @@
-.PHONY: test chaos bench smoke correctness perfbench profile
+.PHONY: test chaos ann bench smoke correctness perfbench profile
 
 W ?= cdc_publish_tail
 SEED ?= 1
@@ -13,6 +13,14 @@ chaos:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	python -m pytest tests/test_commit_log.py tests/test_cdc.py tests/test_ingest_chaos.py tests/test_ingest_driver.py -q -p no:cacheprovider && \
 	python -m pytest tests/test_pipeline.py -q -p no:cacheprovider -k "ledger or sidecar or commit or reservation or publish_runs_one or publish_crash or concurrent_publishes"
+
+# the ANN contract tests (one trained model, PQ / IVF / IVF-PQ search,
+# centroid rows and probes, NULL and degenerate corpora, the semantic
+# gate): a few minutes instead of the tier-1 run
+ann:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	python -m pytest tests/test_semantic_gate.py -q -p no:cacheprovider && \
+	python -m pytest tests/test_llmops.py -q -p no:cacheprovider -k "pq or ivf or centroid or sq_dists or degenerate_corpora"
 
 correctness:
 	python -m pytest tests/test_correctness.py -q

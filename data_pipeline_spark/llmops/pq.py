@@ -10,9 +10,12 @@ reads ONLY the codes: per query, an (m x n_centroids) lookup table of
 subspace inner products is built once, and each candidate's approximate
 score is m table lookups.  The production pattern implemented here:
 
-1. ``pq_train`` — codebooks from a DETERMINISTIC bounded sample
-   (md5-ordered, like ivf_assign's centroid choice) with driver-side
-   Lloyd iterations: training is O(sample), never O(corpus).
+1. ``ann_train`` — the ONE trainer of every ANN index (``pq_topk``,
+   ``ivfpq_topk``, the semantic gate, ``similarity.ivf_topk`` and the
+   IVF serving layout): an ``AnnModel`` of (coarse centroids, residual
+   codebooks, error bound) from one DETERMINISTIC bounded sample
+   (NULL-filtered, md5-ordered) with driver-side Lloyd iterations:
+   training is O(sample), never O(corpus).
 2. ``pq_encode`` — one mapInPandas scan, numpy argmin per subspace;
    the corpus never shuffles.
 3. ``pq_topk`` — ADC shortlist over the codes (queries broadcast into
@@ -25,16 +28,22 @@ ivf_exact_topk): with per-subspace codebooks containing every distinct
 training subvector and zero Lloyd iterations, encoding is lossless, the
 ADC ranking equals the exact float ranking, and the re-ranked top-k is
 the brute-force answer.
+
+NULL vectors follow ``similarity.cosine_topk``'s contract: they train
+nothing, encode to NULL codes, score -inf in the ADC scan (so they never
+displace a real candidate from a shortlist) and re-rank with a NULL
+cosine, last.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -47,34 +56,117 @@ from pyspark.sql.types import (
 from data_pipeline_spark.llmops import similarity
 
 
-def pq_train(
+class AnnModel(NamedTuple):
+    """One trained ANN state — the IndexIVFPQ layout (Jegou TPAMI 2011
+    §V / Faiss):
+
+    - ``coarse``: (n_lists, d) unit centroids of the IVF quantizer, or
+      None for a model without one (flat PQ);
+    - ``books``: (m, width, d/m) per-subspace PQ codebooks, trained on
+      the residuals against ``coarse`` (the raw vectors without it), or
+      None for a model without them (IVF-flat);
+    - ``err_bound``: the measured ADC-cosine error ceiling over the
+      training sample, |r − r̂| / |x| maxed (×1.25 out-of-sample slack);
+      0.0 without codebooks.
+
+    A model trained on no vectors (an empty or all-NULL corpus) has zero
+    centroids and zero-width codebooks."""
+
+    coarse: np.ndarray | None
+    books: np.ndarray | None
+    err_bound: float
+
+    @property
+    def rows(self) -> list:
+        """The coarse centroids as quantized rows (list_id, c_q, c_n),
+        computed on the driver (``similarity.driver_centroid_rows``) —
+        what in-row assignment and probe selection key off.  A model
+        with zero centroids has ONE list whose centroid is NULL, so every
+        vector lands on list 0 and every query probes it (the
+        NULL-vector contract of ``similarity.ivf_assign_col``)."""
+        if len(self.coarse):
+            return similarity.driver_centroid_rows(self.coarse)
+        return [Row(list_id=0, c_q=None, c_n=None)]
+
+    def to_dict(self) -> dict:
+        """The persisted form (a sidecar's ``model.json`` keys)."""
+        return {
+            "coarse": self.coarse.tolist(),
+            "codebooks": self.books.tolist(),
+            "err_bound": self.err_bound,
+        }
+
+    @classmethod
+    def from_dict(cls, d: dict) -> AnnModel:
+        return cls(
+            np.asarray(d["coarse"], np.float64),
+            np.asarray(d["codebooks"], np.float64),
+            float(d["err_bound"]),
+        )
+
+
+def ann_train(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = 8,
-    n_centroids: int | None = 32,
+    n_lists: int | None = 64,
+    m: int | None = 8,
+    n_centroids: int | None = 64,
     sample: int = 4096,
     iters: int = 10,
-) -> np.ndarray:
-    """Train per-subspace codebooks on a deterministic md5-ordered sample.
+) -> AnnModel:
+    """Train an ``AnnModel`` on ONE driver-side sample: the first
+    ``max(sample, n_lists)`` non-NULL vectors in md5(id) order.
 
-    Returns an (m, n_centroids, d/m) float64 array.  ``n_centroids=None``
-    is the lossless limit: each subspace codebook holds every distinct
-    subvector of the sample (and ``iters`` is ignored — the codebook IS
-    the point set).  Driver memory is bounded by the sample, not the
-    corpus (the ivf_assign / union-find guard pattern).
-    """
+    1. spherical k-means (``similarity.spherical_kmeans``, ``iters``
+       Lloyd rounds) for the ``n_lists`` coarse centroids — skipped when
+       ``n_lists`` is None;
+    2. the first ``sample`` rows assigned to their lists on the driver
+       by the quantized kernel ``ivf_assign_col`` runs per batch
+       (``assign_rows_ndarray``: same bytes, same list_ids — pinned by
+       test_ivfpq_driver_sample_assignment_parity);
+    3. per-subspace codebooks on the residuals (``_train_books``) —
+       skipped when ``m`` is None; ``n_centroids=None`` is the lossless
+       limit (every distinct training subvector);
+    4. the error bound: every training residual reconstructed through
+       the codebooks, worst |r − r̂| / |x|.
+
+    O(sample) everywhere and deterministic (no RNG), so a crash-replayed
+    or rebuilt index retrains bit-identically."""
     rows = (
         df.select(
             F.col(vec_col).alias("v"),
             F.md5(F.col(id_col).cast("string")).alias("h"),
         )
+        .filter(F.col("v").isNotNull())  # NULL vectors can't train
         .orderBy("h")
-        .limit(sample)
+        .limit(max(sample, n_lists or 0))
         .collect()
     )
+    if not rows:
+        return AnnModel(
+            None if n_lists is None else np.zeros((0, 0)),
+            None if m is None else np.zeros((m, 0, 0)),
+            0.0,
+        )
     x = np.asarray([r.v for r in rows], np.float64)
-    return _train_books(x, m, n_centroids, iters)
+    coarse = None
+    if n_lists is not None:
+        coarse, _xn = similarity.spherical_kmeans(x, n_lists, iters)
+    if m is None:
+        return AnnModel(coarse, None, 0.0)
+    x = x[:sample]
+    res = x
+    if coarse is not None:
+        lids = similarity.assign_rows_ndarray(
+            x, similarity.driver_centroid_rows(coarse)
+        )
+        res = x - coarse[lids]
+    books = _train_books(res, m, n_centroids, iters)
+    norms = np.linalg.norm(x, axis=1)
+    err = np.linalg.norm(res - _decode(_encode(res, books), books), axis=1)
+    err /= np.where(norms == 0, 1.0, norms)
+    return AnnModel(coarse, books, float(err.max() * 1.25 + 1e-9))
 
 
 def _sq_dists(xs: np.ndarray, cent: np.ndarray) -> np.ndarray:
@@ -105,9 +197,9 @@ def _sq_dists(xs: np.ndarray, cent: np.ndarray) -> np.ndarray:
 def _train_books(
     x: np.ndarray, m: int, n_centroids: int | None, iters: int
 ) -> np.ndarray:
-    """Per-subspace k-means over a driver-side training matrix (raw
-    vectors for pq_train, IVF residuals for ivfpq_topk and
-    semantic_model_train)."""
+    """Per-subspace k-means over ``ann_train``'s driver-side training
+    matrix (raw vectors, or IVF residuals when the model has a coarse
+    quantizer)."""
     n, d = x.shape
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -144,6 +236,34 @@ def _train_books(
     return out
 
 
+def _encode(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m) int32 codes: each subvector's nearest codebook centroid."""
+    m, _w, sub = books.shape
+    codes = np.empty((len(x), m), np.int32)
+    for j in range(m):
+        d2 = _sq_dists(x[:, j * sub : (j + 1) * sub], books[j])
+        codes[:, j] = d2.argmin(axis=1)
+    return codes
+
+
+def _decode(codes: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """The (n, d) reconstruction of ``codes`` through the codebooks."""
+    return np.concatenate(
+        [books[j][codes[:, j]] for j in range(books.shape[0])], axis=1
+    )
+
+
+def _dense(vs: list, dim: int) -> np.ndarray:
+    """Collected vectors as an (n, dim) float64 matrix, a NULL vector as
+    the zero vector.  A model trained on no vectors has dim 0 and scores
+    nothing (every corpus code is NULL), so its query rows are empty."""
+    if not dim:
+        return np.zeros((len(vs), 0))
+    return np.asarray(
+        [v if v is not None else [0.0] * dim for v in vs], np.float64
+    ).reshape(len(vs), dim)
+
+
 def pq_encode(
     df: DataFrame,
     codebooks: np.ndarray,
@@ -157,24 +277,25 @@ def pq_encode(
     carry ``list_id`` and each vector is encoded as its RESIDUAL
     against its assigned centroid (the IndexIVFPQ layout); list_id is
     kept in the output so the ADC scan can add back the per-list
-    ⟨query, centroid⟩ term."""
-    m, _k, sub = codebooks.shape
+    ⟨query, centroid⟩ term.  A NULL vector encodes to NULL codes."""
     residual = coarse is not None
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:  # empty Arrow batch: asarray yields 1-D, skip
                 continue
-            x = np.asarray(list(pdf["v"]), np.float64)
-            if residual:
-                lids = pdf["list_id"].to_numpy()
-                x = x - coarse[lids]
-            codes = np.empty((len(x), m), np.int32)
-            for j in range(m):
-                xs = x[:, j * sub : (j + 1) * sub]
-                d2 = _sq_dists(xs, codebooks[j])
-                codes[:, j] = d2.argmin(axis=1)
-            out = {"id": pdf["id"], "codes": [c.tolist() for c in codes]}
+            live = pdf["v"].notna().to_numpy()
+            codes = []
+            if live.any():
+                x = np.asarray(list(pdf["v"][live]), np.float64)
+                if residual:
+                    x = x - coarse[pdf["list_id"].to_numpy()[live]]
+                codes = _encode(x, codebooks).tolist()
+            it = iter(codes)
+            out = {
+                "id": pdf["id"],
+                "codes": [next(it) if ok else None for ok in live],
+            }
             if residual:
                 out["list_id"] = pdf["list_id"]
             yield pd.DataFrame(out)
@@ -190,81 +311,29 @@ def pq_encode(
     return df.select(*cols).mapInPandas(run, schema=StructType(fields))
 
 
-def pq_topk(
+def _codes(pdf: pd.DataFrame, m: int) -> tuple[np.ndarray, np.ndarray]:
+    """A codes batch as (live mask, (rows, m) int32 codes): a NULL codes
+    row (a NULL vector) is masked out and holds zeros."""
+    live = pdf["codes"].notna().to_numpy()
+    c = np.zeros((len(pdf), m), np.int32)
+    if live.any():
+        c[live] = np.asarray(list(pdf["codes"][live]), np.int32)
+    return live, c
+
+
+def _rerank(
+    partials: DataFrame,
     base: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    m: int = 8,
-    n_centroids: int | None = 64,
-    shortlist: int = 200,
-    codebooks: np.ndarray | None = None,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    shortlist: int,
 ) -> DataFrame:
-    """ADC shortlist over PQ codes + exact quantized-cosine re-rank.
-
-    Defaults (n_centroids=64, shortlist=200 = 20*k re-rank depth) come
-    from the r10 measured recall table (ROUND10_NOTES.md): recall@10
-    0.88-0.99 on the uniform-sphere corpus.  ``shortlist`` is the
-    re-rank depth — the only knob that trades exact-math volume for
-    recall; 20*k is cheap (per query, 20*k exact cosines vs a corpus
-    scan) and the first knob to raise if the ADC ranking is noisy.
-
-    The queries (small by contract, like cosine_topk) are collected and
-    their per-subspace inner-product tables ride into the code-scan kernel
-    as a closure broadcast; the corpus-side scan reads codes only.  The
-    shortlist join back to full vectors touches |queries| * shortlist
-    rows.  Output: (query_id, neighbor_id, rank, cos_sim) with the exact
-    cosine — identical schema to cosine_topk.
-    """
-    if codebooks is None:
-        codebooks = pq_train(
-            base, id_col, vec_col, m=m, n_centroids=n_centroids
-        )
-    m_, _width, sub = codebooks.shape
-
-    qrows = queries.select(
-        F.col(id_col).cast("long").alias("qid"), F.col(vec_col).alias("v")
-    ).collect()
-    qids = np.asarray([r.qid for r in qrows], np.int64)
-    qx = np.asarray([r.v for r in qrows], np.float64)
-    # tables[q][j][c] = <query subvector, centroid c of subspace j>
-    tables = np.einsum(
-        "qjs,jcs->qjc",
-        qx.reshape(len(qx), m_, sub),
-        codebooks,
-    )
-
-    codes = pq_encode(base, codebooks, id_col, vec_col)
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:  # take=0 would break argpartition; skip
-                continue
-            c = np.asarray(list(pdf["codes"]), np.int32)  # (rows, m)
-            ids = pdf["id"].to_numpy()
-            # approx inner product: sum over subspaces of table lookups
-            approx = np.zeros((len(tables), len(c)))
-            for j in range(m_):
-                approx += tables[:, j, :][:, c[:, j]]
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(tables)):
-                take = min(shortlist, len(c))
-                top = np.argpartition(-approx[qi], take - 1)[:take]
-                out_q.extend([int(qids[qi])] * take)
-                out_n.extend(ids[top].tolist())
-                out_s.extend(approx[qi][top].tolist())
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "approx_ip": out_s}
-            )
-
-    # per-partition shortlists -> global shortlist per query (tiny)
-    partials = codes.mapInPandas(
-        scan,
-        schema="query_id long, neighbor_id long, approx_ip double",
-    )
-    from pyspark.sql import Window
-
+    """Per-partition ADC shortlists (query_id, neighbor_id, approx_ip) ->
+    the global ``shortlist`` best per query (tiny), then the EXACT
+    quantized-cosine re-rank of those candidates only.  Output:
+    (query_id, neighbor_id, rank, cos_sim) — cosine_topk's schema."""
     w_short = Window.partitionBy("query_id").orderBy(
         F.col("approx_ip").desc(), F.col("neighbor_id").asc()
     )
@@ -274,8 +343,6 @@ def pq_topk(
         .filter(F.col("rn") <= shortlist)
         .select("query_id", "neighbor_id")
     )
-
-    # exact quantized-cosine re-rank of the shortlist only
     qv = similarity.quantized(queries, id_col, vec_col, "query")
     nv = similarity.quantized(base, id_col, vec_col, "neighbor")
     scored = (
@@ -302,19 +369,91 @@ def pq_topk(
     )
 
 
+def pq_topk(
+    base: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 10,
+    shortlist: int = 200,
+    model: AnnModel | None = None,
+) -> DataFrame:
+    """ADC shortlist over PQ codes + exact quantized-cosine re-rank.
+
+    ``model`` is a flat-PQ ``AnnModel`` (``ann_train(..., n_lists=None)``,
+    only its codebooks are read).  The default, trained on ``base``
+    (m=8, n_centroids=64), and shortlist=200 = 20*k re-rank depth come
+    from the r10 measured recall table (ROUND10_NOTES.md): recall@10
+    0.88-0.99 on the uniform-sphere corpus.  ``shortlist`` is the
+    re-rank depth — the only knob that trades exact-math volume for
+    recall; 20*k is cheap (per query, 20*k exact cosines vs a corpus
+    scan) and the first knob to raise if the ADC ranking is noisy.
+
+    The queries (small by contract, like cosine_topk) are collected and
+    their per-subspace inner-product tables ride into the code-scan kernel
+    as a closure broadcast; the corpus-side scan reads codes only.  The
+    shortlist join back to full vectors touches |queries| * shortlist
+    rows.  Output: (query_id, neighbor_id, rank, cos_sim) with the exact
+    cosine — identical schema to cosine_topk.
+    """
+    if model is None:
+        model = ann_train(base, id_col, vec_col, n_lists=None)
+    codebooks = model.books
+    m_, _width, sub = codebooks.shape
+
+    qrows = queries.select(
+        F.col(id_col).cast("long").alias("qid"), F.col(vec_col).alias("v")
+    ).collect()
+    qids = np.asarray([r.qid for r in qrows], np.int64)
+    qx = _dense([r.v for r in qrows], m_ * sub)
+    # tables[q][j][c] = <query subvector, centroid c of subspace j>
+    tables = np.einsum(
+        "qjs,jcs->qjc",
+        qx.reshape(len(qx), m_, sub),
+        codebooks,
+    )
+
+    codes = pq_encode(base, codebooks, id_col, vec_col)
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:  # take=0 would break argpartition; skip
+                continue
+            live, c = _codes(pdf, m_)
+            ids = pdf["id"].to_numpy()
+            # approx inner product: sum over subspaces of table lookups
+            adc = np.zeros((len(tables), int(live.sum())))
+            for j in range(m_):
+                adc += tables[:, j, :][:, c[live, j]]
+            approx = np.full((len(tables), len(c)), -np.inf)
+            approx[:, live] = adc
+            out_q, out_n, out_s = [], [], []
+            for qi in range(len(tables)):
+                take = min(shortlist, len(c))
+                top = np.argpartition(-approx[qi], take - 1)[:take]
+                out_q.extend([int(qids[qi])] * take)
+                out_n.extend(ids[top].tolist())
+                out_s.extend(approx[qi][top].tolist())
+            yield pd.DataFrame(
+                {"query_id": out_q, "neighbor_id": out_n, "approx_ip": out_s}
+            )
+
+    partials = codes.mapInPandas(
+        scan,
+        schema="query_id long, neighbor_id long, approx_ip double",
+    )
+    return _rerank(partials, base, queries, id_col, vec_col, k, shortlist)
+
+
 def ivfpq_topk(
     base: DataFrame,
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    n_lists: int = 64,
     n_probe: int = 24,
-    m: int = 8,
-    n_centroids: int | None = 64,
     shortlist: int = 200,
-    sample: int = 4096,
-    kmeans_iters: int = 10,
+    model: AnnModel | None = None,
 ) -> DataFrame:
     """IVF coarse routing + RESIDUAL-PQ ADC inside the probed lists +
     exact re-rank — the complete billion-scale ANN layout (coarse index
@@ -322,63 +461,33 @@ def ivfpq_topk(
     what IS scanned by ~4d/m bytes; exact math touches only the
     shortlist).
 
-    PQ codebooks are trained on and encode IVF residuals (vector −
-    assigned centroid), the Jegou TPAMI 2011 §V / Faiss IndexIVFPQ
-    layout: ⟨q, x⟩ = ⟨q, c_list⟩ + ⟨q, residual⟩, so the ADC scan adds a
-    per-(query, list) scalar (a tiny Q×L matrix built driver-side from
-    the broadcast centroids) to the usual m subspace table lookups.
-    ``shortlist`` is the re-rank depth: how many ADC candidates per
-    query get exact quantized-cosine scores.
+    ``model``'s PQ codebooks were trained on and encode IVF residuals
+    (vector − assigned centroid), the Jegou TPAMI 2011 §V / Faiss
+    IndexIVFPQ layout: ⟨q, x⟩ = ⟨q, c_list⟩ + ⟨q, residual⟩, so the ADC
+    scan adds a per-(query, list) scalar (a tiny Q×L matrix built
+    driver-side from the broadcast centroids) to the usual m subspace
+    table lookups.  ``shortlist`` is the re-rank depth: how many ADC
+    candidates per query get exact quantized-cosine scores.
 
-    Defaults (n_probe=24/64 spherical-k-means lists, n_centroids=64,
-    shortlist=200 = 20*k) are from the r10 measured recall table
-    (ROUND10_NOTES.md): recall@10 0.83-0.90 at a 0.38 scan fraction on
-    the UNIFORM-sphere synthetic corpus — the adversarial geometry,
-    where top-10 neighbors sit at cos 0.31-0.41 against a cos~0
-    background and no coarse quantizer can concentrate them.  Clustered
-    real-world corpora (and the near-dup-structured 10x rehearsal
-    corpus) reach higher recall at far lower n_probe — tune n_probe
-    first, then shortlist.
+    Defaults (a model trained on ``base`` with 64 spherical-k-means
+    lists and 64 centroids per subspace, n_probe=24, shortlist=200 =
+    20*k) are from the r10 measured recall table (ROUND10_NOTES.md):
+    recall@10 0.83-0.90 at a 0.38 scan fraction on the UNIFORM-sphere
+    synthetic corpus — the adversarial geometry, where top-10 neighbors
+    sit at cos 0.31-0.41 against a cos~0 background and no coarse
+    quantizer can concentrate them.  Clustered real-world corpora (and
+    the near-dup-structured 10x rehearsal corpus) reach higher recall at
+    far lower n_probe — tune n_probe first, then shortlist.
 
     In-sandbox the probe filter is a mask inside the code-scan kernel; at
     100 TB the codes table is written partitioned by list_id (like
     ivf_topk's assignments) so probing prunes file reads, not rows.
     Output schema matches cosine_topk/ivf_topk/pq_topk.
     """
-    from pyspark.sql import Window
-
-    # ONE md5-ordered TakeOrdered collect serves BOTH driver-side
-    # trainers (r12 opt): the coarse k-means sample is the NULL-filtered
-    # prefix of the SAME ordering the PQ residual sample cuts, so when
-    # the unfiltered prefix holds no NULL vectors the two row sets
-    # coincide and the second sample job disappears.  NULL vectors in
-    # the prefix, or kmeans_iters<=0, fall back to the original
-    # two-collect path unchanged (exact parity both ways — the trainer
-    # math below is byte-for-byte ivf_centroids_with_rows' k-means arm).
-    n_samp = max(sample, n_lists)
-    srows = (
-        base.select(
-            F.col(vec_col).alias("v"),
-            F.md5(F.col(id_col).cast("string")).alias("h"),
-        )
-        .orderBy("h")
-        .limit(n_samp)
-        .collect()
-    )
-    if kmeans_iters > 0 and srows and all(r.v is not None for r in srows):
-        cent, _xn = similarity.spherical_kmeans(
-            np.asarray([r.v for r in srows], np.float64),
-            n_lists,
-            kmeans_iters,
-        )
-        cq_rows = similarity.driver_centroid_rows(cent, with_vec=True)
-    else:
-        _, cq_rows = similarity.ivf_centroids_with_rows(
-            base, id_col, vec_col, n_lists, kmeans_iters, sample,
-            with_vec=True,
-        )
-    coarse = np.asarray([r.c_vec for r in cq_rows], np.float64)
-    srows = srows[:sample]
+    if model is None:
+        model = ann_train(base, id_col, vec_col)
+    coarse, codebooks = model.coarse, model.books
+    cq_rows = model.rows
     # list_id IN-ROW on the corpus scan (r9 joined a separately-derived
     # assignments frame back onto base: a corpus-sized self-join + the
     # assignment window shuffle, both gone — see ivf_assign_col)
@@ -387,15 +496,6 @@ def ivfpq_topk(
         F.col(vec_col),
         similarity.ivf_assign_col(cq_rows, F.col(vec_col)).alias("list_id"),
     )
-
-    # PQ residual sample: the first ``sample`` rows of the SAME collect
-    # (cut above), assigned on the DRIVER via assign_rows_ndarray — the
-    # same numpy kernel the ivf_assign_col UDF runs per batch, on the
-    # same float64 values, so codebooks stay bit-identical (pinned by
-    # test_ivfpq_driver_sample_assignment_parity).
-    sx = np.asarray([r.v for r in srows], np.float64)
-    slids = similarity.assign_rows_ndarray(sx, cq_rows)
-    codebooks = _train_books(sx - coarse[slids], m, n_centroids, 10)
     m_, _width, sub = codebooks.shape
 
     # queries collect once, WITH their Spark-quantized forms: probe
@@ -410,7 +510,7 @@ def ivfpq_topk(
         similarity.quantized_norm_sq(f"`{vec_col}`").alias("qn"),
     ).collect()
     qids = [int(r.qid) for r in qrows]
-    qx = np.asarray([r.v for r in qrows], np.float64)
+    qx = _dense([r.v for r in qrows], m_ * sub)
     tables = np.einsum("qjs,jcs->qjc", qx.reshape(len(qx), m_, sub), codebooks)
     qc = qx @ coarse.T  # (Q, L): the per-(query, list) ⟨q, centroid⟩ term
 
@@ -426,7 +526,7 @@ def ivfpq_topk(
         for pdf in batches:
             if pdf.empty:  # empty Arrow batch: asarray yields 1-D, skip
                 continue
-            c = np.asarray(list(pdf["codes"]), np.int32)
+            live, c = _codes(pdf, m_)
             ids = pdf["id"].to_numpy()
             lists = pdf["list_id"].to_numpy()
             out_q, out_n, out_s = [], [], []
@@ -434,11 +534,14 @@ def ivfpq_topk(
                 mask = np.isin(lists, list(probe_lists.get(qid, ())))
                 if not mask.any():
                     continue
-                sub_c, sub_ids = c[mask], ids[mask]
-                approx = qc[qi][lists[mask]].copy()
+                hit = mask & live
+                adc = qc[qi][lists[hit]].copy()
                 for j in range(m_):
-                    approx += tables[qi, j, :][sub_c[:, j]]
-                take = min(shortlist, len(sub_c))
+                    adc += tables[qi, j, :][c[hit, j]]
+                approx = np.full(len(c), -np.inf)
+                approx[hit] = adc
+                approx, sub_ids = approx[mask], ids[mask]
+                take = min(shortlist, len(sub_ids))
                 top = np.argpartition(-approx, take - 1)[:take]
                 out_q.extend([qid] * take)
                 out_n.extend(sub_ids[top].tolist())
@@ -450,108 +553,16 @@ def ivfpq_topk(
     partials = codes.mapInPandas(
         scan, schema="query_id long, neighbor_id long, approx_ip double"
     )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("approx_ip").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        partials.filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("rn", F.row_number().over(w_short))
-        .filter(F.col("rn") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    qv = similarity.quantized(queries, id_col, vec_col, "query")
-    nv = similarity.quantized(base, id_col, vec_col, "neighbor")
-    scored = (
-        cand.join(F.broadcast(qv), cand.query_id == qv.query_id)
-        .drop(qv.query_id)
-        .join(nv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.expr(
-                similarity.cos_cols_sql(
-                    "query_q", "neighbor_q", "query_n", "neighbor_n"
-                )
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _rerank(partials, base, queries, id_col, vec_col, k, shortlist)
 
 
 # ---------------------------------------------------------------------------
 # Semantic (embedding) dedup gate — the ANN sidecar form of the ingest gate
 # ---------------------------------------------------------------------------
 
-def semantic_model_train(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 64,
-    m: int = 8,
-    n_centroids: int | None = 64,
-    sample: int = 4096,
-    iters: int = 10,
-) -> tuple[np.ndarray, np.ndarray, float]:
-    """Train the semantic gate's (coarse centroids, residual codebooks,
-    adc error bound) triple on ONE driver-side md5-ordered sample:
-    spherical k-means for the coarse quantizer (the ivf_assign recipe,
-    driver-only) followed by per-subspace residual codebooks.  O(sample)
-    everywhere — deterministic, so a crash-replayed trigger retrains
-    bit-identically when the persisted model is missing.
-
-    The returned ``err_bound`` is the measured ADC-cosine error ceiling:
-    |adc_cos − true_cos| ≤ |r − r̂| / |x| per vector, so the bound is
-    max over the sample of that ratio (×1.25 out-of-sample slack).  The
-    gate uses it as its default candidate margin — SELF-TUNING: tight
-    codebooks on a clustered corpus give a small bound and few exact
-    verifications; an adversarial uniform corpus (where residuals stay
-    ~unit-length) gives a wide bound and the gate degrades gracefully
-    toward exact-verifying the probed lists, never toward a missed
-    duplicate."""
-    rows = (
-        df.select(
-            F.col(vec_col).alias("v"),
-            F.md5(F.col(id_col).cast("string")).alias("h"),
-        )
-        .filter(F.col("v").isNotNull())  # NULL vectors can't train or match
-        .orderBy("h")
-        .limit(max(sample, n_lists))
-        .collect()
-    )
-    if not rows:
-        raise ValueError(
-            "semantic_model_train: no non-null vectors to train on"
-        )
-    x = np.asarray([r.v for r in rows], np.float64)
-    norms = np.linalg.norm(x, axis=1)
-    cent, xn = similarity.spherical_kmeans(x, n_lists, iters)
-    lids = (xn @ cent.T).argmax(axis=1)
-    res = x - cent[lids]
-    books = _train_books(res, m, n_centroids, iters)
-    # reconstruct every training residual through the codebooks and
-    # measure the worst ADC-cosine error it could induce
-    m_, _w, sub = books.shape
-    rhat = np.empty_like(res)
-    for j in range(m_):
-        seg = res[:, j * sub : (j + 1) * sub]
-        d2 = _sq_dists(seg, books[j])
-        rhat[:, j * sub : (j + 1) * sub] = books[j][d2.argmin(axis=1)]
-    err = np.linalg.norm(res - rhat, axis=1) / np.where(norms == 0, 1.0, norms)
-    err_bound = float(err.max() * 1.25 + 1e-9) if len(err) else 0.0
-    return cent, books, err_bound
-
-
 def semantic_index_rows(
     df: DataFrame,
-    coarse: np.ndarray,
-    codebooks: np.ndarray,
+    model: AnnModel,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -566,6 +577,7 @@ def semantic_index_rows(
     underestimate can NEVER hide a true >= threshold neighbor, with no
     trained global margin to mis-calibrate.  One mapInPandas scan, no
     shuffle — the semantic twin of doc_shingle_index."""
+    coarse, codebooks = model.coarse, model.books
     m_, _w, sub = codebooks.shape
     dim = m_ * sub
 
@@ -584,14 +596,9 @@ def semantic_index_rows(
             safe = np.where(norms == 0, 1.0, norms)
             lids = ((x / safe[:, None]) @ coarse.T).argmax(axis=1)
             res = x - coarse[lids]
-            codes = np.empty((len(x), m_), np.int32)
-            rhat = np.empty_like(res)
-            for j in range(m_):
-                xs = res[:, j * sub : (j + 1) * sub]
-                d2 = _sq_dists(xs, codebooks[j])
-                codes[:, j] = d2.argmin(axis=1)
-                rhat[:, j * sub : (j + 1) * sub] = codebooks[j][codes[:, j]]
-            adc_err = np.linalg.norm(res - rhat, axis=1) / safe
+            codes = _encode(res, codebooks)
+            adc_err = np.linalg.norm(res - _decode(codes, codebooks), axis=1)
+            adc_err /= safe
             yield pd.DataFrame(
                 {
                     "cor_id": pdf["id"],
@@ -626,8 +633,7 @@ def semantic_index_rows(
 def semantic_gate_flags(
     index: DataFrame,
     incoming: DataFrame,
-    coarse: np.ndarray,
-    codebooks: np.ndarray,
+    model: AnnModel,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
@@ -678,17 +684,15 @@ def semantic_gate_flags(
             [], f"{id_col} LONG, near_dup INT, best_cos DOUBLE, keep INT"
         )
     qids = np.asarray([r.qid for r in qrows], np.int64)
-    dim = codebooks.shape[0] * codebooks.shape[2]
-    qx = np.asarray(
-        [r.v if r.v is not None else [0.0] * dim for r in qrows], np.float64
-    )
+    coarse, codebooks = model.coarse, model.books
+    m_, _w, sub = codebooks.shape
+    qx = _dense([r.v for r in qrows], m_ * sub)
     qn = np.linalg.norm(qx, axis=1)
     qn_safe = np.where(qn == 0, 1.0, qn)
     sims = (qx / qn_safe[:, None]) @ coarse.T
     n_probe = min(n_probe, coarse.shape[0])
     probes = np.argsort(-sims, axis=1)[:, :n_probe]
     probed_union = np.unique(probes)
-    m_, _w, sub = codebooks.shape
     tables = np.einsum("qjs,jcs->qjc", qx.reshape(len(qx), m_, sub), codebooks)
     qc = qx @ coarse.T
     base_cut = threshold - margin

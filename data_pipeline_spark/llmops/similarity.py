@@ -17,6 +17,7 @@ Scale paths:
 from __future__ import annotations
 
 import math
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
@@ -25,6 +26,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_spark.io import read_parquet_cached
+
+if TYPE_CHECKING:
+    from data_pipeline_spark.llmops.pq import AnnModel
 
 Q = 1_000_000  # 1e-6 quantization
 
@@ -661,9 +665,8 @@ def spherical_kmeans(x, k: int, iters: int):
     """Driver-side spherical k-means over a raw sample matrix: zero-norm
     rows guarded, deterministic init (first k rows of the caller's
     md5-ordered sample), empty clusters keep their centroid.  Returns
-    (unit_centroids, normalized_sample) — the ONE trainer ivf_assign and
-    pq.semantic_model_train share, so their numerics can never diverge
-    (both feed exactness certificates)."""
+    (unit_centroids, normalized_sample) — the coarse quantizer of
+    ``pq.ann_train``, the one trainer every IVF index shares."""
     import numpy as np
 
     norms = np.linalg.norm(x, axis=1)
@@ -683,130 +686,12 @@ def spherical_kmeans(x, k: int, iters: int):
     return cent, xn
 
 
-def ivf_centroids(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 16,
-    kmeans_iters: int = 10,
-    sample: int = 4096,
-) -> DataFrame:
-    """The IVF coarse quantizer: (list_id, c_vec).
-
-    Centroids start as ``n_lists`` corpus vectors chosen deterministically
-    by md5(id) order, then (``kmeans_iters`` > 0, the default) refine with
-    spherical k-means Lloyd rounds over a driver-side md5-ordered sample —
-    training is O(sample), never O(corpus), the pq_train pattern.
-    ``kmeans_iters=0`` reproduces the r9 raw-corpus-vector quantizer
-    exactly (lazy, empty-tolerant)."""
-    return _ivf_centroids_impl(
-        df, id_col, vec_col, n_lists, kmeans_iters, sample
-    )[0]
-
-
-def ivf_centroids_with_rows(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 16,
-    kmeans_iters: int = 10,
-    sample: int = 4096,
-    with_vec: bool = False,
-) -> tuple:
-    """``(centroids_df, cq_rows)`` in one call.  On the k-means path the
-    centroid matrix is ALREADY driver-resident, so the quantized rows are
-    computed right there (``driver_centroid_rows`` — bit-identical to the
-    ``_qvec`` expressions, pinned by
-    test_driver_centroid_rows_bit_identical) instead of round-tripping
-    them through a createDataFrame -> collect job (r12 profile: ~0.5 s
-    of pure overhead per ANN query construction).  The
-    ``kmeans_iters=0`` fallback path still derives the rows through
-    Spark (its centroids never exist driver-side)."""
-    cdf, cent = _ivf_centroids_impl(
-        df, id_col, vec_col, n_lists, kmeans_iters, sample
-    )
-    if cent is None:
-        return cdf, quantized_centroid_rows(cdf, with_vec)
-    return cdf, driver_centroid_rows(cent, with_vec)
-
-
-def _ivf_centroids_impl(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_lists: int,
-    kmeans_iters: int,
-    sample: int,
-) -> tuple:
-    """(centroids DataFrame, driver-side centroid matrix | None)."""
-    rows = []
-    if kmeans_iters > 0:
-        import numpy as np
-
-        rows = (
-            df.select(
-                F.col(vec_col).alias("v"),
-                F.md5(F.col(id_col).cast("string")).alias("h"),
-            )
-            .filter(F.col("v").isNotNull())  # NULL vectors can't train
-            .orderBy("h")
-            .limit(max(sample, n_lists))
-            .collect()
-        )
-    if rows:
-        import numpy as np
-
-        cent, _xn = spherical_kmeans(
-            np.asarray([r.v for r in rows], np.float64),
-            n_lists,
-            kmeans_iters,
-        )
-        # pandas in => Arrow LocalTableScan: a plain list of tuples plans
-        # as an RDD-backed Scan ExistingRDD whose every consumer stage
-        # fans the n_lists rows across defaultParallelism PYTHON tasks
-        # (r12 profile: ~10 CPU-s of worker spin per ANN construction)
-        return (
-            df.sparkSession.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "list_id": list(range(len(cent))),
-                        "c_vec": [
-                            [float(val) for val in cent[i]]
-                            for i in range(len(cent))
-                        ],
-                    }
-                ),
-                "list_id INT, c_vec ARRAY<DOUBLE>",
-            ),
-            cent,
-        )
-    # kmeans_iters=0, an all-NULL corpus, or an empty one: the r9
-    # raw-corpus-vector quantizer (lazy, empty-tolerant)
-    centroids = (
-        df.select(
-            F.col(id_col).alias("c_src"),
-            F.col(vec_col).alias("c_vec"),
-            F.md5(F.col(id_col).cast("string")).alias("h"),
-        )
-        .orderBy("h")
-        .limit(n_lists)
-        .drop("h")
-    )
-    return (
-        centroids.withColumn(
-            "list_id", F.row_number().over(Window.orderBy("c_src")) - 1
-        ).select("list_id", "c_vec"),
-        None,
-    )
-
-
 def quantized_centroid_rows(centroids: DataFrame, with_vec: bool = False) -> list:
-    """Collect the quantized centroid rows (list_id, c_q, c_n[, c_vec]),
-    sorted by list_id — n_lists rows, tiny by contract, ONE job (a
-    LocalTableScan on the k-means path).  The quantized values come from
-    the same Spark expressions every pairwise path uses, so in-row
-    assignment against these literals is bit-identical to the old
-    broadcast-join formulation."""
+    """Collect the quantized centroid rows (list_id, c_q, c_n[, c_vec])
+    of a (list_id, c_vec) frame, sorted by list_id, through the same
+    Spark expressions every pairwise path uses — the reference that
+    ``driver_centroid_rows`` (what ``pq.AnnModel.rows`` runs) is pinned
+    against."""
     cols = [
         F.col("list_id"),
         _qvec("c_vec").alias("c_q"),
@@ -910,13 +795,11 @@ def ivf_assign_col(cq_rows: list, vec: Column) -> Column:
     cq_mat = np.asarray([list(r.c_q) for r in real], np.int64) if real else None
     c_n = np.asarray([r.c_n for r in real], np.float64) if real else None
     lids = np.asarray([r.list_id for r in real], np.int32) if real else None
-    fallback = int(cq_rows[0].list_id) if cq_rows else None
+    fallback = int(cq_rows[0].list_id)
 
     @pandas_udf("int")
     def _assign(s: pd.Series) -> pd.Series:
         n = len(s)
-        if fallback is None:  # no centroids at all (empty corpus)
-            return pd.Series([None] * n, dtype="Int32")
         res = np.full(n, fallback, np.int64)  # NULL vector -> lowest list
         mask = s.notna().to_numpy()
         if cq_mat is not None and mask.any():
@@ -972,9 +855,7 @@ def assign_rows_ndarray(x: "np.ndarray", cq_rows: list) -> "np.ndarray":
     training sample) skip the extra Spark job + Arrow crossing the
     column form would cost."""
     real = [r for r in cq_rows if r.c_q is not None and r.c_n is not None]
-    fallback = int(cq_rows[0].list_id) if cq_rows else None
-    if fallback is None:
-        raise ValueError("no centroids")
+    fallback = int(cq_rows[0].list_id)
     if not real or not len(x):
         return np.full(len(x), fallback, np.int64)
     return _assign_matrix(
@@ -984,32 +865,6 @@ def assign_rows_ndarray(x: "np.ndarray", cq_rows: list) -> "np.ndarray":
         np.asarray([r.list_id for r in real], np.int32),
         fallback,
     )
-
-
-def ivf_assign(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 16,
-    kmeans_iters: int = 10,
-    sample: int = 4096,
-) -> tuple[DataFrame, DataFrame]:
-    """Build an IVF index: (assignments, centroids).
-
-    See ivf_centroids for the quantizer recipe.  Assignment is the
-    in-row argmax of ivf_assign_col — a map-only plan (no join, no
-    window shuffle); decisions are bit-identical to the r9 broadcast-
-    join + window form (same quantized-cosine doubles, same tie-break).
-    Returns (assignments(id, list_id), centroids(list_id, c_vec)).
-    """
-    c, cq_rows = ivf_centroids_with_rows(
-        df, id_col, vec_col, n_lists, kmeans_iters, sample
-    )
-    assignments = df.select(
-        F.col(id_col),
-        ivf_assign_col(cq_rows, F.col(vec_col)).alias("list_id"),
-    )
-    return assignments, c
 
 
 def driver_probe_lists(qq, qn, cq_rows: list, n_probe: int) -> list:
@@ -1044,21 +899,31 @@ def driver_probe_lists(qq, qn, cq_rows: list, n_probe: int) -> list:
 
 def ivf_probes(
     queries: DataFrame,
-    centroids: DataFrame,
+    model: AnnModel,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_probe: int = 4,
 ) -> DataFrame:
-    """Each query's ``n_probe`` nearest IVF lists: (query_id, query_q,
-    query_n, list_id) — centroids broadcast, one row_number window over
-    |queries| x n_lists rows.  Shared by ivf_topk and the IVF-PQ
-    composition (llmops/pq.py)."""
-    q = quantized(queries, id_col, vec_col, "query")
-    cq = centroids.select(
-        "list_id",
-        _qvec("c_vec").alias("c_q"),
-        quantized_norm_sq("c_vec").alias("c_n"),
+    """Each query's ``n_probe`` nearest IVF lists of ``model``:
+    (query_id, query_q, query_n, list_id) — the quantized centroid rows
+    broadcast, one row_number window over |queries| x n_lists rows.
+    Shared by ivf_topk and ivf_layout_topk."""
+    rows = model.rows
+    # pandas in => Arrow LocalTableScan: a plain list of tuples plans as
+    # an RDD-backed Scan ExistingRDD whose every consumer stage fans the
+    # n_lists rows across defaultParallelism PYTHON tasks (r12 profile:
+    # ~10 CPU-s of worker spin per ANN construction)
+    cq = queries.sparkSession.createDataFrame(
+        pd.DataFrame(
+            {
+                "list_id": [r.list_id for r in rows],
+                "c_q": [r.c_q for r in rows],
+                "c_n": pd.Series([r.c_n for r in rows], dtype=object),
+            }
+        ),
+        "list_id INT, c_q ARRAY<BIGINT>, c_n BIGINT",
     )
+    q = quantized(queries, id_col, vec_col, "query")
     q_probe = q.join(F.broadcast(cq)).select(
         "query_id",
         "query_q",
@@ -1084,31 +949,32 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    n_lists: int = 64,
     n_probe: int = 24,
-    kmeans_iters: int = 10,
-    sample: int = 4096,
+    model: AnnModel | None = None,
 ) -> DataFrame:
     """ANN top-k via IVF: each query scores the centroids, probes its
     ``n_probe`` nearest lists, and searches only those lists exactly.
 
-    Defaults (n_probe=24/64, spherical-k-means centroids) come from the
-    r10 measured recall table (ROUND10_NOTES.md): recall@10 >= 0.85 at a
-    0.38 scan fraction on the UNIFORM-sphere synthetic corpus — the
-    adversarial geometry for coarse routing (top-10 neighbors sit at cos
-    0.31-0.41, barely above the pairwise background).  Clustered
-    real-world embedding corpora concentrate neighbors into far fewer
-    lists (the 10x near-dup-structured rehearsal corpus's measured
-    numbers are in the same table).  Tune n_probe down when the corpus
-    is clustered, up toward this default when it is not.
+    ``model`` is an IVF-flat ``pq.AnnModel`` (only its coarse quantizer
+    is read).  Defaults (a model trained on ``base`` with 64
+    spherical-k-means lists, n_probe=24) come from the r10 measured
+    recall table (ROUND10_NOTES.md): recall@10 >= 0.85 at a 0.38 scan
+    fraction on the UNIFORM-sphere synthetic corpus — the adversarial
+    geometry for coarse routing (top-10 neighbors sit at cos 0.31-0.41,
+    barely above the pairwise background).  Clustered real-world
+    embedding corpora concentrate neighbors into far fewer lists (the
+    10x near-dup-structured rehearsal corpus's measured numbers are in
+    the same table).  Tune n_probe down when the corpus is clustered,
+    up toward this default when it is not.
 
     At 100 TB the assignments table is written partitioned by list_id, so a
     probe reads n_probe/n_lists of the corpus — the scan shrinks by the
     probe ratio while recall stays tunable.
     """
-    centroids, cq_rows = ivf_centroids_with_rows(
-        base, id_col, vec_col, n_lists, kmeans_iters, sample
-    )
+    if model is None:
+        from data_pipeline_spark.llmops.pq import ann_train
+
+        model = ann_train(base, id_col, vec_col, n_lists=64, m=None)
     # list_id computed IN-ROW on the quantized scan itself: the r9 plan
     # joined the corpus against a separately-derived assignments frame —
     # a corpus-sized self-join whose only payload was one int per row
@@ -1116,10 +982,10 @@ def ivf_topk(
         F.col(id_col).alias("neighbor_id"),
         _qvec(f"`{vec_col}`").alias("neighbor_q"),
         quantized_norm_sq(f"`{vec_col}`").alias("neighbor_n"),
-        ivf_assign_col(cq_rows, F.col(vec_col)).alias("list_id"),
+        ivf_assign_col(model.rows, F.col(vec_col)).alias("list_id"),
     )
 
-    probes = ivf_probes(queries, centroids, id_col, vec_col, n_probe)
+    probes = ivf_probes(queries, model, id_col, vec_col, n_probe)
 
     scored = probes.join(listed, "list_id").filter(
         F.col("query_id") != F.col("neighbor_id")
@@ -1145,10 +1011,8 @@ def ivf_write_layout(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_lists: int = 16,
-    kmeans_iters: int = 10,
-    sample: int = 4096,
-) -> DataFrame:
+    model: AnnModel | None = None,
+) -> AnnModel:
     """Materialize the IVF index as a ``list_id``-PARTITIONED parquet
     layout — the serving form the ivf_topk docstring promises at 100 TB:
     assignment is a free in-row column on the encode scan
@@ -1156,27 +1020,36 @@ def ivf_write_layout(
     write, and a probe afterwards reads n_probe/n_lists of the corpus as
     a PARTITION-PRUNED scan (directory-level pruning, before any row or
     row-group is touched — the vector twin of zorder_box_query's layout
-    argument).  Returns the centroids frame the caller must keep (or
-    persist) for probe-time routing — probes computed against any other
-    quantizer would silently search the wrong lists.
+    argument).  ``model`` defaults to 16 lists trained on ``base``.
+    Returns the model the caller must keep (or persist) for probe-time
+    routing — probes computed against any other quantizer would silently
+    search the wrong lists.
     """
-    centroids, cq_rows = ivf_centroids_with_rows(
-        base, id_col, vec_col, n_lists, kmeans_iters, sample
-    )
+    if model is None:
+        from data_pipeline_spark.llmops.pq import ann_train
+
+        model = ann_train(base, id_col, vec_col, n_lists=16, m=None)
     listed = base.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("embedding"),
-        ivf_assign_col(cq_rows, F.col(vec_col)).alias("list_id"),
+        ivf_assign_col(model.rows, F.col(vec_col)).alias("list_id"),
     )
     listed.write.mode("overwrite").partitionBy("list_id").parquet(path)
-    return centroids
+    if not len(model.coarse):
+        # trained on no vectors: the model's one NULL list holds every row
+        # — none on an empty corpus, where a partitioned write leaves no
+        # file to read the layout's schema from, so list 0 gets an empty one
+        listed.drop("list_id").limit(0).write.mode("append").parquet(
+            f"{path}/list_id=0"
+        )
+    return model
 
 
 def ivf_layout_topk(
     spark,
     path: str,
     queries: DataFrame,
-    centroids: DataFrame,
+    model: AnnModel,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
@@ -1188,7 +1061,8 @@ def ivf_layout_topk(
     list directories are read.  Scoring/rank mechanics are bit-identical
     to the in-memory ``ivf_topk`` given the same centroids (float arrays
     round-trip parquet exactly and the assignment was computed at write
-    time with the same kernel) — test-pinned.
+    time with the same kernel) — test-pinned.  ``model`` is the one
+    ``ivf_write_layout`` returned (or its persisted coarse matrix).
     """
     # Collect the probe frame ONCE (n_queries x n_probe rows, bounded by
     # contract) and rebuild it as a local table: the r10 form collected
@@ -1196,7 +1070,7 @@ def ivf_layout_topk(
     # frame, executing the probe lineage (centroid join + window) twice
     # per query run (ADVICE r10).  The local rebuild also gives an
     # explicit empty short-circuit instead of leaning on isin([]).
-    probes = ivf_probes(queries, centroids, id_col, vec_col, n_probe)
+    probes = ivf_probes(queries, model, id_col, vec_col, n_probe)
     probe_schema = probes.schema
     probe_rows = probes.collect()
     # pandas in => Arrow LocalTableScan (not an RDD-backed frame whose

@@ -1852,9 +1852,12 @@ def ivfpq_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "similarity"),
 )
 def ivf_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from data_pipeline_spark.llmops import pq
+
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 5), k=10, n_lists=16, n_probe=16
+        emb, emb.filter(F.col("vec_id") < 5), k=10, n_probe=16,
+        model=pq.ann_train(emb, n_lists=16, m=None),
     )
 
 
@@ -1865,12 +1868,17 @@ def _persisted_ivf_layout(spark: SparkSession, sf_dir: str):
     pruned scan + rank, never a re-index.  Centroids persist beside the
     layout because probes against any other quantizer would search the
     wrong lists; centroids.json is written only after the layout commits
-    (a partial build rebuilds both)."""
+    (a partial build rebuilds both).  Returns (layout path, the IVF-flat
+    ``pq.AnnModel`` that assigned it)."""
     import hashlib
     import json
     import os
     import tempfile
     from pathlib import Path
+
+    import numpy as np
+
+    from data_pipeline_spark.llmops import pq
 
     src = os.path.join(sf_dir, "embeddings.parquet")
     st = os.stat(src)
@@ -1889,40 +1897,19 @@ def _persisted_ivf_layout(spark: SparkSession, sf_dir: str):
             if not _done():  # losers of the build race no-op here
                 emb = load_table(spark, sf_dir, "embeddings")
                 stage = base / f"layout.stage.{os.getpid()}"
-                centroids = similarity.ivf_write_layout(
-                    emb, str(stage), n_lists=16
-                )
-                rows = [
-                    (int(r.list_id), [float(x) for x in r.c_vec])
-                    for r in centroids.collect()  # n_lists rows — bounded
-                ]
+                model = similarity.ivf_write_layout(emb, str(stage))  # 16 lists
+                rows = [[i, c] for i, c in enumerate(model.coarse.tolist())]
                 _publish_dir(stage, layout)
                 tmp = base / "centroids.json.tmp"
                 tmp.write_text(json.dumps(rows))
                 os.replace(tmp, cent_path)
-    rows = json.loads(cent_path.read_text())
-    # ARRAY<DOUBLE> matches ivf_centroids' schema exactly: the JSON
-    # round-trip is bit-exact in double, so probe-time routing reproduces
-    # the write-time quantizer.  The r10 ARRAY<FLOAT> reload truncated to
-    # float32 — a DIFFERENT quantizer from the one that assigned the
-    # layout's lists, masked only because the certificate probes all
-    # lists (ADVICE r10 medium; parity pinned in tests/test_llmops.py).
-    # pandas in => Arrow LocalTableScan: the tuple-list form planned as
-    # an RDD-backed frame whose consumer stages each fanned these 16
-    # rows across 32 Python-worker tasks (r12 profile: ~10 CPU-s per
-    # probe construction)
-    import pandas as pd
-
-    centroids = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "list_id": [int(lid) for lid, _ in rows],
-                "c_vec": [[float(x) for x in vec] for _, vec in rows],
-            }
-        ),
-        "list_id INT, c_vec ARRAY<DOUBLE>",
-    )
-    return str(layout), centroids
+    # the JSON round-trip is bit-exact in double, so probe-time routing
+    # reproduces the write-time quantizer (the r10 ARRAY<FLOAT> reload
+    # truncated to float32 — a DIFFERENT quantizer from the one that
+    # assigned the layout's lists; parity pinned in tests/test_llmops.py)
+    rows = sorted(json.loads(cent_path.read_text()))
+    coarse = np.asarray([vec for _lid, vec in rows], np.float64)
+    return str(layout), pq.AnnModel(coarse, None, 0.0)
 
 
 @register(
@@ -1946,9 +1933,9 @@ def _persisted_ivf_layout(spark: SparkSession, sf_dir: str):
 )
 def ivf_partitioned_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    layout, centroids = _persisted_ivf_layout(spark, sf_dir)
+    layout, model = _persisted_ivf_layout(spark, sf_dir)
     return similarity.ivf_layout_topk(
-        spark, layout, emb.filter(F.col("vec_id") < 5), centroids,
+        spark, layout, emb.filter(F.col("vec_id") < 5), model,
         k=10, n_probe=16,
     )
 
@@ -3565,10 +3552,12 @@ def pq_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_spark.llmops import pq
 
     emb = load_table(spark, sf_dir, "embeddings")
-    books = pq.pq_train(emb, m=8, n_centroids=None, sample=10**6)
+    model = pq.ann_train(
+        emb, n_lists=None, m=8, n_centroids=None, sample=10**6
+    )
     return pq.pq_topk(
         emb, emb.filter(F.col("vec_id") < 5), id_col="vec_id",
-        k=10, m=8, shortlist=50, codebooks=books,
+        k=10, shortlist=50, model=model,
     )
 
 
@@ -3611,10 +3600,13 @@ def ivfpq_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_spark.llmops import pq
 
     emb = load_table(spark, sf_dir, "embeddings")
+    model = pq.ann_train(
+        emb, n_lists=16, m=8, n_centroids=None,
+        sample=10**6,  # lossless codebooks must cover EVERY vector
+    )
     return pq.ivfpq_topk(
         emb, emb.filter(F.col("vec_id") < 5), id_col="vec_id",
-        k=10, n_lists=16, n_probe=16, m=8, n_centroids=None, shortlist=50,
-        sample=10**6,  # lossless codebooks must cover EVERY vector
+        k=10, n_probe=16, shortlist=50, model=model,
     )
 
 
@@ -3651,10 +3643,8 @@ def semantic_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     incoming = emb.filter(F.col("vec_id") % 10 == 0)
-    coarse, books, index = _persisted_semantic_index(spark, sf_dir)
-    flags = pq.semantic_gate_flags(
-        index, incoming, coarse, books, threshold=0.9
-    )
+    model, index = _persisted_semantic_index(spark, sf_dir)
+    flags = pq.semantic_gate_flags(index, incoming, model, threshold=0.9)
     return flags.select("vec_id", "near_dup", "keep")
 
 
@@ -3715,8 +3705,6 @@ def _persisted_semantic_index(spark: SparkSession, sf_dir: str):
     import tempfile
     from pathlib import Path
 
-    import numpy as np
-
     from data_pipeline_spark.llmops import pq
 
     src = os.path.join(sf_dir, "embeddings.parquet")
@@ -3735,27 +3723,17 @@ def _persisted_semantic_index(spark: SparkSession, sf_dir: str):
         with _sidecar_lock(base):
             if not _done():
                 corpus = _semantic_gate_corpus(spark, sf_dir)
-                coarse, books, err_bound = pq.semantic_model_train(corpus)
+                model = pq.ann_train(corpus)
                 stage = base / f"index.stage.{os.getpid()}"
-                pq.semantic_index_rows(corpus, coarse, books).write.mode(
+                pq.semantic_index_rows(corpus, model).write.mode(
                     "overwrite"
                 ).parquet(str(stage))
                 _publish_dir(stage, idx_dir)
                 tmp = base / "model.json.tmp"
-                tmp.write_text(
-                    json.dumps(
-                        {
-                            "coarse": coarse.tolist(),
-                            "codebooks": books.tolist(),
-                            "err_bound": err_bound,
-                        }
-                    )
-                )
+                tmp.write_text(json.dumps(model.to_dict()))
                 os.replace(tmp, model_path)
-    d = json.loads(model_path.read_text())
     return (
-        np.asarray(d["coarse"], np.float64),
-        np.asarray(d["codebooks"], np.float64),
+        pq.AnnModel.from_dict(json.loads(model_path.read_text())),
         read_parquet_cached(spark, str(idx_dir)),
     )
 

@@ -1033,13 +1033,14 @@ class SemanticGatedIngest(DedupGatedIngest):
         # contract is O(ledger) per trigger in steady state
         self.drift_check_every = max(1, drift_check_every)
         self._commits_since_drift_check = 0
-        # per-version model cache: version -> (coarse, books, err_bound,
-        # trained_on_n).  _model_version is the version THIS process
-        # gates and encodes with; it changes via our own retrain() or
-        # when _foreign_version_check reconciles a COMMITTED foreign
-        # retrain (concurrent ones still require serialize_writers —
-        # see class docstring)
-        self._models: dict[int, tuple] = {}
+        # per-version model cache: version -> pq.AnnModel, and version
+        # -> committed docs it trained on.  _model_version is the version
+        # THIS process gates and encodes with; it changes via our own
+        # retrain() or when _foreign_version_check reconciles a COMMITTED
+        # foreign retrain (concurrent ones still require
+        # serialize_writers — see class docstring)
+        self._models: dict = {}
+        self._trained_on: dict[int, int] = {}
         self._model_version: int | None = None
         # stat signature (version, mtime_ns, size) of the newest model
         # FILE this instance has already reconciled against the committed
@@ -1065,7 +1066,7 @@ class SemanticGatedIngest(DedupGatedIngest):
     def _load_model(self, version: int) -> None:
         import json
 
-        import numpy as np
+        from data_pipeline_spark.llmops import pq
 
         if version in self._models:
             return
@@ -1079,12 +1080,8 @@ class SemanticGatedIngest(DedupGatedIngest):
             )
         with open(path) as fh:
             d = json.load(fh)
-        self._models[version] = (
-            np.asarray(d["coarse"], np.float64),
-            np.asarray(d["codebooks"], np.float64),
-            float(d["err_bound"]),
-            int(d.get("trained_on_n", 0)),
-        )
+        self._models[version] = pq.AnnModel.from_dict(d)
+        self._trained_on[version] = int(d.get("trained_on_n", 0))
 
     def _latest_model_file_version(self) -> int | None:
         if not os.path.isdir(self.index_dir):
@@ -1183,36 +1180,41 @@ class SemanticGatedIngest(DedupGatedIngest):
             self._foreign_version_check()
         return self._model_version
 
+    def _train(self, df: DataFrame, n_lists: int, sample: int):
+        """A ``pq.AnnModel`` on ``df``'s vectors at this sink's geometry."""
+        from data_pipeline_spark.llmops import pq
+
+        model = pq.ann_train(
+            df,
+            self.id_col,
+            self.vec_col,
+            n_lists=n_lists,
+            m=self.m,
+            n_centroids=self.n_centroids,
+            sample=sample,
+        )
+        if not len(model.coarse):
+            raise ValueError(
+                "SemanticGatedIngest: no non-null vectors to train on"
+            )
+        return model
+
     def _ensure_model(self, batch: DataFrame):
         import json
-
-        import numpy as np
-
-        from data_pipeline_spark.llmops import pq
 
         if self._model_version is not None:
             # gate/encode-time guard: pick up a committed foreign
             # retrain (cheap listdir; index scan only on a new file)
             self._foreign_version_check()
-            m = self._models[self._model_version]
-            return m[0], m[1], m[2]
+            return self._models[self._model_version]
         v = self._active_version()
         if v is None:
             v = self._latest_model_file_version()
         if v is not None:
             self._load_model(v)
             self._model_version = v
-            m = self._models[v]
-            return m[0], m[1], m[2]
-        coarse, books, err_bound = pq.semantic_model_train(
-            batch,
-            self.id_col,
-            self.vec_col,
-            n_lists=self.n_lists,
-            m=self.m,
-            n_centroids=self.n_centroids,
-            sample=self.sample,
-        )
+            return self._models[v]
+        model = self._train(batch, self.n_lists, self.sample)
         os.makedirs(self.index_dir, exist_ok=True)
         # atomic CREATE (O_EXCL): if two unserialized writers race to
         # train, exactly one model file wins and BOTH converge on it —
@@ -1222,9 +1224,7 @@ class SemanticGatedIngest(DedupGatedIngest):
         # the index coherent even without the lock.)
         payload = json.dumps(
             {
-                "coarse": coarse.tolist(),
-                "codebooks": books.tolist(),
-                "err_bound": err_bound,
+                **model.to_dict(),
                 "version": 1,
                 "trained_on_n": 0,  # nothing committed before first train
             }
@@ -1238,11 +1238,10 @@ class SemanticGatedIngest(DedupGatedIngest):
         except FileExistsError:
             self._load_model(1)
             self._model_version = 1
-            m = self._models[1]
-            return m[0], m[1], m[2]
-        self._models[1] = (coarse, books, err_bound, 0)
+            return self._models[1]
+        self._models[1], self._trained_on[1] = model, 0
         self._model_version = 1
-        return coarse, books, err_bound
+        return model
 
     # -- protocol hooks ----------------------------------------------------
     def _stage(self, batch: DataFrame) -> DataFrame:
@@ -1280,15 +1279,14 @@ class SemanticGatedIngest(DedupGatedIngest):
         if not rows:  # an empty FIRST trigger must not train
             return None
         batch = self._frame(staged)
-        coarse, books, _err = self._ensure_model(batch)
+        model = self._ensure_model(batch)
         index = self.committed_index() if keys else None
         if index is None:
             return None
         return pq.semantic_gate_flags(
             index,
             batch.filter(F.col(self.id_col).isin(keys)),
-            coarse,
-            books,
+            model,
             self.id_col,
             self.vec_col,
             threshold=self.sem_threshold,
@@ -1303,10 +1301,10 @@ class SemanticGatedIngest(DedupGatedIngest):
         from data_pipeline_spark.llmops import pq
 
         batch = self._frame(admitted)
-        coarse, books, _err = self._ensure_model(batch)
+        model = self._ensure_model(batch)
         return _to_arrow(
             pq.semantic_index_rows(
-                batch, coarse, books, self.id_col, self.vec_col
+                batch, model, self.id_col, self.vec_col
             ).withColumn("model_v", F.lit(int(self._model_version or 1)))
         ).sort_by("list_id")
 
@@ -1387,7 +1385,7 @@ class SemanticGatedIngest(DedupGatedIngest):
         v = self._cached_version()
         if v is None:
             return None
-        err_bound = self._models[v][2]
+        err_bound = self._models[v].err_bound
         if not err_bound:
             return None
         idx = self.committed_index()
@@ -1412,7 +1410,7 @@ class SemanticGatedIngest(DedupGatedIngest):
             return False
         if self.retrain_after is not None:
             live = self._live_rows() or 0
-            if live - self._models[v][3] >= self.retrain_after:
+            if live - self._trained_on[v] >= self.retrain_after:
                 return True
         if self.retrain_drift is not None:
             self._commits_since_drift_check += 1
@@ -1477,18 +1475,12 @@ class SemanticGatedIngest(DedupGatedIngest):
         try:
             n_docs = corpus.count()
             n_lists_eff = self._lists_for(n_docs)
-            coarse, books, err_bound = pq.semantic_model_train(
-                corpus,
-                self.id_col,
-                self.vec_col,
-                n_lists=n_lists_eff,
-                m=self.m,
-                n_centroids=self.n_centroids,
-                # hold >=4 training points per coarse cluster as the
-                # auto-scaled list count approaches the configured
-                # sample, or the k-means degenerates to one-point lists
-                # (cap keeps the driver-side collect <=16384 rows)
-                sample=max(self.sample, 4 * n_lists_eff),
+            # hold >=4 training points per coarse cluster as the
+            # auto-scaled list count approaches the configured sample, or
+            # the k-means degenerates to one-point lists (cap keeps the
+            # driver-side collect <=16384 rows)
+            model = self._train(
+                corpus, n_lists_eff, max(self.sample, 4 * n_lists_eff)
             )
             path = self._model_file(new_v)
             tmp = f"{path}.tmp.{os.getpid()}"
@@ -1496,9 +1488,7 @@ class SemanticGatedIngest(DedupGatedIngest):
                 fh.write(
                     json.dumps(
                         {
-                            "coarse": coarse.tolist(),
-                            "codebooks": books.tolist(),
-                            "err_bound": err_bound,
+                            **model.to_dict(),
                             "version": new_v,
                             "trained_on_n": n_docs,
                         }
@@ -1507,12 +1497,12 @@ class SemanticGatedIngest(DedupGatedIngest):
             os.replace(tmp, path)
             self._chaos("retrain_after_model")
             idx = pq.semantic_index_rows(
-                corpus, coarse, books, self.id_col, self.vec_col
+                corpus, model, self.id_col, self.vec_col
             ).withColumn("model_v", F.lit(new_v))
             self._rewrite("retrain", pairs, corpus, idx, n_docs)
         finally:
             corpus.unpersist()
-        self._models[new_v] = (coarse, books, err_bound, n_docs)
+        self._models[new_v], self._trained_on[new_v] = model, n_docs
         self._model_version = new_v
         return n_docs
 
@@ -1551,12 +1541,10 @@ class SemanticGatedIngest(DedupGatedIngest):
                 F.lit(None).cast("double").alias("best_cos"),
                 F.lit(1).alias("keep"),
             )
-        coarse, books, _err = self._ensure_model(batch)
         return pq.semantic_gate_flags(
             index,
             batch,
-            coarse,
-            books,
+            self._ensure_model(batch),
             self.id_col,
             self.vec_col,
             threshold=self.sem_threshold,

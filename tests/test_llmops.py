@@ -8,8 +8,17 @@ from pyspark.sql import functions as F
 import data_pipeline_spark.queries_llm  # noqa: F401  (populates QUERIES)
 from data_pipeline_spark.io import load_table
 from data_pipeline_spark.llmops import dedup as ld
-from data_pipeline_spark.llmops import multimodal, similarity
+from data_pipeline_spark.llmops import multimodal, pq, similarity
 from tests.conftest import SF_SMOKE
+
+
+def _centroid_frame(spark, model):
+    """A model's coarse centroids as the (list_id, c_vec) frame the Spark
+    reference ``quantized_centroid_rows`` reads."""
+    return spark.createDataFrame(
+        [(i, [float(v) for v in c]) for i, c in enumerate(model.coarse)],
+        "list_id INT, c_vec ARRAY<DOUBLE>",
+    )
 
 
 def test_simhash_neardup_symmetric_and_bounded(spark):
@@ -504,10 +513,10 @@ def test_filtered_cosine_topk_prefilter_semantics(spark):
 
 def test_ivf_assign_inrow_matches_window_formulation(spark):
     """The vectorized in-row assignment (ivf_assign_col) is bit-identical
-    to the r9 broadcast-join + row_number formulation on BOTH quantizer
-    paths (k-means and lazy), including the NULL-vector -> list 0 edge,
-    and its plan has ZERO exchanges (the old form shuffled corpus x
-    n_lists rows through a per-vector window)."""
+    to the r9 broadcast-join + row_number formulation on the k-means
+    quantizer, including the NULL-vector -> list 0 edge, and its plan
+    has ZERO exchanges (the old form shuffled corpus x n_lists rows
+    through a per-vector window)."""
     import re
 
     from pyspark.sql import Window
@@ -517,47 +526,45 @@ def test_ivf_assign_inrow_matches_window_formulation(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     extra = spark.createDataFrame([(10_000_001, None, None)], emb.schema)
     emb = emb.unionByName(extra)
-    for iters in (10, 0):
-        c = similarity.ivf_centroids(
-            emb, "vec_id", "embedding", 16, iters, 4096
-        )
-        cq_rows = similarity.quantized_centroid_rows(c)
-        new = emb.select(
-            "vec_id",
-            similarity.ivf_assign_col(cq_rows, F.col("embedding")).alias(
-                "list_id"
-            ),
-        )
-        plan = audit.formatted_plan(new)
-        assert re.search(r"\(\d+\) Exchange\b", plan) is None, plan
-        assert "ArrowEvalPython" in plan, plan
-        v = similarity.quantized(emb, "vec_id", "embedding", "v")
-        cq = c.select(
-            "list_id",
-            similarity._qvec(F.col("c_vec")).alias("c_q"),
-            similarity.quantized_norm_sq(F.col("c_vec")).alias("c_n"),
-        )
-        scored = v.join(F.broadcast(cq)).select(
-            "v_id",
-            "list_id",
-            similarity._cos_from_parts(
-                similarity._int_dot(F.col("v_q"), F.col("c_q")),
-                F.col("v_n"),
-                F.col("c_n"),
-            ).alias("c_cos"),
-        )
-        w = Window.partitionBy("v_id").orderBy(
-            F.col("c_cos").desc(), F.col("list_id").asc()
-        )
-        old = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("v_id").alias("vec_id"), "list_id")
-        )
-        a = {r.vec_id: r.list_id for r in new.collect()}
-        b = {r.vec_id: r.list_id for r in old.collect()}
-        assert a == b, {k: (a.get(k), b.get(k)) for k in a if a.get(k) != b.get(k)}
-        assert a[10_000_001] == 0  # NULL vector -> lowest list in both
+    model = pq.ann_train(emb, n_lists=16, m=None)
+    c = _centroid_frame(spark, model)
+    cq_rows = similarity.quantized_centroid_rows(c)
+    new = emb.select(
+        "vec_id",
+        similarity.ivf_assign_col(cq_rows, F.col("embedding")).alias(
+            "list_id"
+        ),
+    )
+    plan = audit.formatted_plan(new)
+    assert re.search(r"\(\d+\) Exchange\b", plan) is None, plan
+    assert "ArrowEvalPython" in plan, plan
+    v = similarity.quantized(emb, "vec_id", "embedding", "v")
+    cq = c.select(
+        "list_id",
+        similarity._qvec(F.col("c_vec")).alias("c_q"),
+        similarity.quantized_norm_sq(F.col("c_vec")).alias("c_n"),
+    )
+    scored = v.join(F.broadcast(cq)).select(
+        "v_id",
+        "list_id",
+        similarity._cos_from_parts(
+            similarity._int_dot(F.col("v_q"), F.col("c_q")),
+            F.col("v_n"),
+            F.col("c_n"),
+        ).alias("c_cos"),
+    )
+    w = Window.partitionBy("v_id").orderBy(
+        F.col("c_cos").desc(), F.col("list_id").asc()
+    )
+    old = (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(F.col("v_id").alias("vec_id"), "list_id")
+    )
+    a = {r.vec_id: r.list_id for r in new.collect()}
+    b = {r.vec_id: r.list_id for r in old.collect()}
+    assert a == b, {k: (a.get(k), b.get(k)) for k in a if a.get(k) != b.get(k)}
+    assert a[10_000_001] == 0  # NULL vector -> lowest list in both
 
 
 def test_ivf_assign_col_degenerate_inputs(spark):
@@ -606,12 +613,12 @@ def test_driver_probe_lists_matches_ivf_probes(spark):
     """driver_probe_lists (the zero-job probe twin ivfpq uses) returns
     the same probe set as the ivf_probes window for every query."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    c = similarity.ivf_centroids(emb, "vec_id", "embedding", 16, 10, 4096)
-    cq_rows = similarity.quantized_centroid_rows(c)
+    model = pq.ann_train(emb, n_lists=16, m=None)
+    cq_rows = similarity.quantized_centroid_rows(_centroid_frame(spark, model))
     qs = emb.filter(F.col("vec_id") < 8)
     want: dict = {}
     for r in (
-        similarity.ivf_probes(qs, c, "vec_id", "embedding", 6)
+        similarity.ivf_probes(qs, model, "vec_id", "embedding", 6)
         .select("query_id", "list_id")
         .collect()
     ):
@@ -1912,8 +1919,10 @@ def test_ivfpq_driver_sample_assignment_parity(spark):
     import numpy as np
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    centroids = similarity.ivf_centroids(emb, "vec_id", "embedding", 8, 10, 256)
-    cq_rows = similarity.quantized_centroid_rows(centroids, with_vec=True)
+    model = pq.ann_train(emb, n_lists=8, m=None, sample=256)
+    cq_rows = similarity.quantized_centroid_rows(
+        _centroid_frame(spark, model), with_vec=True
+    )
 
     rows = (
         emb.select(
@@ -1976,8 +1985,10 @@ def test_pq_recall_and_lossless_exactness(spark):
     ap_pairs = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     assert len(ap_pairs & ex_pairs) / len(ex_pairs) >= 0.9
 
-    books = pq.pq_train(emb, m=8, n_centroids=None, sample=10**6)
-    lossless = pq.pq_topk(emb, queries, k=10, m=8, shortlist=50, codebooks=books)
+    model = pq.ann_train(
+        emb, n_lists=None, m=8, n_centroids=None, sample=10**6
+    )
+    lossless = pq.pq_topk(emb, queries, k=10, shortlist=50, model=model)
     got = {(r.query_id, r.neighbor_id, r.rank, r.cos_sim) for r in lossless.collect()}
     want = {(r.query_id, r.neighbor_id, r.rank, r.cos_sim) for r in exact.collect()}
     assert got == want
@@ -1989,7 +2000,7 @@ def test_pq_encode_shape_and_determinism(spark):
     from data_pipeline_spark.llmops import pq
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    books = pq.pq_train(emb, m=8, n_centroids=16)
+    books = pq.ann_train(emb, n_lists=None, m=8, n_centroids=16).books
     assert books.shape[0] == 8 and books.shape[2] == 8  # 64 dims / 8
     codes = pq.pq_encode(emb, books).collect()
     assert all(len(r.codes) == 8 for r in codes)
@@ -2017,12 +2028,103 @@ def test_ivfpq_recall_and_double_exactness(spark):
     assert len(pr_pairs & ex_pairs) / len(ex_pairs) >= 0.8
 
     full = pq.ivfpq_topk(
-        emb, queries, k=10, n_lists=16, n_probe=16,
-        n_centroids=None, sample=10**6,
+        emb, queries, k=10, n_probe=16,
+        model=pq.ann_train(emb, n_lists=16, n_centroids=None, sample=10**6),
     )
     got = {(r.query_id, r.neighbor_id, r.rank, r.cos_sim) for r in full.collect()}
     want = {(r.query_id, r.neighbor_id, r.rank, r.cos_sim) for r in exact.collect()}
     assert got == want
+
+
+def test_pq_search_ignores_a_null_corpus_vector(spark):
+    """A NULL-vector corpus row trains nothing, encodes to NULL codes and
+    scores -inf in the ADC scan, so PQ and IVF-PQ return exactly the rows
+    they return on the corpus without it (cosine_topk and ivf_topk rank
+    such a row last with a NULL cosine)."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    with_null = emb.unionByName(
+        spark.createDataFrame([(10_000_001, None, None)], emb.schema)
+    )
+    queries = emb.filter(F.col("vec_id") < 5)
+    for topk in (pq.pq_topk, pq.ivfpq_topk):
+        want = sorted(map(tuple, topk(emb, queries, k=10).collect()))
+        got = sorted(map(tuple, topk(with_null, queries, k=10).collect()))
+        assert want and got == want, topk.__name__
+
+
+def test_pq_exactness_limit_with_null_vectors(spark):
+    """At the exactness limit (lossless codebooks, every list probed,
+    shortlist >= corpus) PQ and IVF-PQ equal cosine_topk on a corpus with
+    NULL vectors, a NULL query included: NULL rows rank last with a NULL
+    cosine, ties by neighbor id."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(v) for v in rng.standard_normal(8)]) for i in range(40)]
+    rows += [(100 + i, None) for i in range(3)]
+    emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
+    queries = emb.filter(F.col("vec_id").isin(0, 1, 100))
+    want = sorted(
+        map(tuple, similarity.cosine_topk(emb, queries, k=45).collect())
+    )
+    assert [t[3] for t in want if t[0] == 0][-3:] == [None] * 3
+    assert [t[1] for t in want if t[0] == 0][-3:] == [100, 101, 102]
+    flat = pq.ann_train(emb, n_lists=None, m=2, n_centroids=None)
+    ivf = pq.ann_train(emb, n_lists=4, m=2, n_centroids=None)
+    got_pq = pq.pq_topk(emb, queries, k=45, shortlist=64, model=flat)
+    got_ivfpq = pq.ivfpq_topk(
+        emb, queries, k=45, n_probe=4, shortlist=64, model=ivf
+    )
+    assert sorted(map(tuple, got_pq.collect())) == want
+    assert sorted(map(tuple, got_ivfpq.collect())) == want
+
+
+def test_ann_paths_on_degenerate_corpora(spark, tmp_path):
+    """An empty corpus and an all-NULL corpus: a model trained on no
+    vectors has one list with a NULL centroid, so IVF, the IVF serving
+    layout, PQ and IVF-PQ all equal cosine_topk — no rows, and every
+    (query, neighbor) pair with a NULL cosine, respectively.  The
+    semantic gate still refuses to train on no vectors."""
+    from data_pipeline_spark.streaming.ingest import SemanticGatedIngest
+
+    schema = "vec_id LONG, embedding ARRAY<FLOAT>"
+    queries = spark.createDataFrame(
+        [(100, [1.0, 0.0, 0.0, 0.0]), (101, None)], schema
+    )
+    corpora = {
+        "empty": spark.createDataFrame([], schema),
+        "all_null": spark.createDataFrame(
+            [(i, None) for i in range(1, 6)], schema
+        ),
+    }
+    for name, base in corpora.items():
+        want = sorted(
+            map(tuple, similarity.cosine_topk(base, queries, k=3).collect())
+        )
+        assert len(want) == (0 if name == "empty" else 6), name
+        path = str(tmp_path / f"layout_{name}")
+        model = similarity.ivf_write_layout(base, path)
+        paths = {
+            "ivf_topk": similarity.ivf_topk(base, queries, k=3),
+            "ivf_layout_topk": similarity.ivf_layout_topk(
+                spark, path, queries, model, k=3
+            ),
+            "pq_topk": pq.pq_topk(base, queries, k=3),
+            "ivfpq_topk": pq.ivfpq_topk(base, queries, k=3),
+        }
+        for label, out in paths.items():
+            assert sorted(map(tuple, out.collect())) == want, (name, label)
+
+    sink = SemanticGatedIngest(
+        spark,
+        corpus_dir=str(tmp_path / "corpus"),
+        ledger_path=str(tmp_path / "ledger"),
+        id_col="vec_id",
+        n_lists=2,
+        m=2,
+    )
+    with pytest.raises(ValueError, match="no non-null vectors"):
+        sink.admit_batch(corpora["all_null"], 0)
 
 
 def test_tiff_codec_roundtrip_and_variants():
@@ -3294,17 +3396,20 @@ def test_ivf_layout_topk_matches_inmemory_and_prunes(spark, tmp_path):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "ivf_layout")
-    centroids = similarity.ivf_write_layout(emb, path, n_lists=16)
+    model = similarity.ivf_write_layout(
+        emb, path, model=pq.ann_train(emb, n_lists=16, m=None)
+    )
 
     for n_probe in (4, 16):
         served = sorted(
             map(tuple, similarity.ivf_layout_topk(
-                spark, path, queries, centroids, k=10, n_probe=n_probe
+                spark, path, queries, model, k=10, n_probe=n_probe
             ).collect())
         )
         mem = sorted(
             map(tuple, similarity.ivf_topk(
-                emb, queries, k=10, n_lists=16, n_probe=n_probe
+                emb, queries, k=10, n_probe=n_probe,
+                model=pq.ann_train(emb, n_lists=16, m=None),
             ).collect())
         )
         assert served == mem, f"n_probe={n_probe}"
@@ -3312,7 +3417,7 @@ def test_ivf_layout_topk_matches_inmemory_and_prunes(spark, tmp_path):
     # pruning evidence: the pruned plan's scan partition filter names
     # list_id, and fewer files are read than the full layout holds
     pruned = similarity.ivf_layout_topk(
-        spark, path, queries, centroids, k=10, n_probe=4
+        spark, path, queries, model, k=10, n_probe=4
     )
     plan = audit.formatted_plan(pruned)
     assert "PartitionFilters" in plan and "list_id" in plan.split(
@@ -3321,7 +3426,7 @@ def test_ivf_layout_topk_matches_inmemory_and_prunes(spark, tmp_path):
     import glob
 
     n_all = len(glob.glob(f"{path}/list_id=*/*.parquet"))
-    probes = similarity.ivf_probes(queries, centroids, n_probe=4)
+    probes = similarity.ivf_probes(queries, model, n_probe=4)
     probed = {r.list_id for r in probes.select("list_id").distinct().collect()}
     n_read = sum(
         len(glob.glob(f"{path}/list_id={lid}/*.parquet")) for lid in probed
@@ -3545,31 +3650,32 @@ def test_persisted_ivf_centroid_reload_parity(spark):
     declared ARRAY<FLOAT>, truncating the k-means doubles to float32 —
     a DIFFERENT quantizer from the one that assigned the layout's lists,
     masked only because the certificate probed all 16 lists.  Pin: (a)
-    the reloaded frame's quantized rows equal a fresh ivf_centroids run's
-    (training is deterministic), (b) the reload schema is double, and (c)
-    a PRUNED query (n_probe < n_lists) off the persisted sidecar matches
-    the fresh in-memory path — the regime the truncation silently hurt."""
+    the reloaded model's quantized rows equal a fresh ann_train run's
+    (training is deterministic), (b) the reloaded coarse matrix is the
+    fresh one bit for bit, and (c) a PRUNED query (n_probe < n_lists) off
+    the persisted sidecar matches the fresh in-memory path — the regime
+    the truncation silently hurt."""
     from data_pipeline_spark.queries_llm import _persisted_ivf_layout
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     layout, reloaded = _persisted_ivf_layout(spark, SF_SMOKE)
-    assert dict(reloaded.dtypes)["c_vec"] == "array<double>"
-    fresh = similarity.ivf_centroids(emb, n_lists=16)
+    fresh = pq.ann_train(emb, n_lists=16, m=None)
+    assert reloaded.coarse.dtype == fresh.coarse.dtype
+    assert reloaded.coarse.tobytes() == fresh.coarse.tobytes()
     fq = [
         (r.list_id, list(r.c_q), r.c_n)
-        for r in similarity.quantized_centroid_rows(fresh)
+        for r in similarity.quantized_centroid_rows(
+            _centroid_frame(spark, fresh)
+        )
     ]
-    rq = [
-        (r.list_id, list(r.c_q), r.c_n)
-        for r in similarity.quantized_centroid_rows(reloaded)
-    ]
+    rq = [(r.list_id, list(r.c_q), r.c_n) for r in reloaded.rows]
     assert rq == fq
     queries = emb.filter(F.col("vec_id") < 3)
     served = sorted(map(tuple, similarity.ivf_layout_topk(
         spark, layout, queries, reloaded, k=5, n_probe=4
     ).collect()))
     mem = sorted(map(tuple, similarity.ivf_topk(
-        emb, queries, k=5, n_lists=16, n_probe=4
+        emb, queries, k=5, n_probe=4, model=fresh
     ).collect()))
     assert served == mem
 
@@ -3579,9 +3685,11 @@ def test_ivf_layout_topk_empty_queries_short_circuits(spark, tmp_path):
     without leaning on isin([]) semantics (ADVICE r10 low)."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
     path = str(tmp_path / "empty_q_layout")
-    centroids = similarity.ivf_write_layout(emb, path, n_lists=4)
+    model = similarity.ivf_write_layout(
+        emb, path, model=pq.ann_train(emb, n_lists=4, m=None)
+    )
     out = similarity.ivf_layout_topk(
-        spark, path, emb.filter(F.col("vec_id") < 0), centroids,
+        spark, path, emb.filter(F.col("vec_id") < 0), model,
         k=5, n_probe=2,
     )
     assert out.count() == 0
@@ -3599,12 +3707,15 @@ def test_ivf_layout_handles_degenerate_vectors(spark, tmp_path):
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
     queries = emb.filter(F.col("vec_id") == 1)
     path = str(tmp_path / "degenerate_layout")
-    centroids = similarity.ivf_write_layout(emb, path, n_lists=2)
+    model = similarity.ivf_write_layout(
+        emb, path, model=pq.ann_train(emb, n_lists=2, m=None)
+    )
     served = sorted(map(tuple, similarity.ivf_layout_topk(
-        spark, path, queries, centroids, k=3, n_probe=2
+        spark, path, queries, model, k=3, n_probe=2
     ).collect()))
     mem = sorted(map(tuple, similarity.ivf_topk(
-        emb, queries, k=3, n_lists=2, n_probe=2
+        emb, queries, k=3, n_probe=2,
+        model=pq.ann_train(emb, n_lists=2, m=None),
     ).collect()))
     assert served == mem
     # the NULL/zero rows landed in the layout (list 0 by contract) and

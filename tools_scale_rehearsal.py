@@ -567,7 +567,7 @@ def main() -> None:
         from data_pipeline_spark.queries_llm import _persisted_semantic_index
 
         t0 = time.perf_counter()
-        _persisted_semantic_index(spark, sf_dir)[2].count()
+        _persisted_semantic_index(spark, sf_dir)[1].count()
         semantic_index_build_s = round(time.perf_counter() - t0, 2)
 
         entry: dict = {
