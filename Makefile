@@ -20,7 +20,7 @@ chaos:
 ann:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	python -m pytest tests/test_semantic_gate.py -q -p no:cacheprovider && \
-	python -m pytest tests/test_llmops.py -q -p no:cacheprovider -k "pq or ivf or centroid or sq_dists or degenerate_corpora"
+	python -m pytest tests/test_llmops.py -q -p no:cacheprovider -k "pq or ivf or centroid or sq_dists or degenerate_corpora or ann_model"
 
 correctness:
 	python -m pytest tests/test_correctness.py -q

@@ -34,9 +34,11 @@ def entry(spark: SparkSession) -> DataFrame:
 # remaining window; the rest follow.
 _PRIORITY = [
     # -- one ANN model --------------------------------------------------------
-    # CODE CHANGED: every index query now takes the one pq.ann_train model
-    # (the per-path trainers deleted; NULL corpus vectors encode to NULL
-    # codes)
+    # CODE CHANGED: every index query now searches with the per-corpus
+    # model cache (queries_llm._corpus_model: one pq.ann_train model per
+    # embeddings file and training arguments, persisted as model.json);
+    # the IVF serving layout shares ivf_exact_topk's model, and the ADC
+    # scans break a tie at the shortlist cut by the lower neighbor id
     "pq_ann_topk",
     "pq_exact_topk",
     "ivfpq_ann_topk",

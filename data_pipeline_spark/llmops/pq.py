@@ -89,20 +89,28 @@ class AnnModel(NamedTuple):
         return [Row(list_id=0, c_q=None, c_n=None)]
 
     def to_dict(self) -> dict:
-        """The persisted form (a sidecar's ``model.json`` keys)."""
-        return {
-            "coarse": self.coarse.tolist(),
-            "codebooks": self.books.tolist(),
-            "err_bound": self.err_bound,
-        }
+        """The persisted form (a sidecar's ``model.json`` keys): each
+        array as nested lists plus its shape, None for a part the model
+        has not got.  ``from_dict`` rebuilds the same bytes, dtype and
+        shape — the shape keeps an empty model's (0, 0) centroids and
+        (m, 0, 0) codebooks, which nested lists alone flatten."""
+        out: dict = {"err_bound": self.err_bound}
+        for key, a in (("coarse", self.coarse), ("codebooks", self.books)):
+            out[key] = None if a is None else a.tolist()
+            out[f"{key}_shape"] = None if a is None else list(a.shape)
+        return out
 
     @classmethod
     def from_dict(cls, d: dict) -> AnnModel:
-        return cls(
-            np.asarray(d["coarse"], np.float64),
-            np.asarray(d["codebooks"], np.float64),
-            float(d["err_bound"]),
-        )
+        def arr(key: str) -> np.ndarray | None:
+            if d[key] is None:
+                return None
+            a = np.asarray(d[key], np.float64)
+            # files written before the shape keys hold non-empty arrays
+            shape = d.get(f"{key}_shape")
+            return a if shape is None else a.reshape(shape)
+
+        return cls(arr("coarse"), arr("codebooks"), float(d["err_bound"]))
 
 
 def ann_train(
@@ -253,6 +261,26 @@ def _decode(codes: np.ndarray, books: np.ndarray) -> np.ndarray:
     )
 
 
+def _shortlist(score: np.ndarray, ids: np.ndarray, take: int) -> np.ndarray:
+    """Positions of the ``take`` highest scores, a tie at the cut going
+    to the lower id — the (score desc, id asc) order ``_rerank``'s window
+    keeps, so a batch's partial shortlist never depends on how its rows
+    happen to lie (a NULL query ties every row at 0).  O(len(score)):
+    one partition for the cut and one over the tied ids, no sort."""
+    if take >= len(score):
+        return np.arange(len(score))
+    top = np.argpartition(-score, take - 1)[:take]
+    cut = score[top].min()
+    above = np.flatnonzero(score > cut)
+    tied = np.flatnonzero(score == cut)
+    need = take - len(above)
+    if len(tied) < need:  # a NaN cut: nothing compares equal to it
+        return top
+    if need < len(tied):
+        tied = tied[np.argpartition(ids[tied], need - 1)[:need]]
+    return np.concatenate([above, tied])
+
+
 def _dense(vs: list, dim: int) -> np.ndarray:
     """Collected vectors as an (n, dim) float64 matrix, a NULL vector as
     the zero vector.  A model trained on no vectors has dim 0 and scores
@@ -381,13 +409,16 @@ def pq_topk(
     """ADC shortlist over PQ codes + exact quantized-cosine re-rank.
 
     ``model`` is a flat-PQ ``AnnModel`` (``ann_train(..., n_lists=None)``,
-    only its codebooks are read).  The default, trained on ``base``
-    (m=8, n_centroids=64), and shortlist=200 = 20*k re-rank depth come
-    from the r10 measured recall table (ROUND10_NOTES.md): recall@10
-    0.88-0.99 on the uniform-sphere corpus.  ``shortlist`` is the
-    re-rank depth — the only knob that trades exact-math volume for
-    recall; 20*k is cheap (per query, 20*k exact cosines vs a corpus
-    scan) and the first knob to raise if the ADC ranking is noisy.
+    only its codebooks are read).  ``model=None`` trains one on ``base``
+    in this call; the query catalog passes its per-corpus model instead
+    (``queries_llm._corpus_model``, trained once per embeddings file).
+    The default model (m=8, n_centroids=64) and shortlist=200 = 20*k
+    re-rank depth come from the r10 measured recall table
+    (ROUND10_NOTES.md): recall@10 0.88-0.99 on the uniform-sphere
+    corpus.  ``shortlist`` is the re-rank depth — the only knob that
+    trades exact-math volume for recall; 20*k is cheap (per query, 20*k
+    exact cosines vs a corpus scan) and the first knob to raise if the
+    ADC ranking is noisy.
 
     The queries (small by contract, like cosine_topk) are collected and
     their per-subspace inner-product tables ride into the code-scan kernel
@@ -429,9 +460,8 @@ def pq_topk(
             approx[:, live] = adc
             out_q, out_n, out_s = [], [], []
             for qi in range(len(tables)):
-                take = min(shortlist, len(c))
-                top = np.argpartition(-approx[qi], take - 1)[:take]
-                out_q.extend([int(qids[qi])] * take)
+                top = _shortlist(approx[qi], ids, shortlist)
+                out_q.extend([int(qids[qi])] * len(top))
                 out_n.extend(ids[top].tolist())
                 out_s.extend(approx[qi][top].tolist())
             yield pd.DataFrame(
@@ -468,10 +498,13 @@ def ivfpq_topk(
     driver-side from the broadcast centroids) to the usual m subspace
     table lookups.  ``shortlist`` is the re-rank depth: how many ADC
     candidates per query get exact quantized-cosine scores.
+    ``model=None`` trains one on ``base`` in this call; the query catalog
+    passes its per-corpus model instead (``queries_llm._corpus_model``,
+    trained once per embeddings file).
 
-    Defaults (a model trained on ``base`` with 64 spherical-k-means
-    lists and 64 centroids per subspace, n_probe=24, shortlist=200 =
-    20*k) are from the r10 measured recall table (ROUND10_NOTES.md):
+    Defaults (a model with 64 spherical-k-means lists and 64 centroids
+    per subspace, n_probe=24, shortlist=200 = 20*k) are from the r10
+    measured recall table (ROUND10_NOTES.md):
     recall@10 0.83-0.90 at a 0.38 scan fraction on the UNIFORM-sphere
     synthetic corpus — the adversarial geometry, where top-10 neighbors
     sit at cos 0.31-0.41 against a cos~0 background and no coarse
@@ -541,9 +574,8 @@ def ivfpq_topk(
                 approx = np.full(len(c), -np.inf)
                 approx[hit] = adc
                 approx, sub_ids = approx[mask], ids[mask]
-                take = min(shortlist, len(sub_ids))
-                top = np.argpartition(-approx, take - 1)[:take]
-                out_q.extend([qid] * take)
+                top = _shortlist(approx, sub_ids, shortlist)
+                out_q.extend([qid] * len(top))
                 out_n.extend(sub_ids[top].tolist())
                 out_s.extend(approx[top].tolist())
             yield pd.DataFrame(

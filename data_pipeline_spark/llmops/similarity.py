@@ -956,12 +956,15 @@ def ivf_topk(
     ``n_probe`` nearest lists, and searches only those lists exactly.
 
     ``model`` is an IVF-flat ``pq.AnnModel`` (only its coarse quantizer
-    is read).  Defaults (a model trained on ``base`` with 64
-    spherical-k-means lists, n_probe=24) come from the r10 measured
-    recall table (ROUND10_NOTES.md): recall@10 >= 0.85 at a 0.38 scan
-    fraction on the UNIFORM-sphere synthetic corpus — the adversarial
-    geometry for coarse routing (top-10 neighbors sit at cos 0.31-0.41,
-    barely above the pairwise background).  Clustered real-world
+    is read).  ``model=None`` trains one on ``base`` in this call; the
+    query catalog passes its per-corpus model instead
+    (``queries_llm._corpus_model``, trained once per embeddings file).
+    Defaults (a model with 64 spherical-k-means lists, n_probe=24) come
+    from the r10 measured recall table (ROUND10_NOTES.md): recall@10
+    >= 0.85 at a 0.38 scan fraction on the UNIFORM-sphere synthetic
+    corpus — the adversarial geometry for coarse routing (top-10
+    neighbors sit at cos 0.31-0.41, barely above the pairwise
+    background).  Clustered real-world
     embedding corpora concentrate neighbors into far fewer lists (the
     10x near-dup-structured rehearsal corpus's measured numbers are in
     the same table).  Tune n_probe down when the corpus is clustered,

@@ -45,6 +45,54 @@ def _sidecar_lock(base):
     return process_mutex(str(base))
 
 
+def _sidecar_base(sf_dir: str, table: str, kind: str, *extra):
+    """The directory of one persisted sidecar: ``spark_graft_<kind>``
+    under the local tempdir, keyed by the identity of ``sf_dir``'s
+    ``table`` file (path, size, mtime, so a regenerated or rewritten
+    file gets a new key) and by ``extra``, whatever else the artifact
+    depends on."""
+    import hashlib
+    import os
+    import tempfile
+    from pathlib import Path
+
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    ident = "|".join(map(str, (sf_dir, st.st_size, st.st_mtime_ns, *extra)))
+    key = hashlib.md5(ident.encode()).hexdigest()[:12]
+    return Path(tempfile.gettempdir()) / f"spark_graft_{kind}" / key
+
+
+def _corpus_model(spark: SparkSession, sf_dir: str, **train_args):
+    """The ``pq.AnnModel`` of ``sf_dir``'s embeddings file, trained ONCE
+    per (file identity, ``pq.ann_train`` arguments) and persisted as its
+    ``to_dict`` JSON: what every catalog ANN query searches with, where
+    it used to train per call (build once per corpus snapshot, serve
+    many reads, as REPOSE and the incremental top-k framework do).  The
+    build writes ``model.json.tmp`` and renames it under the sidecar
+    lock, so a reader sees a whole file or none, and a crashed build's
+    leftover tmp is overwritten, never read.  Every call, the building
+    one included, returns the model read back from the file (JSON floats
+    round-trip double exactly), so cold and warm calls search with the
+    same bytes."""
+    import json
+    import os
+
+    from data_pipeline_spark.llmops import pq
+
+    args = json.dumps(train_args, sort_keys=True)
+    base = _sidecar_base(sf_dir, "embeddings", "ann_model", args)
+    path = base / "model.json"
+    if not path.exists():
+        with _sidecar_lock(base):
+            if not path.exists():  # losers of the build race no-op here
+                emb = load_table(spark, sf_dir, "embeddings")
+                model = pq.ann_train(emb, **train_args)
+                tmp = base / "model.json.tmp"
+                tmp.write_text(json.dumps(model.to_dict()))
+                os.replace(tmp, path)
+    return pq.AnnModel.from_dict(json.loads(path.read_text()))
+
+
 def _publish_dir(stage, final) -> None:
     """Atomically promote a staged parquet dir to its published name —
     rename is atomic on one filesystem, so readers never observe a
@@ -972,17 +1020,9 @@ def _warc_archive_dir(spark: SparkSession, sf_dir: str) -> str:
     reps — the fixture a file-level WARC source reads.  A production
     deployment deletes this helper and points read_warc at the crawl's
     segment listing."""
-    import hashlib
     import os
-    import tempfile
-    from pathlib import Path
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"warc|{sf_dir}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = Path(tempfile.gettempdir()) / "spark_graft_warc_archives" / key
+    out = _sidecar_base(sf_dir, "documents", "warc_archives")
     if (out / "_SUCCESS").exists():
         return str(out)
     out.mkdir(parents=True, exist_ok=True)
@@ -1752,7 +1792,10 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
+    return similarity.ivf_topk(
+        emb, emb.filter(F.col("vec_id") < 5), k=10,
+        model=_corpus_model(spark, sf_dir, n_lists=64, m=None),
+    )
 
 
 # Planted-recall oracle: 20 queries are identical copies of corpus vectors
@@ -1805,7 +1848,10 @@ def _planted_queries(emb: DataFrame) -> DataFrame:
 )
 def ivf_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    out = similarity.ivf_topk(emb, _planted_queries(emb), k=10)
+    out = similarity.ivf_topk(
+        emb, _planted_queries(emb), k=10,
+        model=_corpus_model(spark, sf_dir, n_lists=64, m=None),
+    )
     return out.filter(F.col("rank") == 1).select(
         "query_id", "neighbor_id", "cos_sim"
     )
@@ -1834,7 +1880,8 @@ def ivfpq_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     out = pq.ivfpq_topk(
-        emb, _planted_queries(emb), id_col="vec_id", k=10, shortlist=4096
+        emb, _planted_queries(emb), id_col="vec_id", k=10, shortlist=4096,
+        model=_corpus_model(spark, sf_dir),
     )
     return out.filter(F.col("rank") == 1).select(
         "query_id", "neighbor_id", "cos_sim"
@@ -1852,64 +1899,37 @@ def ivfpq_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "similarity"),
 )
 def ivf_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_spark.llmops import pq
-
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(
         emb, emb.filter(F.col("vec_id") < 5), k=10, n_probe=16,
-        model=pq.ann_train(emb, n_lists=16, m=None),
+        model=_corpus_model(spark, sf_dir, n_lists=16, m=None),
     )
 
 
 def _persisted_ivf_layout(spark: SparkSession, sf_dir: str):
-    """The IVF serving layout (list_id-partitioned parquet + persisted
-    centroids), materialized ONCE per embeddings-file identity — the ANN
-    twin of the gate/semantic sidecars: steady-state queries pay probe +
-    pruned scan + rank, never a re-index.  Centroids persist beside the
-    layout because probes against any other quantizer would search the
-    wrong lists; centroids.json is written only after the layout commits
-    (a partial build rebuilds both).  Returns (layout path, the IVF-flat
-    ``pq.AnnModel`` that assigned it)."""
-    import hashlib
-    import json
+    """The IVF serving layout (list_id-partitioned parquet), materialized
+    ONCE per embeddings-file identity — the ANN twin of the gate/semantic
+    sidecars: steady-state queries pay probe + pruned scan + rank, never
+    a re-index.  Its quantizer is the persisted 16-list IVF-flat
+    ``_corpus_model`` that ivf_exact_topk searches with, because probes
+    against any other quantizer would search the wrong lists; the model's
+    JSON round-trip is bit-exact in double, so probe-time routing
+    reproduces the write-time quantizer (the r10 ARRAY<FLOAT> reload
+    truncated to float32; parity pinned in tests/test_llmops.py).
+    Returns (layout path, that model)."""
     import os
-    import tempfile
-    from pathlib import Path
 
-    import numpy as np
-
-    from data_pipeline_spark.llmops import pq
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    base = Path(tempfile.gettempdir()) / "spark_graft_ivf_layout" / key
+    model = _corpus_model(spark, sf_dir, n_lists=16, m=None)
+    base = _sidecar_base(sf_dir, "embeddings", "ivf_layout")
     layout = base / "layout"
-    cent_path = base / "centroids.json"
-
-    def _done() -> bool:
-        return cent_path.exists() and (layout / "_SUCCESS").exists()
-
-    if not _done():
+    if not (layout / "_SUCCESS").exists():
         with _sidecar_lock(base):
-            if not _done():  # losers of the build race no-op here
+            if not (layout / "_SUCCESS").exists():  # race losers no-op
                 emb = load_table(spark, sf_dir, "embeddings")
                 stage = base / f"layout.stage.{os.getpid()}"
-                model = similarity.ivf_write_layout(emb, str(stage))  # 16 lists
-                rows = [[i, c] for i, c in enumerate(model.coarse.tolist())]
+                similarity.ivf_write_layout(emb, str(stage), model=model)
                 _publish_dir(stage, layout)
-                tmp = base / "centroids.json.tmp"
-                tmp.write_text(json.dumps(rows))
-                os.replace(tmp, cent_path)
-    # the JSON round-trip is bit-exact in double, so probe-time routing
-    # reproduces the write-time quantizer (the r10 ARRAY<FLOAT> reload
-    # truncated to float32 — a DIFFERENT quantizer from the one that
-    # assigned the layout's lists; parity pinned in tests/test_llmops.py)
-    rows = sorted(json.loads(cent_path.read_text()))
-    coarse = np.asarray([vec for _lid, vec in rows], np.float64)
-    return str(layout), pq.AnnModel(coarse, None, 0.0)
+    return str(layout), model
 
 
 @register(
@@ -3292,24 +3312,6 @@ def incremental_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ld.incremental_dedup_gate(corpus, incoming, "doc_id", "text")
 
 
-def _gate_index_dir(sf_dir: str):
-    """Base/index dirs of the persisted gate sidecar for this sf_dir —
-    keyed on the documents file's (size, mtime) so a regenerated
-    testdata tree invalidates the layout."""
-    import hashlib
-    import os
-    import tempfile
-    from pathlib import Path
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    base = Path(tempfile.gettempdir()) / "spark_graft_gate_index" / key
-    return base, base / "index"
-
-
 def _persisted_gate_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus half's doc_shingle_index sidecar, materialized ONCE per
     (sf_dir, source-file identity) and reused — by both gate catalog
@@ -3319,7 +3321,8 @@ def _persisted_gate_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild per trigger is precisely what the sidecar exists to avoid)."""
     import os
 
-    base, idx_dir = _gate_index_dir(sf_dir)
+    base = _sidecar_base(sf_dir, "documents", "gate_index")
+    idx_dir = base / "index"
     if not (idx_dir / "_SUCCESS").exists():
         with _sidecar_lock(base):
             if not (idx_dir / "_SUCCESS").exists():
@@ -3444,7 +3447,9 @@ def banded_index_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         band_prune=True,
         # adaptive literal/join crossover sizing off the sidecar's parquet
         # footers (exact row count, no count() job per trigger)
-        index_rows=lambda: parquet_num_rows(str(_gate_index_dir(sf_dir)[1])),
+        index_rows=lambda: parquet_num_rows(
+            str(_sidecar_base(sf_dir, "documents", "gate_index") / "index")
+        ),
     )
     return flags.select("doc_id", "exact_dup", "near_dup", "keep")
 
@@ -3531,7 +3536,8 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return pq.pq_topk(
-        emb, emb.filter(F.col("vec_id") < 5), id_col="vec_id", k=10
+        emb, emb.filter(F.col("vec_id") < 5), id_col="vec_id", k=10,
+        model=_corpus_model(spark, sf_dir, n_lists=None),
     )
 
 
@@ -3552,8 +3558,8 @@ def pq_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_spark.llmops import pq
 
     emb = load_table(spark, sf_dir, "embeddings")
-    model = pq.ann_train(
-        emb, n_lists=None, m=8, n_centroids=None, sample=10**6
+    model = _corpus_model(
+        spark, sf_dir, n_lists=None, m=8, n_centroids=None, sample=10**6
     )
     return pq.pq_topk(
         emb, emb.filter(F.col("vec_id") < 5), id_col="vec_id",
@@ -3581,7 +3587,8 @@ def ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return pq.ivfpq_topk(
-        emb, emb.filter(F.col("vec_id") < 5), id_col="vec_id", k=10
+        emb, emb.filter(F.col("vec_id") < 5), id_col="vec_id", k=10,
+        model=_corpus_model(spark, sf_dir),
     )
 
 
@@ -3600,8 +3607,8 @@ def ivfpq_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_spark.llmops import pq
 
     emb = load_table(spark, sf_dir, "embeddings")
-    model = pq.ann_train(
-        emb, n_lists=16, m=8, n_centroids=None,
+    model = _corpus_model(
+        spark, sf_dir, n_lists=16, m=8, n_centroids=None,
         sample=10**6,  # lossless codebooks must cover EVERY vector
     )
     return pq.ivfpq_topk(
@@ -3699,20 +3706,12 @@ def _persisted_semantic_index(spark: SparkSession, sf_dir: str):
     a rebuilt sidecar gates identically; the shared oracle certifies the
     decisions either way.  model.json is written only after the index
     parquet commits — a partial build rebuilds both."""
-    import hashlib
     import json
     import os
-    import tempfile
-    from pathlib import Path
 
     from data_pipeline_spark.llmops import pq
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    base = Path(tempfile.gettempdir()) / "spark_graft_semantic_index" / key
+    base = _sidecar_base(sf_dir, "embeddings", "semantic_index")
     idx_dir = base / "index"
     model_path = base / "model.json"
 

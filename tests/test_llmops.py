@@ -2127,6 +2127,229 @@ def test_ann_paths_on_degenerate_corpora(spark, tmp_path):
         sink.admit_batch(corpora["all_null"], 0)
 
 
+def test_pq_null_query_gets_cosine_topk_lowest_ids(spark):
+    """A NULL query vector ties every corpus row at ADC score 0, and the
+    scan kernels break a tie at the shortlist cut by the lower neighbor
+    id, so PQ and IVF-PQ (every list probed) return cosine_topk's answer
+    for it: the k lowest neighbor ids with a NULL cosine.  The shortlist
+    (200) is below the corpus size (500), so the cut falls inside the
+    tie."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    vecs = emb.select("vec_id", "embedding")
+    queries = vecs.filter(F.col("vec_id") < 2).unionByName(
+        spark.createDataFrame([(1_000_000, None)], vecs.schema)
+    )
+    want = sorted(
+        map(tuple, similarity.cosine_topk(emb, queries, k=10).collect())
+    )
+    assert [t[1] for t in want if t[0] == 1_000_000] == list(range(10))
+    got = {
+        "pq_topk": pq.pq_topk(emb, queries, k=10),
+        "ivfpq_topk": pq.ivfpq_topk(
+            emb, queries, k=10, n_probe=16,
+            model=pq.ann_train(emb, n_lists=16),
+        ),
+    }
+    for label, out in got.items():
+        rows = sorted(map(tuple, out.collect()))
+        assert [t for t in rows if t[0] == 1_000_000] == [
+            t for t in want if t[0] == 1_000_000
+        ], label
+
+
+def test_ann_model_dict_round_trips_every_shape():
+    """``AnnModel.to_dict``/``from_dict`` through JSON give back the same
+    bytes, dtype and shape for all four model forms: flat PQ (no coarse
+    quantizer), IVF-flat (no codebooks), IVF-PQ, and a model trained on
+    no vectors (zero centroids, zero-width codebooks).  A file without
+    the shape keys (an ingest sink's older ``model.json``) still loads."""
+    import json
+
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    coarse = rng.standard_normal((16, 64))
+    books = rng.standard_normal((8, 64, 8))
+    models = {
+        "flat_pq": pq.AnnModel(None, books, 0.125),
+        "ivf_flat": pq.AnnModel(coarse, None, 0.0),
+        "ivf_pq": pq.AnnModel(coarse, books, 0.3),
+        "empty": pq.AnnModel(np.zeros((0, 0)), np.zeros((8, 0, 0)), 0.0),
+    }
+    for name, model in models.items():
+        back = pq.AnnModel.from_dict(json.loads(json.dumps(model.to_dict())))
+        assert back.err_bound == model.err_bound, name
+        for a, b in ((model.coarse, back.coarse), (model.books, back.books)):
+            if a is None:
+                assert b is None, name
+                continue
+            assert (b.dtype, b.shape) == (a.dtype, a.shape), name
+            assert b.tobytes() == a.tobytes(), name
+    legacy = {
+        "coarse": coarse.tolist(),
+        "codebooks": books.tolist(),
+        "err_bound": 0.3,
+    }
+    back = pq.AnnModel.from_dict(legacy)
+    assert back.coarse.tobytes() == coarse.tobytes()
+    assert back.books.tobytes() == books.tobytes()
+
+
+@pytest.fixture
+def ann_model_cache(spark, tmp_path, monkeypatch):
+    """A private sidecar tempdir, a copy of the sf0.001 embeddings file,
+    and a counter of ``pq.ann_train`` calls (every trainer call site
+    looks the function up on the module)."""
+    import shutil
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{SF_SMOKE}/embeddings.parquet", sf / "embeddings.parquet")
+    trains = []
+    real = pq.ann_train
+
+    def counted(*args, **kwargs):
+        trains.append(kwargs)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "ann_train", counted)
+    return tmp, str(sf), trains
+
+
+def _same_model(a, b) -> bool:
+    return all(
+        (x is None and y is None) or x.tobytes() == y.tobytes()
+        for x, y in ((a.coarse, b.coarse), (a.books, b.books))
+    ) and a.err_bound == b.err_bound
+
+
+def test_ann_model_cache_cold_warm_and_per_call_agree(
+    spark, ann_model_cache, tmp_path
+):
+    """Every catalog ANN query returns the same rows cold (the call that
+    trains and persists the model), warm (a call that reads it back and
+    trains nothing), and as the per-call library form it replaced
+    (``model=None`` trains on the corpus, or the query's explicit
+    ``ann_train``); the six distinct training-argument sets train once
+    each, and the IVF serving layout shares ivf_exact_topk's model."""
+    from data_pipeline_spark.queries import QUERIES
+    from data_pipeline_spark.queries_llm import _planted_queries
+
+    _tmp, sf, trains = ann_model_cache
+    emb = load_table(spark, sf, "embeddings")
+    q5 = emb.filter(F.col("vec_id") < 5)
+
+    def rank1(out):
+        return out.filter(F.col("rank") == 1).select(
+            "query_id", "neighbor_id", "cos_sim"
+        )
+
+    def served():
+        path = str(tmp_path / "layout")
+        model = similarity.ivf_write_layout(emb, path)
+        return similarity.ivf_layout_topk(
+            spark, path, q5, model, k=10, n_probe=16
+        )
+
+    lossless = {"n_centroids": None, "sample": 10**6}
+    per_call = {
+        "pq_ann_topk": lambda: pq.pq_topk(emb, q5, k=10),
+        "pq_exact_topk": lambda: pq.pq_topk(
+            emb, q5, k=10, shortlist=50,
+            model=pq.ann_train(emb, n_lists=None, m=8, **lossless),
+        ),
+        "ivfpq_ann_topk": lambda: pq.ivfpq_topk(emb, q5, k=10),
+        "ivfpq_exact_topk": lambda: pq.ivfpq_topk(
+            emb, q5, k=10, n_probe=16, shortlist=50,
+            model=pq.ann_train(emb, n_lists=16, m=8, **lossless),
+        ),
+        "ivfpq_planted_recall": lambda: rank1(
+            pq.ivfpq_topk(emb, _planted_queries(emb), k=10, shortlist=4096)
+        ),
+        "ivf_ann_topk": lambda: similarity.ivf_topk(emb, q5, k=10),
+        "ivf_exact_topk": lambda: similarity.ivf_topk(
+            emb, q5, k=10, n_probe=16,
+            model=pq.ann_train(emb, n_lists=16, m=None),
+        ),
+        "ivf_planted_recall": lambda: rank1(
+            similarity.ivf_topk(emb, _planted_queries(emb), k=10)
+        ),
+        "ivf_partitioned_exact_topk": served,
+    }
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    cold = {q: rows(QUERIES[q].spark(spark, sf)) for q in per_call}
+    assert len(trains) == 6
+    warm = {q: rows(QUERIES[q].spark(spark, sf)) for q in per_call}
+    assert len(trains) == 6  # a warm call trains nothing
+    for q, build in per_call.items():
+        assert cold[q] and cold[q] == warm[q] == rows(build()), q
+
+
+def test_ann_model_cache_retrains_on_a_rewritten_file(spark, ann_model_cache):
+    """A rewritten embeddings file is a new corpus snapshot: the next
+    call trains on it, and returns the model of the new file."""
+    import pyarrow.parquet as papq
+
+    from data_pipeline_spark.queries_llm import _corpus_model
+
+    _tmp, sf, trains = ann_model_cache
+    first = _corpus_model(spark, sf, n_lists=16, m=None)
+    assert _same_model(_corpus_model(spark, sf, n_lists=16, m=None), first)
+    assert len(trains) == 1
+    path = f"{sf}/embeddings.parquet"
+    papq.write_table(papq.read_table(path).slice(0, 300), path)
+    second = _corpus_model(spark, sf, n_lists=16, m=None)
+    assert len(trains) == 2
+    emb = load_table(spark, sf, "embeddings")
+    fresh = pq.ann_train(emb, n_lists=16, m=None)
+    assert _same_model(second, fresh) and not _same_model(second, first)
+
+
+def test_ann_model_cache_never_reads_a_leftover_tmp(spark, ann_model_cache):
+    """A ``model.json.tmp`` left by a build that crashed before its
+    rename is not the model: the next call trains, replaces it, and
+    returns the trained model."""
+    import json
+
+    from data_pipeline_spark.queries_llm import _corpus_model
+
+    tmp, sf, trains = ann_model_cache
+    want = _corpus_model(spark, sf, n_lists=16, m=None)
+    (done,) = tmp.glob("spark_graft_ann_model/*/model.json")
+    done.unlink()
+    bogus = pq.AnnModel(want.coarse[:2] * 0, None, 0.0)
+    done.with_name("model.json.tmp").write_text(json.dumps(bogus.to_dict()))
+    got = _corpus_model(spark, sf, n_lists=16, m=None)
+    assert len(trains) == 2 and _same_model(got, want)
+    assert not done.with_name("model.json.tmp").exists()
+    assert _same_model(
+        pq.AnnModel.from_dict(json.loads(done.read_text())), want
+    )
+
+
+def test_ann_model_cache_keys_on_training_arguments(spark, ann_model_cache):
+    """Two training-argument sets over one file never share an entry:
+    each trains once and keeps returning its own model."""
+    from data_pipeline_spark.queries_llm import _corpus_model
+
+    tmp, sf, trains = ann_model_cache
+    a = _corpus_model(spark, sf, n_lists=16, m=None)
+    b = _corpus_model(spark, sf, n_lists=8, m=None)
+    assert len(trains) == 2
+    assert a.coarse.shape[0] == 16 and b.coarse.shape[0] == 8
+    assert len(list(tmp.glob("spark_graft_ann_model/*/model.json"))) == 2
+    assert _same_model(_corpus_model(spark, sf, n_lists=16, m=None), a)
+    assert _same_model(_corpus_model(spark, sf, n_lists=8, m=None), b)
+    assert len(trains) == 2
+
+
 def test_tiff_codec_roundtrip_and_variants():
     """Strip-based TIFF: the two-strip encoder roundtrips exactly; a
     hand-built big-endian grayscale file decodes with channel replication;
