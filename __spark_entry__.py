@@ -33,12 +33,15 @@ def entry(spark: SparkSession) -> DataFrame:
 # second, and a representative spread of the long-green set fills the
 # remaining window; the rest follow.
 _PRIORITY = [
-    # -- one ANN model --------------------------------------------------------
-    # CODE CHANGED: every index query now searches with the per-corpus
-    # model cache (queries_llm._corpus_model: one pq.ann_train model per
-    # embeddings file and training arguments, persisted as model.json);
-    # the IVF serving layout shares ivf_exact_topk's model, and the ADC
-    # scans break a tie at the shortlist cut by the lower neighbor id
+    # -- one build-once cache -------------------------------------------------
+    # CODE CHANGED: every query whose derived artifact now builds through
+    # io.build_once (new cache keys and, for the WARC archives and the
+    # z-order copy, new final names): the WARC fixture, the z-order copy
+    # of lineitem, the per-corpus ANN model, the IVF serving layout and
+    # the text and semantic gate indexes
+    "warc_extraction",
+    "warc_file_source",
+    "zorder_box_query",
     "pq_ann_topk",
     "pq_exact_topk",
     "ivfpq_ann_topk",
@@ -48,6 +51,8 @@ _PRIORITY = [
     "ivf_exact_topk",
     "ivf_planted_recall",
     "ivf_partitioned_exact_topk",
+    "persisted_index_dedup_gate",
+    "banded_index_dedup_gate",
     "semantic_dedup_gate",
     # -- one Spark job per side of a CDC batch --------------------------------
     # CODE CHANGED: every query that publishes to and tails a topic (the
@@ -116,7 +121,6 @@ _PRIORITY = [
     "boilerplate_strip",
     "segment_dedup_stats",
     "corpus_health_by_source",
-    "warc_file_source",
 ]
 
 

@@ -24,7 +24,7 @@ swaps for its conditional PUT.  The epoch number doubles as a
 monotonically-increasing fencing token.
 
 `process_mutex` is a different tool: a blocking kernel flock for
-sidecar-cache builds under the local tempdir, released by the kernel the
+``io.build_once``'s builds on a local disk, released by the kernel the
 moment its holder dies.
 """
 
@@ -271,13 +271,13 @@ class LeaseLock:
 def process_mutex(base: str):
     """Blocking cross-process critical section rooted at ``base``.
 
-    Used by sidecar-cache builds (one process builds, others wait, all
-    re-check existence after acquiring).  Every caller roots ``base`` under
-    the local tempdir, so a kernel flock on ``base/.lock`` is always
-    available.  It is held for exactly the build's lifetime and has no
-    expiry to outlive: a long build keeps excluding however long it runs,
-    and a crashed builder's lock is dropped by the kernel at once, where a
-    lease would block every waiter until it expired.
+    Used by ``io.build_once`` (one process builds, others wait, all
+    re-check existence after acquiring) on a local disk, where a kernel
+    flock on ``base/.lock`` is always available.  It is held for exactly
+    the build's lifetime and has no expiry to outlive: a long build keeps
+    excluding however long it runs, and a crashed builder's lock is
+    dropped by the kernel at once, where a lease would block every waiter
+    until it expired.
     """
     os.makedirs(base, exist_ok=True)
     fd = os.open(os.path.join(base, ".lock"), os.O_CREAT | os.O_RDWR)

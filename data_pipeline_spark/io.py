@@ -19,6 +19,12 @@ ingest sink also writes each trigger's corpus and index files through
 it.  Spark-written and driver-written files mix in one directory, and
 names starting with ``.`` or ``_`` (tmp files, ``_SUCCESS``, ``.crc``)
 are skipped by both engines.
+
+Every derived artifact (the catalog's ANN models, IVF layout, gate
+indexes, WARC fixture and z-order copy, the executor package zip, an
+ingest sink's first model) becomes visible through ``build_once``: built
+once into ``<final>.tmp`` under a process mutex and published with one
+rename, so it reads whole or not at all.
 """
 
 from __future__ import annotations
@@ -388,6 +394,52 @@ def write_rows(path: str, schema, rows: list[tuple]) -> str:
             [dict(zip(schema.names, r)) for r in rows], schema=schema
         ),
     )
+
+
+def cache_path(kind: str, sources, *extra, name: str) -> str:
+    """Where ``build_once`` keeps the artifact ``name`` of ``kind`` built
+    from the files ``sources`` and the values ``extra``:
+    ``<tempdir>/spark_graft_<kind>/<key>/<name>``, the key an md5 of each
+    source's (path, size, mtime) and of ``extra``, so a rewritten source
+    or a changed argument names a new artifact."""
+    import hashlib
+    import tempfile
+
+    ident = [kind]
+    for p in sources:
+        st = os.stat(p)
+        ident += [p, st.st_size, st.st_mtime_ns]
+    key = hashlib.md5("|".join(map(str, ident + list(extra))).encode())
+    return os.path.join(
+        tempfile.gettempdir(), f"spark_graft_{kind}", key.hexdigest()[:12], name
+    )
+
+
+def build_once(final: str, build) -> str:
+    """Return ``final``, calling ``build(stage)`` first if it does not
+    exist yet: the one way a derived artifact (a file or a directory)
+    becomes visible.  A warm call is one ``exists`` check.  A cold call
+    takes ``coordination.process_mutex`` on the parent directory (other
+    processes and threads wait, then find it built), removes any
+    ``<final>.tmp`` an earlier build left when it crashed, lets ``build``
+    write that path, and publishes it with one rename.  A reader sees the
+    artifact whole or not at all, and a build that raises publishes
+    nothing."""
+    if not os.path.exists(final):
+        import shutil
+
+        from data_pipeline_spark.coordination import process_mutex
+
+        with process_mutex(os.path.dirname(final)):
+            if not os.path.exists(final):
+                stage = f"{final}.tmp"
+                if os.path.isdir(stage):
+                    shutil.rmtree(stage)
+                elif os.path.lexists(stage):
+                    os.remove(stage)
+                build(stage)
+                os.rename(stage, final)
+    return final
 
 
 class CommitLog:

@@ -37,6 +37,7 @@ cosine, last.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
 from typing import NamedTuple
 
@@ -111,6 +112,25 @@ class AnnModel(NamedTuple):
             return a if shape is None else a.reshape(shape)
 
         return cls(arr("coarse"), arr("codebooks"), float(d["err_bound"]))
+
+
+def write_model(path: str, model: AnnModel, **meta) -> None:
+    """Write ``model`` to the file ``path`` as its ``to_dict`` JSON plus
+    the keys ``meta`` (an ingest sink's ``version`` and
+    ``trained_on_n``): the one ``model.json`` writer.  The caller makes
+    it visible atomically (``io.build_once``, or a tmp file and a
+    rename)."""
+    with open(path, "w") as fh:
+        fh.write(json.dumps({**model.to_dict(), **meta}))
+
+
+def read_model(path: str) -> tuple[AnnModel, dict]:
+    """The model in the file ``path`` and the file's whole dict (its
+    ``meta`` keys too): the one ``model.json`` reader.  Files written
+    before the shape keys load as well."""
+    with open(path) as fh:
+        d = json.load(fh)
+    return AnnModel.from_dict(d), d
 
 
 def ann_train(

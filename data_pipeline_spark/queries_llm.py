@@ -6,10 +6,14 @@ fixed-point similarity math, so results match bit-for-bit).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_spark.io import (
+    build_once,
+    cache_path,
     load_spread,
     load_table,
     parquet_nonnull_rows,
@@ -25,88 +29,30 @@ from data_pipeline_spark.queries import QUERIES, register
 _STOP_EN_SQL = "('the','a','of','and','to','in','is')"
 
 
-def _sidecar_lock(base):
-    """Serialize sidecar cache builds across PROCESSES: the persisted
-    gate/semantic/IVF sidecars live under a shared tempdir keyed only by
-    source-file identity, so two concurrent runs (parallel bench/test
-    invocations on the same testdata) could both see the cache missing
-    and race overwrite-writes into the same parquet dir — a reader could
-    then observe writer A's _SUCCESS over writer B's half-written part
-    files (ADVICE r10).  An exclusive mutex on ``base`` makes one process
-    build while the others wait, and the caller's existence RE-CHECK
-    after acquiring makes the losers no-op.  Artifacts are staged in tmp
-    names and renamed into place under the lock, so an unlocked fast-path
-    reader (the ``done()`` check before taking the lock) only ever sees
-    fully-published dirs.  ``base`` is always under the local tempdir, so
-    the mutex is a kernel flock (coordination.process_mutex): a crashed
-    builder releases it at once."""
-    from data_pipeline_spark.coordination import process_mutex
-
-    return process_mutex(str(base))
-
-
-def _sidecar_base(sf_dir: str, table: str, kind: str, *extra):
-    """The directory of one persisted sidecar: ``spark_graft_<kind>``
-    under the local tempdir, keyed by the identity of ``sf_dir``'s
-    ``table`` file (path, size, mtime, so a regenerated or rewritten
-    file gets a new key) and by ``extra``, whatever else the artifact
-    depends on."""
-    import hashlib
-    import os
-    import tempfile
-    from pathlib import Path
-
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    ident = "|".join(map(str, (sf_dir, st.st_size, st.st_mtime_ns, *extra)))
-    key = hashlib.md5(ident.encode()).hexdigest()[:12]
-    return Path(tempfile.gettempdir()) / f"spark_graft_{kind}" / key
-
-
 def _corpus_model(spark: SparkSession, sf_dir: str, **train_args):
     """The ``pq.AnnModel`` of ``sf_dir``'s embeddings file, trained ONCE
-    per (file identity, ``pq.ann_train`` arguments) and persisted as its
-    ``to_dict`` JSON: what every catalog ANN query searches with, where
-    it used to train per call (build once per corpus snapshot, serve
-    many reads, as REPOSE and the incremental top-k framework do).  The
-    build writes ``model.json.tmp`` and renames it under the sidecar
-    lock, so a reader sees a whole file or none, and a crashed build's
-    leftover tmp is overwritten, never read.  Every call, the building
-    one included, returns the model read back from the file (JSON floats
-    round-trip double exactly), so cold and warm calls search with the
-    same bytes."""
+    per (file identity, ``pq.ann_train`` arguments) and persisted as
+    ``model.json`` through ``io.build_once``: what every catalog ANN
+    query searches with, where it used to train per call (build once per
+    corpus snapshot, serve many reads, as REPOSE and the incremental
+    top-k framework do).  Every call, the building one included, returns
+    the model read back from the file (JSON floats round-trip double
+    exactly), so cold and warm calls search with the same bytes."""
     import json
-    import os
 
     from data_pipeline_spark.llmops import pq
 
-    args = json.dumps(train_args, sort_keys=True)
-    base = _sidecar_base(sf_dir, "embeddings", "ann_model", args)
-    path = base / "model.json"
-    if not path.exists():
-        with _sidecar_lock(base):
-            if not path.exists():  # losers of the build race no-op here
-                emb = load_table(spark, sf_dir, "embeddings")
-                model = pq.ann_train(emb, **train_args)
-                tmp = base / "model.json.tmp"
-                tmp.write_text(json.dumps(model.to_dict()))
-                os.replace(tmp, path)
-    return pq.AnnModel.from_dict(json.loads(path.read_text()))
+    def build(stage):
+        emb = load_table(spark, sf_dir, "embeddings")
+        pq.write_model(stage, pq.ann_train(emb, **train_args))
 
-
-def _publish_dir(stage, final) -> None:
-    """Atomically promote a staged parquet dir to its published name —
-    rename is atomic on one filesystem, so readers never observe a
-    half-copied layout.  A leftover from a crashed earlier build is
-    replaced (we hold the sidecar lock, so nothing is reading it
-    mid-promotion)."""
-    import os
-    import shutil
-    from pathlib import Path
-
-    final = Path(final)
-    if final.exists():
-        shutil.rmtree(final)
-    os.rename(stage, final)
+    final = cache_path(
+        "ann_model",
+        [os.path.join(sf_dir, "embeddings.parquet")],
+        json.dumps(train_args, sort_keys=True),
+        name="model.json",
+    )
+    return pq.read_model(build_once(final, build))[0]
 
 
 @register(
@@ -1016,48 +962,48 @@ def _warc_archive_dir(spark: SparkSession, sf_dir: str) -> str:
     """Synthesize the documents table as REAL multi-capture .warc.gz
     archive files (warcinfo + request/response pairs, 50 captures per
     file — the CommonCrawl segment layout, miniaturized), ONCE per
-    (sf_dir, source-file identity), and reuse across queries and bench
-    reps — the fixture a file-level WARC source reads.  A production
-    deployment deletes this helper and points read_warc at the crawl's
-    segment listing."""
-    import os
+    documents-file identity (``io.build_once``), and reuse across
+    queries and bench reps — the fixture a file-level WARC source reads.
+    A production deployment deletes this helper and points read_warc at
+    the crawl's segment listing."""
 
-    out = _sidecar_base(sf_dir, "documents", "warc_archives")
-    if (out / "_SUCCESS").exists():
-        return str(out)
-    out.mkdir(parents=True, exist_ok=True)
+    def build(stage):
+        os.makedirs(stage)
 
-    out_str = str(out)
+        def write_segment(pdf):
+            import pandas as _pd
 
-    def write_segment(pdf):
-        import pandas as _pd
+            from data_pipeline_spark.llmops import html_text as _ht
+            from data_pipeline_spark.llmops import warc as _warc
 
-        from data_pipeline_spark.llmops import html_text as _ht
-        from data_pipeline_spark.llmops import warc as _warc
+            caps = sorted(
+                (int(d), _ht.wrap_in_html(int(d), t or "").encode("utf-8"))
+                for d, t in zip(pdf["doc_id"], pdf["text"])
+            )
+            g = caps[0][0] // 50
+            blob = _warc.build_warc_archive(caps, gzip_records=True)
+            path = os.path.join(stage, f"segment-{g:05d}.warc.gz")
+            with open(path, "w+b") as fh:
+                fh.write(blob)
+            return _pd.DataFrame({"g": [g], "n": [len(caps)]})
 
-        caps = sorted(
-            (int(d), _ht.wrap_in_html(int(d), t or "").encode("utf-8"))
-            for d, t in zip(pdf["doc_id"], pdf["text"])
+        # segments build DISTRIBUTED (one task per 50-doc group writing
+        # its own file — local[n] shares the FS; a cluster fixture would
+        # write to shared storage): the driver never materializes the
+        # corpus
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        n_seg = (
+            docs.groupBy((F.col("doc_id") / 50).cast("long"))
+            .applyInPandas(write_segment, schema="g long, n long")
+            .count()
         )
-        g = caps[0][0] // 50
-        blob = _warc.build_warc_archive(caps, gzip_records=True)
-        path = os.path.join(out_str, f"segment-{g:05d}.warc.gz")
-        with open(path, "w+b") as fh:
-            fh.write(blob)
-        return _pd.DataFrame({"g": [g], "n": [len(caps)]})
+        assert n_seg > 0
 
-    # segments build DISTRIBUTED (one task per 50-doc group writing its
-    # own file — local[n] shares the FS; a cluster fixture would write
-    # to shared storage): the driver never materializes the corpus
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n_seg = (
-        docs.groupBy((F.col("doc_id") / 50).cast("long"))
-        .applyInPandas(write_segment, schema="g long, n long")
-        .count()
+    final = cache_path(
+        "warc_archives", [os.path.join(sf_dir, "documents.parquet")],
+        name="archives",
     )
-    assert n_seg > 0
-    (out / "_SUCCESS").touch()
-    return str(out)
+    return build_once(final, build)
 
 
 @register(
@@ -1917,19 +1863,17 @@ def _persisted_ivf_layout(spark: SparkSession, sf_dir: str):
     reproduces the write-time quantizer (the r10 ARRAY<FLOAT> reload
     truncated to float32; parity pinned in tests/test_llmops.py).
     Returns (layout path, that model)."""
-    import os
-
     model = _corpus_model(spark, sf_dir, n_lists=16, m=None)
-    base = _sidecar_base(sf_dir, "embeddings", "ivf_layout")
-    layout = base / "layout"
-    if not (layout / "_SUCCESS").exists():
-        with _sidecar_lock(base):
-            if not (layout / "_SUCCESS").exists():  # race losers no-op
-                emb = load_table(spark, sf_dir, "embeddings")
-                stage = base / f"layout.stage.{os.getpid()}"
-                similarity.ivf_write_layout(emb, str(stage), model=model)
-                _publish_dir(stage, layout)
-    return str(layout), model
+
+    def build(stage):
+        emb = load_table(spark, sf_dir, "embeddings")
+        similarity.ivf_write_layout(emb, stage, model=model)
+
+    final = cache_path(
+        "ivf_layout", [os.path.join(sf_dir, "embeddings.parquet")],
+        name="layout",
+    )
+    return build_once(final, build), model
 
 
 @register(
@@ -3314,34 +3258,34 @@ def incremental_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _persisted_gate_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus half's doc_shingle_index sidecar, materialized ONCE per
-    (sf_dir, source-file identity) and reused — by both gate catalog
-    entries and across bench reps — so their timings measure the
-    steady-state per-trigger gate, not an index rebuild (the streaming
-    sink builds index rows incrementally per admitted batch; a full
-    rebuild per trigger is precisely what the sidecar exists to avoid)."""
-    import os
+    documents-file identity and reused — by both gate catalog entries and
+    across bench reps — so their timings measure the steady-state
+    per-trigger gate, not an index rebuild (the streaming sink builds
+    index rows incrementally per admitted batch; a full rebuild per
+    trigger is precisely what the sidecar exists to avoid)."""
+    return read_parquet_cached(spark, _gate_index_dir(spark, sf_dir))
 
-    base = _sidecar_base(sf_dir, "documents", "gate_index")
-    idx_dir = base / "index"
-    if not (idx_dir / "_SUCCESS").exists():
-        with _sidecar_lock(base):
-            if not (idx_dir / "_SUCCESS").exists():
-                corpus = load_table(spark, sf_dir, "documents").filter(
-                    F.col("doc_id") % 10 != 0
-                )
-                # repartition off the small-SF single-file partition
-                # before the in-row band computation (interpreted HOFs,
-                # ~1 ms/doc on one core); at 100 TB the corpus arrives
-                # already split
-                stage = base / f"index.stage.{os.getpid()}"
-                ld.doc_shingle_index(
-                    spread_scan(corpus, spark),
-                    "doc_id",
-                    "text",
-                ).write.mode("overwrite").parquet(str(stage))
-                _publish_dir(stage, idx_dir)
-    return read_parquet_cached(spark, str(idx_dir))
 
+def _gate_index_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The directory of ``_persisted_gate_index``, built on the first
+    call (``io.build_once``)."""
+
+    def build(stage):
+        corpus = load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % 10 != 0
+        )
+        # repartition off the small-SF single-file partition before the
+        # in-row band computation (interpreted HOFs, ~1 ms/doc on one
+        # core); at 100 TB the corpus arrives already split
+        ld.doc_shingle_index(
+            spread_scan(corpus, spark), "doc_id", "text"
+        ).write.parquet(stage)
+
+    final = cache_path(
+        "gate_index", [os.path.join(sf_dir, "documents.parquet")],
+        name="index",
+    )
+    return build_once(final, build)
 
 
 @register(
@@ -3447,9 +3391,7 @@ def banded_index_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         band_prune=True,
         # adaptive literal/join crossover sizing off the sidecar's parquet
         # footers (exact row count, no count() job per trigger)
-        index_rows=lambda: parquet_num_rows(
-            str(_sidecar_base(sf_dir, "documents", "gate_index") / "index")
-        ),
+        index_rows=lambda: parquet_num_rows(_gate_index_dir(spark, sf_dir)),
     )
     return flags.select("doc_id", "exact_dup", "near_dup", "keep")
 
@@ -3697,43 +3639,36 @@ def _semantic_gate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _persisted_semantic_index(spark: SparkSession, sf_dir: str):
     """The semantic gate's (model, index-sidecar) pair, materialized ONCE
-    per (sf_dir, embeddings-file identity) and reused across bench reps —
-    the semantic twin of ``_persisted_gate_index``: the streaming sink
+    per embeddings-file identity and reused across bench reps — the
+    semantic twin of ``_persisted_gate_index``: the streaming sink
     trains once and appends index rows per admitted trigger, so the
     steady-state per-trigger cost is probe + ADC scan + verify against a
     PERSISTED index, never model retraining or a corpus re-encode.
     Training is deterministic (md5-ordered sample, fixed-seed k-means), so
     a rebuilt sidecar gates identically; the shared oracle certifies the
-    decisions either way.  model.json is written only after the index
-    parquet commits — a partial build rebuilds both."""
-    import json
-    import os
-
+    decisions either way.  The index parquet and its ``model.json``
+    publish as one directory (``io.build_once``), so neither is ever
+    seen without the other."""
     from data_pipeline_spark.llmops import pq
 
-    base = _sidecar_base(sf_dir, "embeddings", "semantic_index")
-    idx_dir = base / "index"
-    model_path = base / "model.json"
+    def build(stage):
+        corpus = _semantic_gate_corpus(spark, sf_dir)
+        model = pq.ann_train(corpus)
+        pq.semantic_index_rows(corpus, model).write.parquet(
+            os.path.join(stage, "index")
+        )
+        pq.write_model(os.path.join(stage, "model.json"), model)
 
-    def _done() -> bool:
-        return model_path.exists() and (idx_dir / "_SUCCESS").exists()
-
-    if not _done():
-        with _sidecar_lock(base):
-            if not _done():
-                corpus = _semantic_gate_corpus(spark, sf_dir)
-                model = pq.ann_train(corpus)
-                stage = base / f"index.stage.{os.getpid()}"
-                pq.semantic_index_rows(corpus, model).write.mode(
-                    "overwrite"
-                ).parquet(str(stage))
-                _publish_dir(stage, idx_dir)
-                tmp = base / "model.json.tmp"
-                tmp.write_text(json.dumps(model.to_dict()))
-                os.replace(tmp, model_path)
+    final = build_once(
+        cache_path(
+            "semantic_index", [os.path.join(sf_dir, "embeddings.parquet")],
+            name="sidecar",
+        ),
+        build,
+    )
     return (
-        pq.AnnModel.from_dict(json.loads(model_path.read_text())),
-        read_parquet_cached(spark, str(idx_dir)),
+        pq.read_model(os.path.join(final, "model.json"))[0],
+        read_parquet_cached(spark, os.path.join(final, "index")),
     )
 
 

@@ -65,32 +65,26 @@ def package_zip() -> str:
     failed 18 queries with ``ModuleNotFoundError: data_pipeline_spark``
     because any UDF that imports the package at call time (warc decode,
     multimodal codecs, envelope pack, sketch mergers) resolves the import
-    ON THE EXECUTOR.  Cached per source-mtime fingerprint; staged +
-    atomically renamed so concurrent sessions never ship a half-written
+    ON THE EXECUTOR.  Built once per source-file identity
+    (``io.build_once``), so concurrent sessions never ship a half-written
     zip."""
-    import hashlib
-    import tempfile
     import zipfile
     from pathlib import Path
 
+    from data_pipeline_spark.io import build_once, cache_path
+
     pkg = Path(__file__).resolve().parent
-    root = pkg.parent
     srcs = sorted(pkg.rglob("*.py"))
-    key = hashlib.md5(
-        "|".join(
-            f"{p.relative_to(root)}:{p.stat().st_mtime_ns}" for p in srcs
-        ).encode()
-    ).hexdigest()[:12]
-    out = Path(tempfile.gettempdir()) / "spark_graft_pyfiles"
-    out.mkdir(parents=True, exist_ok=True)
-    zpath = out / f"data_pipeline_spark_{key}.zip"
-    if not zpath.exists():
-        tmp = out / f".stage.{os.getpid()}.zip"
-        with zipfile.ZipFile(tmp, "w") as z:
+
+    def build(stage):
+        with zipfile.ZipFile(stage, "w") as z:
             for p in srcs:
-                z.write(p, str(p.relative_to(root)))
-        os.replace(tmp, zpath)
-    return str(zpath)
+                z.write(p, str(p.relative_to(pkg.parent)))
+
+    final = cache_path(
+        "pyfiles", map(str, srcs), name="data_pipeline_spark.zip"
+    )
+    return build_once(final, build)
 
 
 def get_spark(
@@ -148,12 +142,9 @@ def get_spark(
         # on 32 cores (r12 profile).  64k keeps small-byte/high-CPU
         # stages near core-count parallelism; at production scale every
         # healthy partition is far above ANY floor (the advisory size
-        # governs), so the setting is inert there — env-overridable for
-        # deployments that want the stock floor back.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
+        # governs), so the setting is inert there (``extra_conf`` sets
+        # the stock floor back).
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -164,10 +155,7 @@ def get_spark(
         # Read as long and convert (io.load_table) via exact integer division.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/dps_warehouse"),
-        )
+        .config("spark.sql.warehouse.dir", "/tmp/dps_warehouse")
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
@@ -187,10 +175,7 @@ def get_spark(
                 "spark.executor.memory",
                 os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "12g"),
             )
-            .config(
-                "spark.executor.memoryOverhead",
-                os.environ.get("SPARK_GRAFT_EXECUTOR_OVERHEAD", "4g"),
-            )
+            .config("spark.executor.memoryOverhead", "4g")
             .config("spark.driver.host", "127.0.0.1")
             # ship the package: executor python workers do NOT share the
             # driver's sys.path outside local mode (see package_zip)

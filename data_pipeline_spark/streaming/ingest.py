@@ -1064,8 +1064,6 @@ class SemanticGatedIngest(DedupGatedIngest):
         return os.path.join(self.index_dir, f"model_v{version}.json")
 
     def _load_model(self, version: int) -> None:
-        import json
-
         from data_pipeline_spark.llmops import pq
 
         if version in self._models:
@@ -1078,9 +1076,7 @@ class SemanticGatedIngest(DedupGatedIngest):
                 "their quantizer, so the gate fails loud instead of "
                 "probing with a different model (silent recall loss)"
             )
-        with open(path) as fh:
-            d = json.load(fh)
-        self._models[version] = pq.AnnModel.from_dict(d)
+        self._models[version], d = pq.read_model(path)
         self._trained_on[version] = int(d.get("trained_on_n", 0))
 
     def _latest_model_file_version(self) -> int | None:
@@ -1200,7 +1196,8 @@ class SemanticGatedIngest(DedupGatedIngest):
         return model
 
     def _ensure_model(self, batch: DataFrame):
-        import json
+        from data_pipeline_spark.io import build_once
+        from data_pipeline_spark.llmops import pq
 
         if self._model_version is not None:
             # gate/encode-time guard: pick up a committed foreign
@@ -1214,34 +1211,25 @@ class SemanticGatedIngest(DedupGatedIngest):
             self._load_model(v)
             self._model_version = v
             return self._models[v]
-        model = self._train(batch, self.n_lists, self.sample)
-        os.makedirs(self.index_dir, exist_ok=True)
-        # atomic CREATE (O_EXCL): if two unserialized writers race to
-        # train, exactly one model file wins and BOTH converge on it —
-        # the loser discards its own training so no sidecar rows are
-        # ever encoded under a model that model.json does not hold.
+        # built once (io.build_once): if two unserialized writers race
+        # to train, one trains and BOTH load its file, so no sidecar rows
+        # are ever encoded under a model that model.json does not hold
         # (serialize_writers=True makes the race impossible; this keeps
-        # the index coherent even without the lock.)
-        payload = json.dumps(
-            {
-                **model.to_dict(),
-                "version": 1,
-                "trained_on_n": 0,  # nothing committed before first train
-            }
+        # the index coherent even without the lock), and a write that
+        # fails midway leaves only the stage, which the next build
+        # replaces
+        build_once(
+            self._model_path,
+            lambda stage: pq.write_model(
+                stage,
+                self._train(batch, self.n_lists, self.sample),
+                version=1,
+                trained_on_n=0,  # nothing committed before first train
+            ),
         )
-        try:
-            fd = os.open(
-                self._model_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-            )
-            with os.fdopen(fd, "w") as fh:
-                fh.write(payload)
-        except FileExistsError:
-            self._load_model(1)
-            self._model_version = 1
-            return self._models[1]
-        self._models[1], self._trained_on[1] = model, 0
+        self._load_model(1)
         self._model_version = 1
-        return model
+        return self._models[1]
 
     # -- protocol hooks ----------------------------------------------------
     def _stage(self, batch: DataFrame) -> DataFrame:
@@ -1462,8 +1450,6 @@ class SemanticGatedIngest(DedupGatedIngest):
         )
 
     def _retrain(self) -> int:
-        import json
-
         from data_pipeline_spark.llmops import pq
 
         self.vacuum()
@@ -1482,19 +1468,13 @@ class SemanticGatedIngest(DedupGatedIngest):
             model = self._train(
                 corpus, n_lists_eff, max(self.sample, 4 * n_lists_eff)
             )
+            # replace, not build once: an orphan left by a retrain that
+            # crashed before its commit is overwritten
             path = self._model_file(new_v)
-            tmp = f"{path}.tmp.{os.getpid()}"
-            with open(tmp, "w") as fh:
-                fh.write(
-                    json.dumps(
-                        {
-                            **model.to_dict(),
-                            "version": new_v,
-                            "trained_on_n": n_docs,
-                        }
-                    )
-                )
-            os.replace(tmp, path)
+            pq.write_model(
+                f"{path}.tmp", model, version=new_v, trained_on_n=n_docs
+            )
+            os.replace(f"{path}.tmp", path)
             self._chaos("retrain_after_model")
             idx = pq.semantic_index_rows(
                 corpus, model, self.id_col, self.vec_col

@@ -3868,11 +3868,13 @@ def test_neardup_components_rejects_unknown_contract(spark):
 
 
 def test_persisted_ivf_centroid_reload_parity(spark):
-    """ADVICE r10 (medium): _persisted_ivf_layout's centroids.json reload
-    must reproduce the WRITE-TIME quantizer bit-for-bit.  The r10 reload
-    declared ARRAY<FLOAT>, truncating the k-means doubles to float32 —
-    a DIFFERENT quantizer from the one that assigned the layout's lists,
-    masked only because the certificate probed all 16 lists.  Pin: (a)
+    """ADVICE r10 (medium): the quantizer _persisted_ivf_layout returns
+    (the persisted 16-list ``_corpus_model``, read back from its
+    ``model.json``) must reproduce the WRITE-TIME quantizer bit-for-bit.
+    The r10 reload declared ARRAY<FLOAT>, truncating the k-means doubles
+    to float32 — a DIFFERENT quantizer from the one that assigned the
+    layout's lists, masked only because the certificate probed all 16
+    lists.  Pin: (a)
     the reloaded model's quantized rows equal a fresh ann_train run's
     (training is deterministic), (b) the reloaded coarse matrix is the
     fresh one bit for bit, and (c) a PRUNED query (n_probe < n_lists) off

@@ -114,6 +114,73 @@ def test_model_trains_once_and_recovers_identically(spark, tmp_path):
     assert flags[10] == 1 and flags[11] == 0
 
 
+def test_first_model_write_failing_midway_leaves_no_torn_model(
+    spark, tmp_path, monkeypatch
+):
+    """The first ``model.json`` write of a sink fails halfway (a full
+    disk).  That trigger fails, but no torn model is left behind: the
+    next trigger trains the model a clean sink trains, admits, and later
+    triggers gate as usual."""
+    import builtins
+    import errno
+    import io
+
+    sink = _sink(spark, tmp_path / "faulty")
+    model_path = os.path.join(sink.index_dir, "model.json")
+    real_open = builtins.open
+    faults = []
+
+    class HalfWrite:
+        def __init__(self, fh):
+            self._fh = fh
+
+        def write(self, s):
+            self._fh.write(s[: len(s) // 2])
+            self._fh.flush()
+            raise OSError(errno.ENOSPC, "No space left on device")
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._fh.close()
+
+        def __getattr__(self, name):
+            return getattr(self._fh, name)
+
+    def is_model(file) -> bool:
+        if isinstance(file, int):  # a descriptor the sink opened itself
+            return os.path.exists(model_path) and os.path.samestat(
+                os.fstat(file), os.stat(model_path)
+            )
+        return os.path.basename(os.fspath(file)).startswith("model.json")
+
+    def faulty_open(file, mode="r", *args, **kwargs):
+        fh = real_open(file, mode, *args, **kwargs)
+        if "w" in mode and not faults and is_model(file):
+            faults.append(file)
+            return HalfWrite(fh)
+        return fh
+
+    # os.fdopen opens through io.open, every other writer through open
+    monkeypatch.setattr(builtins, "open", faulty_open)
+    monkeypatch.setattr(io, "open", faulty_open)
+    with pytest.raises(OSError, match="No space left"):
+        sink.admit_batch(_df(spark, B1), 0)
+    monkeypatch.undo()
+    assert faults
+
+    assert sink.admit_batch(_df(spark, B1), 0) == 3
+    assert sink.admit_batch(_df(spark, B2), 1) == 2
+    assert _corpus_ids(spark, tmp_path / "faulty") == [1, 2, 3, 11, 13]
+    clean = _sink(spark, tmp_path / "clean")
+    assert clean.admit_batch(_df(spark, B1), 0) == 3
+    with open(model_path) as a, open(
+        os.path.join(clean.index_dir, "model.json")
+    ) as b:
+        assert a.read() == b.read()
+
+
 def test_batch_mode_parity_with_greedy_semantic_dedup(spark, tmp_path):
     """Streaming admissions over ordered epochs == the greedy batch
     semantic dedup (min-id keeper first: a doc survives iff no SURVIVOR
