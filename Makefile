@@ -1,4 +1,4 @@
-.PHONY: test chaos ann bench smoke correctness perfbench profile
+.PHONY: test chaos ann bench smoke correctness perfbench profile cds
 
 W ?= cdc_publish_tail
 SEED ?= 1
@@ -40,3 +40,9 @@ profile:
 
 smoke:
 	python -c "import __spark_entry__ as e; from data_pipeline_spark.session import get_spark; s=get_spark('smoke'); print(len(e.entry(s).collect()), 'rows'); s.stop()"
+
+# build the driver JVM's class-data archive ahead of use and print its path
+# and size (README, "Session defaults"); rm -rf the cds cache directory first
+# to time a cold start
+cds:
+	python -c "import os; from data_pipeline_spark.session import class_data_archive; a = class_data_archive(); print(f'{a[0]} {os.path.getsize(a[0]) / 2**20:.0f} MB' if a else 'no archive: the session starts without one (README, Session defaults)')"

@@ -396,12 +396,13 @@ def write_rows(path: str, schema, rows: list[tuple]) -> str:
     )
 
 
-def cache_path(kind: str, sources, *extra, name: str) -> str:
+def cache_path(kind: str, sources, *extra, name: str, root: str | None = None) -> str:
     """Where ``build_once`` keeps the artifact ``name`` of ``kind`` built
     from the files ``sources`` and the values ``extra``:
-    ``<tempdir>/spark_graft_<kind>/<key>/<name>``, the key an md5 of each
-    source's (path, size, mtime) and of ``extra``, so a rewritten source
-    or a changed argument names a new artifact."""
+    ``<root>/<key>/<name>``, ``root`` by default
+    ``<tempdir>/spark_graft_<kind>``, the key an md5 of each source's
+    (path, size, mtime) and of ``extra``, so a rewritten source or a
+    changed argument names a new artifact."""
     import hashlib
     import tempfile
 
@@ -410,9 +411,9 @@ def cache_path(kind: str, sources, *extra, name: str) -> str:
         st = os.stat(p)
         ident += [p, st.st_size, st.st_mtime_ns]
     key = hashlib.md5("|".join(map(str, ident + list(extra))).encode())
-    return os.path.join(
-        tempfile.gettempdir(), f"spark_graft_{kind}", key.hexdigest()[:12], name
-    )
+    if root is None:
+        root = os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}")
+    return os.path.join(root, key.hexdigest()[:12], name)
 
 
 def build_once(final: str, build) -> str:

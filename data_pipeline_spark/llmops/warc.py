@@ -369,9 +369,12 @@ def iter_responses(stream: bytes):
 
 
 def read_warc(spark, path: str):
-    """WARC FILE SOURCE: ``.warc`` / ``.warc.gz`` files -> one row per
-    response record (warc_file, url, http_status, content_type, body
-    binary, warc_date, error_class).  Files load whole via binaryFile —
+    """WARC FILE SOURCE: the ``.warc`` / ``.warc.gz`` files of the
+    directory ``path`` (a ``pathGlobFilter``, not a glob in the path,
+    which Spark would first probe as a streaming-metadata directory and
+    log a stack trace for) -> one row per response record (warc_file,
+    url, http_status, content_type, body binary, warc_date,
+    error_class).  Files load whole via binaryFile —
     the right unit for per-record-gzipped archives, whose members are
     not splittable without an external index; CommonCrawl segments are
     ~1 GB, sized to be a task's working set — and parse map-side in one
@@ -384,8 +387,11 @@ def read_warc(spark, path: str):
     """
     import pandas as pd
 
-    files = spark.read.format("binaryFile").load(path).select(
-        "path", "content"
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.warc*")
+        .load(path)
+        .select("path", "content")
     )
 
     def run(batches):

@@ -1039,7 +1039,7 @@ def warc_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_spark.llmops import warc
 
     archive_dir = _warc_archive_dir(spark, sf_dir)
-    rows = warc.read_warc(spark, archive_dir + "/*.warc.gz")
+    rows = warc.read_warc(spark, archive_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def verify(batches):

@@ -1,9 +1,16 @@
 """session_window sessions: batch/streaming parity and the pinned boundary
 divergence vs the cumulative-sum sessionization; and the Spark session's
-Python worker daemon, call-site capture and codegen cache defaults."""
+Python worker daemon, call-site capture and codegen cache defaults, and
+its class-data archive with every fallback."""
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import subprocess
+import sys
+import threading
 import uuid
 import zipfile
 from functools import reduce
@@ -161,12 +168,15 @@ def test_session_turns_off_call_site_capture(spark, monkeypatch):
     monkeypatch.setattr(error_utils, "_enable_debugging_cache", None)
     assert error_utils.is_debugging_enabled() is False
 
+    # count this thread's calls only: py4j's finalizer thread sends a
+    # delete command for each freed JavaObject whenever it runs
     calls = 0
     send = GatewayClient.send_command
+    me = threading.get_ident()
 
     def counted(client, *a, **kw):
         nonlocal calls
-        calls += 1
+        calls += threading.get_ident() == me
         return send(client, *a, **kw)
 
     monkeypatch.setattr(GatewayClient, "send_command", counted)
@@ -197,3 +207,191 @@ def test_session_codegen_cache_keeps_a_cycling_working_set(spark):
     before = compiles.getCount()
     assert len(distinct_plans().collect()) == 150
     assert compiles.getCount() == before
+
+
+# -- the class-data archive ---------------------------------------------------
+# Every test starts its session in a child process with a private
+# XDG_CACHE_HOME, so the shared session and the host's archive are untouched.
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_CHILD = """
+import json, os, sys
+exec(sys.argv[2])
+from data_pipeline_spark.session import get_spark
+spark = get_spark("cds-test", extra_conf=json.loads(sys.argv[1]))
+mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+out = {
+    "count": spark.range(10).count(),
+    "args": list(mx.getInputArguments()),
+    "conf": dict(spark.sparkContext.getConf().getAll()),
+    "conf_dir": os.environ.get("SPARK_CONF_DIR"),
+}
+print("RESULT " + json.dumps(out), flush=True)
+"""
+
+
+def _conf_dir(tmp_path):
+    """A conf dir as Spark ships it: templates only."""
+    conf = tmp_path / "conf"
+    conf.mkdir(exist_ok=True)
+    (conf / "spark-defaults.conf.template").write_text("# spark.master local\n")
+    return conf
+
+
+def _start(cache, conf, extra_conf=None, prelude=""):
+    """Start a local session in a child process; return what it saw."""
+    env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_CONF_DIR=str(conf))
+    env.pop("SPARK_GRAFT_MASTER", None)
+    env["SPARK_GRAFT_CPUS"] = "2"
+    conf_json = json.dumps({"spark.driver.memory": "1g", **(extra_conf or {})})
+    done = subprocess.run(
+        [sys.executable, "-c", _CHILD, conf_json, prelude],
+        cwd=_REPO, env=env, capture_output=True, text=True, timeout=600,
+    )
+    lines = [ln for ln in done.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert done.returncode == 0 and lines, done.stdout[-3000:] + done.stderr[-3000:]
+    return json.loads(lines[-1][len("RESULT "):])
+
+
+def _archive_flags(res):
+    return [a for a in res["args"] if a.startswith("-XX:SharedArchiveFile=")]
+
+
+def _cds_keys(cache):
+    root = cache / "data_pipeline_spark" / "cds"
+    return sorted(os.listdir(root)) if root.exists() else []
+
+
+@pytest.fixture(scope="module")
+def trained(tmp_path_factory):
+    """A cold start in a fresh cache: the archive it trained, and what the
+    session saw."""
+    tmp = tmp_path_factory.mktemp("cds_cold")
+    cache = tmp / "cache"
+    res = _start(cache, _conf_dir(tmp))
+    (key,) = _cds_keys(cache)
+    return cache / "data_pipeline_spark" / "cds" / key / "driver.jsa", res
+
+
+def test_cold_start_trains_the_archive_and_a_second_start_maps_it(trained, tmp_path):
+    archive, cold = trained
+    assert archive.stat().st_size > 10 << 20
+    assert cold["count"] == 10
+    assert _archive_flags(cold) == [f"-XX:SharedArchiveFile={archive}"]
+    # the launch alone saw the empty conf dir next to the archive
+    assert os.listdir(archive.parent / "conf") == []
+    assert cold["conf_dir"] == str(archive.parent.parent.parent.parent.parent / "conf")
+
+    built = archive.stat().st_mtime_ns
+    log = tmp_path / "class_load.log"
+    warm = _start(
+        archive.parent.parent.parent.parent,
+        _conf_dir(tmp_path),
+        # the caller's extraJavaOptions still reach the JVM
+        {"spark.driver.extraJavaOptions": f"-Xlog:class+load=info:file={log}"},
+    )
+    assert warm["count"] == 10
+    assert _archive_flags(warm) == [f"-XX:SharedArchiveFile={archive}"]
+    assert f"-Xlog:class+load=info:file={log}" in warm["args"]
+    assert archive.stat().st_mtime_ns == built  # not trained again
+    # Spark's classes come from the archive's top (dynamic) layer
+    assert "org.apache.spark.SparkContext source: shared objects file (top)" in (
+        log.read_text()
+    )
+
+
+@pytest.mark.parametrize("damage", ["truncated", "foreign"])
+def test_damaged_archive_still_starts_a_session(trained, tmp_path, damage):
+    """A truncated archive (which would crash the JVM as it maps it) is not
+    passed; a foreign one of the recorded size is, and the JVM ignores it."""
+    archive, _ = trained
+    cache = tmp_path / "cache"
+    key_dir = cache / "data_pipeline_spark" / "cds" / archive.parent.name
+    key_dir.mkdir(parents=True)
+    shutil.copy(f"{archive}.size", key_dir)
+    bad = key_dir / "driver.jsa"
+    if damage == "truncated":
+        with open(archive, "rb") as src, open(bad, "wb") as dst:
+            dst.write(src.read(archive.stat().st_size // 2))
+    else:
+        bad.write_bytes(os.urandom(1 << 20))
+        os.truncate(bad, archive.stat().st_size)
+    before = bad.read_bytes()
+
+    res = _start(cache, _conf_dir(tmp_path))
+    assert res["count"] == 10
+    flags = [] if damage == "truncated" else [f"-XX:SharedArchiveFile={bad}"]
+    assert _archive_flags(res) == flags
+    assert bad.read_bytes() == before  # used as found, not trained again
+
+
+def test_conf_dir_with_a_real_file_starts_without_the_archive(tmp_path):
+    conf = _conf_dir(tmp_path)
+    (conf / "spark-defaults.conf").write_text("spark.dps.probe 42\n")
+    res = _start(tmp_path / "cache", conf)
+    assert res["count"] == 10
+    assert _archive_flags(res) == []
+    assert "spark.driver.defaultJavaOptions" not in res["conf"]
+    assert res["conf"]["spark.dps.probe"] == "42"  # the file took effect
+    assert _cds_keys(tmp_path / "cache") == []  # nothing trained
+
+
+def test_callers_default_java_options_win(tmp_path):
+    res = _start(
+        tmp_path / "cache",
+        _conf_dir(tmp_path),
+        {"spark.driver.defaultJavaOptions": "-Ddps.probe=1"},
+    )
+    assert res["count"] == 10
+    assert "-Ddps.probe=1" in res["args"]
+    assert _archive_flags(res) == []
+    assert _cds_keys(tmp_path / "cache") == []
+
+
+def _fake_trainer(tmp_path):
+    """A training command that leaves no archive and counts its runs."""
+    runs = tmp_path / "runs"
+    trainer = tmp_path / "trainer.sh"
+    trainer.write_text(f"#!/bin/sh\necho run >> {runs}\n")
+    trainer.chmod(0o755)
+    return trainer, runs
+
+
+def test_training_without_an_archive_publishes_the_marker_once(tmp_path):
+    trainer, runs = _fake_trainer(tmp_path)
+    cache, conf = tmp_path / "cache", _conf_dir(tmp_path)
+    prelude = f"sys.executable = {str(trainer)!r}"
+    for _ in range(2):
+        res = _start(cache, conf, prelude=prelude)
+        assert res["count"] == 10
+        assert _archive_flags(res) == []
+    (key,) = _cds_keys(cache)
+    marker = cache / "data_pipeline_spark" / "cds" / key / "driver.jsa"
+    assert marker.stat().st_size == 0
+    assert runs.read_text() == "run\n"  # the second start did not train
+
+
+def test_cold_build_removes_other_installs_archives(tmp_path, monkeypatch):
+    """One archive per host: a cold build removes every other key under
+    the cds root (a JDK or Spark upgrade leaves no 170 MB orphan); a
+    warm call removes nothing."""
+    from data_pipeline_spark import session
+
+    trainer, runs = _fake_trainer(tmp_path)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    monkeypatch.setenv("SPARK_CONF_DIR", str(_conf_dir(tmp_path)))
+    monkeypatch.setattr(sys, "executable", str(trainer))
+    root = tmp_path / "cache" / "data_pipeline_spark" / "cds"
+    for stale in ("0123456789ab", "ba9876543210"):
+        (root / stale / "conf").mkdir(parents=True)
+        (root / stale / "driver.jsa").write_bytes(b"old archive")
+
+    assert session.class_data_archive() is None  # the marker
+    (key,) = os.listdir(root)
+    assert runs.read_text() == "run\n"
+
+    (root / "0123456789ab").mkdir()
+    assert session.class_data_archive() is None
+    assert sorted(os.listdir(root)) == sorted([key, "0123456789ab"])
+    assert runs.read_text() == "run\n"

@@ -163,7 +163,7 @@ def test_read_warc_source_and_quarantine_row(spark, tmp_path):
     )
     (tmp_path / "seg-0.warc.gz").write_bytes(good)
     (tmp_path / "seg-1.warc.gz").write_bytes(good[: len(good) // 2])  # rot
-    rows = warc.read_warc(spark, str(tmp_path) + "/*.warc.gz").collect()
+    rows = warc.read_warc(spark, str(tmp_path)).collect()
     ok = [r for r in rows if r.error_class == ""]
     bad = [r for r in rows if r.error_class != ""]
     assert len(ok) == 2 and {r.url for r in ok} == {
@@ -183,6 +183,6 @@ def test_read_warc_midfile_corruption_is_one_quarantine_row(spark, tmp_path):
         [(1, b"<html>a</html>"), (2, b"<html>b</html>")], gzip_records=False
     )
     (tmp_path / "seg.warc").write_bytes(plain[: len(plain) - 40])
-    rows = warc.read_warc(spark, str(tmp_path) + "/*.warc").collect()
+    rows = warc.read_warc(spark, str(tmp_path)).collect()
     assert len(rows) == 1
     assert rows[0].error_class == "truncated_payload"
