@@ -8,11 +8,11 @@ test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # the commit-protocol tests (commit log, ledgers, topic sidecar, staged
-# publish, ingest crash windows, the build-once artifact cache): a few
-# minutes instead of the tier-1 run
+# publish, ingest crash windows, the build-once artifact cache, the one
+# in-process memo of io): a few minutes instead of the tier-1 run
 chaos:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
-	python -m pytest tests/test_build_once.py tests/test_commit_log.py tests/test_cdc.py tests/test_ingest_chaos.py tests/test_ingest_driver.py -q -p no:cacheprovider && \
+	python -m pytest tests/test_build_once.py tests/test_io_memo.py tests/test_commit_log.py tests/test_cdc.py tests/test_ingest_chaos.py tests/test_ingest_driver.py -q -p no:cacheprovider && \
 	python -m pytest tests/test_pipeline.py -q -p no:cacheprovider -k "ledger or sidecar or commit or reservation or publish_runs_one or publish_crash or concurrent_publishes"
 
 # the ANN contract tests (one trained model, PQ / IVF / IVF-PQ search,

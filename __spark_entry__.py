@@ -33,6 +33,19 @@ def entry(spark: SparkSession) -> DataFrame:
 # second, and a representative spread of the long-green set fills the
 # remaining window; the rest follow.
 _PRIORITY = [
+    # -- one in-process memo --------------------------------------------------
+    # CODE CHANGED: io's one memo now holds every analyzed frame, spread
+    # split count and footer total on the files' identity (the spread of a
+    # filtered documents scan and of the gate corpus, the persisted gate,
+    # semantic and z-order sidecars, the IVF layout), and
+    # pq.semantic_gate_flags lost its prune_scan fork and margin knob
+    "multimodal_jpeg_differential",
+    "semantic_dedup_gate",
+    "persisted_index_dedup_gate",
+    "banded_index_dedup_gate",
+    "zorder_box_query",
+    "ivf_partitioned_exact_topk",
+    "bigram_lm_perplexity",
     # -- the WARC source reads a directory ------------------------------------
     # CODE CHANGED: read_warc loads the archive directory with a
     # pathGlobFilter instead of a glob in the path; warc_extraction shares
@@ -44,7 +57,6 @@ _PRIORITY = [
     # io.build_once (new cache keys and, for the z-order copy, a new final
     # name): the z-order copy of lineitem, the per-corpus ANN model, the
     # IVF serving layout and the text and semantic gate indexes
-    "zorder_box_query",
     "pq_ann_topk",
     "pq_exact_topk",
     "ivfpq_ann_topk",
@@ -53,10 +65,6 @@ _PRIORITY = [
     "ivf_ann_topk",
     "ivf_exact_topk",
     "ivf_planted_recall",
-    "ivf_partitioned_exact_topk",
-    "persisted_index_dedup_gate",
-    "banded_index_dedup_gate",
-    "semantic_dedup_gate",
     # -- one Spark job per side of a CDC batch --------------------------------
     # CODE CHANGED: every query that publishes to and tails a topic (the
     # staged publish, the tail's observed offsets)
@@ -115,7 +123,6 @@ _PRIORITY = [
     # spread checkpoint, the tail-through-aggregation strip, the
     # vectorized wire kernels, the star round-1 probe skip, the WARC
     # verify fold)
-    "bigram_lm_perplexity",
     "jaccard_neardup_pairs",
     "lsh_exact_neardup",
     "incremental_dedup_gate",

@@ -24,7 +24,12 @@ Every derived artifact (the catalog's ANN models, IVF layout, gate
 indexes, WARC fixture and z-order copy, the executor package zip, an
 ingest sink's first model) becomes visible through ``build_once``: built
 once into ``<final>.tmp`` under a process mutex and published with one
-rename, so it reads whole or not at all.
+rename, so it reads whole or not at all.  In front of those artifacts and
+the base tables, every value read off a parquet file set (an analyzed
+frame, a scan's split count, a footer total) goes through ``_memo``: one
+in-process dict, each value keyed on what it is of and stored with the
+files' (path, size, mtime_ns) identity, the same identity ``cache_path``
+hashes, so a rewrite at the same path is derived again.
 """
 
 from __future__ import annotations
@@ -51,64 +56,79 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Analyzed source frames per (SparkContext, path, file fingerprint).  A bare
-# ``spark.read.parquet`` re-lists the directory and re-reads a parquet FOOTER
-# for schema inference on EVERY call — ~110 ms per table on this host (r12
-# gap profile), paid again for every frame a query builds over the same
-# immutable file set; across the 67-query bench that footer tax alone was
-# ~10 s of the 61.6 s wall.  The cached value is the analyzed DataFrame (a
-# logical plan — METADATA, never row data: every action over it still scans
-# the parquet inputs), keyed on the file set's (name, size, mtime_ns)
-# fingerprint so any rewrite of the table invalidates it, exactly like the
-# split-count memo below and Spark's own session-scoped
-# filesourcePartitionFileCacheSize listing cache for catalog tables
-# (guide §6: avoid repeated listings of the same table).
-_TABLE_FRAMES: dict = {}
+# Every value read off a parquet file set (an analyzed frame, a scan's
+# split count, a footer total) is memoized in this ONE dict, under its key
+# with the identity ``_file_set`` gives (each file's path, size and
+# mtime_ns), so a rewrite at the same path is derived again.  The values
+# are METADATA, never row data: every action over a memoized frame still
+# scans the files.  Past ``_MEMO_BOUND`` entries the dict is cleared.
+_MEMO: dict = {}
+_MEMO_BOUND = 512
 
 
-def _path_sig(path: str):
-    """(size, mtime) fingerprint of a parquet file, or the sorted
-    (name, size, mtime) set of a parquet directory; None when unstatable
-    (missing path falls through to spark.read for its usual error)."""
+def _file_set(path: str):
+    """The identity of the parquet files at ``path``: a sorted tuple of
+    each file's (path, size, mtime_ns), ``path`` itself when it is a file,
+    else every ``.parquet`` file under it by Spark's listing rule
+    (directories recursively, for hive-partitioned layouts).  None when
+    ``path`` cannot be listed."""
     try:
-        st = os.stat(path)
         if not os.path.isdir(path):
-            return (st.st_size, st.st_mtime_ns)
-        with os.scandir(path) as it:
-            return tuple(
-                sorted(
-                    (e.name, s.st_size, s.st_mtime_ns)
-                    for e in it
-                    for s in (e.stat(),)
-                )
-            )
+            st = os.stat(path)
+            return ((path, st.st_size, st.st_mtime_ns),)
+        found = []
+        dirs = [path]
+        while dirs:
+            with os.scandir(dirs.pop()) as it:
+                for e in it:
+                    # Spark's listing rule: skip ``.`` names, and ``_``
+                    # names other than partition directories (``_col=v``)
+                    if e.name.startswith(".") or (
+                        e.name.startswith("_") and "=" not in e.name
+                    ):
+                        continue
+                    if e.is_dir():
+                        dirs.append(e.path)
+                    elif e.name.endswith(".parquet"):
+                        st = e.stat()
+                        found.append((e.path, st.st_size, st.st_mtime_ns))
     except OSError:
         return None
+    return tuple(sorted(found))
+
+
+def _memo(key, files, compute):
+    """``compute()`` memoized under ``key`` on the file identity ``files``
+    (``_file_set``): the stored value while the identity matches, else a
+    new one.  With no identity (a path missing or holding no parquet file)
+    it computes without storing."""
+    if not files:
+        return compute()
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] == files:
+        return hit[1]
+    value = compute()
+    if key not in _MEMO and len(_MEMO) >= _MEMO_BOUND:
+        _MEMO.clear()
+    _MEMO[key] = (files, value)
+    return value
 
 
 def read_parquet_cached(
     spark: SparkSession, path: str, loader=None
 ) -> DataFrame:
-    """``spark.read.parquet(path)`` with the analyzed frame memoized per
-    (SparkContext, path, file fingerprint) — the footer-tax fix above,
-    usable for any immutable-until-rewritten parquet layout (base tables,
-    persisted index/layout sidecars).  ``loader`` overrides the read for
-    sources needing post-load normalization (the events ts branch)."""
-    sig = _path_sig(path)
-    key = None
-    if sig is not None:
-        # applicationId is unique per SparkContext launch, so a cached
-        # frame can never outlive its JVM context (id() could be reused)
-        key = (spark.sparkContext.applicationId, path)
-        hit = _TABLE_FRAMES.get(key)
-        if hit is not None and hit[0] == sig:
-            return hit[1]
-    df = loader(spark, path) if loader else spark.read.parquet(path)
-    if key is not None:
-        if len(_TABLE_FRAMES) > 512:  # bound growth across many sessions
-            _TABLE_FRAMES.clear()
-        _TABLE_FRAMES[key] = (sig, df)
-    return df
+    """``spark.read.parquet(path)``, or ``loader(spark, path)`` for sources
+    needing post-load normalization (the events ts branch), memoized per
+    (SparkContext, path).  A bare read re-lists the directory and re-reads
+    a parquet FOOTER for schema inference on every call: ~110 ms per table
+    (r12 gap profile), about 10 s of the 61.6 s 67-query bench wall.  The
+    key holds the ``applicationId``, unique per SparkContext launch, so a
+    frame never outlives its JVM context (an ``id()`` could be reused)."""
+    return _memo(
+        ("frame", spark.sparkContext.applicationId, path),
+        _file_set(path),
+        lambda: loader(spark, path) if loader else spark.read.parquet(path),
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -169,21 +189,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-# Scan split counts per (SparkContext, source key, parallelism): the
-# conditional in spread_scan needs the planned split count, and deriving it
-# via df.rdd costs ~130 ms of driver plan-conversion per call (r12
-# measurement) — a real per-trigger tax when a query builds several frames.
-# The count is pure PLANNING metadata (a function of file sizes and
-# maxPartitionBytes, same inputs Spark's own InMemoryFileIndex caches per
-# session), never query data, so a session-scoped memo is sound; the bench
-# corpora are immutable per the driver contract, and a new session (or a
-# different core count) re-derives it.
-_SPREAD_COUNTS: dict = {}
-
-
-def spread_scan(
-    df: DataFrame, spark: SparkSession, cache_key: str | None = None
-) -> DataFrame:
+def spread_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Spread a narrow scan across the cluster ONLY when it needs it.
 
     Compute-dense pipelines (tokenize/shingle HOFs, Arrow codec UDFs,
@@ -199,18 +205,31 @@ def spread_scan(
     outright).  This helper repartitions only when the scan's actual
     split count is below the cluster's core count, so the local plans
     keep their spread while the at-scale plan loses the exchange.  The
-    split count comes from the planned RDD (metadata only, no job).
+    split count comes from the planned RDD (metadata only, no job, but
+    ~130 ms of driver plan conversion, r12), memoized per (SparkContext,
+    the frame's input files, core count) on those files' identity: a
+    planning value of file sizes and maxPartitionBytes, the inputs
+    Spark's own InMemoryFileIndex caches per session.  ``df`` is a scan
+    or a narrow transform of one (a filter, a projection).
     """
-    target = spark.sparkContext.defaultParallelism
-    memo_key = None
-    n = None
-    if cache_key is not None:
-        memo_key = (id(spark.sparkContext), cache_key, target)
-        n = _SPREAD_COUNTS.get(memo_key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        if memo_key is not None:
-            _SPREAD_COUNTS[memo_key] = n
+    from urllib.parse import unquote, urlparse
+
+    sc = spark.sparkContext
+    target = sc.defaultParallelism
+    inputs = tuple(df.inputFiles())
+    ident = ()
+    for uri in inputs:
+        u = urlparse(uri)
+        files = _file_set(unquote(u.path)) if u.scheme == "file" else None
+        if files is None:  # not a local file: plan it every call
+            ident = ()
+            break
+        ident += files
+    n = _memo(
+        ("splits", sc.applicationId, inputs, target),
+        ident,
+        lambda: df.rdd.getNumPartitions(),
+    )
     if n >= target:
         return df
     return df.repartition(target)
@@ -219,8 +238,8 @@ def spread_scan(
 def load_spread(
     spark: SparkSession, sf_dir: str, name: str, shared: bool = False
 ) -> DataFrame:
-    """``load_table`` + ``spread_scan`` with the split count memoized on
-    the table's path — the standard loader for compute-dense pipelines.
+    """``load_table`` + ``spread_scan``: the standard loader for
+    compute-dense pipelines.
 
     ``shared=True`` is for queries whose plan reads the spread frame
     through SEVERAL branches (Spark has no CSE, so each branch otherwise
@@ -236,79 +255,15 @@ def load_spread(
     frame (per query construction), never memoized across calls: every
     bench rep still computes from the parquet inputs."""
     df = load_table(spark, sf_dir, name)
-    out = spread_scan(
-        df, spark, cache_key=os.path.join(sf_dir, f"{name}.parquet")
-    )
+    out = spread_scan(df, spark)
     if shared and out is not df:
         out = out.localCheckpoint(eager=False)
     return out
 
 
-# Footer row-count memo per (path, fingerprint) — see parquet_num_rows.
-_NUM_ROWS: dict = {}
 # above this many files, reading every footer from the driver costs about
-# what the scan it replaces does; the footer functions return None instead
+# what the scan it replaces does; the footer counts return None instead
 _FOOTER_FILE_CAP = 256
-
-
-def _footer_files(path: str):
-    """(parquet files, fingerprint) of a parquet file or layout.
-    Directories are listed recursively (hive-partitioned layouts); the
-    fingerprint is every file's (path, size,
-    mtime), so an append anywhere in the tree invalidates the memo.  None
-    when the path is missing, holds no parquet file, or holds more than
-    ``_FOOTER_FILE_CAP`` of them."""
-    try:
-        if not os.path.isdir(path):
-            st = os.stat(path)
-            return [path], (st.st_size, st.st_mtime_ns)
-        found = []
-        dirs = [path]
-        while dirs:
-            with os.scandir(dirs.pop()) as it:
-                for e in it:
-                    # Spark's listing rule: skip ``.`` names, and ``_``
-                    # names other than partition directories (``_col=v``)
-                    if e.name.startswith(".") or (
-                        e.name.startswith("_") and "=" not in e.name
-                    ):
-                        continue
-                    if e.is_dir():
-                        dirs.append(e.path)
-                    elif e.name.endswith(".parquet"):
-                        st = e.stat()
-                        found.append((e.path, st.st_size, st.st_mtime_ns))
-                        if len(found) > _FOOTER_FILE_CAP:
-                            return None
-    except OSError:
-        return None
-    if not found:
-        return None
-    found.sort()
-    return [f for f, _, _ in found], tuple(found)
-
-
-def _memo_footer_total(key, path: str, total_of):
-    """``total_of(files)`` for the parquet files under ``path``, memoized
-    on their fingerprint; None when ``_footer_files`` or ``total_of``
-    gives None or a footer cannot be read."""
-    listed = _footer_files(path)
-    if listed is None:
-        return None
-    files, sig = listed
-    hit = _NUM_ROWS.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    try:
-        total = total_of(files)
-    except Exception:
-        return None
-    if total is None:
-        return None
-    if len(_NUM_ROWS) > 512:
-        _NUM_ROWS.clear()
-    _NUM_ROWS[key] = (sig, total)
-    return total
 
 
 def parquet_num_rows(path: str) -> int | None:
@@ -319,46 +274,57 @@ def parquet_num_rows(path: str) -> int | None:
     footer already stores.  This is the same metadata Spark's own
     statistics use.  Directories are listed recursively, so partitioned
     layouts count too.  None when the path is missing, holds no parquet
-    files or more than ``_FOOTER_FILE_CAP`` of them (callers fall back to
-    a real count).  Memoized on the file-set fingerprint so repeated
-    probes (gate triggers, bench reps) pay one footer read per layout
-    version."""
-    import pyarrow.parquet as pq
-
-    return _memo_footer_total(
-        path,
-        path,
-        lambda files: sum(pq.ParquetFile(f).metadata.num_rows for f in files),
-    )
+    files or more than ``_FOOTER_FILE_CAP`` of them, or a footer cannot be
+    read (callers fall back to a real count).  Memoized on the file
+    identity, so repeated probes (gate triggers, bench reps) pay one
+    footer read per layout version."""
+    return _footer_rows(path, None)
 
 
 def parquet_nonnull_rows(path: str, col: str) -> int | None:
     """EXACT count of non-NULL values of ``col`` from parquet FOOTER
     statistics (num_rows minus the column's null_count per row group) —
-    driver-side metadata, no Spark job; same listing as
-    ``parquet_num_rows``.  None also when a file lacks the column (a
+    driver-side metadata, no Spark job; same listing, memo and None cases
+    as ``parquet_num_rows``.  None also when a file lacks the column (a
     partition column lives in directory names, not footers) or any row
-    group lacks a null_count statistic (callers fall back to a real
-    count)."""
-    import pyarrow.parquet as pq
+    group lacks a null_count statistic."""
+    return _footer_rows(path, col)
 
-    def nonnull(files):
-        total = 0
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            names = [md.schema.column(i).path for i in range(md.num_columns)]
-            if col not in names:
-                return None
-            ci = names.index(col)
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                st = g.column(ci).statistics
-                if st is None or not st.has_null_count:
+
+def _footer_rows(path: str, col: str | None) -> int | None:
+    """The footer total of ``parquet_num_rows`` (``col`` None) or
+    ``parquet_nonnull_rows``.  The file cap is checked before the memo, so
+    it holds for a stored total too."""
+    files = _file_set(path)
+    if not files or len(files) > _FOOTER_FILE_CAP:
+        return None
+
+    def total():
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        n = 0
+        try:
+            for f, _, _ in files:
+                md = pq.ParquetFile(f).metadata
+                if col is None:
+                    n += md.num_rows
+                    continue
+                names = [md.schema.column(i).path for i in range(md.num_columns)]
+                if col not in names:
                     return None
-                total += g.num_rows - st.null_count
-        return total
+                ci = names.index(col)
+                for rg in range(md.num_row_groups):
+                    g = md.row_group(rg)
+                    st = g.column(ci).statistics
+                    if st is None or not st.has_null_count:
+                        return None
+                    n += g.num_rows - st.null_count
+        except (OSError, pa.ArrowException):
+            return None
+        return n
 
-    return _memo_footer_total((path, col), path, nonnull)
+    return _memo(("footer_rows", path, col), files, total)
 
 
 def write_table(path: str, table) -> str:
@@ -400,16 +366,19 @@ def cache_path(kind: str, sources, *extra, name: str, root: str | None = None) -
     """Where ``build_once`` keeps the artifact ``name`` of ``kind`` built
     from the files ``sources`` and the values ``extra``:
     ``<root>/<key>/<name>``, ``root`` by default
-    ``<tempdir>/spark_graft_<kind>``, the key an md5 of each source's
-    (path, size, mtime) and of ``extra``, so a rewritten source or a
-    changed argument names a new artifact."""
+    ``<tempdir>/spark_graft_<kind>``, the key an md5 of the sources'
+    ``_file_set`` identity (a file's path, size and mtime_ns; for a
+    directory, its parquet files') and of ``extra``, so a rewritten source
+    or a changed argument names a new artifact."""
     import hashlib
     import tempfile
 
     ident = [kind]
     for p in sources:
-        st = os.stat(p)
-        ident += [p, st.st_size, st.st_mtime_ns]
+        files = _file_set(p)
+        if files is None:
+            raise FileNotFoundError(f"cannot list {p}")
+        ident += [v for f in files for v in f]
     key = hashlib.md5("|".join(map(str, ident + list(extra))).encode())
     if root is None:
         root = os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}")

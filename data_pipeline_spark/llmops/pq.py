@@ -690,8 +690,6 @@ def semantic_gate_flags(
     vec_col: str = "embedding",
     threshold: float = 0.9,
     n_probe: int = 8,
-    margin: float = 0.0,
-    prune_scan: bool = True,
 ) -> DataFrame:
     """Semantic near-dup admission flags for a (trigger-bounded) batch
     against a persisted ANN index: per incoming vector,
@@ -707,8 +705,8 @@ def semantic_gate_flags(
        (``SemanticGatedIngest`` compaction rewrites it range-partitioned
        and sorted on list_id — the served-IVF-layout shape), and rows of
        unprobed lists never reach Arrow transfer even on an unclustered
-       layout.  ADC-approximated cosine >= threshold - margin marks
-       CANDIDATES — O(probed-lists) work per trigger,
+       layout.  ADC-approximated cosine marks CANDIDATES (the per-row
+       cut below) — O(probed-lists) work per trigger,
     3. candidates alone are verified with the EXACT quantized cosine
        against the stored embedding column (bounded fetch), so a false
        ADC candidate can never flag a keeper.
@@ -716,13 +714,13 @@ def semantic_gate_flags(
     The candidate cut is PER ROW: a row is a candidate when
     ``adc_cos >= threshold - its adc_err`` (the index stores each row's
     own Cauchy-Schwarz ADC error ceiling — see semantic_index_rows), so
-    an ADC underestimate can never hide a true >= threshold neighbor;
-    ``margin`` adds optional extra slack on top.  The ONE remaining miss
-    mode, stated precisely (the band_prune contract's semantic twin): a
-    true >= threshold pair escapes only if the neighbor's list is
-    outside all n_probe probes — both vectors nearly coincide, so their
-    coarse alignment does too (measured 0 escapes on the planted
-    fixtures at every SF and both rehearsal scales).  Rows with sloppy
+    an ADC underestimate can never hide a true >= threshold neighbor.
+    The ONE remaining miss mode, stated precisely (the band_prune
+    contract's semantic twin): a true >= threshold pair escapes only if
+    the neighbor's list is outside all n_probe probes — both vectors
+    nearly coincide, so their coarse alignment does too (measured 0
+    escapes on the planted fixtures at every SF and both rehearsal
+    scales).  Rows with sloppy
     codes (large adc_err — e.g. an adversarially unclustered corpus)
     degrade gracefully into the exact-verify set rather than into
     misses; the verify volume stays bounded by the probed lists.
@@ -747,7 +745,6 @@ def semantic_gate_flags(
     probed_union = np.unique(probes)
     tables = np.einsum("qjs,jcs->qjc", qx.reshape(len(qx), m_, sub), codebooks)
     qc = qx @ coarse.T
-    base_cut = threshold - margin
 
     # probe membership as one bool matrix: the kernel tests Q x rows
     # membership with a fancy-index instead of Q python-level isin loops
@@ -781,7 +778,7 @@ def semantic_gate_flags(
                     qn_safe[q0:q1, None] * safe_vn[None, :]
                 )
                 hit = pmask[q0:q1][:, lists] & (
-                    adc_cos >= base_cut - row_err[None, :]
+                    adc_cos >= threshold - row_err[None, :]
                 )
                 qi_idx, row_idx = np.nonzero(hit)
                 if len(qi_idx):
@@ -793,13 +790,12 @@ def semantic_gate_flags(
     # (and inside the parquet reader as an In filter), so the ADC scan's
     # input is the probed lists' rows, not the whole index — pmask below
     # still enforces PER-QUERY membership on what remains.
-    # ``prune_scan=False`` is the measured A/B twin (decisions identical
-    # by construction: the scan kernel re-tests membership row-by-row).
     probe_filter = F.col("list_id").isin([int(x) for x in probed_union])
-    cand_src = index.select("cor_id", "vnorm", "codes", "list_id", "adc_err")
-    if prune_scan:
-        cand_src = cand_src.filter(probe_filter)
-    cand = cand_src.mapInPandas(scan, schema="qid long, cor_id long")
+    cand = (
+        index.select("cor_id", "vnorm", "codes", "list_id", "adc_err")
+        .filter(probe_filter)
+        .mapInPandas(scan, schema="qid long, cor_id long")
+    )
 
     # exact verify of the bounded candidate set, VECTORIZED: the query
     # matrix rides into one mapInPandas in quantized form and each
@@ -846,7 +842,7 @@ def semantic_gate_flags(
         # fetch prunes its index read with the same pushed In filter —
         # without it this join re-scans every (cor_id, embedding) row
         .join(
-            (index.filter(probe_filter) if prune_scan else index).select(
+            index.filter(probe_filter).select(
                 "cor_id", F.col("embedding").alias("cv")
             ),
             "cor_id",

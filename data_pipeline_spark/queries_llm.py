@@ -1304,7 +1304,6 @@ def multimodal_jpeg_differential(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_scan(
         load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0),
         spark,
-        cache_key=sf_dir + "/documents.parquet",
     )
     return multimodal.jpeg_progressive_differential(docs, "doc_id", "text")
 

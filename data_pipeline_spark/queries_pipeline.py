@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_spark import envelope as env
-from data_pipeline_spark.io import load_spread, load_table, spread_scan
+from data_pipeline_spark.io import load_spread, load_table
 from data_pipeline_spark.queries import register
 
 _EVENT_WIRE_SCHEMA = json.dumps(

@@ -993,7 +993,6 @@ class SemanticGatedIngest(DedupGatedIngest):
         vec_col: str = "embedding",
         threshold: float = 0.9,
         n_probe: int = 8,
-        margin: float = 0.0,
         n_lists: int = 64,
         auto_scale_lists: bool = False,
         m: int = 8,
@@ -1020,7 +1019,6 @@ class SemanticGatedIngest(DedupGatedIngest):
         self.vec_col = vec_col
         self.sem_threshold = threshold
         self.n_probe = n_probe
-        self.margin = margin
         self.n_lists = n_lists
         self.auto_scale_lists = auto_scale_lists
         self.m = m
@@ -1279,7 +1277,6 @@ class SemanticGatedIngest(DedupGatedIngest):
             self.vec_col,
             threshold=self.sem_threshold,
             n_probe=self.n_probe,
-            margin=self.margin,
         ).withColumn("exact_dup", F.lit(0))  # every rejection is a near one
 
     def _index_of(self, admitted):
@@ -1529,5 +1526,4 @@ class SemanticGatedIngest(DedupGatedIngest):
             self.vec_col,
             threshold=self.sem_threshold,
             n_probe=self.n_probe,
-            margin=self.margin,
         )
